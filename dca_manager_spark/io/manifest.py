@@ -1,11 +1,24 @@
 """Object-store-safe keyed COW table: manifest-committed Parquet.
 
-``MergeTable`` (io/merge.py) commits by swapping partition DIRECTORIES —
-correct on rename-capable filesystems (HDFS, local), but object stores
-rename by copy and a crash mid-swap can expose a half-committed table.
-``ManifestTable`` is the same write surface (insert | upsert | bulk_insert
-| delete, composite key, precombine tie-break — Hudi parity per SURVEY
-§1.5) over the commit protocol object stores need:
+The reference's analytics table is a Hudi COPY_ON_WRITE table with a
+composite record key, a precombine tie-break, and four write operations
+(glue/scripts/load_transactions.py:56-80,113-122; SURVEY §1.5):
+
+- record key       : (transaction_id, close_time)  [ComplexKeyGenerator, :57,:68]
+- precombine field : transaction_id — when two incoming rows share a key in
+  one batch, the LARGER precombine value wins (:58)
+- operations       : insert | upsert | bulk_insert | delete (:48-51,:117-122)
+- index scoping    : partition-scoped (Hudi's default BLOOM/SIMPLE index) —
+  a key arriving with a NEW partition value becomes a second row; the old
+  partition's row survives
+
+Hudi 0.10 default combine behavior is honored: ``insert`` and
+``bulk_insert`` do NOT deduplicate (duplicate rows are legal table states —
+SURVEY §7 hard part #2); ``upsert`` and ``delete`` combine by key first.
+
+``ManifestTable`` commits that surface through the protocol object stores
+need (directory renames are copies there, and a crash mid-swap could
+expose a half-committed table):
 
 1. every write lands in a fresh, uniquely-named commit directory under
    ``data/`` — object-store writes are immutable PUTs, nothing is renamed;
@@ -50,14 +63,46 @@ import os
 import re
 import threading as _threading
 import uuid
+from enum import Enum
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dca_manager_spark.io.merge import WriteOperation, precombine_dedup
-
 _UNSET = object()  # "no prev supplied" sentinel (None = empty table)
+
+
+class WriteOperation(str, Enum):
+    INSERT = "insert"
+    UPSERT = "upsert"
+    BULK_INSERT = "bulk_insert"
+    DELETE = "delete"
+
+    @classmethod
+    def parse(cls, value: str) -> "WriteOperation":
+        """Validate like the reference job does (load_transactions.py:48-51)."""
+        try:
+            return cls(value)
+        except ValueError as exc:
+            raise ValueError(
+                f"write_operation must be one of "
+                f"{[op.value for op in cls]}, got {value!r}"
+            ) from exc
+
+
+def precombine_dedup(df: DataFrame, keys: list[str], precombine: str,
+                     tiebreaks: list[str] | None = None) -> DataFrame:
+    """Hudi precombine: one survivor per key, largest precombine value wins
+    (load_transactions.py:58). Hudi leaves ties arbitrary; pass ``tiebreaks``
+    (further descending columns) when a deterministic survivor is required.
+    """
+    order = [F.col(precombine).desc()] + [F.col(c).desc() for c in (tiebreaks or [])]
+    w = Window.partitionBy(*keys).orderBy(*order)
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -1253,9 +1298,9 @@ class ManifestTable:
         self, name: str, durable: bool = True, as_of: int | None = None
     ) -> None:
         """Catalog sync: make this table addressable from ``spark.sql``
-        by ``name`` — the ManifestTable twin of ``MergeTable.register``
-        (io/merge.py:108) and of the reference's per-run Hudi hive-sync
-        (glue/scripts/load_transactions.py:73-79 syncing Glue for Athena).
+        by ``name`` — the analogue of the reference's per-run Hudi
+        hive-sync (glue/scripts/load_transactions.py:73-79 syncing Glue
+        for Athena).
 
         ``durable=True`` (default): a catalog VIEW whose text is
         ``snapshot_sql()`` — the RESOLVED snapshot (MOR-merged,
@@ -1317,10 +1362,10 @@ class ManifestTable:
         if len(parts) > 1:
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {self._q(parts[0])}")
         # Re-sync replaces the catalog entry whatever its prior KIND: a
-        # TABLE under this name (e.g. a MergeTable.register from a
-        # previous run of the same job with the other table format)
-        # blocks CREATE OR REPLACE VIEW, so drop it first — hive-sync
-        # owns the name, exactly like the reference's per-run Glue sync.
+        # TABLE under this name (e.g. an external parquet table left by
+        # an earlier deployment) blocks CREATE OR REPLACE VIEW, so drop
+        # it first — hive-sync owns the name, exactly like the
+        # reference's per-run Glue sync.
         try:
             entry = self.spark.catalog.getTable(name)
             if entry.tableType != "VIEW":
@@ -1935,7 +1980,7 @@ class ManifestTable:
             return
 
         # Affected partitions: the batch's distinct partition values
-        # (bounded metadata collect, O(partitions) — same as MergeTable).
+        # (bounded metadata collect, O(partitions)).
         replaced, kept, existing = self._split_by_touch([batch], prev_doc)
 
         pred = F.lit(True)
@@ -2543,7 +2588,7 @@ class ManifestTable:
         publish a manifest swapping old entries for new — logical content
         unchanged, readers never see a partial state, vacuum reclaims the
         replaced files after the retention window (the Hudi-compaction
-        analogue; MergeTable.compact is the directory-swap variant).
+        analogue).
 
         ``partition_filter`` bounds the rewrite (run per partition on a
         schedule at scale; None = whole table). Returns the number of

@@ -24,14 +24,6 @@ def hash_bucket(id_col: Column, salt: str = "") -> Column:
     return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint") % BUCKETS
 
 
-def o_hash_bucket(id_expr: str, salt: str = "") -> str:
-    """The DuckDB-equivalent SQL fragment (bit-identical buckets)."""
-    return (
-        f"CAST(concat('0x', substring(md5(concat('{salt}', "
-        f"CAST({id_expr} AS VARCHAR))), 1, 8)) AS BIGINT) % {BUCKETS}"
-    )
-
-
 def train_val_test_split(
     df: DataFrame,
     id_col: str,

@@ -101,11 +101,6 @@ def lang_scores_from_tokens(toks_lower: Column) -> dict[str, Column]:
     }
 
 
-def lang_scores(col: Column) -> dict[str, Column]:
-    """Per-language marker-stopword hit counts."""
-    return lang_scores_from_tokens(tokens(F.lower(col)))
-
-
 def lang_id_from_tokens(toks_lower: Column) -> Column:
     """lang_id over a caller-supplied lowercased token array — identical
     argmax/tie semantics, one tokenization.

@@ -35,10 +35,6 @@ def build_parser() -> argparse.ArgumentParser:
     lt.add_argument("--table_name", default="transactions")
     lt.add_argument("--decimal", action="store_true",
                     help="keep DecimalType(38,18) instead of lake doubles")
-    lt.add_argument("--table_format", default="merge",
-                    choices=("merge", "manifest"),
-                    help="merge = directory-swap COW; manifest = "
-                         "object-store-safe atomic-manifest commits")
 
     eo = sub.add_parser("execute-orders", help="EP1: scheduled order execution")
     eo.add_argument("--config", required=True)
@@ -72,7 +68,6 @@ def main(argv: list[str] | None = None) -> int:
             database=args.database_name,
             table_name=args.table_name,
             decimal=args.decimal,
-            table_format=args.table_format,
         )
     elif args.job == "execute-orders":
         from dca_manager_spark.pipeline.execute_orders import execute_orders

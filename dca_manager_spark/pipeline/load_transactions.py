@@ -8,7 +8,7 @@ Faithful re-expression of the reference's Glue job
 - time casts, centisecond fmt   (:90-91)  -> REFERENCE_TS_FORMAT
 - double casts                  (:92-94)
 - additional_columns + "none"   (:98-107)
-- keyed Hudi write              (:56-80,:113-122) -> MergeTable
+- keyed Hudi write              (:56-80,:113-122) -> ManifestTable
 - hive-sync catalog             (:73-79)  -> register(table_name)
 
 The reference triggers ONE Glue run per single-file order load
@@ -23,7 +23,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dca_manager_spark.io.merge import MergeTable, WriteOperation
+from dca_manager_spark.io.manifest import ManifestTable, WriteOperation
 from dca_manager_spark.io.readers import read_json_canonical
 from dca_manager_spark.schemas import REFERENCE_TS_FORMAT, TRANSACTION_RAW_SCHEMA
 
@@ -80,20 +80,21 @@ def load_transactions(
     infer_schema: bool = False,
     decimal: bool = False,
     max_corrupt_fraction: float = 0.0,
-    table_format: str = "merge",
-):
+    table_format: str = "manifest",
+) -> ManifestTable:
     """Run the load; returns the table handle.
 
     ``infer_schema=True`` reproduces the reference's bare inference
     (:84); default is the canonical-schema scan (single pass, robust to
     single-file inference drift — SURVEY §7 hard part #3).
 
-    ``table_format``: "merge" (default) = directory-swap COW
-    (io/merge.MergeTable — rename-capable filesystems); "manifest" =
-    atomic-manifest commits (io/manifest.ManifestTable — object-store
-    safe, time travel + incremental reads; no durable catalog
-    registration, readers go through the handle).
+    The table is an atomic-manifest ``ManifestTable`` (object-store
+    safe, time travel + incremental reads), registered durably under
+    ``database.table_name`` as a catalog view over its latest snapshot.
+    ``table_format`` accepts only "manifest", the one keyed-table format.
     """
+    if table_format != "manifest":
+        raise ValueError(f"table_format must be 'manifest', got {table_format!r}")
     op = WriteOperation.parse(write_operation)
 
     df = read_json_canonical(
@@ -122,17 +123,7 @@ def load_transactions(
     df = normalize_transactions(df, decimal=decimal)
     df = apply_additional_columns(df, additional_columns)
 
-    if table_format == "manifest":
-        from dca_manager_spark.io.manifest import ManifestTable
-
-        table_cls = ManifestTable
-    elif table_format == "merge":
-        table_cls = MergeTable
-    else:
-        raise ValueError(
-            f"table_format must be 'merge' or 'manifest', got {table_format!r}"
-        )
-    table = table_cls(
+    table = ManifestTable(
         spark,
         table_path,
         keys=("transaction_id", "close_time"),  # ComplexKeyGenerator :57,:68
@@ -152,8 +143,5 @@ def load_transactions(
             )
     # Durable catalog sync — the analogue of hive-sync into the Glue
     # database `dca_manager` (load_transactions.py:73-79, glue.tf:119-122).
-    # Manifest tables are read through the handle (their file set is named
-    # by the manifest, not discoverable by a catalog's directory listing).
-    if hasattr(table, "register"):
-        table.register(f"{database}.{table_name}" if database else table_name)
+    table.register(f"{database}.{table_name}" if database else table_name)
     return table

@@ -23,7 +23,7 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-from dca_manager_spark.io.merge import MergeTable
+from dca_manager_spark.io.manifest import ManifestTable
 from dca_manager_spark.pipeline.connectors import Orderer, get_orderers, resolve_orderer
 from dca_manager_spark.pipeline.load_transactions import load_transactions
 from dca_manager_spark.streaming.queue_source import FileQueue
@@ -42,8 +42,8 @@ def process_orders(
     table_path: str,
     write_operation: str = "upsert",
     orderers: dict[str, Orderer] | None = None,
-) -> MergeTable | None:
-    """Consume every visible message; returns the MergeTable if anything
+) -> ManifestTable | None:
+    """Consume every visible message; returns the ManifestTable if anything
     loaded (None when all messages were filtered)."""
     messages = queue.consume()
     if not messages:
@@ -73,7 +73,7 @@ def process_orders(
 
         queue.ack(msg["__msg_id"])
 
-    table: MergeTable | None = None
+    table: ManifestTable | None = None
     for exchange, files in loads.items():
         # Batched load: the whole exchange prefix in ONE job. The exchange
         # column can't come from hive paths on explicit file lists, so it is

@@ -1492,8 +1492,8 @@ def cross_join_region_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 def precombine_dedup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hudi precombine semantics as a query (SURVEY §1.5): one survivor per
     key, largest precombine value wins. Exercises the engine's actual
-    merge-path code (io/merge.py precombine_dedup)."""
-    from dca_manager_spark.io.merge import precombine_dedup
+    merge-path code (io/manifest.py precombine_dedup)."""
+    from dca_manager_spark.io.manifest import precombine_dedup
 
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_partkey", "l_suppkey"

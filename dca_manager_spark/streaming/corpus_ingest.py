@@ -52,7 +52,7 @@ def stream_corpus_ingest(
 ) -> StreamingQuery:
     """Run the ingest loop over a streaming DataFrame of documents.
 
-    ``table``: a keyed writer (ManifestTable/MergeTable) whose key
+    ``table``: a keyed writer (ManifestTable) whose key
     includes ``id_col`` — the upsert is what makes replay idempotent.
     ``index_path``: a persisted ``CorpusIndex`` (build_corpus_index +
     save) covering exactly the documents already in ``table``.

@@ -74,7 +74,7 @@ def stream_token_counts(
 ) -> StreamingQuery:
     """Maintain per-(event-time bucket, token) counts over a document
     stream. ``table`` is a keyed store with keys (bucket_ts, token,
-    batch_id) accepting upsert (ManifestTable/MergeTable); each
+    batch_id) accepting upsert (a ManifestTable); each
     micro-batch writes one row per (bucket, token) seen in the batch.
     State is O(buckets x vocabulary) — Heaps' law keeps the vocabulary
     far below the corpus; expired buckets sweep with the same DELETE
@@ -155,21 +155,11 @@ def compact_count_store(
     (default grouping: (bucket_ts, token) — the drift-store key minus
     batch_id), the count twin of sketch_maintenance.compact_sketch_store.
 
-    On a ManifestTable store this is ONE atomic multi-op commit
-    (write_txn: delete the folded rows + upsert the sums in a single
-    publish — r13); stores without multi-op commits fall back to the
-    two crash-convergent commits:
-
-    1. one UPSERT writes, per group, the fully-summed count under that
-       group's smallest batch_id AND a ZERO count under every other
-       existing (group, batch_id) key — zero is SUM's merge identity,
-       so a reader between the phases computes identical drift;
-    2. one DELETE sweeps the zeroed keys.
-
-    A crash after phase 1 leaves a correct (unswept) store; phase 2
-    re-runs any time. Compaction preserves bucket keys, so it commutes
-    with sweep_sketch_ttl(bucket_col="bucket_ts") and with later
-    appends (count addition is associative).
+    This is ONE atomic multi-op commit (``write_txn``: delete the
+    folded rows + upsert the sums in a single publish), so a reader
+    never observes a half-compacted store. Compaction preserves bucket
+    keys, so it commutes with sweep_sketch_ttl(bucket_col="bucket_ts")
+    and with later appends (count addition is associative).
 
     REPLAY SAFETY (ADVICE r11): the store's idempotence contract is
     that a replayed micro-batch rewrites ITS OWN (group, batch_id) rows
@@ -187,7 +177,7 @@ def compact_count_store(
     if group_cols is None:
         group_cols = [k for k in table.keys if k != "batch_id"]
     # Pin the resolved store ONCE: everything below (frontier agg,
-    # emptiness probe, fold write, sweep/tombstone write) otherwise
+    # emptiness probe, the commit's upsert and delete sides) otherwise
     # re-runs the merge-on-read resolve per consumer — 4 resolves of a
     # store whose whole point is to be small (O(buckets x vocab)).
     all_rows = (
@@ -205,40 +195,12 @@ def compact_count_store(
     summed = current.groupBy(*group_cols).agg(
         F.sum("cnt").alias("cnt"), F.min("batch_id").alias("batch_id")
     )
-    if hasattr(table, "write_txn"):
-        # ManifestTable's atomic multi-op commit (r13): fold every
-        # consumed (group, batch_id) row away and land the summed row in
-        # ONE publish — no zero-row intermediate state to write or
-        # sweep, half the commits, and a reader can never observe
-        # between-phases at all. Keys overlapping the summed rows'
-        # (group, min batch_id) net to the upsert (write_txn is
-        # delete-then-upsert).
-        folded = current.select(*group_cols, "batch_id")
-        if not summed.take(1):
-            return
-        table.write_txn(
-            upserts=summed.select(*group_cols, "batch_id", "cnt"),
-            deletes=folded,
-        )
+    # Fold every consumed (group, batch_id) row away and land the summed
+    # row in ONE publish. Keys overlapping the summed rows' (group, min
+    # batch_id) net to the upsert (write_txn is delete-then-upsert).
+    if not summed.take(1):
         return
-    # Stores without multi-op commits (MergeTable): the crash-convergent
-    # two-phase dance — zero rows are SUM's merge identity, so a reader
-    # between the phases computes identical drift.
-    zeroed = (
-        current.join(
-            summed.select(
-                *group_cols, F.col("batch_id").alias("__keep")
-            ),
-            group_cols,
-        )
-        .filter(F.col("batch_id") != F.col("__keep"))
-        .select(
-            *group_cols, "batch_id", F.lit(0).cast("long").alias("cnt")
-        )
+    table.write_txn(
+        upserts=summed.select(*group_cols, "batch_id", "cnt"),
+        deletes=current.select(*group_cols, "batch_id"),
     )
-    phase1 = summed.select(*group_cols, "batch_id", "cnt").unionByName(zeroed)
-    if not phase1.take(1):
-        return
-    table.write(phase1, "upsert")
-    if zeroed.take(1):
-        table.write(zeroed.select(*group_cols, "batch_id"), "delete")

@@ -3,8 +3,8 @@
 The reference's lake table is continuously fed by a job that merges each
 arriving batch by key (glue/scripts/load_transactions.py:117-122 relies
 on Hudi's upsert + timeline); the engine analogue is a foreachBatch sink
-that applies each micro-batch to a ``ManifestTable`` (or ``MergeTable``)
-with the table's write operation.
+that applies each micro-batch to a ``ManifestTable`` with the table's
+write operation.
 
 Exactly-once story (the part worth reading):
 - foreachBatch gives AT-LEAST-ONCE batch delivery (a crash between sink
@@ -17,10 +17,10 @@ Exactly-once story (the part worth reading):
   (duplicates by design); the guard below forces an explicit opt-in.
 
 Scale notes: each micro-batch merge is partition-pruned COW — only the
-partitions the batch touches are rewritten (io/merge.py / io/manifest.py)
-— so steady-state cost tracks batch size, not table size. Backpressure
-comes from the source (maxFilesPerTrigger / maxOffsetsPerTrigger), not
-from the sink.
+partitions the batch touches are rewritten (io/manifest.py) — so
+steady-state cost tracks batch size, not table size. Backpressure comes
+from the source (maxFilesPerTrigger / maxOffsetsPerTrigger), not from
+the sink.
 """
 
 from __future__ import annotations
@@ -43,8 +43,8 @@ def stream_upsert(
 ) -> StreamingQuery:
     """Continuously merge a streaming DataFrame into a keyed table.
 
-    ``table``: any object with ``write(df, operation)`` — ManifestTable or
-    MergeTable. ``available_now=True`` drains the backlog and stops
+    ``table``: any object with ``write(df, operation)`` — a
+    ManifestTable. ``available_now=True`` drains the backlog and stops
     (Trigger.AvailableNow — the batch-like deployment mode); ``False``
     runs micro-batch triggers until stopped. ``trigger_interval``
     (continuous mode only, e.g. "2 seconds") paces micro-batches: on a

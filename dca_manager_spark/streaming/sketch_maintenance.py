@@ -48,7 +48,7 @@ def stream_sketch_maintenance(
 ) -> StreamingQuery:
     """Maintain per-group DDSketches over a stream. ``table`` is a
     keyed store with keys (group_cols..., batch_id) accepting upsert
-    (ManifestTable/MergeTable); each micro-batch writes one row per
+    (a ManifestTable); each micro-batch writes one row per
     group seen in the batch: (groups..., batch_id, sketch map,
     zero_count, n).
 
@@ -209,21 +209,11 @@ def compact_sketch_store(
     """Compact the per-batch sketch rows to ONE merged row per group —
     the read-time merge then touches O(groups) rows instead of
     O(groups x batches) — without ever making a read wrong mid-way.
-    On a ManifestTable store this is ONE atomic multi-op commit
-    (write_txn, r13); stores without it fall back to two phases:
-
-    1. one UPSERT commit writes, per group, the fully-merged sketch
-       under that group's smallest batch_id AND an EMPTY sketch (empty
-       map, zero counts) under every other existing (group, batch_id)
-       key — every old row is replaced atomically in a single commit,
-       and empty sketches are merge-identities, so a reader between the
-       phases computes exactly the same quantiles;
-    2. one DELETE commit removes the emptied keys.
-
-    A crash after phase 1 leaves a correct (just unswept) store, and
-    phase 2 can re-run any time — crash-convergent, like the corpus
-    ingest loops. Compaction commutes with later appends (sketch merge
-    is associative), so maintenance never needs to pause.
+    This is ONE atomic multi-op commit (``write_txn``: delete the
+    consumed rows + upsert the merged sketches in a single publish), so
+    a reader never observes a half-compacted store. Compaction commutes
+    with later appends (sketch merge is associative), so maintenance
+    never needs to pause.
 
     REPLAY SAFETY (ADVICE r11): a replayed micro-batch rewrites its own
     (group, batch_id) rows — which folding would break if it touched a
@@ -255,36 +245,9 @@ def compact_sketch_store(
     merged_rows = merged.join(keep_key, group_cols).select(
         *group_cols, "batch_id", "sketch", "zero_count", "n"
     )
-    emptied = (
-        current.join(keep_key.withColumnRenamed("batch_id", "__keep"), group_cols)
-        .filter(F.col("batch_id") != F.col("__keep"))
-        .select(
-            *group_cols,
-            "batch_id",
-            F.map_from_entries(
-                F.expr("cast(array() as array<struct<__bin:int,__cnt:bigint>>)")
-            ).alias("sketch"),
-            F.lit(0).cast("bigint").alias("zero_count"),
-            F.lit(0).cast("bigint").alias("n"),
-        )
+    if not merged_rows.take(1):
+        return
+    table.write_txn(
+        upserts=merged_rows,
+        deletes=current.select(*group_cols, "batch_id"),
     )
-    if hasattr(table, "write_txn"):
-        # ManifestTable's atomic multi-op commit (r13): fold the
-        # consumed rows and land the merged sketches in ONE publish —
-        # no empty-sketch intermediate to write or sweep (see
-        # drift_maintenance.compact_count_store for the full rationale).
-        if not merged_rows.take(1):
-            return
-        table.write_txn(
-            upserts=merged_rows,
-            deletes=current.select(*group_cols, "batch_id"),
-        )
-        return
-    phase1 = merged_rows.unionByName(emptied)
-    if not phase1.take(1):
-        return
-    table.write(phase1, "upsert")
-    if emptied.take(1):
-        table.write(
-            emptied.select(*group_cols, "batch_id"), "delete"
-        )

@@ -103,15 +103,6 @@ def track_order_lifecycle(
     )
 
 
-# The transformWithStateInPandas twin (OrderLifecycleProcessor /
-# track_order_lifecycle_tws) moved to dca_manager_spark.contrib.tws in
-# r14: its runtime needs protobuf, which this environment cannot
-# install, so the engine path never executed here — contrib/ is the
-# honest home for implemented-but-unverifiable surfaces. This module's
-# applyInPandasWithState operator above IS the verified
-# arbitrary-state row.
-
-
 SESSION_OUTPUT_SCHEMA = (
     "user_id long, session_start timestamp, session_end timestamp, "
     "n_events long, closed_by string"

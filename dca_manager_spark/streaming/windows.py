@@ -16,7 +16,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dca_manager_spark.io.merge import MergeTable
+from dca_manager_spark.io.manifest import ManifestTable
 
 
 def tumbling_counts(
@@ -89,7 +89,7 @@ def dedup_stream(
 
 
 def merge_sink(
-    table: MergeTable, write_operation: str = "upsert"
+    table: ManifestTable, write_operation: str = "upsert"
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink: each micro-batch MERGEs into the keyed table —
     the streaming replacement for the reference's one-Glue-run-per-file

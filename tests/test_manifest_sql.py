@@ -290,32 +290,82 @@ def test_mor_view_plan_keeps_window_and_pushes_partition_filter(spark, mor):
 
 
 def test_register_replaces_prior_entry_of_either_kind(spark, cow, tmp_path):
-    """Hive-sync owns the name whatever the prior entity kind: a job
-    that switches table_format between runs re-syncs the SAME catalog
-    name from a parquet TABLE (MergeTable.register) to a resolved VIEW
-    (ManifestTable.register) and back — found by
-    test_load_transactions_manifest_format running after a merge-format
-    run in the same session."""
-    from dca_manager_spark.io.merge import MergeTable
+    """Hive-sync owns the name whatever the prior entity kind: a catalog
+    TABLE left under the name (an external parquet table from an earlier
+    deployment) is replaced by the resolved VIEW, and re-registering
+    after the name went back to a TABLE replaces it again."""
+    legacy = tmp_path / "legacy"
+    make_df(spark, [("M1", TS1, "BTCGBP", 7.0)]).write.parquet(str(legacy))
 
-    mt = MergeTable(
-        spark, str(tmp_path / "merge"),
-        keys=("transaction_id", "close_time"), precombine="transaction_id",
-        partition_by=("pair",),
-    )
-    mt.write(make_df(spark, [("M1", TS1, "BTCGBP", 7.0)]), "bulk_insert")
-    mt.register("mt_kind_swap")
+    def create_legacy_table():
+        spark.sql("DROP VIEW IF EXISTS mt_kind_swap")
+        spark.sql(
+            f"CREATE TABLE mt_kind_swap USING PARQUET LOCATION '{legacy}'"
+        )
+        assert sql_rows(spark, "mt_kind_swap") == {("M1", "BTCGBP", 7.0)}
+
+    create_legacy_table()
     cow.write(make_df(spark, [("T1", TS1, "BTCGBP", 1.0)]), "bulk_insert")
     try:
         cow.register("mt_kind_swap")  # TABLE -> VIEW
         assert sql_rows(spark, "mt_kind_swap") == {("T1", "BTCGBP", 1.0)}
-        mt.register("mt_kind_swap")   # VIEW -> TABLE
-        assert sql_rows(spark, "mt_kind_swap") == {("M1", "BTCGBP", 7.0)}
+        create_legacy_table()          # VIEW -> TABLE
         cow.register("mt_kind_swap")  # and back
         assert sql_rows(spark, "mt_kind_swap") == {("T1", "BTCGBP", 1.0)}
     finally:
         cow.unregister("mt_kind_swap")
         spark.sql("DROP TABLE IF EXISTS mt_kind_swap")
+
+
+@pytest.mark.slow
+def test_register_durable_cross_process(tmp_path):
+    """The reference's hive-sync contract end-to-end: one process writes
+    the table and registers `dca_manager.transactions`; a brand-new
+    SparkSession in a SEPARATE process (hive metastore in the same cwd)
+    queries the registered view by name
+    (glue/scripts/load_transactions.py:73-79)."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": repo}
+    hive = '.config("spark.sql.catalogImplementation", "hive")'
+    writer = textwrap.dedent(
+        f"""
+        from pyspark.sql import SparkSession
+        from dca_manager_spark.io.manifest import ManifestTable
+        spark = (SparkSession.builder.master("local[2]").appName("w"){hive}
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        df = spark.createDataFrame(
+            [("T1", "BTCGBP", 1.0), ("T2", "ETHGBP", 2.0)],
+            "transaction_id string, pair string, price double")
+        t = ManifestTable(spark, "{tmp_path}/tbl", keys=("transaction_id",),
+                          precombine="transaction_id", partition_by=("pair",))
+        t.write(df, "upsert")
+        t.register("dca_manager.transactions")
+        spark.stop()
+        """
+    )
+    reader = textwrap.dedent(
+        f"""
+        from pyspark.sql import SparkSession
+        spark = (SparkSession.builder.master("local[2]").appName("r"){hive}
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        n = spark.sql("SELECT count(*) FROM dca_manager.transactions").collect()[0][0]
+        print("CATALOG_ROWS=" + str(n))
+        spark.stop()
+        """
+    )
+    subprocess.run(
+        [sys.executable, "-c", writer], cwd=tmp_path, env=env, check=True, timeout=300
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", reader], cwd=tmp_path, env=env, check=True,
+        timeout=300, capture_output=True, text=True,
+    )
+    assert "CATALOG_ROWS=2" in out.stdout
 
 
 def test_snapshot_sql_rejects_glob_metachar_root(spark, tmp_path):

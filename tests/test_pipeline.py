@@ -139,13 +139,15 @@ def test_process_happy_path_end_to_end(spark, tmp_path, config_path):
     assert r.exchange == "kraken"  # injected literal (additional_columns)
     assert r.price == 100.23 and r.fee == 1.23 and r.volume == 20.0  # doubles now
     assert r.close_time.year == 2033  # 2000021133 epoch-s -> timestamp
-    # hive partition layout by pair
-    assert (tmp_path / "table/pair=ADAGBP").is_dir()
+    # partitioned by pair: the manifest prunes to the row's partition
+    assert table.read(partition_filter={"pair": "ADAGBP"}).count() == 1
 
 
 def test_load_transactions_validates_operation(spark, tmp_path):
     with pytest.raises(ValueError, match="write_operation"):
         load_transactions(spark, "whatever", str(tmp_path / "t"), write_operation="merge")
+    with pytest.raises(ValueError, match="table_format"):
+        load_transactions(spark, "whatever", str(tmp_path / "t"), table_format="merge")
 
 
 def test_additional_columns_none_sentinel(spark):
@@ -220,9 +222,10 @@ def test_execute_orders_distributed(spark, tmp_path, config_path):
     assert payload["description"]["pair"] == "ADAGBP"
 
 
-def test_cli_contract(tmp_path, config_path):
+def test_cli_contract(spark, tmp_path, config_path):
     """CLI argument-contract parity: execute-orders then process-orders
     then a standalone load —  all through the __main__ surface."""
+    from dca_manager_spark.io.manifest import ManifestTable
     from dca_manager_spark.pipeline.cli import build_parser, main
 
     # parser accepts the Glue-contract args
@@ -239,8 +242,10 @@ def test_cli_contract(tmp_path, config_path):
     rc = main(["process-orders", "--queue_dir", str(tmp_path / "q"),
                "--data_dir", str(tmp_path / "d"), "--table_path", str(tmp_path / "t")])
     assert rc == 0
-    import glob
-    assert glob.glob(str(tmp_path / "t" / "pair=ADAGBP" / "*.parquet"))
+    rows = ManifestTable(spark, str(tmp_path / "t")).read().collect()
+    assert [(r.transaction_id, r.pair) for r in rows] == [
+        (FakeOrderer.FAKE_TXID, "ADAGBP")
+    ]
 
 
 def test_load_quality_gate(spark, tmp_path):

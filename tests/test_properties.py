@@ -6,12 +6,14 @@ inputs, not just fixtures — the test layer the reference lacks entirely
   reference implementation as oracle)
 - upsert is last-writer-wins and idempotent for random batch sequences
 - bulk_insert row count is exactly additive
+- ManifestTable == a pure-Python model of the keyed write semantics
 - Jaccard pairs are symmetric-free (a<b), bounded, and exact
 """
 
 from __future__ import annotations
 
 import datetime
+import itertools
 
 import pandas as pd
 import pytest
@@ -19,7 +21,7 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from dca_manager_spark.io.merge import MergeTable
+from dca_manager_spark.io.manifest import ManifestTable
 from dca_manager_spark.operators.relational import asof_join
 
 BASE = datetime.datetime(2024, 1, 1)
@@ -101,39 +103,76 @@ batches = st.lists(
 )
 
 
+def _model_step(state: tuple, op: str, batch: list[tuple]) -> list[tuple]:
+    """Every table state one keyed write may leave, rows (key, pair,
+    price) with price the precombine field. insert/bulk_insert append the
+    batch, duplicates included. upsert/delete first keep one row per key
+    with the max price — ties are arbitrary by contract, so every tied
+    survivor is a possible outcome — then, in each partition the
+    surviving rows touch, drop the existing rows whose key is in the
+    batch; upsert then adds the survivors."""
+    if op in ("insert", "bulk_insert"):
+        return [tuple(sorted(state + tuple(batch)))]
+    by_key: dict[str, list[tuple]] = {}
+    for row in batch:
+        by_key.setdefault(row[0], []).append(row)
+    tied = [
+        [r for r in rows if r[2] == max(x[2] for x in rows)]
+        for rows in by_key.values()
+    ]
+    outcomes = []
+    for winners in itertools.product(*tied):
+        touched = {w[1] for w in winners}
+        kept = tuple(r for r in state if not (r[0] in by_key and r[1] in touched))
+        added = winners if op == "upsert" else ()
+        outcomes.append(tuple(sorted(kept + tuple(added))))
+    return outcomes
+
+
+def _model_outcomes(seq) -> set[tuple]:
+    """Every final state a sequence of (op, batch) writes may leave."""
+    states = {()}
+    for op, batch in seq:
+        states = {nxt for st in states for nxt in _model_step(st, op, batch)}
+    return states
+
+
+def _table_rows(table: ManifestTable) -> tuple:
+    if not table.exists():
+        return ()
+    cols = ("transaction_id", "pair", "price")
+    return tuple(sorted(map(tuple, table.read().select(*cols).collect())))
+
+
 @pytest.mark.slow
 @given(seq=batches)
 @settings(**H_SETTINGS)
 def test_upsert_last_writer_wins(spark, tmp_path_factory, seq):
     """After any sequence of upsert batches, the table holds exactly one
-    row per live key, and its value comes from the LAST batch that touched
-    the key (within a batch: the precombine winner)."""
-    path = tmp_path_factory.mktemp("merge") / "t"
-    # global_index: last-writer-wins must hold even when a key's partition
-    # value changes between batches (hypothesis found exactly that case —
-    # the default partition-scoped index keeps the old partition's row,
-    # which is Hudi-default behavior, tested separately in test_merge).
-    table = MergeTable(
+    row per live (key, partition) identity, and its value comes from the
+    LAST batch that touched the key in that partition (within a batch:
+    the precombine winner). The index is partition-scoped (Hudi default),
+    so a key that arrives with a new partition value keeps its row in
+    the old partition."""
+    path = tmp_path_factory.mktemp("upsert") / "t"
+    table = ManifestTable(
         spark, str(path), keys=("transaction_id",), precombine="price",
-        partition_by=("pair",), global_index=True,
+        partition_by=("pair",),
     )
-    expected: dict[str, tuple[str, int]] = {}
     for batch in seq:
         df = spark.createDataFrame(
             batch, "transaction_id string, pair string, price long"
         )
         table.write(df, "upsert")
-        winners: dict[str, tuple[str, int]] = {}
-        for txid, pair, price in batch:
-            cur = winners.get(txid)
-            if cur is None or price > cur[1]:
-                winners[txid] = (pair, price)
-        expected.update(winners)
 
-    got = {
-        r.transaction_id: (r.pair, r.price) for r in table.read().collect()
-    }
-    assert got == expected
+    rows = _table_rows(table)
+    got = {(txid, pair): price for txid, pair, price in rows}
+    assert len(got) == len(rows)  # one row per (key, partition)
+    expected = [
+        {(txid, pair): price for txid, pair, price in state}
+        for state in _model_outcomes([("upsert", b) for b in seq])
+    ]
+    assert got in expected
 
 
 @given(
@@ -142,7 +181,7 @@ def test_upsert_last_writer_wins(spark, tmp_path_factory, seq):
 @settings(**H_SETTINGS)
 def test_bulk_insert_additive(spark, tmp_path_factory, n1, n2):
     path = tmp_path_factory.mktemp("bulk") / "t"
-    table = MergeTable(
+    table = ManifestTable(
         spark, str(path), keys=("transaction_id",), precombine="transaction_id",
         partition_by=(),
     )
@@ -248,29 +287,20 @@ mixed_ops = st.lists(
 @settings(max_examples=5, deadline=None,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
-def test_manifest_table_matches_merge_table(spark, tmp_path_factory, seq):
-    """The two commit protocols are interchangeable: after ANY sequence of
-    upsert/delete/bulk_insert batches, MergeTable (directory-swap COW) and
-    ManifestTable (atomic-manifest COW) hold exactly the same rows."""
-    from dca_manager_spark.io.manifest import ManifestTable
-
-    base = tmp_path_factory.mktemp("parity")
-    kwargs = dict(keys=("transaction_id",), precombine="price",
-                  partition_by=("pair",))
-    mt = MergeTable(spark, str(base / "merge"), **kwargs)
-    man = ManifestTable(spark, str(base / "manifest"), **kwargs)
+def test_manifest_table_matches_model(spark, tmp_path_factory, seq):
+    """After ANY sequence of upsert/delete/bulk_insert batches, the
+    ManifestTable holds one of the row multisets the pure-Python model of
+    the keyed write semantics allows (more than one only when a batch
+    ties on the precombine field)."""
+    path = tmp_path_factory.mktemp("model") / "t"
+    table = ManifestTable(spark, str(path), keys=("transaction_id",),
+                          precombine="price", partition_by=("pair",))
     for op, batch in seq:
         df = spark.createDataFrame(
             batch, "transaction_id string, pair string, price long"
         )
-        mt.write(df, op)
-        man.write(df, op)
-    if not mt.exists():
-        assert not man.exists() or man.read().count() == 0
-        return
-    rows_mt = sorted(map(tuple, mt.read().collect()))
-    rows_man = sorted(map(tuple, man.read().select(*mt.read().columns).collect()))
-    assert rows_mt == rows_man
+        table.write(df, op)
+    assert _table_rows(table) in _model_outcomes(seq)
 
 
 chunk_texts = st.lists(

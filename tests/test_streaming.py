@@ -12,7 +12,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from dca_manager_spark.io.merge import MergeTable
+from dca_manager_spark.io.manifest import ManifestTable
 from dca_manager_spark.streaming.queue_source import FileQueue
 from dca_manager_spark.streaming.windows import (
     dedup_stream,
@@ -67,7 +67,7 @@ def test_stream_filter_real_and_merge_sink(spark, tmp_path):
     queue.publish("TX1", "b", "k1", exchange="kraken", real=True)
     queue.publish("TX2", "b", "k2", exchange="kraken", real=False)  # dropped
 
-    table = MergeTable(
+    table = ManifestTable(
         spark,
         str(tmp_path / "table"),
         keys=("transaction_id",),
@@ -643,51 +643,6 @@ def test_stream_upsert_feeds_incremental_consumers(spark, tmp_path):
     ]
     inc = table.read_incremental(ids[0], records=True).collect()
     assert [(r.transaction_id, r.price) for r in inc] == [("T1", 9.0)]
-
-
-def test_lifecycle_processor_logic_without_engine(spark):
-    """The contrib transformWithState processor's per-group logic,
-    driven directly with a fake ValueState — the only runnable coverage
-    of the twin here (the engine path needs protobuf; see
-    dca_manager_spark/contrib/tws.py). The end-to-end parity test was
-    REMOVED in r14 with the move to contrib: it had skipped for 13
-    straight rounds and a permanently-skipping test is a coverage
-    claim, not coverage."""
-    import pandas as pd
-
-    from dca_manager_spark.contrib.tws import OrderLifecycleProcessor
-
-    class FakeState:
-        def __init__(self):
-            self.v = None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-        def clear(self):
-            self.v = None
-
-    proc = OrderLifecycleProcessor()
-    state = FakeState()
-    proc._pending = state
-
-    base = datetime.datetime(2024, 1, 1, 10, 0, 0)
-    # Batch 1: pending only -> no emission, state holds the timestamp.
-    b1 = pd.DataFrame({"transaction_id": ["T1"], "status": ["pending"], "ts": [base]})
-    out1 = list(proc.handleInputRows(("T1",), iter([b1]), None))
-    assert out1 == [] and state.v == (base,)
-
-    # Batch 2: complete -> one settlement with cross-batch latency, state cleared.
-    b2 = pd.DataFrame(
-        {"transaction_id": ["T1"], "status": ["complete"],
-         "ts": [base + datetime.timedelta(seconds=90)]}
-    )
-    out2 = pd.concat(list(proc.handleInputRows(("T1",), iter([b2]), None)))
-    assert out2.iloc[0].latency_s == 90.0 and out2.iloc[0].outcome == "completed"
-    assert state.v is None
 
 
 def test_stream_corpus_ingest_loop(spark, tmp_path):
