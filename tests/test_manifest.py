@@ -1,6 +1,6 @@
-"""ManifestTable: the four write operations with Hudi parity (SURVEY
-§1.5), the object-store-safe commit protocol — atomic publish, crash
-invisibility, manifest-level pruning, vacuum."""
+"""ManifestTable: the object-store-safe commit protocol — atomic publish,
+crash invisibility, manifest-level pruning, vacuum. The keyed-write
+semantics of the four operations are in test_merge.py."""
 
 from __future__ import annotations
 
@@ -11,14 +11,9 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from dca_manager_spark.io.manifest import (
-    ManifestTable,
-    WriteOperation,
-    precombine_dedup,
-)
+from dca_manager_spark.io.manifest import ManifestTable
 
 TS1 = datetime.datetime(2024, 1, 1, 12, 0, 0)
-TS2 = datetime.datetime(2024, 2, 2, 12, 0, 0)
 
 
 def make_df(spark, rows):
@@ -39,16 +34,10 @@ def table(spark, tmp_path):
 
 
 def test_bulk_insert_preserves_duplicates(spark, table):
-    """Hudi bulk_insert/insert do NOT combine (SURVEY §7 hard part #2):
-    duplicate keys are a legal table state. An unknown operation is
-    refused like the reference job refuses it (load_transactions.py:48-51)."""
     df = make_df(spark, [("T1", TS1, "BTCGBP", 1.0), ("T1", TS1, "BTCGBP", 2.0)])
     table.write(df, "bulk_insert")
     table.write(df, "insert")
     assert table.read().count() == 4
-    with pytest.raises(ValueError, match="write_operation"):
-        table.write(df, "replace")
-    assert WriteOperation.parse("bulk_insert") is WriteOperation.BULK_INSERT
 
 
 def test_upsert_precombine_and_update(spark, table):
@@ -64,23 +53,12 @@ def test_upsert_precombine_and_update(spark, table):
     rows = {r.transaction_id: r.price for r in table.read().collect()}
     assert rows == {"T1": 9.0, "T2": 5.0, "T3": 3.0}
 
-    # tiebreaks: max precombine first, then the max of each tiebreak column
-    tied = spark.createDataFrame(
-        [("K", 1, "a"), ("K", 2, "b"), ("K", 2, "c")], "k string, pc int, v string"
-    )
-    out = precombine_dedup(tied, ["k"], "pc", tiebreaks=["v"]).collect()
-    assert len(out) == 1 and out[0].v == "c"
-
 
 def test_upsert_is_idempotent(spark, table):
     df = make_df(spark, [("T1", TS1, "BTCGBP", 1.0)])
     table.write(df, "upsert")
     table.write(df, "upsert")
     assert table.read().count() == 1
-    # (transaction_id, close_time) is the record key — the same txid at a
-    # different close_time is a DIFFERENT record (ComplexKeyGenerator)
-    table.write(make_df(spark, [("T1", TS2, "BTCGBP", 2.0)]), "upsert")
-    assert table.read().count() == 2
 
 
 def test_delete_and_empty_table_stays_readable(spark, table):
@@ -107,16 +85,6 @@ def test_cow_touches_only_affected_partitions(spark, table):
     assert eth and set(eth) <= first
     btc = [f["path"] for f in second if f["partition"] == {"pair": "BTCGBP"}]
     assert btc and not (set(btc) & first)  # BTC rewritten
-
-    # Partition-scoped index (Hudi default): a key arriving with a NEW
-    # partition value becomes a second row; the old partition's row
-    # survives.
-    table.write(make_df(spark, [("T2", TS1, "BTCGBP", 7.0)]), "upsert")
-    got = sorted(
-        (r.pair, r.price)
-        for r in table.read().filter("transaction_id = 'T2'").collect()
-    )
-    assert got == [("BTCGBP", 7.0), ("ETHGBP", 2.0)]
 
 
 def test_manifest_level_partition_pruning(spark, table):
@@ -1122,30 +1090,6 @@ def test_constraint_validation_sees_the_written_materialization(spark, tmp_path)
         "different materializations"
     )
     assert t.read().count() == 8
-
-
-def test_upsert_pins_nondeterministic_batch(spark, table):
-    """The merge path consumes the batch frame several times; a
-    NONDETERMINISTIC batch (here: random per-evaluation sampling in a
-    mapInPandas) must still merge consistently — the batch is pinned
-    (materialized once) before use. Without pinning, the key-set and the
-    union would see different samples: rows lost and/or duplicated."""
-    base = make_df(spark, [(f"T{i:02d}", TS1, "BTCGBP", float(i)) for i in range(20)])
-    table.write(base, "bulk_insert")
-
-    def jitter(batches):
-        import numpy as np
-
-        for pdf in batches:
-            yield pdf[np.random.rand(len(pdf)) < 0.5]
-
-    nondet = base.mapInPandas(jitter, schema=base.schema).withColumn(
-        "price", F.lit(0.0)
-    )
-    table.write(nondet, "upsert")
-    rows = table.read().collect()
-    assert len(rows) == 20
-    assert {r.transaction_id for r in rows} == {f"T{i:02d}" for i in range(20)}
 
 
 def test_type_conflict_is_loud_before_publish(spark, table):

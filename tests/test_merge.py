@@ -1,6 +1,7 @@
-"""MergeTable semantics: the four write operations with Hudi parity
-(SURVEY §1.5) — precombine winner, duplicate-preserving bulk_insert,
-keyed delete, partition layout, idempotent re-upsert."""
+"""Keyed-write semantics of ManifestTable: the four write operations with
+Hudi parity (SURVEY §1.5) — precombine winner, duplicate-preserving
+bulk_insert, keyed delete, partition-scoped index, idempotent re-upsert,
+compaction, schema evolution and durable catalog registration."""
 
 from __future__ import annotations
 
@@ -9,7 +10,11 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from dca_manager_spark.io.merge import MergeTable, WriteOperation, precombine_dedup
+from dca_manager_spark.io.manifest import (
+    ManifestTable,
+    WriteOperation,
+    precombine_dedup,
+)
 
 TS1 = datetime.datetime(2024, 1, 1, 12, 0, 0)
 TS2 = datetime.datetime(2024, 2, 2, 12, 0, 0)
@@ -23,7 +28,7 @@ def make_df(spark, rows):
 
 @pytest.fixture
 def table(spark, tmp_path):
-    return MergeTable(
+    return ManifestTable(
         spark,
         str(tmp_path / "transactions"),
         keys=("transaction_id", "close_time"),
@@ -32,10 +37,22 @@ def table(spark, tmp_path):
     )
 
 
-def test_operation_validation():
+def partition_files(table, pair):
+    return {
+        f["path"]
+        for f in table._latest_manifest()[1]["files"]
+        if f["partition"] == {"pair": pair}
+    }
+
+
+def test_operation_validation(spark, table):
     with pytest.raises(ValueError, match="write_operation"):
         WriteOperation.parse("replace")
     assert WriteOperation.parse("bulk_insert") is WriteOperation.BULK_INSERT
+    # the table refuses an unknown operation like the reference job does
+    # (load_transactions.py:48-51)
+    with pytest.raises(ValueError, match="write_operation"):
+        table.write(make_df(spark, [("T1", TS1, "BTCGBP", 1.0)]), "replace")
 
 
 def test_bulk_insert_preserves_duplicates(spark, table):
@@ -48,9 +65,8 @@ def test_bulk_insert_preserves_duplicates(spark, table):
 
 
 def test_upsert_precombine_winner(spark, table):
-    """Within a batch, the larger precombine value wins (load_transactions
-    .py:58 — precombine field is transaction_id itself, so same-key rows
-    collapse deterministically)."""
+    """Within a batch, same-key rows collapse to one survivor (the
+    precombine field is transaction_id itself, load_transactions.py:58)."""
     df = make_df(
         spark,
         [
@@ -104,30 +120,18 @@ def test_delete_removes_matched_keys(spark, table):
     assert got == {"T2", "T3"}
 
 
-def test_hive_partition_layout(spark, table, tmp_path):
-    """Partition dirs are hive-style pair=<PAIR> (hive_style_partitioning,
-    load_transactions.py:69)."""
-    table.write(
-        make_df(spark, [("T1", TS1, "BTCGBP", 1.0), ("T2", TS1, "ETHGBP", 2.0)]),
-        "bulk_insert",
-    )
-    root = tmp_path / "transactions"
-    parts = {p.name for p in root.iterdir() if p.is_dir()}
-    assert parts == {"pair=BTCGBP", "pair=ETHGBP"}
-
-
-def test_upsert_rewrites_only_touched_partitions(spark, table, tmp_path):
+def test_upsert_rewrites_only_touched_partitions(spark, table):
     """COPY_ON_WRITE discipline: an upsert touching only ETHGBP must leave
-    the BTCGBP partition's files untouched on disk."""
+    the BTCGBP partition's files untouched."""
     table.write(
         make_df(spark, [("T1", TS1, "BTCGBP", 1.0), ("T2", TS1, "ETHGBP", 2.0)]),
         "bulk_insert",
     )
-    root = tmp_path / "transactions"
-    before = {f: f.stat().st_mtime_ns for f in (root / "pair=BTCGBP").glob("*.parquet")}
+    btc_before = partition_files(table, "BTCGBP")
+    eth_before = partition_files(table, "ETHGBP")
     table.write(make_df(spark, [("T2", TS1, "ETHGBP", 99.0)]), "upsert")
-    after = {f: f.stat().st_mtime_ns for f in (root / "pair=BTCGBP").glob("*.parquet")}
-    assert before == after, "untouched partition was rewritten"
+    assert partition_files(table, "BTCGBP") == btc_before, "untouched partition was rewritten"
+    assert not partition_files(table, "ETHGBP") & eth_before
     got = {r.transaction_id: r.price for r in table.read().collect()}
     assert got == {"T1": 1.0, "T2": 99.0}
 
@@ -169,9 +173,9 @@ def test_partition_scoped_index_keeps_moved_key(spark, tmp_path):
     """Hudi-default (partition-scoped index) parity: a key arriving with a
     NEW partition value becomes a second row; the old partition's row
     survives (SURVEY §1.5 / Hudi BLOOM index semantics)."""
-    table = MergeTable(
+    table = ManifestTable(
         spark, str(tmp_path / "t"), keys=("transaction_id",),
-        precombine="price", partition_by=("pair",), global_index=False,
+        precombine="price", partition_by=("pair",),
     )
     table.write(make_df(spark, [("T1", TS1, "ETHGBP", 1.0)]), "upsert")
     table.write(make_df(spark, [("T1", TS1, "BTCGBP", 2.0)]), "upsert")
@@ -179,28 +183,8 @@ def test_partition_scoped_index_keeps_moved_key(spark, tmp_path):
     assert got == [("BTCGBP", 2.0), ("ETHGBP", 1.0)]  # both rows live
 
 
-def test_global_index_moves_key_across_partitions(spark, tmp_path):
-    """Hudi GLOBAL index parity: the same sequence leaves exactly one row,
-    in the new partition."""
-    table = MergeTable(
-        spark, str(tmp_path / "t"), keys=("transaction_id",),
-        precombine="price", partition_by=("pair",), global_index=True,
-    )
-    table.write(make_df(spark, [("T1", TS1, "ETHGBP", 1.0)]), "upsert")
-    table.write(make_df(spark, [("T1", TS1, "BTCGBP", 2.0)]), "upsert")
-    got = [(r.pair, r.price) for r in table.read().collect()]
-    assert got == [("BTCGBP", 2.0)]
-    # the old partition directory holds no parquet rows anymore
-    import pathlib
-    old = pathlib.Path(tmp_path / "t" / "pair=ETHGBP")
-    if old.exists():
-        assert spark.read.parquet(str(tmp_path / "t")).filter("pair='ETHGBP'").count() == 0
-
-
-def test_delete_can_empty_a_partition(spark, table, tmp_path):
-    """Deleting every row of a partition must clear it — dynamic overwrite
-    alone cannot empty a partition (latent bug class caught by hypothesis's
-    moved-key example)."""
+def test_delete_can_empty_a_partition(spark, table):
+    """Deleting every row of a partition must clear it."""
     table.write(
         make_df(spark, [("T1", TS1, "BTCGBP", 1.0), ("T2", TS1, "ETHGBP", 2.0)]),
         "bulk_insert",
@@ -210,113 +194,45 @@ def test_delete_can_empty_a_partition(spark, table, tmp_path):
     assert table.read().filter("pair='ETHGBP'").count() == 0
 
 
-def test_merge_single_write_per_upsert(spark, table, monkeypatch):
-    """COW merge performs exactly ONE physical write of the merged data
-    (the staged-dir formulation wrote every affected partition twice)."""
-    table.write(make_df(spark, [("T1", TS1, "BTCGBP", 1.0)]), "bulk_insert")
-    modes = []
-    orig = MergeTable._writer
-
-    def counting(self, df, mode):
-        modes.append(mode)
-        return orig(self, df, mode)
-
-    monkeypatch.setattr(MergeTable, "_writer", counting)
-    table.write(
-        make_df(spark, [("T1", TS1, "BTCGBP", 2.0), ("T9", TS1, "BTCGBP", 3.0)]),
-        "upsert",
-    )
-    assert modes == ["overwrite"]  # one write, no staging copy
-    rows = {r.transaction_id: r.price for r in table.read().collect()}
-    assert rows == {"T1": 2.0, "T9": 3.0}
-
-
 def test_register_durable_survives_new_session(spark, table):
     """A14 catalog sync: durable registration is visible from a NEW
     session over the same catalog (temp views are not — negative control),
-    is partition-aware, re-syncs after partition-adding writes, and is
-    EXTERNAL (drop does not delete data)."""
+    keeps partition filters pushed into the scans, re-syncs after
+    partition-adding writes, and dropping it does not delete data."""
     table.write(
         make_df(spark, [("T1", TS1, "BTCGBP", 1.0), ("T2", TS1, "ETHGBP", 2.0)]),
         "bulk_insert",
     )
     table.register("dca_reg_test.transactions")
-    ns = spark.newSession()
-    rows = ns.sql(
-        "SELECT pair, count(*) AS n FROM dca_reg_test.transactions "
-        "GROUP BY pair ORDER BY pair"
-    ).collect()
-    assert [(r.pair, r.n) for r in rows] == [("BTCGBP", 1), ("ETHGBP", 1)]
+    try:
+        ns = spark.newSession()
+        rows = ns.sql(
+            "SELECT pair, count(*) AS n FROM dca_reg_test.transactions "
+            "GROUP BY pair ORDER BY pair"
+        ).collect()
+        assert [(r.pair, r.n) for r in rows] == [("BTCGBP", 1), ("ETHGBP", 1)]
 
-    # Partition pruning works through the catalog entry.
-    plan = ns.sql(
-        "SELECT * FROM dca_reg_test.transactions WHERE pair = 'BTCGBP'"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
+        # The partition filter reaches the scans through the catalog entry.
+        plan = ns.sql(
+            "SELECT * FROM dca_reg_test.transactions WHERE pair = 'BTCGBP'"
+        )._jdf.queryExecution().executedPlan().toString()
+        assert "EqualTo(pair,BTCGBP)" in plan
 
-    # Temp-view registration stays session-scoped.
-    table.register("reg_temp_view", durable=False)
-    assert "reg_temp_view" in [t.name for t in spark.catalog.listTables()]
-    assert "reg_temp_view" not in [t.name for t in ns.catalog.listTables()]
+        # Temp-view registration stays session-scoped.
+        table.register("reg_temp_view", durable=False)
+        assert "reg_temp_view" in [t.name for t in spark.catalog.listTables()]
+        assert "reg_temp_view" not in [t.name for t in ns.catalog.listTables()]
 
-    # Re-register after a partition-adding write re-syncs partitions.
-    table.write(make_df(spark, [("T3", TS1, "SOLGBP", 3.0)]), "upsert")
-    table.register("dca_reg_test.transactions")
-    assert ns.sql("SELECT count(*) FROM dca_reg_test.transactions").collect()[0][0] == 3
+        # A partition-adding write through the handle re-syncs the entry.
+        table.write(make_df(spark, [("T3", TS1, "SOLGBP", 3.0)]), "upsert")
+        assert ns.sql("SELECT count(*) FROM dca_reg_test.transactions").collect()[0][0] == 3
+    finally:
+        table.unregister("dca_reg_test.transactions")
+        table.unregister("reg_temp_view")
 
-    # External: dropping the catalog entry must not delete table data.
-    spark.sql("DROP TABLE dca_reg_test.transactions")
+    # Dropping the catalog entry must not delete table data.
+    assert not spark.catalog.tableExists("dca_reg_test.transactions")
     assert table.read().count() == 3
-
-
-@pytest.mark.slow
-def test_register_durable_cross_process(tmp_path):
-    """The reference's hive-sync contract end-to-end: one process writes
-    the table and registers `dca_manager.transactions`; a brand-new
-    SparkSession in a SEPARATE process (hive metastore in the same cwd)
-    queries it by name (glue/scripts/load_transactions.py:73-79)."""
-    import os
-    import subprocess
-    import sys
-    import textwrap
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = {**os.environ, "PYTHONPATH": repo}
-    hive = '.config("spark.sql.catalogImplementation", "hive")'
-    writer = textwrap.dedent(
-        f"""
-        from pyspark.sql import SparkSession
-        from dca_manager_spark.io.merge import MergeTable
-        spark = (SparkSession.builder.master("local[2]").appName("w"){hive}
-                 .config("spark.ui.enabled", "false").getOrCreate())
-        df = spark.createDataFrame(
-            [("T1", "BTCGBP", 1.0), ("T2", "ETHGBP", 2.0)],
-            "transaction_id string, pair string, price double")
-        t = MergeTable(spark, "{tmp_path}/tbl", keys=("transaction_id",),
-                       precombine="transaction_id", partition_by=("pair",))
-        t.write(df, "upsert")
-        t.register("dca_manager.transactions")
-        spark.stop()
-        """
-    )
-    reader = textwrap.dedent(
-        f"""
-        from pyspark.sql import SparkSession
-        spark = (SparkSession.builder.master("local[2]").appName("r"){hive}
-                 .config("spark.ui.enabled", "false").getOrCreate())
-        n = spark.sql("SELECT count(*) FROM dca_manager.transactions").collect()[0][0]
-        print("CATALOG_ROWS=" + str(n))
-        spark.stop()
-        """
-    )
-    subprocess.run(
-        [sys.executable, "-c", writer], cwd=tmp_path, env=env, check=True, timeout=300
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", reader], cwd=tmp_path, env=env, check=True,
-        timeout=300, capture_output=True, text=True,
-    )
-    assert "CATALOG_ROWS=2" in out.stdout
 
 
 def test_upsert_pins_nondeterministic_batch(spark, table):
