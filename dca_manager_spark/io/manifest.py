@@ -66,10 +66,14 @@ import uuid
 from enum import Enum
 from pathlib import Path
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 _UNSET = object()  # "no prev supplied" sentinel (None = empty table)
+# Serializes catalog syncs in this process: the read-prior-view /
+# replace-view step of register() is check-then-act.
+_SYNC_LOCK = _threading.Lock()
 
 
 class WriteOperation(str, Enum):
@@ -121,6 +125,16 @@ _CHANGES_DIR = "_changes"
 # Spark/Hive's partition-directory conventions: special characters are
 # %XX-escaped by escapePathName, nulls become a sentinel directory name.
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+# The commit directory a data file was written into (its LAST
+# `/commit-<hex>/` segment), as a Python and a Java regex alike.
+_COMMIT_DIR_RE = ".*/(commit-[0-9a-f]+)/"
+
+
+def _commit_dir(path: str) -> str:
+    m = re.match(_COMMIT_DIR_RE, "/" + path)
+    return m.group(1) if m else ""
 
 
 def _hive_unescape(value: str) -> str:
@@ -909,6 +923,12 @@ class ManifestTable:
         ]
 
     # -- read side ----------------------------------------------------------
+    def _data_path(self, entry: dict) -> str:
+        """Absolute path of a manifest entry's file: relative entries sit
+        under the table root; absolute ones (borrowed by a shallow clone)
+        stand as they are."""
+        return str(Path(self.path).absolute() / entry["path"])
+
     def exists(self) -> bool:
         return self._latest_manifest() is not None
 
@@ -1048,7 +1068,7 @@ class ManifestTable:
             df = self._resolve_mor(files, schema)
         else:
             df = self.spark.read.schema(schema).parquet(
-                *[str(Path(self.path) / f["path"]) for f in files]
+                *[self._data_path(f) for f in files]
             )
         if range_filter:
             for c, (lo, hi) in range_filter.items():
@@ -1102,44 +1122,37 @@ class ManifestTable:
 
     # -- SQL catalog surface (hive-sync analogue) ---------------------------
 
-    _MOR_META = ("_commit", "_sup", "_del", "_sc", "_rn")
+    # `_metadata` too: a data column of that name hides the file-metadata
+    # column the MOR view reads.
+    _MOR_META = ("_commit", "_sup", "_del", "_sc", "_rn", "_metadata")
 
     @staticmethod
     def _q(ident: str) -> str:
         """Backtick-quote a SQL identifier (column / view name part)."""
         return "`" + ident.replace("`", "``") + "`"
 
-    # Paths outside this alphabet fall back to one branch per file —
-    # Hadoop glob metacharacters ({}[]*?,) in a path would corrupt the
-    # brace-batched file list. Our own layout (data/commit-<hex>/ +
-    # hive-escaped partition dirs, where unsafe chars are %-encoded)
-    # always matches.
+    def _q_name(self, name: str) -> str:
+        """Quote a possibly database-qualified catalog name part by part."""
+        return ".".join(self._q(p) for p in name.split("."))
+
+    # Data paths and roots outside this alphabet cannot sit in a Hadoop
+    # brace glob ({}[]*?, are glob metacharacters) or a SQL string
+    # literal. Our own layout (data/commit-<hex>/ + hive-escaped
+    # partition dirs, where unsafe chars are %-encoded) always matches.
     _GLOB_SAFE = re.compile(r"^[A-Za-z0-9._%=+@/-]+$")
 
-    def _file_columns(self, files: list[dict]) -> dict[str, frozenset]:
-        """{path: physical column set} with ONE parquet footer probe per
-        directory (all files of one directory come from one write job and
-        share a schema) — metadata-only reads, never row data."""
-        import pyarrow.parquet as pq
-
-        cache: dict[str, frozenset] = {}
-        out: dict[str, frozenset] = {}
-        for f in files:
-            d = str(Path(f["path"]).parent)
-            if d not in cache:
-                cache[d] = frozenset(
-                    pq.read_schema(str(Path(self.path) / f["path"])).names
-                )
-            out[f["path"]] = cache[d]
-        return out
+    # Catalog names `<name>__snap_<manifest id>_<8 hex>` are reserved for
+    # the snapshot tables behind a registered view.
+    _SNAP_SUFFIX = "__snap_"
+    # View properties a sync records and the next sync reads back.
+    _SYNC_PROPS = ("dca.root", "dca.manifest", "dca.snapshot", "dca.previous")
 
     def _check_sql_embeddable_root(self) -> None:
-        """The table ROOT is embedded in every `parquet.` branch of the
-        view text; unlike the per-file _GLOB_SAFE fallback there is no
-        escape hatch for it (Hadoop globs the whole path string), so a
-        root containing glob metacharacters ({}[]*?,) or SQL-identifier
-        breakers would silently corrupt all scans of a durable registered
-        view (ADVICE r15). Refuse loudly instead."""
+        """The table ROOT is the prefix of every snapshot-table location;
+        Hadoop globs the whole location string, so a root containing glob
+        metacharacters ({}[]*?,) or SQL-literal breakers would silently
+        corrupt all scans of a durable registered view (ADVICE r15).
+        Refuse loudly instead."""
         root = self.path if "://" in self.path else str(Path(self.path).absolute())
         if "`" in root or "\n" in root:
             raise ValueError(f"table root not SQL-embeddable: {root!r}")
@@ -1149,122 +1162,102 @@ class ManifestTable:
         ):
             raise ValueError(
                 f"table root {root!r} contains Hadoop glob metacharacters "
-                "or other unsafe characters; snapshot_sql/register cannot "
-                "address it — read through ManifestTable.read() instead"
+                "or other unsafe characters; register cannot address it "
+                "— read through ManifestTable.read() instead"
             )
 
-    def snapshot_sql(self, as_of: int | None = None, _doc: dict | None = None) -> str:
-        """ANSI-SQL text selecting the RESOLVED table snapshot — the exact
-        semantics of ``read()`` (committed schema with null-filled evolved
-        columns, MOR latest-per-key resolution, tombstones removed) as a
-        self-contained statement over the snapshot's data files. This is
-        what ``register(durable=True)`` persists as a catalog VIEW, so
-        ``spark.sql("SELECT ... FROM name")`` reads the table without a
-        Python handle — the engine's analogue of the reference's Hudi
-        hive-sync into Glue for Athena (glue/scripts/
-        load_transactions.py:73-79, README.md:203-204), where the synced
-        entry likewise encodes a point-in-time file layout refreshed on
-        every write.
-
-        Shape: one UNION ALL branch per (physical column set, commit kind)
-        group of files; each group's paths collapse into a single Hadoop
-        brace-glob scan (one JVM parquet scan per group — NOT per file),
-        so the text is O(groups + path bytes), and the plan is the same
-        multi-file parquet scan ``read()`` builds. MOR snapshots wrap the
-        union in the latest-per-key window ``_resolve_mor`` uses; COW
-        snapshots are the bare union. Schema evolution is per-branch
-        explicit projection (CAST(NULL AS t) for columns a file predates),
-        derived from one footer probe per commit directory.
-
-        At 100 TB the view text carries ~200k path entries (a few MB of
-        catalog metadata — the same order as the manifest itself); the
-        graduation point is the same as the manifest's: a real deployment
-        syncs an Iceberg/Delta catalog entry instead of inlined paths."""
-        self._check_sql_embeddable_root()
-        if _doc is not None:
-            doc = _doc
-        elif as_of is not None:
-            if as_of not in self._manifest_ids():
-                raise FileNotFoundError(
-                    f"no manifest {as_of} under {self.path} "
-                    f"(available: {self._manifest_ids()})"
+    def _snapshot_location(self, files: list[dict]) -> str:
+        """One brace glob naming exactly the snapshot's live files, under
+        their longest common directory."""
+        paths = sorted(self._data_path(f) for f in files)
+        for p in paths:
+            if not self._GLOB_SAFE.match(p):
+                raise ValueError(
+                    f"data path {p!r} contains Hadoop glob metacharacters "
+                    "or other unsafe characters; register cannot address "
+                    "it — read through ManifestTable.read() instead"
                 )
-            doc = self._load_manifest(as_of)
-        else:
-            latest = self._latest_manifest()
-            if latest is None:
-                raise FileNotFoundError(
-                    f"no committed manifest under {self.path}"
-                )
-            doc = latest[1]
+        if len(paths) == 1:
+            return paths[0]
+        prefix = os.path.commonpath(paths)
+        rel = ",".join(os.path.relpath(p, prefix) for p in paths)
+        return f"{prefix}/{{{rel}}}"
+
+    def _view_sql(self, doc: dict, snap: str | None) -> str:
+        """Body of the registered VIEW: the RESOLVED snapshot of manifest
+        ``doc`` — the exact semantics of ``read()`` (committed schema with
+        null-filled evolved columns, MOR latest-per-key resolution,
+        tombstones removed) — over the snapshot table ``snap``, or a typed
+        empty relation when the snapshot has no files (``snap`` None).
+
+        COW: a plain projection of the snapshot table, whose declared
+        schema null-fills columns older files predate, as ``read()`` does.
+        MOR: one scan of the snapshot table wrapped in the latest-per-key
+        window ``_resolve_mor`` uses; each row's commit id, superseding
+        flag and tombstone flag come from its file's ``commit-<hex>``
+        directory in ``_metadata.file_path`` through map literals (a
+        streaming-sink directory holding both upsert and tombstone files
+        is keyed per file name instead)."""
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(json.loads(doc["schema"]))
-        files = doc["files"]
-        mor = any(f.get("kind") for f in files)
-        if mor:
-            clash = set(self._MOR_META) & {f.name for f in schema.fields}
-            if clash:
-                raise ValueError(
-                    f"MOR snapshot SQL reserves column names "
-                    f"{self._MOR_META}; table schema uses {sorted(clash)}"
-                )
-        typed = [
-            (f.name, self._q(f.name), f.dataType.simpleString())
-            for f in schema.fields
-        ]
-        null_row = ", ".join(f"CAST(NULL AS {t}) AS {q}" for _, q, t in typed)
-        if not files:
-            # empty table: typed empty relation (mirrors read())
-            return f"SELECT {null_row} FROM (SELECT 1) AS _e WHERE 1 = 0"
-
-        file_cols = self._file_columns(files)
-        groups: dict[tuple, list[str]] = {}
-        for f in files:
-            kind = f.get("kind")
-            commit = f.get("commit", -1) if kind else -1
-            opk = f.get("op", "base") if kind else "base"
-            key = (tuple(sorted(file_cols[f["path"]])), commit, opk)
-            groups.setdefault(key, []).append(f["path"])
-
-        root = self.path if "://" in self.path else str(Path(self.path).absolute())
-        branches: list[str] = []
-        for (cols, commit, opk), paths in sorted(groups.items()):
-            present = set(cols)
-            proj = [
-                f"CAST({q} AS {t}) AS {q}" if n in present
-                else f"CAST(NULL AS {t}) AS {q}"
-                for n, q, t in typed
-            ]
-            if mor:
-                sup = opk in ("upsert", "delete")
-                proj += [
-                    f"{commit} AS _commit",
-                    f"{'TRUE' if sup else 'FALSE'} AS _sup",
-                    f"{'TRUE' if opk == 'delete' else 'FALSE'} AS _del",
-                ]
-            sel = ", ".join(proj)
-            for p in paths:
-                if "`" in p or "\n" in p:
-                    raise ValueError(f"data path not SQL-embeddable: {p!r}")
-            safe = [p for p in sorted(paths) if self._GLOB_SAFE.match(p)]
-            odd = [p for p in sorted(paths) if not self._GLOB_SAFE.match(p)]
-            if len(safe) > 1:
-                branches.append(
-                    f"SELECT {sel} FROM parquet.`{root}/{{{','.join(safe)}}}`"
-                )
-            elif safe:
-                branches.append(f"SELECT {sel} FROM parquet.`{root}/{safe[0]}`")
-            branches.extend(
-                f"SELECT {sel} FROM parquet.`{root}/{p}`" for p in odd
+        cols = ", ".join(self._q(f.name) for f in schema.fields)
+        if snap is None:
+            nulls = ", ".join(
+                f"CAST(NULL AS {f.dataType.simpleString()}) AS {self._q(f.name)}"
+                for f in schema.fields
             )
-        union = "\nUNION ALL\n".join(branches)
-        if not mor:
-            return union
+            return f"SELECT {nulls} FROM (SELECT 1) AS _e WHERE 1 = 0"
+        src = self._q_name(snap)
+        files = doc["files"]
+        if not any(f.get("kind") for f in files):
+            return f"SELECT {cols} FROM {src}"
+        clash = set(self._MOR_META) & {f.name for f in schema.fields}
+        if clash:
+            raise ValueError(
+                f"MOR snapshot SQL reserves column names "
+                f"{self._MOR_META}; table schema uses {sorted(clash)}"
+            )
+        # (commit, superseding, tombstone) SQL literals per file; base
+        # files resolve as commit -1, the COALESCE defaults below.
+        tags: dict[str, tuple[str, str, str]] = {}
+        for f in files:
+            opk = f.get("op", "base") if f.get("kind") else "base"
+            tags[f["path"]] = (
+                str(f.get("commit", -1)) if f.get("kind") else "-1",
+                "TRUE" if opk in ("upsert", "delete") else "FALSE",
+                "TRUE" if opk == "delete" else "FALSE",
+            )
+        per_dir: dict[str, set] = {}
+        for p, tag in tags.items():
+            per_dir.setdefault(_commit_dir(p), set()).add(tag)
+        by_dir = {d: next(iter(s)) for d, s in per_dir.items() if len(s) == 1}
+        by_file = {
+            p.rsplit("/", 1)[-1]: tag
+            for p, tag in tags.items() if _commit_dir(p) not in by_dir
+        }
+        dir_key = f"regexp_extract(_metadata.file_path, '{_COMMIT_DIR_RE}', 1)"
+        file_key = "regexp_extract(_metadata.file_path, '[^/]+$', 0)"
+
+        def meta(i: int, default: str) -> str:
+            arms = []
+            for table, key in ((by_file, file_key), (by_dir, dir_key)):
+                pairs = [
+                    f"'{k}', {v[i]}"
+                    for k, v in sorted(table.items()) if v[i] != default
+                ]
+                if pairs:
+                    arms.append(f"map({', '.join(pairs)})[{key}]")
+            return f"COALESCE({', '.join(arms + [default])})"
+
+        raw = (
+            f"SELECT {cols}, {meta(0, '-1')} AS _commit,"
+            f" {meta(1, 'FALSE')} AS _sup, {meta(2, 'FALSE')} AS _del"
+            f" FROM {src}"
+        )
         ident = ", ".join(
             self._q(c) for c in dict.fromkeys(self.keys + self.partition_by)
         )
-        out_cols = ", ".join(q for _, q, _t in typed)
         # _rn mirrors _resolve_mor's within-commit precombine resolution
         # (a streaming-sink upsert commit may carry several rows per key
         # — commit() cannot precombine without a SparkSession). Gated
@@ -1284,11 +1277,11 @@ class ManifestTable:
         else:
             rn_sql = "  1 AS _rn\n"
         return (
-            f"SELECT {out_cols} FROM (\n"
+            f"SELECT {cols} FROM (\n"
             f"  SELECT *, COALESCE(MAX(CASE WHEN _sup THEN _commit END)"
             f" OVER (PARTITION BY {ident}), -2) AS _sc,\n"
             f"{rn_sql}"
-            f"  FROM (\n{union}\n) AS _raw\n"
+            f"  FROM (\n{raw}\n) AS _raw\n"
             f") AS _resolved\n"
             f"WHERE (NOT _sup AND _commit > _sc)"
             f" OR (_sup AND NOT _del AND _commit = _sc AND _rn = 1)"
@@ -1300,26 +1293,48 @@ class ManifestTable:
         """Catalog sync: make this table addressable from ``spark.sql``
         by ``name`` — the analogue of the reference's per-run Hudi
         hive-sync (glue/scripts/load_transactions.py:73-79 syncing Glue
-        for Athena).
+        for Athena), which stores the schema in the catalog so Athena
+        never reads a footer to plan a query.
 
-        ``durable=True`` (default): a catalog VIEW whose text is
-        ``snapshot_sql()`` — the RESOLVED snapshot (MOR-merged,
-        schema-evolved, tombstones gone; a plain external-parquet table
-        over the directory would resurrect superseded rows and read
-        uncommitted files). The entry lives in the shared catalog: any
-        ``newSession()`` of this application — and, under a Hive
-        metastore, any new PROCESS over the same warehouse — queries it
-        by name. ``durable=False``: session-scoped temp view over
-        ``read()`` (same plan, no catalog entry).
+        ``durable=True`` (default): two catalog entries. A **snapshot
+        table** ``<name>__snap_<12-digit manifest id>_<8 hex>`` — an
+        external parquet table declared with the committed schema, whose
+        location is one brace glob of exactly the snapshot's live files —
+        and a VIEW ``name`` over it holding the RESOLVED snapshot (MOR
+        latest-per-key window, tombstones gone; see ``_view_sql``). A
+        plain external-parquet table over the directory would resurrect
+        superseded rows and read uncommitted files. Because the schema is
+        declared, analysing a query on ``name`` never runs a Spark job.
+        Both entries live in the shared catalog: any ``newSession()`` of
+        this application — and, under a Hive metastore, any new PROCESS
+        over the same warehouse — queries ``name``. ``durable=False``:
+        session-scoped temp view over ``read()`` (same plan, no catalog
+        entry). The ``__snap_`` suffix is reserved: do not create catalog
+        entries named ``<registered name>__snap_*``.
+
+        At 100 TB the snapshot location names ~200k files (a few MB of
+        catalog metadata — the same order as the manifest itself, and the
+        view text stays O(uncompacted MOR commits)); the graduation point
+        is the same as the manifest's: a real deployment syncs an
+        Iceberg/Delta catalog entry instead of a file list.
 
         Sync-on-write: a live registration (``as_of=None``) is recorded
         on this handle and REFRESHED after every commit this handle
         publishes (write/delete_where/compact/restore/...), exactly the
-        reference's sync-every-run cadence. Writes from OTHER handles
-        don't refresh it — re-run ``register`` (idempotent) to re-sync,
-        or write through the registered handle. A failed refresh warns
-        and leaves the previous (still-consistent, just stale) snapshot
-        registered rather than failing the already-durable commit.
+        reference's sync-every-run cadence. Each sync creates a new
+        snapshot table (a fresh name, so no session reads a relation it
+        cached for an older snapshot), repoints the view, and drops the
+        snapshot table the view named two syncs ago; the one it named
+        until now stays, so a reader that already resolved the old view
+        still finds it. A live sync never moves the view to an older
+        manifest of the same table than it names (syncs in one process are
+        serialized; two processes syncing at once can orphan a snapshot
+        table, which ``unregister`` drops). Writes from OTHER
+        handles don't refresh it — re-run ``register`` (idempotent) to
+        re-sync, or write through the registered handle. A failed
+        refresh warns and leaves the previous (still-consistent, just
+        stale) snapshot registered rather than failing the
+        already-durable commit.
 
         ``as_of`` pins a historical snapshot (time-travel view); pinned
         registrations never auto-refresh. ``vacuum(keep_last=1)`` keeps
@@ -1337,15 +1352,50 @@ class ManifestTable:
             self._registered.pop(name, None)
 
     def unregister(self, name: str) -> None:
-        """Drop the catalog entry and stop refresh-on-commit for it."""
+        """Drop the catalog entry, every ``<name>__snap_*`` snapshot
+        table, and stop refresh-on-commit for it."""
         self._registered.pop(name, None)
         _dml_unregister(name)
-        parts = name.split(".")
-        quoted = ".".join(self._q(p) for p in parts)
+        # DROP VIEW resolves a temp view first: drop both kinds
+        self.spark.catalog.dropTempView(name)
         try:
-            self.spark.sql(f"DROP VIEW IF EXISTS {quoted}")
-        except Exception:
-            self.spark.catalog.dropTempView(name)
+            self.spark.sql(f"DROP VIEW IF EXISTS {self._q_name(name)}")
+        except AnalysisException:
+            pass  # a TABLE holds the name: not ours to drop
+        db, _, base = name.rpartition(".")
+        if db and not self.spark.catalog.databaseExists(db):
+            return
+        pat = re.compile(
+            re.escape(base.lower()) + self._SNAP_SUFFIX + r"\d{12}_[0-9a-f]{8}"
+        )
+        where = f" IN {self._q(db)}" if db else ""
+        for row in self.spark.sql(
+            f"SHOW TABLES{where} LIKE '{base}{self._SNAP_SUFFIX}*'"
+        ).collect():
+            if not row.isTemporary and pat.fullmatch(row.tableName.lower()):
+                prefix = f"{db}." if db else ""
+                self.spark.sql(
+                    f"DROP TABLE IF EXISTS {self._q_name(prefix + row.tableName)}"
+                )
+
+    def _registered_view(self, name: str) -> dict:
+        """Sync properties of the view a previous ``register`` left under
+        ``name`` ({} if there is none). Read from the session catalog
+        directly: one metadata lookup, no query and no collect. A TABLE
+        under the name (e.g. an external parquet table left by an earlier
+        deployment) blocks CREATE OR REPLACE VIEW, so it is dropped —
+        hive-sync owns the name, exactly like the reference's per-run
+        Glue sync."""
+        state = self.spark._jsparkSession.sessionState()
+        ident = state.sqlParser().parseTableIdentifier(self._q_name(name))
+        if not state.catalog().tableExists(ident):
+            return {}
+        meta = state.catalog().getTableRawMetadata(ident)
+        if meta.tableType().name() != "VIEW":
+            self.spark.sql(f"DROP TABLE IF EXISTS {self._q_name(name)}")
+            return {}
+        props = meta.properties()
+        return {k: props.apply(k) for k in self._SYNC_PROPS if props.contains(k)}
 
     def _register_once(
         self,
@@ -1357,23 +1407,74 @@ class ManifestTable:
         if not durable:
             self.read(as_of=as_of).createOrReplaceTempView(name)
             return
-        parts = name.split(".")
-        quoted = ".".join(self._q(p) for p in parts)
-        if len(parts) > 1:
-            self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {self._q(parts[0])}")
-        # Re-sync replaces the catalog entry whatever its prior KIND: a
-        # TABLE under this name (e.g. an external parquet table left by
-        # an earlier deployment) blocks CREATE OR REPLACE VIEW, so drop
-        # it first — hive-sync owns the name, exactly like the
-        # reference's per-run Glue sync.
-        try:
-            entry = self.spark.catalog.getTable(name)
-            if entry.tableType != "VIEW":
-                self.spark.sql(f"DROP TABLE IF EXISTS {quoted}")
-        except Exception:
-            pass  # no prior entry
-        sql = self.snapshot_sql(as_of=as_of, _doc=doc)
-        self.spark.sql(f"CREATE OR REPLACE VIEW {quoted} AS {sql}")
+        self._check_sql_embeddable_root()
+        if doc is None:
+            if as_of is None:
+                latest = self._latest_manifest()
+                if latest is None:
+                    raise FileNotFoundError(
+                        f"no committed manifest under {self.path}"
+                    )
+                doc = latest[1]
+            elif as_of not in self._manifest_ids():
+                raise FileNotFoundError(
+                    f"no manifest {as_of} under {self.path} "
+                    f"(available: {self._manifest_ids()})"
+                )
+            else:
+                doc = self._load_manifest(as_of)
+        root = str(Path(self.path).absolute())
+        mid = int(doc["id"])
+        snap = (
+            f"{name}{self._SNAP_SUFFIX}{mid:012d}_{uuid.uuid4().hex[:8]}"
+            if doc["files"] else None
+        )
+        body = self._view_sql(doc, snap)
+        if snap:
+            from pyspark.sql.types import StructType
+
+            ddl = ", ".join(
+                f"{self._q(f.name)} {f.dataType.simpleString()}"
+                for f in StructType.fromJson(json.loads(doc["schema"])).fields
+            )
+            location = self._snapshot_location(doc["files"])
+        quoted = self._q_name(name)
+        with _SYNC_LOCK:
+            if "." in name:
+                db = name.split(".")[0]
+                self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {self._q(db)}")
+            prior = self._registered_view(name)
+            named = int(prior.get("dca.manifest", -1))
+            if (
+                as_of is None
+                and prior.get("dca.root") == root
+                and named > mid
+                and named in self._manifest_ids()
+            ):
+                return  # the view already names a newer manifest
+            if snap:
+                # skipHiveMetadata: a Hive metastore would otherwise create
+                # the glob's literal `{data/...` directories under the root.
+                self.spark.sql(
+                    f"CREATE TABLE {self._q_name(snap)} ({ddl}) USING parquet "
+                    f"OPTIONS (path '{location}', skipHiveMetadata 'true')"
+                )
+            props = (root, mid, snap or "", prior.get("dca.snapshot", ""))
+            tbl = ", ".join(
+                f"'{k}' = '{v}'" for k, v in zip(self._SYNC_PROPS, props)
+            )
+            try:
+                self.spark.sql(
+                    f"CREATE OR REPLACE VIEW {quoted} TBLPROPERTIES ({tbl}) "
+                    f"AS {body}"
+                )
+            except Exception:
+                if snap:
+                    self.spark.sql(f"DROP TABLE IF EXISTS {self._q_name(snap)}")
+                raise
+            stale = prior.get("dca.previous")
+            if stale:
+                self.spark.sql(f"DROP TABLE IF EXISTS {self._q_name(stale)}")
 
     def _sync_registered(self, doc: dict) -> None:
         """Refresh every live registration onto the just-published
@@ -1517,7 +1618,7 @@ class ManifestTable:
             if not new_files:
                 return self.spark.createDataFrame([], schema)
             return self.spark.read.schema(schema).parquet(
-                *[str(Path(self.path) / f["path"]) for f in new_files]
+                *[self._data_path(f) for f in new_files]
             )
 
         changed = self._changed_rows(since, schema)
@@ -1664,14 +1765,13 @@ class ManifestTable:
         if self.table_type not in ("mor",) and op not in (
             WriteOperation.INSERT, WriteOperation.BULK_INSERT
         ):
-            # Pin the batch: the merge path consumes it several times (key
-            # set, partition values, union) — a nondeterministic input
-            # would otherwise be re-evaluated differently per consumer.
-            # Pinning BEFORE the rebase loop also makes every retry apply
-            # the SAME rows, not a re-evaluation of the source.
-            df = _pin(df)
-            if op != WriteOperation.UPSERT:
-                df = precombine_dedup(df, self.keys, self.precombine)
+            # Pin the PRECOMBINED batch: the merge path consumes it
+            # several times (key set, partition values, change file,
+            # union) — pinning the survivors evaluates the precombine
+            # window once, and a nondeterministic input cannot be
+            # re-evaluated differently per consumer. Pinning BEFORE the
+            # rebase loop also makes every retry apply the SAME rows.
+            df = _pin(precombine_dedup(df, self.keys, self.precombine))
         # Optimistic-concurrency loop: each attempt reads the newest
         # manifest, applies the batch against it, and publishes with
         # put-if-absent. Losing the race raises FileExistsError from
@@ -1868,9 +1968,7 @@ class ManifestTable:
             kind = f.get("kind")
             commit = f.get("commit", -1) if kind else -1
             opk = f.get("op", "base") if kind else "base"
-            groups.setdefault((commit, opk), []).append(
-                str(Path(self.path) / f["path"])
-            )
+            groups.setdefault((commit, opk), []).append(self._data_path(f))
         frames = []
         for (commit, opk), paths in sorted(groups.items()):
             sup = opk in ("upsert", "delete")
@@ -1953,8 +2051,9 @@ class ManifestTable:
         )
 
     def _merge(self, batch: DataFrame, keep_batch: bool, prev=_UNSET) -> None:
-        if keep_batch:
-            batch = precombine_dedup(batch, self.keys, self.precombine)
+        """COW keyed write of a PINNED, precombined batch (one row per
+        key): rewrite the touched partitions without the batch's keys,
+        plus the batch rows themselves for an upsert."""
         if prev is _UNSET:
             prev = self._latest_manifest()
         if prev is None:
@@ -1986,14 +2085,14 @@ class ManifestTable:
         pred = F.lit(True)
         for k in self.keys:
             pred = pred & F.col(f"e.{k}").eqNullSafe(F.col(f"b.{k}"))
-        keys_df = batch.select(*self.keys).distinct()
+        keys_df = batch.select(*self.keys)
         survivors = existing.alias("e").join(
             F.broadcast(keys_df.alias("b")), pred, "left_anti"
         )
-        # merged is deterministic (pinned batch + immutable committed
-        # files) and consumed by exactly ONE write below, so it needs no
-        # pin of its own — the r15 eager localCheckpoint here paid a full
-        # extra materialization per merge just to answer isEmpty();
+        # merged is deterministic (pinned precombined batch + immutable
+        # committed files) and consumed by exactly ONE write below, so it
+        # needs no pin of its own — the r15 eager localCheckpoint here paid
+        # a full extra materialization per merge just to answer isEmpty();
         # _write_commit_files(skip_if_empty=True) now answers that from
         # the written footers in the same single pass.
         merged = (
@@ -2118,7 +2217,7 @@ class ManifestTable:
             # one footer and silently drop columns that only some of
             # the replaced files carry.
             existing = self.spark.read.schema(committed).parquet(
-                *[str(Path(self.path) / f["path"]) for f in replaced]
+                *[self._data_path(f) for f in replaced]
             )
         else:
             existing = self.spark.createDataFrame([], committed)
@@ -2157,18 +2256,20 @@ class ManifestTable:
         if self.partition_by:
             self._check_partition_types(upserts)
             self._check_partition_types(deletes)
-        ups = _pin(upserts)
         if self._has_constraints():
-            self._check_constraints(ups)
-        ups = precombine_dedup(ups, self.keys, self.precombine)
+            upserts = _pin(upserts)
+            self._check_constraints(upserts)
+        # both frames pinned AFTER the precombine: one row per key, the
+        # window evaluated once however many consumers read them
+        ups = _pin(precombine_dedup(upserts, self.keys, self.precombine))
         pred = F.lit(True)
         for k in self.keys:
             pred = pred & F.col(f"d.{k}").eqNullSafe(F.col(f"u.{k}"))
         dels = (
-            precombine_dedup(_pin(deletes), self.keys, self.precombine)
+            _pin(precombine_dedup(deletes, self.keys, self.precombine))
             .alias("d")
             .join(
-                F.broadcast(ups.select(*self.keys).distinct().alias("u")),
+                F.broadcast(ups.select(*self.keys).alias("u")),
                 pred,
                 "left_anti",
             )
@@ -2228,7 +2329,7 @@ class ManifestTable:
             batch = (
                 matching
                 if self.table_type == "mor"
-                else precombine_dedup(matching, self.keys, self.precombine)
+                else _pin(precombine_dedup(matching, self.keys, self.precombine))
             )
             try:
                 self._write_attempt(batch, WriteOperation.DELETE, prev)
@@ -2280,8 +2381,9 @@ class ManifestTable:
             if not n:
                 return 0
             # assignments are deterministic projections over the pinned
-            # snapshot — no second checkpoint needed for the multi-
-            # consumer merge path or the constraint gate. Each result is
+            # snapshot, so the constraint gate needs no checkpoint of its
+            # own; a COW merge pins the precombined rows below, which
+            # evaluates the precombine window once. Each result is
             # CAST back to the column's committed type: UPDATE never
             # changes a column's type (ANSI/Delta), and without the cast
             # a bare literal like 99.0 parses as DECIMAL and would be
@@ -2294,6 +2396,8 @@ class ManifestTable:
                 rows = rows.withColumn(c, val)
             if self._has_constraints():
                 self._check_constraints(rows)
+            if self.table_type != "mor":
+                rows = _pin(precombine_dedup(rows, self.keys, self.precombine))
             try:
                 self._write_attempt(rows, WriteOperation.UPSERT, prev)
                 return n
@@ -2364,10 +2468,10 @@ class ManifestTable:
         pred = F.lit(True)
         for k in self.keys:
             pred = pred & F.col(f"e.{k}").eqNullSafe(F.col(f"b.{k}"))
-        ups_keys = ups.select(*self.keys).distinct()
-        all_keys = (
-            ups_keys.unionByName(dels.select(*self.keys)).distinct()
-        )
+        # one row per key in each frame, and write_txn made their key
+        # sets disjoint: no distinct needed
+        ups_keys = ups.select(*self.keys)
+        all_keys = ups_keys.unionByName(dels.select(*self.keys))
         survivors = existing.alias("e").join(
             F.broadcast(all_keys.alias("b")), pred, "left_anti"
         )
@@ -2379,7 +2483,7 @@ class ManifestTable:
             F.broadcast(ups_keys.alias("b")), pred, "left_semi"
         )
         removed = existing.alias("e").join(
-            F.broadcast(dels.select(*self.keys).distinct().alias("b")),
+            F.broadcast(dels.select(*self.keys).alias("b")),
             pred,
             "left_semi",
         )

@@ -1260,6 +1260,16 @@ def test_shallow_clone_content_independence_and_vacuum_safety(spark, tmp_path):
     # ...and source writes never show in the clone
     src.write(rows([("T9", "BTCGBP", 9.0)]), "upsert")
     assert "T9" not in {r.transaction_id for r in c1.read().collect()}
+    # the clone registers: its snapshot mixes borrowed absolute paths
+    # with its own relative ones
+    c1.register("clone_reg_cow")
+    try:
+        assert (
+            spark.sql("SELECT count(*) FROM clone_reg_cow").first()[0]
+            == c1.read().count()
+        )
+    finally:
+        c1.unregister("clone_reg_cow")
 
     # the clone's vacuum reclaims only under its own root
     import pathlib
@@ -1307,6 +1317,12 @@ def test_shallow_clone_mor_and_bloom_config_carry(spark, tmp_path):
 
     c = src.clone(tmp_path / "mc")
     assert {r.transaction_id: r.price for r in c.read().collect()} == {"T1": 5.0}
+    c.register("clone_reg_mor")
+    try:
+        got = spark.sql("SELECT transaction_id, price FROM clone_reg_mor")
+        assert {r.transaction_id: r.price for r in got.collect()} == {"T1": 5.0}
+    finally:
+        c.unregister("clone_reg_mor")
     assert (c.bloom_by, c.bloom_bits) == (["transaction_id"], 2048)
     # clone commit writes blooms under the inherited config
     c.write(rows([("T7", "C", 7.0)]), "upsert")

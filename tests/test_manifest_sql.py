@@ -1,4 +1,4 @@
-"""ManifestTable SQL-catalog surface: register()/snapshot_sql() — the
+"""ManifestTable SQL-catalog surface: register()/unregister() — the
 hive-sync analogue (reference: glue/scripts/load_transactions.py:73-79
 syncs the Hudi table into Glue so Athena queries it by name;
 README.md:203-204 "Query Glue Tables"). The registered view must encode
@@ -10,6 +10,7 @@ files."""
 from __future__ import annotations
 
 import datetime
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +25,20 @@ def make_df(spark, rows):
     return spark.createDataFrame(
         rows, "transaction_id string, close_time timestamp, pair string, price double"
     )
+
+
+def view_props(spark, name):
+    return {
+        r.key: r.value
+        for r in spark.sql(f"SHOW TBLPROPERTIES {name}").collect()
+    }
+
+
+def snapshot_tables(spark, name):
+    return [
+        r.tableName
+        for r in spark.sql(f"SHOW TABLES LIKE '{name}__snap_*'").collect()
+    ]
 
 
 def sql_rows(spark, name):
@@ -130,8 +145,9 @@ def test_schema_evolution_null_fills_in_view(spark, cow):
                 "SELECT transaction_id, venue FROM mt_cow_evolved"
             ).collect()
         }
-        # T1's file predates `venue`: the view's per-branch projection
-        # null-fills it (parquet.`path` alone would fail to resolve it)
+        # T1's file predates `venue`: the snapshot table's declared
+        # schema null-fills it (parquet.`path` alone would fail to
+        # resolve it)
         assert rows == {("T1", None), ("T2", "kraken")}
     finally:
         cow.unregister("mt_cow_evolved")
@@ -146,6 +162,15 @@ def test_cross_session_visibility(spark, cow):
             "SELECT transaction_id, price FROM mt_cow_xsession"
         ).collect()
         assert [(r.transaction_id, r.price) for r in got] == [("T1", 1.0)]
+        # ns now holds a cached relation for the snapshot it read; a
+        # commit through the handle must still reach ns's next read
+        cow.write(make_df(spark, [("T2", TS1, "ETHGBP", 12.0)]), "insert")
+        got = ns.sql(
+            "SELECT transaction_id, price FROM mt_cow_xsession"
+        ).collect()
+        assert sorted((r.transaction_id, r.price) for r in got) == [
+            ("T1", 1.0), ("T2", 12.0),
+        ]
         # a temp view must NOT cross sessions (contrast case)
         cow.register("mt_cow_temp", durable=False)
         from pyspark.errors.exceptions.captured import AnalysisException
@@ -174,6 +199,30 @@ def test_as_of_pinned_snapshot_does_not_refresh(spark, cow):
     finally:
         cow.unregister("mt_cow_v0")
         cow.unregister("mt_cow_live")
+
+
+def test_sync_prunes_snapshot_tables_and_never_goes_back(spark, cow):
+    """Each sync creates a snapshot table and drops the one the view
+    named two syncs ago; a late sync of an older manifest leaves the
+    view alone, while an explicit pinned registration may go back;
+    unregister drops every snapshot table."""
+    cow.write(make_df(spark, [("T1", TS1, "BTCGBP", 1.0)]), "bulk_insert")
+    cow.register("mt_snaps")
+    try:
+        for i in range(3):
+            cow.write(make_df(spark, [(f"T{i + 2}", TS1, "ETHGBP", 2.0)]), "insert")
+        props = view_props(spark, "mt_snaps")
+        assert sorted(snapshot_tables(spark, "mt_snaps")) == sorted(
+            [props["dca.snapshot"].lower(), props["dca.previous"].lower()]
+        )
+        cow._register_once("mt_snaps", durable=True, doc=cow._load_manifest(1))
+        assert view_props(spark, "mt_snaps") == props
+        assert len(sql_rows(spark, "mt_snaps")) == 4
+        cow.register("mt_snaps", as_of=1)
+        assert len(sql_rows(spark, "mt_snaps")) == 2
+    finally:
+        cow.unregister("mt_snaps")
+    assert snapshot_tables(spark, "mt_snaps") == []
 
 
 def test_view_survives_compaction_and_vacuum(spark, mor):
@@ -211,15 +260,24 @@ def test_empty_table_view_is_typed_empty(spark, cow):
         cow.unregister("mt_cow_empty")
 
 
-def test_snapshot_sql_globs_batch_files(spark, cow):
-    # three commits -> >=3 files; same column set -> ONE brace-glob branch
+def test_snapshot_table_globs_batch_files(spark, cow):
+    # three commits -> >=3 files, named by ONE brace-glob location
     for i, op in enumerate(["bulk_insert", "insert", "insert"]):
         cow.write(make_df(spark, [(f"T{i}", TS1, "BTCGBP", float(i))]), op)
-    sql = cow.snapshot_sql()
-    assert sql.count("FROM parquet.") == 1  # batched, not one scan per file
-    assert "{" in sql
-    got = spark.sql(sql)
-    assert got.count() == 3
+    cow.register("mt_glob")
+    try:
+        snap = view_props(spark, "mt_glob")["dca.snapshot"]
+        loc = (
+            spark.sql(f"DESCRIBE TABLE EXTENDED {snap}")
+            .filter("col_name = 'Location'").first().data_type
+        )
+        assert "{" in loc
+        got = spark.sql("SELECT * FROM mt_glob")
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan") == 1  # batched, not one scan per file
+        assert got.count() == 3
+    finally:
+        cow.unregister("mt_glob")
 
 
 def test_mor_meta_column_clash_is_loud(spark, tmp_path):
@@ -233,7 +291,10 @@ def test_mor_meta_column_clash_is_loud(spark, tmp_path):
     )
     t.write(spark.createDataFrame([(1, 2)], "k int, _sup int"), "upsert")
     with pytest.raises(ValueError, match="_sup"):
-        t.snapshot_sql()
+        t.register("mt_clash")
+    # refused before any catalog entry was made
+    assert not spark.catalog.tableExists("mt_clash")
+    assert snapshot_tables(spark, "mt_clash") == []
 
 
 def test_view_plan_pushdown_and_pruning(spark, cow):
@@ -320,10 +381,12 @@ def test_register_replaces_prior_entry_of_either_kind(spark, cow, tmp_path):
 @pytest.mark.slow
 def test_register_durable_cross_process(tmp_path):
     """The reference's hive-sync contract end-to-end: one process writes
-    the table and registers `dca_manager.transactions`; a brand-new
-    SparkSession in a SEPARATE process (hive metastore in the same cwd)
-    queries the registered view by name
-    (glue/scripts/load_transactions.py:73-79)."""
+    the table, registers `dca_manager.transactions` and commits twice
+    more; a brand-new SparkSession in a SEPARATE process (hive metastore
+    in the same cwd) queries the registered view by name and sees the
+    last commit (glue/scripts/load_transactions.py:73-79). The metastore
+    creates nothing under the table root, and each sync drops the
+    snapshot table two syncs old."""
     import os
     import subprocess
     import sys
@@ -345,6 +408,10 @@ def test_register_durable_cross_process(tmp_path):
                           precombine="transaction_id", partition_by=("pair",))
         t.write(df, "upsert")
         t.register("dca_manager.transactions")
+        t.write(spark.createDataFrame(
+            [("T3", "BTCGBP", 3.0)], df.schema), "upsert")
+        t.write(spark.createDataFrame(
+            [("T1", "BTCGBP", 7.0)], df.schema), "upsert")
         spark.stop()
         """
     )
@@ -355,6 +422,12 @@ def test_register_durable_cross_process(tmp_path):
                  .config("spark.ui.enabled", "false").getOrCreate())
         n = spark.sql("SELECT count(*) FROM dca_manager.transactions").collect()[0][0]
         print("CATALOG_ROWS=" + str(n))
+        p = spark.sql("SELECT price FROM dca_manager.transactions "
+                      "WHERE transaction_id = 'T1'").collect()[0][0]
+        print("T1_PRICE=" + str(p))
+        snaps = spark.sql("SHOW TABLES IN dca_manager "
+                          "LIKE 'transactions__snap_*'").collect()
+        print("SNAPSHOT_TABLES=" + str(len(snaps)))
         spark.stop()
         """
     )
@@ -365,13 +438,17 @@ def test_register_durable_cross_process(tmp_path):
         [sys.executable, "-c", reader], cwd=tmp_path, env=env, check=True,
         timeout=300, capture_output=True, text=True,
     )
-    assert "CATALOG_ROWS=2" in out.stdout
+    assert "CATALOG_ROWS=3" in out.stdout
+    assert "T1_PRICE=7.0" in out.stdout
+    n_snaps = int(out.stdout.split("SNAPSHOT_TABLES=")[1].split()[0])
+    assert 1 <= n_snaps <= 2
+    assert sorted(os.listdir(tmp_path / "tbl")) == ["_changes", "_manifests", "data"]
 
 
-def test_snapshot_sql_rejects_glob_metachar_root(spark, tmp_path):
-    """ADVICE r15: the table ROOT is embedded unescaped in every parquet.
-    branch of the view text; glob metacharacters in it would silently
-    corrupt all scans, so snapshot_sql must refuse such roots loudly."""
+def test_register_rejects_glob_metachar_root(spark, tmp_path):
+    """ADVICE r15: the table ROOT is embedded unescaped in the snapshot
+    table's glob location; glob metacharacters in it would silently
+    corrupt all scans, so register must refuse such roots loudly."""
     import pytest
 
     from dca_manager_spark.io.manifest import ManifestTable
@@ -382,9 +459,48 @@ def test_snapshot_sql_rejects_glob_metachar_root(spark, tmp_path):
         spark, str(root), keys=("transaction_id",), precombine="price",
         partition_by=())
     with pytest.raises(ValueError, match="glob metacharacters"):
-        t.snapshot_sql()
-    with pytest.raises(ValueError, match="glob metacharacters"):
         t.register("odd_root_view")
+
+
+def test_register_rejects_unsafe_data_path(spark, tmp_path):
+    """A data file outside the glob-safe alphabet — here one a shallow
+    clone borrows from a source whose root holds a space — cannot be
+    named in the snapshot location: register refuses, naming the path,
+    and leaves no catalog entry behind."""
+    src = ManifestTable(
+        spark, str(tmp_path / "src dir"), keys=("transaction_id",),
+        precombine="price", partition_by=())
+    src.write(make_df(spark, [("T1", TS1, "BTCGBP", 1.0)]), "bulk_insert")
+    cl = src.clone(str(tmp_path / "cl"))
+    with pytest.raises(ValueError, match="src dir"):
+        cl.register("mt_odd_path")
+    assert not spark.catalog.tableExists("mt_odd_path")
+    assert snapshot_tables(spark, "mt_odd_path") == []
+
+
+@pytest.mark.parametrize("kind", ["cow", "mor"])
+def test_registered_name_analysis_runs_no_job(spark, request, kind):
+    """The snapshot table declares its schema, so analysing a query on a
+    registered name infers nothing from parquet footers: no Spark job
+    runs until an action."""
+    t = request.getfixturevalue(kind)
+    t.write(
+        make_df(spark, [("T1", TS1, "BTCGBP", 1.0), ("T2", TS1, "ETHGBP", 5.0)]),
+        "bulk_insert",
+    )
+    t.write(make_df(spark, [("T1", TS1, "BTCGBP", 9.0)]), "upsert")
+    name = f"mt_nojob_{kind}"
+    t.register(name)
+    sc = spark.sparkContext
+    group = f"{name}_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "analysis only")
+    try:
+        df = spark.sql(f"SELECT price FROM {name} WHERE transaction_id = 'T1'")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setJobGroup(None, None)
+        t.unregister(name)
+    assert [r.price for r in df.collect()] == [9.0]
 
 
 # -- SQL DML over registered names (manifest_sql, VERDICT r15 #4) ---------
