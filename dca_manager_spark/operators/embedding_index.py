@@ -5,7 +5,7 @@ then every arriving batch pays only its own signatures + the bucket
 join + candidate-only exact verification; the corpus is never
 re-signed. After a batch is admitted, grow the index by O(batch).
 
-The planes are md5-derived (operators/similarity._hyperplane_component),
+The planes are md5-derived (operators/similarity._plane_weight_py),
 so signatures are reproducible across engines AND across processes with
 no stored model — but that also means a persisted index is only valid
 for the plane family that built it. The params JSON carries an explicit
@@ -26,7 +26,6 @@ from dca_manager_spark.operators.similarity import (
     _multi_probe,
     _sign_sig_frame,
     qcosine,
-    qdot,
     qdot_arrow,
     qnorm,
 )
@@ -121,11 +120,10 @@ def build_embedding_index(
     vec_col: str = "embedding",
     num_planes: int = 8,
     num_tables: int = 4,
-    use_arrow: bool = True,
 ) -> EmbeddingIndex:
     """Sign all corpus vectors once: one pass for the per-table bucket
     signatures, one projection for the verification payloads."""
-    sig = _sign_sig_frame(df, id_col, vec_col, num_planes, num_tables, use_arrow)
+    sig = _sign_sig_frame(df, id_col, vec_col, num_planes, num_tables)
     sigs = sig.select("__id", "__table", "__sig")
     vecs = df.select(
         F.col(id_col).alias("__id"),
@@ -150,7 +148,6 @@ def embedding_incremental_filter(
     index: EmbeddingIndex,
     threshold: float = 0.4,
     probe_bits: int = 1,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Batch rows NOT near-duplicate (cosine >= threshold) of any indexed
     corpus vector — the admission gate of the steady-state vector-ingest
@@ -166,7 +163,7 @@ def embedding_incremental_filter(
     num_planes = index.params["num_planes"]
     num_tables = index.params["num_tables"]
     bs = _multi_probe(
-        _sign_sig_frame(batch, id_col, vec_col, num_planes, num_tables, use_arrow),
+        _sign_sig_frame(batch, id_col, vec_col, num_planes, num_tables),
         probe_bits,
         num_planes,
     )
@@ -191,10 +188,7 @@ def embedding_incremental_filter(
             "__cid",
         )
     )
-    if use_arrow:
-        dot = qdot_arrow()(F.col("__bv"), F.col("__cv"))
-    else:
-        dot = qdot(F.col("__bv"), F.col("__cv"))
+    dot = qdot_arrow()(F.col("__bv"), F.col("__cv"))
     flagged = (
         cand.withColumn("cosine", qcosine(dot, F.col("__bn"), F.col("__cn")))
         .filter(F.col("cosine") >= threshold)

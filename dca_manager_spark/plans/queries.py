@@ -113,8 +113,15 @@ _DRIVER_WINDOW = [
     # (3) ALL 33 entries whose freshest driver verdict is r12 — three
     # rounds stale, the brief's headline item (the similarity/events/
     # window/training families, ivf_pq_rerank); (4) r13-scored fill,
-    # alphabetical, to exactly 50. The full catalog is still verified
-    # every round by scripts/driver_sim.py.
+    # alphabetical, to exactly 50. Rotated again when the similarity
+    # operators went to one code path per step (one dot kernel per call
+    # site, shared IVF seed/routing/PQ-query helpers, a null-safe
+    # qdot_arrow): the four entries running that code from outside the
+    # window (dedup_embedding_cosine[_exact], similarity_pq_adc,
+    # dedup_semantic) joined group (2) — the other six it touches are
+    # already in group (3) — and the last four group-(4) fill entries
+    # left. The full catalog is still verified every round by
+    # scripts/driver_sim.py.
     # -- (1) added in round 16 --
     "manifest_sql_insert",
     "manifest_sql_merge",
@@ -125,6 +132,11 @@ _DRIVER_WINDOW = [
     "corpus_prep_spans",
     "dedup_duplicate_spans",
     "manifest_sql_select",
+    # -- (2) changed by the similarity one-path refactor --
+    "dedup_embedding_cosine",
+    "dedup_embedding_cosine_exact",
+    "similarity_pq_adc",
+    "dedup_semantic",
     # -- (3) freshest driver verdict r12 --
     "drift_top_divergent_tokens",
     "embedding_decontaminate",
@@ -165,10 +177,6 @@ _DRIVER_WINDOW = [
     "agg_cube_status_priority",
     "agg_distinct_per_segment",
     "agg_grouping_sets",
-    "agg_quantile_sketch",
-    "corpus_token_budget_mixture",
-    "graph_pagerank",
-    "join_shuffle_hash_hint",
 ]
 
 

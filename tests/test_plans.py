@@ -206,77 +206,106 @@ def test_chunk_documents_tokenizes_once_below_generate(spark):
     assert cols == {"doc_id", "text"}
 
 
+# Catalog entries where a cartesian / nested-loop join is the
+# documented intent (theta/cross joins, broadcast brute-force
+# baselines); anything else growing one is a scale regression.
+CARTESIAN_INTENTIONAL = {
+    "theta_join_regions",          # non-equi theta join IS the demo
+    "cross_join_region_types",     # cross join IS the demo
+    "similarity_cosine_topk",      # broadcast-queries brute force baseline
+    "dedup_embedding_cosine_exact",  # bounded all-pairs ground truth
+    "scalar_subquery_above_avg",   # scalar subquery joins on no key by design
+    "events_resample_ffill",       # spine = tiny dims cross join
+                                   # (types x hour sequence off a
+                                   # 1-row bounds agg) — documented
+    "q22_idle_customer_balance",   # same scalar-subquery shape: 1-row
+                                   # broadcast avg under a > predicate
+                                   # (q15's = predicate becomes an equi
+                                   # join; > cannot)
+    "q11_important_stock",         # same again: 1-row broadcast
+                                   # total/nparts under a > threshold
+    "similarity_ivf_ann",          # corpus x broadcast-seeds (n_cells rows)
+                                   # coarse quantizer: linear in corpus
+    "similarity_ivf_learned",      # same quantizer shape + the exact
+                                   # brute-force baseline its recall
+                                   # floor is measured against
+    "similarity_pq_adc",           # ADC scan (broadcast queries x
+                                   # corpus codes) + the same exact
+                                   # baseline for its recall floor
+    "similarity_ivf_pq_rerank",    # composed IVF->PQ->rerank: the
+                                   # only BNLJ is corpus x broadcast
+                                   # seeds (n_cells rows, linear in
+                                   # corpus) + the exact baseline its
+                                   # recall floor is measured against;
+                                   # ADC candidates and the re-rank
+                                   # fetch are broadcast EQUI joins
+    "text_tfidf_topk",             # 1-row broadcast corpus-size N
+                                   # under the idf — same shape as
+                                   # q11/q22's scalar subquery
+    "text_bm25_rank",              # 1-row broadcast (N, sum_dl, n_dl)
+    "text_pmi_collocations",       # 1-row broadcast token total
+    "graph_pagerank",              # 1-row broadcast node count N
+    "events_value_histogram",      # 1-row broadcast global min/max bounds
+    "stat_regression_by_group",    # 1-row broadcast global min ts
+    "similarity_hybrid_rrf",       # ranker B is the brute-force cosine
+                                   # baseline (1 broadcast query vector
+                                   # x bounded corpus) + 1-row BM25
+                                   # broadcast constants
+    "drift_token_distribution",    # 1-row broadcast slice totals
+                                   # (same shape as stat_regression's
+                                   # global-min broadcast)
+    "drift_top_divergent_tokens",  # same 1-row totals broadcast
+    "streaming_drift_buckets",     # same 1-row slice-totals broadcast
+                                   # (drift_from_counts over the
+                                   # count store)
+    "text_perplexity_filter",      # 1-row broadcast reference token
+                                   # total (the LM's denominator) —
+                                   # same shape as text_tfidf_topk's N
+    "dedup_semantic",              # corpus x broadcast seeds (16 rows)
+                                   # coarse quantizer — same linear
+                                   # routing shape as similarity_ivf_ann
+}
+
+# Catalog entries whose empty-partitionSpec Window runs over a provably
+# bounded input.
+WINDOW_BOUNDED = {
+    # Fallback seed-picker: row_number over the n_cells-row frame
+    # produced by orderBy().limit(n_cells) — a constant-size input
+    # (operators/similarity.py default-seeds path), not the corpus.
+    "similarity_ivf_ann",
+    # rank_a window runs over the LIMIT-100 BM25 frame — bounded by
+    # construction (the fused lists are fixed-size by definition)
+    "similarity_hybrid_rrf",
+    # rank window runs AFTER orderBy().limit(k) (TakeOrdered top-k),
+    # so its input is <= k rows, never the vocabulary
+    "drift_top_divergent_tokens",
+}
+
+
+def _unexpected_cartesian(name, df) -> list[str]:
+    if name in CARTESIAN_INTENTIONAL:
+        return []
+    plan = explain_formatted(df)
+    return [
+        node for node in ("CartesianProduct", "BroadcastNestedLoopJoin")
+        if node in plan
+    ]
+
+
+def _unbounded_windows(name, df) -> int:
+    from dca_manager_spark.plans.inspect import unpartitioned_window_count
+
+    return 0 if name in WINDOW_BOUNDED else unpartitioned_window_count(df)
+
+
 @pytest.mark.slow
 def test_catalog_wide_no_accidental_cartesian(spark):
     """EVERY catalog query's physical plan is checked for cartesian /
-    nested-loop joins. The whitelist names the queries where that shape
-    is the documented intent (theta/cross joins, broadcast brute-force
-    baselines); anything else growing one is a scale regression."""
-    INTENTIONAL = {
-        "theta_join_regions",          # non-equi theta join IS the demo
-        "cross_join_region_types",     # cross join IS the demo
-        "similarity_cosine_topk",      # broadcast-queries brute force baseline
-        "dedup_embedding_cosine_exact",  # bounded all-pairs ground truth
-        "scalar_subquery_above_avg",   # scalar subquery joins on no key by design
-        "events_resample_ffill",       # spine = tiny dims cross join
-                                       # (types x hour sequence off a
-                                       # 1-row bounds agg) — documented
-        "q22_idle_customer_balance",   # same scalar-subquery shape: 1-row
-                                       # broadcast avg under a > predicate
-                                       # (q15's = predicate becomes an equi
-                                       # join; > cannot)
-        "q11_important_stock",         # same again: 1-row broadcast
-                                       # total/nparts under a > threshold
-        "similarity_ivf_ann",          # corpus x broadcast-seeds (n_cells rows)
-                                       # coarse quantizer: linear in corpus
-        "similarity_ivf_learned",      # same quantizer shape + the exact
-                                       # brute-force baseline its recall
-                                       # floor is measured against
-        "similarity_pq_adc",           # ADC scan (broadcast queries x
-                                       # corpus codes) + the same exact
-                                       # baseline for its recall floor
-        "similarity_ivf_pq_rerank",    # composed IVF->PQ->rerank: the
-                                       # only BNLJ is corpus x broadcast
-                                       # seeds (n_cells rows, linear in
-                                       # corpus) + the exact baseline its
-                                       # recall floor is measured against;
-                                       # ADC candidates and the re-rank
-                                       # fetch are broadcast EQUI joins
-        "text_tfidf_topk",             # 1-row broadcast corpus-size N
-                                       # under the idf — same shape as
-                                       # q11/q22's scalar subquery
-        "text_bm25_rank",              # 1-row broadcast (N, sum_dl, n_dl)
-        "text_pmi_collocations",       # 1-row broadcast token total
-        "graph_pagerank",              # 1-row broadcast node count N
-        "events_value_histogram",      # 1-row broadcast global min/max bounds
-        "stat_regression_by_group",    # 1-row broadcast global min ts
-        "similarity_hybrid_rrf",       # ranker B is the brute-force cosine
-                                       # baseline (1 broadcast query vector
-                                       # x bounded corpus) + 1-row BM25
-                                       # broadcast constants
-        "drift_token_distribution",    # 1-row broadcast slice totals
-                                       # (same shape as stat_regression's
-                                       # global-min broadcast)
-        "drift_top_divergent_tokens",  # same 1-row totals broadcast
-        "streaming_drift_buckets",     # same 1-row slice-totals broadcast
-                                       # (drift_from_counts over the
-                                       # count store)
-        "text_perplexity_filter",      # 1-row broadcast reference token
-                                       # total (the LM's denominator) —
-                                       # same shape as text_tfidf_topk's N
-        "dedup_semantic",              # corpus x broadcast seeds (16 rows)
-                                       # coarse quantizer — same linear
-                                       # routing shape as similarity_ivf_ann
-    }
+    nested-loop joins outside CARTESIAN_INTENTIONAL."""
     flagged = {}
     for name in QUERIES:
-        df = QUERIES[name].fn(spark, SF_SMOKE)
-        plan = explain_formatted(df)
-        bad = [
-            node for node in ("CartesianProduct", "BroadcastNestedLoopJoin")
-            if node in plan
-        ]
-        if bad and name not in INTENTIONAL:
+        bad = _unexpected_cartesian(name, QUERIES[name].fn(spark, SF_SMOKE))
+        if bad:
             flagged[name] = bad
     assert not flagged, f"unexpected cartesian/BNLJ shapes: {flagged}"
 
@@ -286,29 +315,53 @@ def test_catalog_wide_no_unpartitioned_windows(spark):
     """EVERY catalog query is checked for Window nodes with an empty
     partitionSpec — the shape that forces Exchange SinglePartition and
     funnels the whole input through one task (the r6 pack_sequences
-    defect, fixed by the hierarchical two-pass prefix sum). The whitelist
-    names the queries where the window's input is provably bounded."""
-    from dca_manager_spark.plans.inspect import unpartitioned_window_count
-
-    BOUNDED = {
-        # Fallback seed-picker: row_number over the n_cells-row frame
-        # produced by orderBy().limit(n_cells) — a constant-size input
-        # (operators/similarity.py default-seeds path), not the corpus.
-        "similarity_ivf_ann",
-        # rank_a window runs over the LIMIT-100 BM25 frame — bounded by
-        # construction (the fused lists are fixed-size by definition)
-        "similarity_hybrid_rrf",
-        # rank window runs AFTER orderBy().limit(k) (TakeOrdered top-k),
-        # so its input is <= k rows, never the vocabulary
-        "drift_top_divergent_tokens",
-    }
+    defect, fixed by the hierarchical two-pass prefix sum) — outside
+    WINDOW_BOUNDED."""
     flagged = {}
     for name in QUERIES:
-        df = QUERIES[name].fn(spark, SF_SMOKE)
-        n = unpartitioned_window_count(df)
-        if n and name not in BOUNDED:
+        n = _unbounded_windows(name, QUERIES[name].fn(spark, SF_SMOKE))
+        if n:
             flagged[name] = n
     assert not flagged, f"unpartitioned (single-partition) windows: {flagged}"
+
+
+# Always in the sampled lint: the entries built on the shared IVF seed,
+# routing and PQ-query helpers, sign-LSH frames and qdot_arrow.
+PLAN_LINT_ALWAYS = (
+    "dedup_embedding_cosine",
+    "dedup_embedding_cosine_exact",
+    "similarity_lsh_ann",
+    "similarity_ivf_ann",
+    "similarity_ivf_learned",
+    "similarity_ivf_pq_rerank",
+    "similarity_pq_adc",
+    "embedding_decontaminate",
+    "embedding_incremental_admit",
+    "dedup_semantic",
+)
+
+
+def test_plan_lints_on_seeded_sample(spark):
+    """Default-tier sample of the two slow catalog-wide lints above:
+    PLAN_LINT_ALWAYS plus a seeded random fill to 20 entries, each built
+    once and checked for unexpected cartesian joins and unbounded
+    single-partition windows. The sample is printed."""
+    import random
+
+    rest = sorted(set(QUERIES) - set(PLAN_LINT_ALWAYS))
+    sample = [*PLAN_LINT_ALWAYS, *random.Random(5).sample(
+        rest, 20 - len(PLAN_LINT_ALWAYS)
+    )]
+    print("plan-lint sample:", sample)
+    cartesian, windows = {}, {}
+    for name in sample:
+        df = QUERIES[name].fn(spark, SF_SMOKE)
+        if bad := _unexpected_cartesian(name, df):
+            cartesian[name] = bad
+        if n := _unbounded_windows(name, df):
+            windows[name] = n
+    assert not cartesian, f"unexpected cartesian/BNLJ shapes: {cartesian}"
+    assert not windows, f"unpartitioned (single-partition) windows: {windows}"
 
 
 def test_audio_meta_sort_below_single_udf_pass(spark):

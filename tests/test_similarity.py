@@ -97,15 +97,54 @@ def test_lsh_ann_subset_of_exact_order(emb):
         assert exact_scores[(r.query_id, r.neighbor_id)] == r.cosine
 
 
-def test_arrow_and_expr_cosine_identical(emb):
-    """The pandas-UDF quantized dot must equal the expression fold
-    bit-for-bit on real embeddings."""
-    small = emb.filter(F.col("vec_id") < 60)
-    a = {(r.id_a, r.id_b): r.cosine
-         for r in cosine_pairs(small, "vec_id", threshold=-2.0, use_arrow=True).collect()}
-    b = {(r.id_a, r.id_b): r.cosine
-         for r in cosine_pairs(small, "vec_id", threshold=-2.0, use_arrow=False).collect()}
-    assert a == b and len(a) == 60 * 59 // 2
+def test_arrow_and_expr_cosine_identical(spark, emb):
+    """The Arrow kernel qdot_arrow returns exactly what the expression
+    fold qdot returns, row by row: the same bits on every pair of 60 real
+    embeddings, null for a null side or a ragged pair, 0 for two empty
+    vectors. Checked on the pairs alone (one equal-width batch) and with
+    the edge rows in the same batch, where one malformed row must not
+    fail the others."""
+    from dca_manager_spark.operators.similarity import qdot, qdot_arrow
+
+    small = emb.filter(F.col("vec_id") < 60).select("vec_id", "embedding")
+    pairs = (
+        small.alias("a")
+        .join(small.alias("b"), F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(
+            F.format_string("%d-%d", "a.vec_id", "b.vec_id").alias("tag"),
+            F.col("a.embedding").alias("va"),
+            F.col("b.embedding").alias("vb"),
+        )
+    )
+    edge = spark.createDataFrame(
+        [
+            ("null", None, [1.0, 2.0]),
+            ("ragged", [1.0, 2.0, 3.0], [1.0, 2.0]),
+            ("empty", [], []),
+            ("narrow", [0.5, -0.25], [2.0, 1.0]),
+        ],
+        "tag string, va array<float>, vb array<float>",
+    )
+
+    def both(df):
+        return {
+            r.tag: (r.fold, r.arrow)
+            for r in df.select(
+                "tag",
+                qdot(F.col("va"), F.col("vb")).alias("fold"),
+                qdot_arrow()(F.col("va"), F.col("vb")).alias("arrow"),
+            ).collect()
+        }
+
+    alone = both(pairs)
+    mixed = both(pairs.unionByName(edge).coalesce(1))
+    assert len(alone) == 60 * 59 // 2 and len(mixed) == len(alone) + 4
+    assert all(fold == arrow for fold, arrow in alone.values())
+    assert all(fold == arrow for fold, arrow in mixed.values())
+    assert all(mixed[t] == alone[t] for t in alone)
+    assert mixed["null"] == mixed["ragged"] == (None, None)
+    assert mixed["empty"] == (0, 0)
+    assert mixed["narrow"] == (750_000_000_000, 750_000_000_000)
 
 
 def test_lsh_multi_table_recall_geq_single(emb):
