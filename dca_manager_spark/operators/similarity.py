@@ -1083,7 +1083,7 @@ def pq_ann_topk(
     ``dim`` multiplies, and the corpus row carries m ints instead of dim
     floats (the memory-bandwidth win PQ exists for). The query side
     stays exact: each query precomputes its (m x k) LUT of
-    subvector-centroid dots ONCE as a JVM expression, then
+    subvector-centroid dots ONCE (``_pq_queries``), then
     ``cos ~ sum_j LUT[j][code_j] / (|q| * |reconstruction|)``.
 
     Same broadcast-queries x corpus-scan plan shape as ``cosine_topk``

@@ -12,6 +12,7 @@ from dca_manager_spark.plans.inspect import (
     explain_formatted,
     has_pushed_filter,
     read_schema_columns,
+    unpartitioned_window_count,
     uses,
 )
 from dca_manager_spark.plans.queries import QUERIES
@@ -293,8 +294,6 @@ def _unexpected_cartesian(name, df) -> list[str]:
 
 
 def _unbounded_windows(name, df) -> int:
-    from dca_manager_spark.plans.inspect import unpartitioned_window_count
-
     return 0 if name in WINDOW_BOUNDED else unpartitioned_window_count(df)
 
 
