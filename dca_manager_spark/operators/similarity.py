@@ -236,38 +236,26 @@ def qdot_arrow() -> "F.Column":
     row path.
 
     Row contract (the fold's): null when either side is null, the lengths
-    differ, or an element is null; 0 for two empty vectors. A batch of
-    equal-width rows is one vectorized pass; otherwise rows are grouped
-    by width. NaN/Inf elements arrive as NaN/Inf (a null element arrives
-    as NaN), so those rows are null too, where the fold saturates."""
+    differ, or an element is null; 0 for two empty vectors. Rows are
+    grouped by width and each group is one vectorized pass (a uniform
+    batch is one group). The one difference from the fold: a row with a
+    NaN/Inf element is null here, where the fold saturates to a number
+    (a null element arrives as NaN, so it is null in both)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
     def _qdot(a: pd.Series, b: pd.Series) -> pd.Series:
-        n = len(a)
         va, vb = a.to_numpy(), b.to_numpy()
-        try:
-            A = np.vstack(va).astype(np.float64)
-            B = np.vstack(vb).astype(np.float64)
-            groups = [(np.arange(n), A, B)] if A.shape == B.shape else None
-        except (TypeError, ValueError):  # null side, ragged, or no rows
-            groups = None
-        if groups is None:
-            la = np.array([-1 if v is None else len(v) for v in va], dtype=np.int64)
-            lb = np.array([-1 if v is None else len(v) for v in vb], dtype=np.int64)
-            pair = (la >= 0) & (la == lb)
-            groups = []
-            for d in np.unique(la[pair]):
-                rows = np.flatnonzero(pair & (la == d))
-                groups.append((
-                    rows,
-                    np.array([*va[rows]], dtype=np.float64).reshape(len(rows), d),
-                    np.array([*vb[rows]], dtype=np.float64).reshape(len(rows), d),
-                ))
-        out = np.zeros(n, dtype=np.int64)
-        valid = np.zeros(n, dtype=bool)
-        for rows, A, B in groups:
+        la = np.array([-1 if v is None else len(v) for v in va], dtype=np.int64)
+        lb = np.array([-1 if v is None else len(v) for v in vb], dtype=np.int64)
+        pair = (la >= 0) & (la == lb)
+        out = np.zeros(len(va), dtype=np.int64)
+        valid = np.zeros(len(va), dtype=bool)
+        for d in np.unique(la[pair]):
+            rows = np.flatnonzero(pair & (la == d))
+            A = np.array([*va[rows]], dtype=np.float64).reshape(len(rows), d)
+            B = np.array([*vb[rows]], dtype=np.float64).reshape(len(rows), d)
             P = np.floor(A * B * float(SCALE))
             ok = np.isfinite(P).all(axis=1)
             P[~ok] = 0
@@ -1372,9 +1360,12 @@ def ivf_pq_rerank_topk(
         F.col(vec_col).alias("__v"),
         qnorm(F.col(vec_col)).alias("__n"),
     )
-    # __qc (plain-double q.c, the ADC base term in residual mode) rides
-    # along for free: the routing pass already holds both vectors per
-    # (row, seed) pair.
+    # __qc (plain-double q.c, the ADC base term in residual mode) is
+    # computed inside the routing pass, per (query, seed) pair, on
+    # purpose: there the window's exchange carries one double per pair.
+    # Adding it after _route would evaluate it on n_probe rows instead of
+    # n_cells, but would drag both vectors (__v, __seed_v) of every pair
+    # through that exchange.
     qc = F.aggregate(
         F.zip_with(
             as_double_vec(F.col("__v")),

@@ -336,7 +336,6 @@ PLAN_LINT_ALWAYS = (
     "similarity_pq_adc",
     "embedding_decontaminate",
     "embedding_incremental_admit",
-    "dedup_semantic",
 )
 
 
@@ -344,7 +343,9 @@ def test_plan_lints_on_seeded_sample(spark):
     """Default-tier sample of the two slow catalog-wide lints above:
     PLAN_LINT_ALWAYS plus a seeded random fill to 20 entries, each built
     once and checked for unexpected cartesian joins and unbounded
-    single-partition windows. The sample is printed."""
+    single-partition windows. The sample is printed. dedup_semantic is
+    not pinned: its routing and pair plan sit behind a localCheckpoint,
+    so its built plan shows only the checkpointed scan."""
     import random
 
     rest = sorted(set(QUERIES) - set(PLAN_LINT_ALWAYS))

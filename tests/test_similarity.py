@@ -100,10 +100,11 @@ def test_lsh_ann_subset_of_exact_order(emb):
 def test_arrow_and_expr_cosine_identical(spark, emb):
     """The Arrow kernel qdot_arrow returns exactly what the expression
     fold qdot returns, row by row: the same bits on every pair of 60 real
-    embeddings, null for a null side or a ragged pair, 0 for two empty
-    vectors. Checked on the pairs alone (one equal-width batch) and with
-    the edge rows in the same batch, where one malformed row must not
-    fail the others."""
+    embeddings, null for a null side, a null element or a ragged pair, 0
+    for two empty vectors. Checked on the pairs alone (one equal-width
+    batch) and with the edge rows in the same batch, where one malformed
+    row must not fail the others. NaN/Inf elements are not covered: there
+    qdot_arrow returns null and the fold saturates."""
     from dca_manager_spark.operators.similarity import qdot, qdot_arrow
 
     small = emb.filter(F.col("vec_id") < 60).select("vec_id", "embedding")
@@ -119,6 +120,7 @@ def test_arrow_and_expr_cosine_identical(spark, emb):
     edge = spark.createDataFrame(
         [
             ("null", None, [1.0, 2.0]),
+            ("null_elem", [1.0, None], [1.0, 2.0]),
             ("ragged", [1.0, 2.0, 3.0], [1.0, 2.0]),
             ("empty", [], []),
             ("narrow", [0.5, -0.25], [2.0, 1.0]),
@@ -138,11 +140,11 @@ def test_arrow_and_expr_cosine_identical(spark, emb):
 
     alone = both(pairs)
     mixed = both(pairs.unionByName(edge).coalesce(1))
-    assert len(alone) == 60 * 59 // 2 and len(mixed) == len(alone) + 4
+    assert len(alone) == 60 * 59 // 2 and len(mixed) == len(alone) + 5
     assert all(fold == arrow for fold, arrow in alone.values())
     assert all(fold == arrow for fold, arrow in mixed.values())
     assert all(mixed[t] == alone[t] for t in alone)
-    assert mixed["null"] == mixed["ragged"] == (None, None)
+    assert mixed["null"] == mixed["null_elem"] == mixed["ragged"] == (None, None)
     assert mixed["empty"] == (0, 0)
     assert mixed["narrow"] == (750_000_000_000, 750_000_000_000)
 
