@@ -471,8 +471,9 @@ def train_bpe_merges(
     # the pinned frame (cheap, runs once) picks the layout: tiny frames
     # collapse to one partition; big ones keep ~64k words per task.
     n_words = syms.count()
-    parts = max(1, min(syms.rdd.getNumPartitions(), n_words // 65_536 + 1))
-    if parts < syms.rdd.getNumPartitions():
+    have = syms.rdd.getNumPartitions()
+    parts = max(1, min(have, n_words // 65_536 + 1))
+    if parts < have:
         syms = syms.coalesce(parts).localCheckpoint(eager=True)
     pair_expr = F.explode(
         F.expr(

@@ -164,8 +164,9 @@ def exploded_shingles(
     window form needed the same exchange plus the sort).
 
     The exchange sits BELOW the tokenizer and carries the raw (id, text)
-    rows, and its partition count is EXPLICIT (max of
-    defaultParallelism and the input's width): a bare
+    rows, and its partition count is EXPLICIT
+    (``partitioning.keyed_width``: the input's estimated bytes / 64MB,
+    clamped to [defaultParallelism, 8 x defaultParallelism]): a bare
     ``repartition("__id")`` is REPARTITION_BY_COL, which AQE's
     coalescer happily folds to 1-2 partitions at bench scale because
     the shuffled BYTES are small — but everything above this exchange
@@ -173,8 +174,8 @@ def exploded_shingles(
     65-expression MinHash aggregate) is CPU-heavy per byte, so byte-
     proportional coalescing serializes the whole chain onto 1-2 cores
     (measured cpu_per_wall ~2 on 32 cores). REPARTITION_BY_NUM is
-    exempt from coalescing; the count follows the cluster (or the
-    already-wide scan at real scale), never a constant.
+    exempt from coalescing. Every catalog input is far below
+    64MB x defaultParallelism, so the count is defaultParallelism there.
 
     Documents shorter than k tokens contribute their full token join
     (slice past the end truncates), matching the array form's
@@ -1281,23 +1282,6 @@ def ngram_decontaminate(
     )
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Ensure at least defaultParallelism partitions before a CPU-heavy
-    per-document projection (window generation, token reassembly). A
-    corpus read from few parquet files plans few scan partitions — at
-    sf0.1 the documents table is ONE file, so the whole slice/concat
-    window build ran in ONE task (measured 3.8s of the span call's ~5s,
-    r16) — and a narrow projection inherits that. At real scale the scan
-    already has thousands of partitions and this is a no-op; the
-    repartition only fires when the input is narrower than the cluster,
-    where one extra shuffle of the raw docs is strictly cheaper than
-    serializing the projection. (Shared engine-wide as
-    ``partitioning.spread`` since r16.)"""
-    from dca_manager_spark.partitioning import spread
-
-    return spread(df)
-
-
 def duplicate_spans(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1353,6 +1337,7 @@ def duplicate_spans(
     hot, two-phase otherwise). Pass ``max_gram_docs=None`` for a pure,
     action-free plan (the oracle-replay mode)."""
     from dca_manager_spark.operators.text import tokens
+    from dca_manager_spark.partitioning import spread
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -1365,7 +1350,10 @@ def duplicate_spans(
             lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
         ),
     ).otherwise(F.expr("cast(array() as array<string>)"))
-    grams = _spread(df).select(
+    # Widen a narrow scan before the per-document window build: at sf0.1
+    # the documents table is one file, and this projection ran in one
+    # task (3.8 s of the call's ~5 s).
+    grams = spread(df).select(
         F.col(id_col).alias("__id"),
         F.posexplode(grams_arr).alias("__pos", "__g"),
     )
@@ -1566,9 +1554,10 @@ def scrub_duplicate_spans(
         )
     )
     from dca_manager_spark.operators.text import tokens
+    from dca_manager_spark.partitioning import spread
 
     toks = tokens(F.col(text_col))  # shared empty-safe tokenizer
-    base = _spread(df).select(
+    base = spread(df).select(
         F.col(id_col).alias("__id"),
         F.col(text_col).alias("__orig"),
         toks.alias("__toks"),

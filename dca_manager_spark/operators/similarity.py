@@ -277,9 +277,10 @@ def cosine_pairs(
     scale."""
     from dca_manager_spark.partitioning import spread
 
-    # Widen a narrow scan: the O(n^2/2) pair stream evaluates in the
-    # stream-side partitions of the BNLJ, which inherit the corpus
-    # scan's width (no-op at real scale — see partitioning.spread).
+    # Round-robin to the cluster width: the O(n^2/2) pair stream
+    # evaluates in the stream-side partitions of the BNLJ, which inherit
+    # the corpus scan's width (a no-op once the input's estimated size
+    # already scans as that many splits — see partitioning.spread).
     base = spread(df).select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__v"),
@@ -907,6 +908,32 @@ def train_pq_codebooks(
     return books
 
 
+def _pq_rows(v: pd.Series, dim: int):
+    """(X, ok) for a PQ UDF batch: ``ok`` marks the rows holding a
+    ``dim``-long vector of finite elements (a null element arrives as
+    NaN) and X stacks them as float64 (ok.sum() x dim). The PQ UDFs
+    compute on X only, so a null, ragged or non-finite row gets a null
+    result and leaves the rest of its batch alone — ``qdot_arrow``'s
+    row contract."""
+    import numpy as np
+
+    vals = v.to_numpy()
+    ok = np.array([x is not None and len(x) == dim for x in vals], dtype=bool)
+    X = np.array([*vals[ok]], dtype=np.float64).reshape(int(ok.sum()), dim)
+    finite = np.isfinite(X).all(axis=1)
+    ok[ok] = finite
+    return X[finite], ok
+
+
+def _scatter(ok, values: list) -> list:
+    """``values`` (one per ``ok`` row) placed at the ok rows; None
+    (null) at the rest."""
+    out: list = [None] * len(ok)
+    for i, x in zip(ok.nonzero()[0], values):
+        out[i] = x
+    return out
+
+
 def _pq_encode_udf(codebooks: list[list[list[float]]]):
     """Arrow-vectorized PQ encoder: numpy nearest-centroid per subspace.
 
@@ -926,9 +953,7 @@ def _pq_encode_udf(codebooks: list[list[list[float]]]):
 
     @pandas_udf("code array<int>, norm2 double")
     def enc(v: pd.Series) -> pd.DataFrame:
-        if not len(v):
-            return pd.DataFrame({"code": [], "norm2": []})
-        X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
+        X, ok = _pq_rows(v, m * sub)
         codes = np.empty((len(X), m), dtype=np.int32)
         n2 = np.zeros(len(X))
         for j in range(m):
@@ -939,7 +964,10 @@ def _pq_encode_udf(codebooks: list[list[list[float]]]):
             codes[:, j] = cj
             n2 += (2.0 * half[j])[cj]
         return pd.DataFrame(
-            {"code": [list(map(int, c)) for c in codes], "norm2": n2}
+            {
+                "code": _scatter(ok, codes.tolist()),
+                "norm2": _scatter(ok, n2.tolist()),
+            }
         )
 
     return enc
@@ -960,10 +988,10 @@ def _pq_encode_residual_udf(codebooks: list[list[list[float]]]):
 
     @pandas_udf("code array<int>, norm2 double")
     def enc(v: pd.Series, cent: pd.Series) -> pd.DataFrame:
-        if not len(v):
-            return pd.DataFrame({"code": [], "norm2": []})
-        X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
-        C = np.asarray([np.asarray(x, dtype=np.float64) for x in cent])
+        X, ok = _pq_rows(v, m * sub)
+        C, ok_c = _pq_rows(cent, m * sub)
+        both = ok & ok_c
+        X, C, ok = X[both[ok]], C[both[ok_c]], both
         R = X - C
         recon = C.copy()
         codes = np.empty((len(X), m), dtype=np.int32)
@@ -974,8 +1002,8 @@ def _pq_encode_residual_udf(codebooks: list[list[list[float]]]):
             recon[:, j * sub : (j + 1) * sub] += B[j][cj]
         return pd.DataFrame(
             {
-                "code": [list(map(int, c)) for c in codes],
-                "norm2": (recon * recon).sum(axis=1),
+                "code": _scatter(ok, codes.tolist()),
+                "norm2": _scatter(ok, (recon * recon).sum(axis=1).tolist()),
             }
         )
 
@@ -994,7 +1022,9 @@ def pq_encode(
     Arrow-batched numpy (see ``_pq_encode_udf`` for why not JVM
     expressions), map-only: at 100 TB this is a single scan with no
     shuffle. PQ at m=8 subvectors of int8-range codes is a 32x storage
-    compression of a 64-dim float32 embedding column."""
+    compression of a 64-dim float32 embedding column. A null vector, one
+    whose length is not the codebooks' dimension, or one with a null or
+    non-finite element gets a null code and norm."""
     enc = _pq_encode_udf(codebooks)
     out = df.withColumn("__pq", enc(F.col(vec_col)))
     return (
@@ -1023,13 +1053,10 @@ def _pq_queries(
 
     @pandas_udf("array<array<double>>")
     def lut_udf(v: pd.Series) -> pd.Series:
-        if not len(v):
-            return pd.Series([], dtype=object)
-        X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
+        X, ok = _pq_rows(v, m * sub)
         tables = [X[:, j * sub : (j + 1) * sub] @ B[j].T for j in range(m)]
-        return pd.Series(
-            [[list(tables[j][i]) for j in range(m)] for i in range(len(X))]
-        )
+        luts = [[list(tables[j][i]) for j in range(m)] for i in range(len(X))]
+        return pd.Series(_scatter(ok, luts), dtype=object)
 
     qv = as_double_vec(F.col(vec_col))
     qn2 = F.aggregate(qv, F.lit(0.0), lambda acc, x: acc + x * x)

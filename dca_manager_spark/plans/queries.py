@@ -106,7 +106,7 @@ _DRIVER_WINDOW = [
     # Round-16 rotation (VERDICT r15 #1): (1) queries ADDED this round
     # (no driver row yet — manifest_sql_insert is the SQL-DML surface,
     # multimodal_mp4_samples the sample-table walk); (2) queries whose
-    # CODE changed this round (the span family gained _spread
+    # CODE changed this round (the span family gained partitioning.spread
     # parallelization and the spans= reuse recomposition; the
     # manifest-SQL view text gained the within-commit precombine _rn,
     # so manifest_sql_select re-proves the registered-view read path);
@@ -120,7 +120,12 @@ _DRIVER_WINDOW = [
     # window (dedup_embedding_cosine[_exact], similarity_pq_adc,
     # dedup_semantic) joined group (2) — the other six it touches are
     # already in group (3) — and the last four group-(4) fill entries
-    # left. The full catalog is still verified every round by
+    # left. Rotated again when both partition-width helpers went to one
+    # plan-statistics size rule: the keyed_width callers
+    # (dedup_minhash_lsh, dedup_cluster_canonical, dedup_incremental_*)
+    # and dedup_simhash, whose shingle chain the MinHash rewrite
+    # changed, joined group (2), and the five remaining group-(4) fill
+    # entries left. The full catalog is still verified every round by
     # scripts/driver_sim.py.
     # -- (1) added in round 16 --
     "manifest_sql_insert",
@@ -137,6 +142,12 @@ _DRIVER_WINDOW = [
     "dedup_embedding_cosine_exact",
     "similarity_pq_adc",
     "dedup_semantic",
+    # -- (2) changed by the one partition-width rule --
+    "dedup_minhash_lsh",
+    "dedup_cluster_canonical",
+    "dedup_incremental_batch",
+    "dedup_incremental_indexed",
+    "dedup_simhash",
     # -- (3) freshest driver verdict r12 --
     "drift_top_divergent_tokens",
     "embedding_decontaminate",
@@ -171,12 +182,6 @@ _DRIVER_WINDOW = [
     "window_first_last",
     "window_ntile_quartiles",
     "window_percent_cume",
-    # -- (4) r13-scored fill (alphabetical) --
-    "agg_approx_distinct",
-    "agg_approx_percentile",
-    "agg_cube_status_priority",
-    "agg_distinct_per_segment",
-    "agg_grouping_sets",
 ]
 
 

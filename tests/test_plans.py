@@ -274,6 +274,10 @@ WINDOW_BOUNDED = {
     # produced by orderBy().limit(n_cells) — a constant-size input
     # (operators/similarity.py default-seeds path), not the corpus.
     "similarity_ivf_ann",
+    # The same seed-picker, once per side of the within-cell self-join;
+    # seen only by test_dedup_semantic_pair_plan_lints (the catalog
+    # lints stop at dedup_keep_canonical's checkpoint).
+    "dedup_semantic",
     # rank_a window runs over the LIMIT-100 BM25 frame — bounded by
     # construction (the fused lists are fixed-size by definition)
     "similarity_hybrid_rrf",
@@ -364,6 +368,31 @@ def test_plan_lints_on_seeded_sample(spark):
     assert not windows, f"unpartitioned (single-partition) windows: {windows}"
 
 
+def test_dedup_semantic_pair_plan_lints(spark, monkeypatch):
+    """dedup_semantic's routing and within-cell pair plan sits behind
+    dedup_keep_canonical's localCheckpoint, so the catalog lints see only
+    the checkpointed scan. Capture the pairs frame semantic_dedup hands
+    to dedup_keep_canonical and lint that: its nested-loop join is the
+    corpus x seeds routing join CARTESIAN_INTENTIONAL names (flagged
+    without the entry), and its only unpartitioned windows are the
+    WINDOW_BOUNDED seed-picker (flagged without the entry)."""
+    import dca_manager_spark.operators.dedup as dedup
+
+    captured = []
+
+    def keep_canonical(df, pairs, id_col):
+        captured.append(pairs)
+        return df.withColumn("cluster_size", F.lit(1))
+
+    monkeypatch.setattr(dedup, "dedup_keep_canonical", keep_canonical)
+    q("dedup_semantic", spark)
+    (pairs,) = captured
+    assert _unexpected_cartesian("dedup_semantic", pairs) == []
+    assert _unexpected_cartesian("", pairs) == ["BroadcastNestedLoopJoin"]
+    assert _unbounded_windows("dedup_semantic", pairs) == 0
+    assert _unbounded_windows("", pairs) == 2
+
+
 def test_audio_meta_sort_below_single_udf_pass(spark):
     """ADVICE r12: multimodal_audio_meta sorts BEFORE the pandas-UDF
     parse (a final orderBy would re-execute the UDF in the range
@@ -435,9 +464,9 @@ def test_pixel_codec_queries_map_only_until_final_sort(spark):
     (one ArrowEvalPython encode, one MapInPandas decode) with NO
     exchange between them — the encode->decode pipeline is map-only.
     Allowed exchanges: the final orderBy's range partition ABOVE the
-    decode, and (r16) the conditional partitioning.spread round-robin
-    BELOW the encode that widens a narrow one-file scan so the codec
-    work parallelizes."""
+    decode, and the partitioning.spread round-robin BELOW the encode,
+    which widens the one-file scan (its estimated size is far below
+    defaultParallelism x 128MB) so the codec work parallelizes."""
     for name in ("multimodal_jpeg_pixels", "multimodal_gif_pixels"):
         df = q(name, spark)
         plan = explain_formatted(df)

@@ -1,5 +1,5 @@
-"""Scale-technique tests: bucketed co-located joins (no Exchange) and
-skew salting (exact results, spread keys)."""
+"""Scale-technique tests: bucketed co-located joins (no Exchange), skew
+salting (exact results, spread keys) and the partition-width rule."""
 
 from __future__ import annotations
 
@@ -8,7 +8,9 @@ from pyspark.sql import functions as F
 
 from dca_manager_spark.io.bucketed import bucketed_join, write_bucketed_table
 from dca_manager_spark.operators.skew import salted_join, salted_sum
+from dca_manager_spark.partitioning import keyed_width, spread
 from dca_manager_spark.plans.inspect import physical_plan
+from tests.conftest import SF_SMOKE
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir):
@@ -81,3 +83,48 @@ def test_salted_join_spreads_hot_key(spark):
     )
     n_salts = salted.select("__salt").distinct().count()
     assert n_salts >= 6  # hot key spread over most of the 8 buckets
+
+
+def _rdd_frame(spark):
+    # RDD-backed: the optimizer's size estimate is Long.MaxValue (unknown)
+    return spark.createDataFrame(spark.sparkContext.parallelize([(1,)]), "a long")
+
+
+# name -> (frame builder, keyed_width(df) check given dp, spread adds a
+# round-robin exchange)
+WIDTH_CASES = {
+    "range_8e9_bytes": (
+        lambda spark: spark.range(10**9), lambda w, dp: dp < w <= 8 * dp, False
+    ),
+    "rdd_unknown_size": (_rdd_frame, lambda w, dp: w == dp, True),
+    # unknown x known overflows the estimate past Long.MaxValue
+    "checkpoint_x_rdd": (
+        lambda spark: spark.range(10).localCheckpoint().crossJoin(_rdd_frame(spark)),
+        lambda w, dp: dp <= w <= 8 * dp,
+        True,
+    ),
+    # one file, one row group, a few KB: scans as one split
+    "parquet_one_split": (
+        lambda spark: spark.read.schema("doc_id long, text string").parquet(
+            f"{SF_SMOKE}/documents.parquet"
+        ),
+        lambda w, dp: w == dp,
+        True,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(WIDTH_CASES))
+def test_partition_width_from_plan_size(spark, name):
+    """keyed_width and spread decide from the optimized plan's size
+    estimate alone (no .rdd probe, no job): a known large size widens
+    the keyed exchange up to 8 x defaultParallelism and makes spread a
+    no-op; an unknown or small size gives defaultParallelism and one
+    round-robin exchange to it."""
+    build, width_ok, spreads = WIDTH_CASES[name]
+    df = build(spark)
+    dp = spark.sparkContext.defaultParallelism
+    assert width_ok(keyed_width(df), dp), keyed_width(df)
+    rr = f"RoundRobinPartitioning({dp})"
+    added = physical_plan(spread(df)).count(rr) - physical_plan(df).count(rr)
+    assert added == int(spreads)

@@ -432,6 +432,38 @@ def test_pq_encode_is_layout_independent(spark):
     assert a == b
     assert all(len(c) == 2 for c in a.values())
 
+    # Row contract of all three PQ UDFs: a null or ragged vector gets a
+    # null code / norm / LUT; the valid row in the same batch keeps its
+    # code.
+    from dca_manager_spark.operators.similarity import (
+        _pq_encode_residual_udf,
+        _pq_queries,
+    )
+
+    bad = spark.createDataFrame(
+        [(1, rows[1][1]), (2, None), (3, [0.5] * 5)],
+        "vec_id int, embedding array<double>",
+    ).coalesce(1)
+    enc = {r.vec_id: r for r in pq_encode(bad, books).collect()}
+    assert tuple(enc[1].pq_code) == a[1] and enc[1].pq_norm2 is not None
+    assert [(enc[i].pq_code, enc[i].pq_norm2) for i in (2, 3)] == [(None, None)] * 2
+    res = {
+        r.vec_id: r.pq
+        for r in bad.select(
+            "vec_id",
+            _pq_encode_residual_udf(books)(
+                F.col("embedding"), F.array([F.lit(0.0)] * 8)
+            ).alias("pq"),
+        ).collect()
+    }
+    assert tuple(res[1].code) == a[1]
+    assert [(res[i].code, res[i].norm2) for i in (2, 3)] == [(None, None)] * 2
+    lut = {
+        r["__qid"]: r["__lut"]
+        for r in _pq_queries(bad, "vec_id", "embedding", books).collect()
+    }
+    assert len(lut[1]) == 2 and lut[2] is None and lut[3] is None
+
 
 def test_pq_dim_divisibility_is_loud(spark):
     from dca_manager_spark.operators.similarity import train_pq_codebooks
