@@ -165,8 +165,7 @@ def exploded_shingles(
 
     The exchange sits BELOW the tokenizer and carries the raw (id, text)
     rows, and its partition count is EXPLICIT
-    (``partitioning.keyed_width``: the input's estimated bytes / 64MB,
-    clamped to [defaultParallelism, 8 x defaultParallelism]): a bare
+    (``partitioning.keyed_width``: defaultParallelism): a bare
     ``repartition("__id")`` is REPARTITION_BY_COL, which AQE's
     coalescer happily folds to 1-2 partitions at bench scale because
     the shuffled BYTES are small — but everything above this exchange
@@ -174,8 +173,7 @@ def exploded_shingles(
     65-expression MinHash aggregate) is CPU-heavy per byte, so byte-
     proportional coalescing serializes the whole chain onto 1-2 cores
     (measured cpu_per_wall ~2 on 32 cores). REPARTITION_BY_NUM is
-    exempt from coalescing. Every catalog input is far below
-    64MB x defaultParallelism, so the count is defaultParallelism there.
+    exempt from coalescing.
 
     Documents shorter than k tokens contribute their full token join
     (slice past the end truncates), matching the array form's

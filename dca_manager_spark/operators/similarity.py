@@ -279,8 +279,8 @@ def cosine_pairs(
 
     # Round-robin to the cluster width: the O(n^2/2) pair stream
     # evaluates in the stream-side partitions of the BNLJ, which inherit
-    # the corpus scan's width (a no-op once the input's estimated size
-    # already scans as that many splits — see partitioning.spread).
+    # the corpus scan's width (a no-op once the input's leaf bytes
+    # already scan as that many splits — see partitioning.spread).
     base = spread(df).select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__v"),
@@ -1069,7 +1069,13 @@ def _pq_queries(
 
 def _adc_cosine(base: Column) -> Column:
     """ADC cosine of a (query, code) row: (``base`` + sum_j
-    __lut[j][__code_j]) / sqrt(__qn2 * __cn2), or 0 for a zero norm."""
+    __lut[j][__code_j]) / sqrt(__qn2 * __cn2), or 0 for a zero norm;
+    null when the code or the LUT is null (the PQ UDFs' null, ragged
+    or non-finite vector), so the callers' top-k drops the row.
+
+    The callers drop null scores ABOVE their rank window, not null
+    codes and LUTs below the join: a filter on a Python UDF's output
+    is pushed below its projection and evaluates the UDF twice."""
     adc = F.aggregate(
         F.zip_with(
             F.col("__code"),
@@ -1080,7 +1086,7 @@ def _adc_cosine(base: Column) -> Column:
         lambda acc, x: acc + x,
     )
     denom = F.sqrt(F.col("__qn2") * F.col("__cn2"))
-    return F.when(denom > 0, adc / denom).otherwise(F.lit(0.0))
+    return F.when(denom > 0, adc / denom).when(adc.isNotNull(), F.lit(0.0))
 
 
 def pq_ann_topk(
@@ -1106,7 +1112,8 @@ def pq_ann_topk(
     (IVF-PQ: coarse cells prune the scan, ADC scores the survivors).
     Returns (query_id, corpus_id, cosine_pq, rank); ranking error is
     bounded by quantization distortion — re-rank the shortlist with
-    exact dots when exactness matters."""
+    exact dots when exactness matters. A corpus row or query whose
+    vector gets a null PQ code or LUT takes no part."""
     enc = pq_encode(corpus, codebooks, vec_col).select(
         F.col(corpus_id).alias("__cid"),
         F.col("pq_code").alias("__code"),
@@ -1123,7 +1130,7 @@ def pq_ann_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter((F.col("rank") <= k) & F.col("cosine_pq").isNotNull())
         .select(
             F.col("__qid").alias(query_id),
             F.col("__cid").alias(corpus_id),
@@ -1427,7 +1434,7 @@ def ivf_pq_rerank_topk(
     )
     short = (
         cand.withColumn("__sr", F.row_number().over(ws))
-        .filter(F.col("__sr") <= shortlist)
+        .filter((F.col("__sr") <= shortlist) & F.col("__adc").isNotNull())
         .select("__qid", "__cid")
     )
 

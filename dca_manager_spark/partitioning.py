@@ -7,85 +7,84 @@ per-row stage (shingle explode, quantized-cosine folds, codec
 encode/decode in Python) runs on a handful of cores no matter how wide
 the cluster is.
 
-Both width decisions here read ONE number: the optimized logical
-plan's ``sizeInBytes`` estimate (:func:`_plan_bytes`), taken without
-physical planning and without running a job. The estimate is unknown
-(Long.MaxValue) for RDD-backed frames, and a crossJoin can inflate it
-far past any real size, so the rule is bounded on both sides:
+Neither helper plans the query physically or runs a job:
 
-- :func:`spread` round-robins to defaultParallelism (dp) unless the
-  known size is at least ``dp`` scan splits (``dp x 128MB``, Spark's
-  ``maxPartitionBytes`` default), i.e. a scan of it is already as wide
-  as the cluster.
-- :func:`keyed_width` is ``clamp(size / 64MB, dp, 8 x dp)``, and ``dp``
-  when the size is unknown.
+- :func:`spread` reads ONE number, the bytes of the optimized plan's
+  leaf relations (:func:`_scan_bytes`), and round-robins to
+  defaultParallelism (dp) unless those bytes are known and at least
+  ``dp x spark.sql.files.openCostInBytes`` — the size from which
+  Spark's file-split formula plans at least dp splits.
+- :func:`keyed_width` is dp. A byte-proportional width above dp is
+  open until a workload's keyed input reaches ``dp x 64MB``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# Long.MaxValue: the optimizer's "size unknown" (RDD-backed leaves, and
-# any plan whose estimate overflowed).
+# Long.MaxValue: the optimizer's "size unknown" (RDD-backed leaves).
 _UNKNOWN_BYTES = (1 << 63) - 1
-# spark.sql.files.maxPartitionBytes default: the most bytes one scan
-# split holds, so a frame of dp x this many bytes scans as >= dp splits.
-_SCAN_SPLIT_BYTES = 128 * 1024 * 1024
-# Target bytes per partition for CPU-heavy keyed exchanges — AQE's
-# advisoryPartitionSizeInBytes default.
-_KEYED_TARGET_BYTES = 64 * 1024 * 1024
 
 
-def _plan_bytes(df: DataFrame) -> int | None:
-    """The optimized plan's size estimate in bytes; None when unknown.
+def _scan_bytes(df: DataFrame) -> int | None:
+    """Bytes held by the optimized plan's leaf relations; None when a
+    leaf's size is unknown.
 
-    Optimizer statistics only — no physical planning, no AQE
-    preparation, no job. Asking the frame's RDD for its partition count
-    does all three: 41-98 ms warm and 0.79 s cold per probe, measured on
-    a plain scan. py4j returns the Scala BigInt as a Python int."""
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    return None if size >= _UNKNOWN_BYTES else size
+    Leaf statistics, not the root's: without CBO a join's estimate is
+    the product of its children's, so a 100 KB x 10 KB join reads 1e9
+    B at the root, while its leaves read what a scan of them splits
+    (the file bytes, for a file relation). py4j returns each Scala
+    BigInt as a Python int."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        size = int(leaves.apply(i).stats().sizeInBytes())
+        if size >= _UNKNOWN_BYTES:
+            return None
+        total += size
+    return total
 
 
 def spread(df: DataFrame) -> DataFrame:
-    """Round-robin ``df`` to defaultParallelism partitions before a
-    CPU-heavy per-row stage, unless its known size already scans as at
-    least that many splits (the 100 TB case, where this is a no-op).
+    """Round-robin ``df`` to defaultParallelism (dp) partitions before a
+    CPU-heavy per-row stage, unless its leaves already scan as at least
+    dp splits.
 
-    Callers apply it unconditionally at operator entry. An unknown size
-    takes the round-robin: one exchange of the raw rows to the cluster
-    width is never the pathological case. Round-robin balances rows
-    regardless of how skewed the file layout is, and Spark's
-    sort-before-repartition keeps the row-to-partition assignment
-    deterministic under task retry (SPARK-23207), so downstream results
-    are stable.
+    Spark sizes a file split as ``min(maxPartitionBytes,
+    max(openCostInBytes, bytes / dp))``, so a scan of ``bytes >= dp x
+    openCostInBytes`` plans at least dp splits: ``df`` is returned as is.
+    A split count counts byte ranges, not row groups, so a single-file
+    input whose one row group is split into dp ranges still reads on
+    one core; a partition-count probe has the same blindness. Below the
+    threshold, or when a leaf's size is unknown (an RDD-backed frame,
+    whose width only a probe of its RDD tells), one exchange of the raw
+    rows puts work on every core; an unknown-size frame wider than dp is
+    narrowed to dp by it. Round-robin balances rows regardless of how
+    skewed the file layout is, and Spark's sort-before-repartition keeps
+    the row-to-partition assignment deterministic under task retry
+    (SPARK-23207), so downstream results are stable.
     """
-    dp = df.sparkSession.sparkContext.defaultParallelism
-    size = _plan_bytes(df)
-    if size is not None and size >= dp * _SCAN_SPLIT_BYTES:
+    spark = df.sparkSession
+    dp = spark.sparkContext.defaultParallelism
+    size = _scan_bytes(df)
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    if size is not None and size >= dp * open_cost:
         return df
     return df.repartition(dp)
 
 
 def keyed_width(df: DataFrame) -> int:
     """Partition count for an explicit ``repartition(n, key)`` feeding a
-    CPU-heavy stage: ``clamp(size / 64MB, dp, 8 x dp)`` from
-    :func:`_plan_bytes`, and ``dp`` (defaultParallelism) when the size
-    is unknown.
+    CPU-heavy stage: defaultParallelism.
 
     WHY an explicit count at all: a bare ``repartition(key)`` is
     REPARTITION_BY_COL, which AQE's coalescer folds down purely by
     SHUFFLED BYTES — for stages whose cost is CPU per row (shingle
     assembly, per-gram hashing, codec work) that collapses the whole
     chain onto 1-2 cores whenever the bytes are small. An explicit
-    count (REPARTITION_BY_NUM) is exempt from coalescing. The floor
-    keeps every core busy on small inputs; above ``64MB x dp`` the count
-    is byte-proportional (what AQE itself would pick); the ceiling keeps
-    an inflated estimate (a crossJoin's product) from planning a
-    pathological number of partitions.
+    count (REPARTITION_BY_NUM) is exempt from coalescing, so every core
+    gets work. No keyed input of the catalog or the benchmark reaches
+    ``dp x 64MB`` (the largest is under 1 MB), so a byte-proportional
+    count above dp would be unmeasured.
     """
-    dp = df.sparkSession.sparkContext.defaultParallelism
-    size = _plan_bytes(df)
-    if size is None:
-        return dp
-    return min(max(size // _KEYED_TARGET_BYTES, dp), 8 * dp)
+    return df.sparkSession.sparkContext.defaultParallelism

@@ -120,8 +120,9 @@ _DRIVER_WINDOW = [
     # window (dedup_embedding_cosine[_exact], similarity_pq_adc,
     # dedup_semantic) joined group (2) — the other six it touches are
     # already in group (3) — and the last four group-(4) fill entries
-    # left. Rotated again when both partition-width helpers went to one
-    # plan-statistics size rule: the keyed_width callers
+    # left. Rotated again when the partition-width helpers dropped their
+    # probes (spread reads leaf plan statistics; keyed_width's dead size
+    # path went): the keyed_width callers
     # (dedup_minhash_lsh, dedup_cluster_canonical, dedup_incremental_*)
     # and dedup_simhash, whose shingle chain the MinHash rewrite
     # changed, joined group (2), and the five remaining group-(4) fill

@@ -465,8 +465,9 @@ def test_pixel_codec_queries_map_only_until_final_sort(spark):
     exchange between them — the encode->decode pipeline is map-only.
     Allowed exchanges: the final orderBy's range partition ABOVE the
     decode, and the partitioning.spread round-robin BELOW the encode,
-    which widens the one-file scan (its estimated size is far below
-    defaultParallelism x 128MB) so the codec work parallelizes."""
+    which widens the one-file scan (its bytes are far below
+    defaultParallelism x openCostInBytes) so the codec work
+    parallelizes."""
     for name in ("multimodal_jpeg_pixels", "multimodal_gif_pixels"):
         df = q(name, spark)
         plan = explain_formatted(df)

@@ -85,46 +85,74 @@ def test_salted_join_spreads_hot_key(spark):
     assert n_salts >= 6  # hot key spread over most of the 8 buckets
 
 
-def _rdd_frame(spark):
+def _rdd_frame(spark, tmp_path):
     # RDD-backed: the optimizer's size estimate is Long.MaxValue (unknown)
     return spark.createDataFrame(spark.sparkContext.parallelize([(1,)]), "a long")
 
 
-# name -> (frame builder, keyed_width(df) check given dp, spread adds a
-# round-robin exchange)
+def _multi_file_scan(spark, tmp_path):
+    # dp files of random doubles, 1.25 x dp x openCostInBytes in all:
+    # Spark's split formula plans >= dp splits for it, while it is far
+    # below dp x maxPartitionBytes (128MB)
+    dp = spark.sparkContext.defaultParallelism
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    rows = 5 * dp * open_cost // 4 // 8
+    spark.range(0, rows, 1, dp).select(F.rand(1).alias("x")).write.parquet(
+        str(tmp_path / "scan")
+    )
+    return spark.read.parquet(str(tmp_path / "scan"))
+
+
+# name -> (frame builder, spread adds one round-robin exchange)
 WIDTH_CASES = {
-    "range_8e9_bytes": (
-        lambda spark: spark.range(10**9), lambda w, dp: dp < w <= 8 * dp, False
-    ),
-    "rdd_unknown_size": (_rdd_frame, lambda w, dp: w == dp, True),
-    # unknown x known overflows the estimate past Long.MaxValue
+    "range_8e9_bytes": (lambda spark, tmp_path: spark.range(10**9), False),
+    "rdd_unknown_size": (_rdd_frame, True),
+    # unknown x known: the root estimate overflows past Long.MaxValue
     "checkpoint_x_rdd": (
-        lambda spark: spark.range(10).localCheckpoint().crossJoin(_rdd_frame(spark)),
-        lambda w, dp: dp <= w <= 8 * dp,
+        lambda spark, tmp_path: spark.range(10).localCheckpoint().crossJoin(
+            _rdd_frame(spark, tmp_path)
+        ),
         True,
     ),
     # one file, one row group, a few KB: scans as one split
     "parquet_one_split": (
-        lambda spark: spark.read.schema("doc_id long, text string").parquet(
+        lambda spark, tmp_path: spark.read.schema("doc_id long, text string").parquet(
             f"{SF_SMOKE}/documents.parquet"
         ),
-        lambda w, dp: w == dp,
         True,
     ),
+    # 100 KB x 10 KB on one partition: the root estimate (the product,
+    # ~1e9 B) is no width; the leaves' 110 KB is
+    "join_one_partition": (
+        lambda spark, tmp_path: spark.range(0, 12_500, 1, 1).join(
+            spark.range(0, 1_250, 1, 1), "id"
+        ),
+        True,
+    ),
+    "parquet_multi_file": (_multi_file_scan, False),
 }
 
 
 @pytest.mark.parametrize("name", list(WIDTH_CASES))
-def test_partition_width_from_plan_size(spark, name):
-    """keyed_width and spread decide from the optimized plan's size
-    estimate alone (no .rdd probe, no job): a known large size widens
-    the keyed exchange up to 8 x defaultParallelism and makes spread a
-    no-op; an unknown or small size gives defaultParallelism and one
-    round-robin exchange to it."""
-    build, width_ok, spreads = WIDTH_CASES[name]
-    df = build(spark)
-    dp = spark.sparkContext.defaultParallelism
-    assert width_ok(keyed_width(df), dp), keyed_width(df)
-    rr = f"RoundRobinPartitioning({dp})"
-    added = physical_plan(spread(df)).count(rr) - physical_plan(df).count(rr)
+def test_partition_width_from_plan_size(spark, tmp_path, name):
+    """spread decides from the optimized plan's leaf sizes alone: leaves
+    that scan as >= defaultParallelism splits make it a no-op; small or
+    unknown leaves give one round-robin exchange to defaultParallelism.
+    keyed_width is defaultParallelism. Neither runs a Spark job."""
+    build, spreads = WIDTH_CASES[name]
+    df = build(spark, tmp_path)
+    sc = spark.sparkContext
+    dp = sc.defaultParallelism
+    group = f"width-rule-{name}"
+    sc.setJobGroup(group, "partition-width rule")
+    try:
+        width = keyed_width(df)
+        rr = f"RoundRobinPartitioning({dp})"
+        added = physical_plan(spread(df)).count(rr) - physical_plan(df).count(rr)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert width == dp
     assert added == int(spreads)

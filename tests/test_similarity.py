@@ -463,6 +463,14 @@ def test_pq_encode_is_layout_independent(spark):
         for r in _pq_queries(bad, "vec_id", "embedding", books).collect()
     }
     assert len(lut[1]) == 2 and lut[2] is None and lut[3] is None
+    # ... and ADC top-k drops those rows on both sides: the valid query
+    # ranks the valid corpus exactly as without them.
+    from dca_manager_spark.operators.similarity import pq_ann_topk
+
+    corpus = df.union(bad.filter("vec_id > 1").selectExpr("vec_id + 100", "embedding"))
+    got = pq_ann_topk(bad, corpus, "vec_id", "vec_id", books, k=3).collect()
+    clean = pq_ann_topk(bad.filter("vec_id = 1"), df, "vec_id", "vec_id", books, k=3)
+    assert sorted(got) == sorted(clean.collect()) and len(got) == 3
 
 
 def test_pq_dim_divisibility_is_loud(spark):
