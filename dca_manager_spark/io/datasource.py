@@ -425,9 +425,9 @@ class ManifestChangesDataSource(DataSource):
 #   driver-side ``commit()`` — failed/speculative attempts' files are
 #   never referenced (the vacuum orphan grace window reclaims them);
 # - ``commit()`` is the atomic publish: merged-schema check + manifest
-#   put-if-absent, with a bounded rebase loop on lost races (append
-#   content is position-independent, so rebase = re-publish on the new
-#   head);
+#   put-if-absent, under the table's rebase loop (``ManifestTable._rebase``
+#   with the ``retries`` option as its budget; append content is
+#   position-independent, so rebase = re-publish on the new head);
 # - ``abort()`` best-effort deletes the written files.
 #
 # The STREAMING writer adds replay idempotence: each micro-batch's
@@ -645,18 +645,21 @@ class _ManifestWriterBase:
         stream_mark = (
             (extra["stream_sink"], int(extra["stream_batch"])) if extra else None
         )
-        for attempt in range(self.retries + 1):
-            prev = table._latest_manifest()
-            prev_id, prev_doc = (prev[0], prev[1]) if prev else (None, None)
+        deleted = {e["path"] for e in entries if e.pop("__delete", False)}
+
+        def attempt(prev) -> None:
+            prev_id, prev_doc = prev if prev else (None, None)
             prev_files = prev_doc["files"] if prev_doc else []
             if stream_mark and self._already_published(table, prev_doc, stream_mark):
                 return  # replayed micro-batch: publish is already durable
+            # Entries are re-tagged from the executor's originals on every
+            # attempt: the MOR decision and next_id move with the head.
+            tagged = [dict(e) for e in entries]
             # MOR tables: a plain (kind-less) entry resolves as commit -1
             # base, so an older delta UPSERT of the same key would hide a
             # sink-appended row. Land as INSERT DELTAS at this commit's
             # true id instead — exactly what the handle's MOR insert
             # writes: additive rows that stack at their own commit.
-            # Re-derived per rebase attempt (next_id moves with the head).
             # Keyed mode: the batch is an UPSERT delta — latest commit
             # wins per key, within-commit duplicates resolve by
             # precombine at read (_resolve_mor). The reading handle must
@@ -665,8 +668,8 @@ class _ManifestWriterBase:
             # config — exactly like Hudi writers agreeing on recordkey).
             if self.keys or any(f.get("kind") for f in prev_files):
                 next_id = 0 if prev_id is None else prev_id + 1
-                for e in entries:
-                    is_del = e.pop("__delete", False)
+                for e in tagged:
+                    is_del = e["path"] in deleted
                     e["kind"] = "tombstone" if is_del else "delta"
                     e["op"] = (
                         "delete" if is_del
@@ -679,24 +682,19 @@ class _ManifestWriterBase:
                         # only when they see this flag — handle-written
                         # commits keep the cheaper plan
                         e["pc"] = False
-            ups = [e["path"] for e in entries if e.get("op") != "delete"]
-            dels = [e["path"] for e in entries if e.get("op") == "delete"]
-            schema_json = table._merge_schema_json(prev_doc, self.table_schema)
-            try:
-                table._publish(
-                    prev_id,
-                    prev_files + entries,
-                    schema_json,
-                    changes={"upserts": ups, "deletes": dels},
-                    op="upsert" if self.keys else "append",
-                    extra=extra,
-                    stream_mark=stream_mark,
-                )
-                return
-            except FileExistsError:
-                if attempt == self.retries:
-                    raise
-                table.rebase_count += 1
+            ups = [e["path"] for e in tagged if e.get("op") != "delete"]
+            dels = [e["path"] for e in tagged if e.get("op") == "delete"]
+            table._publish(
+                prev_id,
+                prev_files + tagged,
+                table._merge_schema_json(prev_doc, self.table_schema),
+                changes={"upserts": ups, "deletes": dels},
+                op="upsert" if self.keys else "append",
+                extra=extra,
+                stream_mark=stream_mark,
+            )
+
+        table._rebase("sink batch", attempt, retries=self.retries)
 
     @staticmethod
     def _already_published(table, prev_doc, stream_mark: tuple[str, int]) -> bool:

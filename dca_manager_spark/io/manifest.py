@@ -27,7 +27,9 @@ expose a half-committed table):
 3. the commit POINT is the atomic publish of ``_manifests/<next-id>.json``
    (put-if-absent: O_EXCL locally; S3 conditional PUT / a DynamoDB lock in
    a real deployment). A crash before publish leaves only unreferenced
-   orphan files — readers never see them;
+   orphan files — readers never see them. Every commit path — handle
+   writes, DML, restore, compact and the streaming sink — publishes
+   through one optimistic rebase loop, ``ManifestTable._rebase``;
 4. readers list files from the NEWEST manifest, never from directory
    listing, so concurrent vacuums/writers can't tear a read;
 5. ``vacuum()`` deletes unreferenced files (run after a retention window);
@@ -70,7 +72,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-_UNSET = object()  # "no prev supplied" sentinel (None = empty table)
 # Serializes catalog syncs in this process: the read-prior-view /
 # replace-view step of register() is check-then-act.
 _SYNC_LOCK = _threading.Lock()
@@ -110,13 +111,15 @@ def precombine_dedup(df: DataFrame, keys: list[str], precombine: str,
 
 
 class ConcurrentCommitError(RuntimeError):
-    """A commit lost the put-if-absent race ``commit_retries + 1`` times
-    in a row. The table is NOT corrupted — the losing attempts published
-    nothing (the manifest link failed atomically) and their data files
-    are unreferenced orphans that ``vacuum()`` reclaims. The caller can
-    simply re-issue the write; persistent contention means two writers
-    are hammering the same table faster than rebase can keep up — shard
-    the key space or serialize upstream."""
+    """A commit lost the put-if-absent race on every attempt of its
+    rebase budget: ``commit_retries + 1`` times for a handle commit, the
+    ``retries`` option + 1 times for the ``dca_manifest`` write sink
+    (io/datasource.py). The table is NOT corrupted — the losing attempts
+    published nothing (the manifest link failed atomically) and their
+    data files are unreferenced orphans that ``vacuum()`` reclaims. The
+    caller can simply re-issue the write; persistent contention means
+    two writers are hammering the same table faster than rebase can
+    keep up — shard the key space or serialize upstream."""
 
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
@@ -611,6 +614,38 @@ class ManifestTable:
             # sync-on-write: commit is durable, now refresh catalog views
             self._sync_registered(doc)
         return next_id
+
+    def _rebase(self, what: str, attempt, retries: int | None = None):
+        """The optimistic-concurrency loop every commit path runs (the
+        rebase contract the entry points' "Concurrency:" notes refer
+        to). Each try reads the newest manifest and calls
+        ``attempt(prev)`` — prev is ``(id, doc)``, or None on a table
+        with no commit — which computes its commit against that manifest
+        and publishes with put-if-absent. Losing the race raises
+        FileExistsError from _publish; the next try REBASES: it re-reads
+        the manifest that won and re-applies, which is exactly the
+        serialized result (loser ordered after winner). Anything the
+        attempt derives from the table — a DML predicate's matches, a
+        restore diff, a compaction's file selection — is re-derived per
+        try, so a stale view is never applied over the winner. Data
+        files of a lost try are unreferenced orphans that vacuum()
+        reclaims. Every loss bumps ``rebase_count``; after ``retries +
+        1`` losses (``commit_retries`` when None) the commit aborts with
+        ConcurrentCommitError, naming ``what`` and the setting to raise.
+        Returns the winning attempt's return value."""
+        setting = "commit_retries" if retries is None else "the retries option"
+        retries = self.commit_retries if retries is None else retries
+        for _ in range(retries + 1):
+            try:
+                return attempt(self._latest_manifest())
+            except FileExistsError as exc:
+                conflict = exc
+                self.rebase_count += 1
+        raise ConcurrentCommitError(
+            f"{what} on {self.path} lost the commit race {retries + 1} "
+            f"time(s) ({conflict}); the table is intact — re-issue it or "
+            f"raise {setting}"
+        )
 
     _PARTITIONABLE = ("string", "byte", "short", "integer", "long",
                       "boolean", "date")
@@ -1656,11 +1691,14 @@ class ManifestTable:
         source commit per local commit, in ``_commit`` order — downstream
         replication over the change feed (the Hudi/Delta CDC-sync
         pattern). Upserts apply as upserts, deletes by the deleted rows'
-        keys; ``update_preimage`` rows are metadata for delta consumers
-        and are ignored here (the postimage upsert replays the change). The replica converges to the source's latest state per key;
-        legal same-key duplicates from source INSERT commits collapse
-        under the replica's precombine (replicate with bulk_insert loads
-        instead if duplicate-preservation matters). The commit loop is
+        keys, both sides of a source commit in ONE write_txn commit (a
+        reader never sees a state between them); ``update_preimage``
+        rows are metadata for delta consumers and are ignored here (the
+        postimage upsert replays the change). The replica converges to
+        the source's latest state per key; legal same-key duplicates
+        from source INSERT commits collapse under the replica's
+        precombine (replicate with bulk_insert loads instead if
+        duplicate-preservation matters). The commit loop is
         driver-side but bounded by the number of SOURCE commits in the
         feed (metadata-scale), not by rows."""
         commits = sorted(
@@ -1674,10 +1712,14 @@ class ManifestTable:
             dels = batch.filter(F.col("_change_type") == "delete").drop(
                 "_change_type", "_commit"
             )
-            if not ups.isEmpty():
-                self.write(ups, WriteOperation.UPSERT)
-            if not dels.isEmpty():
-                self.write(dels, WriteOperation.DELETE)
+            # ONE replica commit per source commit: a source commit's
+            # upsert and delete sides never share a (key, partition)
+            # (write_txn drops such deletes; restore derives the sides
+            # disjointly), so the txn applies exactly what the source did.
+            self.write_txn(
+                ups if not ups.isEmpty() else None,
+                dels if not dels.isEmpty() else None,
+            )
 
     # -- write side ---------------------------------------------------------
     def persisted_constraints(self) -> dict:
@@ -1772,54 +1814,42 @@ class ManifestTable:
             # re-evaluated differently per consumer. Pinning BEFORE the
             # rebase loop also makes every retry apply the SAME rows.
             df = _pin(precombine_dedup(df, self.keys, self.precombine))
-        # Optimistic-concurrency loop: each attempt reads the newest
-        # manifest, applies the batch against it, and publishes with
-        # put-if-absent. Losing the race raises FileExistsError from
-        # _publish; the next attempt REBASES — re-reads the manifest that
-        # beat us and re-applies, which is exactly the serialized result
-        # (loser ordered after winner). Data files from a lost attempt
-        # are unreferenced orphans; vacuum() reclaims them.
-        for attempt in range(self.commit_retries + 1):
-            prev = self._latest_manifest()
-            try:
-                self._write_attempt(df, op, prev)
-                return
-            except FileExistsError as exc:
-                conflict = exc
-                self.rebase_count += 1
-        raise ConcurrentCommitError(
-            f"{op.value} on {self.path} lost the commit race "
-            f"{self.commit_retries + 1} time(s) ({conflict}); the table is "
-            "intact — re-issue the write or raise commit_retries"
-        )
+        self._rebase(op.value, lambda prev: self._write_attempt(df, op, prev))
 
     def _write_attempt(
         self, df: DataFrame, op: WriteOperation, prev
     ) -> None:
-        """ONE optimistic-commit attempt against the ``prev`` manifest
-        (shared by write()'s rebase loop and the predicate-DML loops,
-        which must re-evaluate their predicate per attempt and so own
-        the loop themselves)."""
+        """ONE optimistic-commit attempt of a single-frame write against
+        the ``prev`` manifest (write() and the predicate DML, whose
+        attempts re-evaluate their predicate first)."""
         # Fail dtype conflicts UP FRONT, before any data file is
         # written (the merge path would otherwise union-cast and die
         # mid-write; MOR would commit files unreadable under the
         # committed schema). Re-checked per attempt: the winning
         # concurrent commit may have evolved the schema under us.
         if prev is not None:
-            self._merged_schema_json(prev[1], df)  # raises on conflict
-        # `prev` is threaded into the write paths below so the
-        # manifest is loaded ONCE per attempt, not re-read per path.
+            self._merge_schema_json(prev[1], df.schema)  # raises on conflict
         if self.table_type == "mor":
-            self._mor_write(df, op, prev=prev)
+            if op in (WriteOperation.UPSERT, WriteOperation.DELETE):
+                # Precombine stays LAZY (no checkpoint): the MOR commit
+                # consumes the batch in exactly ONE write job (the change
+                # set references those same files), never reads the
+                # table's own files it could overwrite, and a rebase
+                # retry that re-evaluates the plan writes a fresh,
+                # self-consistent file set. Pinning here would add a full
+                # materialization job per micro-batch commit — the
+                # dominant cost of a high-frequency streaming sink.
+                df = precombine_dedup(df, self.keys, self.precombine)
+            self._mor_commit(
+                [(df, op.value)], prev,
+                "append" if op == WriteOperation.BULK_INSERT else op.value,
+            )
         elif op in (WriteOperation.INSERT, WriteOperation.BULK_INSERT):
-            self._append(df, prev=prev)
+            self._append(df, prev)
         elif op == WriteOperation.UPSERT:
-            self._merge(df, keep_batch=True, prev=prev)
+            self._cow_commit(df, None, prev, "upsert")
         else:
-            self._merge(df, keep_batch=False, prev=prev)
-
-    def _merged_schema_json(self, prev_doc: dict | None, df: DataFrame) -> str:
-        return self._merge_schema_json(prev_doc, df.schema)
+            self._cow_commit(None, df, prev, "delete")
 
     @staticmethod
     def _merge_schema_json(prev_doc: dict | None, batch_schema) -> str:
@@ -1893,46 +1923,40 @@ class ManifestTable:
         )
         return merged.json()
 
-    def _mor_write(self, df: DataFrame, op: WriteOperation, prev=_UNSET) -> None:
-        """Merge-on-read write path: EVERY operation lands as new files
-        referenced by the next manifest — no existing file is read or
-        rewritten, so commit cost is O(batch) regardless of partition
-        size (the write-optimized half of the Hudi COW/MOR split).
-        Upsert/delete batches are precombined (one row per key per
-        commit); inserts keep duplicates. Resolution happens at read."""
-        if op in (WriteOperation.UPSERT, WriteOperation.DELETE):
-            # Precombine stays LAZY (no checkpoint): unlike the COW
-            # merge, the MOR path consumes the batch in exactly ONE
-            # write job (delta/tombstone files; the change set references
-            # those same files), never reads the table's own files it
-            # could overwrite, and a rebase retry that re-evaluates the
-            # plan writes a fresh, self-consistent file set. Pinning here
-            # would add a full materialization job per micro-batch commit
-            # — the dominant cost of a high-frequency streaming sink.
-            df = precombine_dedup(df, self.keys, self.precombine)
-        if prev is _UNSET:
-            prev = self._latest_manifest()
-        prev_id, prev_doc = (prev[0], prev[1]) if prev else (None, None)
-        prev_files = prev_doc["files"] if prev_doc else []
+    def _mor_commit(
+        self, parts: list[tuple[DataFrame, str]], prev, op: str
+    ) -> None:
+        """The merge-on-read commit body: every ``(frame, entry_op)``
+        part lands as new files referenced by the next manifest — no
+        existing file is read or rewritten, so commit cost is O(batch)
+        regardless of partition size (the write-optimized half of the
+        Hudi COW/MOR split). A "delete" part's files are tombstones,
+        every other part's are deltas, all tagged with this commit's id;
+        resolution happens at read (_resolve_mor). Upsert and delete
+        parts arrive precombined (one row per key); inserts keep
+        duplicates. A write_txn commit passes an upsert and a delete part
+        whose (key, partition) sets write_txn made disjoint, so
+        resolution is exactly delete + upsert at one commit id. The
+        committed schema merges the FIRST part's."""
+        prev_id, prev_doc = prev if prev else (None, None)
         next_id = self._next_id(prev_id)
-        entries = self._write_commit_files(df)
-        is_delete = op == WriteOperation.DELETE
-        for e in entries:
-            e["kind"] = "tombstone" if is_delete else "delta"
-            e["op"] = op.value
-            e["commit"] = next_id
-        paths = [e["path"] for e in entries]
-        changes = (
-            {"upserts": [], "deletes": paths}
-            if is_delete
-            else {"upserts": paths, "deletes": []}
-        )
+        entries: list[dict] = []
+        changes: dict[str, list[str]] = {"upserts": [], "deletes": []}
+        for df, entry_op in parts:
+            written = self._write_commit_files(df)
+            for e in written:
+                e["kind"] = "tombstone" if entry_op == "delete" else "delta"
+                e["op"] = entry_op
+                e["commit"] = next_id
+            side = "deletes" if entry_op == "delete" else "upserts"
+            changes[side] += [e["path"] for e in written]
+            entries += written
         self._publish(
             prev_id,
-            prev_files + entries,
-            self._merged_schema_json(prev_doc, df),
+            (prev_doc["files"] if prev_doc else []) + entries,
+            self._merge_schema_json(prev_doc, parts[0][0].schema),
             changes,
-            op=op.value if op != WriteOperation.BULK_INSERT else "append",
+            op=op,
         )
 
     def _resolve_mor(self, files: list[dict], schema) -> DataFrame:
@@ -2027,9 +2051,7 @@ class ManifestTable:
         )
         return resolved.select(*[F.col(f.name) for f in schema.fields])
 
-    def _append(self, df: DataFrame, prev=_UNSET) -> None:
-        if prev is _UNSET:
-            prev = self._latest_manifest()
+    def _append(self, df: DataFrame, prev) -> None:
         prev_id, prev_files = (prev[0], prev[1]["files"]) if prev else (None, [])
         if self._has_constraints() or self.cluster_by:
             # these features consume the batch more than once (validation
@@ -2045,72 +2067,86 @@ class ManifestTable:
             prev_files + new_files,
             # merged, not batch, schema: an insert missing an existing
             # column must not hide that column table-wide
-            self._merged_schema_json(prev[1] if prev else None, df),
+            self._merge_schema_json(prev[1] if prev else None, df.schema),
             changes={"upserts": [f["path"] for f in new_files], "deletes": []},
             op="append",
         )
 
-    def _merge(self, batch: DataFrame, keep_batch: bool, prev=_UNSET) -> None:
-        """COW keyed write of a PINNED, precombined batch (one row per
-        key): rewrite the touched partitions without the batch's keys,
-        plus the batch rows themselves for an upsert."""
-        if prev is _UNSET:
-            prev = self._latest_manifest()
-        if prev is None:
-            if keep_batch:
-                self._append(batch, prev=None)
-            return
-        prev_id, prev_doc = prev
-        prev_files = prev_doc["files"]
-        if not prev_files:
-            # Empty table: no survivors to merge with (and nothing a
-            # delete could remove — no change rows either way).
-            new_files = self._write_commit_files(batch) if keep_batch else []
+    def _cow_commit(
+        self, ups: DataFrame | None, dels: DataFrame | None, prev, op: str
+    ) -> None:
+        """The copy-on-write keyed commit body, for an upsert (``dels``
+        None), a delete (``ups`` None) or a write_txn (both). Each frame
+        is PINNED and precombined (one row per key), and write_txn made
+        their (key, partition) sets disjoint. Rewrites the touched
+        partitions without either frame's keys, plus the upsert rows
+        themselves. Key matching is partition-scoped only via which
+        files get rewritten."""
+        frames = [f for f in (ups, dels) if f is not None]
+        if prev is None or not prev[1]["files"]:
+            # Empty table: no survivors to merge with, and nothing a
+            # delete could remove — no change rows either way. A delete
+            # on a table that was never written publishes nothing; the
+            # first upsert into a new table is labelled an append.
+            if prev is None and ups is None:
+                return
+            prev_id, prev_doc = prev if prev else (None, None)
+            new_files = self._write_commit_files(ups) if ups is not None else []
             self._publish(
                 prev_id,
                 new_files,
-                self._merged_schema_json(prev_doc, batch),
+                self._merge_schema_json(prev_doc, frames[0].schema),
                 changes={
                     "upserts": [f["path"] for f in new_files],
                     "deletes": [],
                 },
-                op="upsert" if keep_batch else "delete",
+                op="append" if prev is None and op == "upsert" else op,
             )
             return
-
-        # Affected partitions: the batch's distinct partition values
+        prev_id, prev_doc = prev
+        # Affected partitions: the frames' distinct partition values
         # (bounded metadata collect, O(partitions)).
-        replaced, kept, existing = self._split_by_touch([batch], prev_doc)
+        replaced, kept, existing = self._split_by_touch(frames, prev_doc)
 
         pred = F.lit(True)
         for k in self.keys:
             pred = pred & F.col(f"e.{k}").eqNullSafe(F.col(f"b.{k}"))
-        keys_df = batch.select(*self.keys)
-        survivors = existing.alias("e").join(
-            F.broadcast(keys_df.alias("b")), pred, "left_anti"
-        )
-        # merged is deterministic (pinned precombined batch + immutable
-        # committed files) and consumed by exactly ONE write below, so it
-        # needs no pin of its own — the r15 eager localCheckpoint here paid
-        # a full extra materialization per merge just to answer isEmpty();
+
+        def keyed(df: DataFrame, how: str) -> DataFrame:
+            return existing.alias("e").join(
+                F.broadcast(df.alias("b")), pred, how
+            )
+
+        # no distinct needed: anti and semi joins only test existence
+        all_keys = frames[0].select(*self.keys)
+        for f in frames[1:]:
+            all_keys = all_keys.unionByName(f.select(*self.keys))
+        survivors = keyed(all_keys, "left_anti")
+        # merged is deterministic (pinned frames + immutable committed
+        # files) and consumed by exactly ONE write below, so it needs no
+        # pin of its own — the r15 eager localCheckpoint here paid a full
+        # extra materialization per merge just to answer isEmpty();
         # _write_commit_files(skip_if_empty=True) now answers that from
         # the written footers in the same single pass.
         merged = (
-            survivors.unionByName(batch, allowMissingColumns=True)
-            if keep_batch
+            survivors.unionByName(ups, allowMissingColumns=True)
+            if ups is not None
             else survivors
         )
 
         # Record-level change capture (read_incremental(records=True)):
-        # upsert -> every batch row is a new record version, O(batch);
-        # delete -> the rows ACTUALLY removed (semi join over the replaced
-        # files only — a delete key absent from the table, or present only
-        # in an untouched partition under partition-scoped key semantics,
-        # is NOT a change and must not be reported as one).
+        # upserts -> every upsert row is a new record version, O(batch),
+        # with preimages = the existing rows it overwrites (Delta CDF
+        # parity; keys new to the table have none); deletes -> the rows
+        # ACTUALLY removed (semi join over the replaced files only — a
+        # delete key absent from the table, or present only in an
+        # untouched partition under partition-scoped key semantics, is
+        # NOT a change and must not be reported as one). Both semi joins
+        # read the replaced files the merge already reads.
         next_id = self._next_id(prev_id)
         # The change-capture writes and the commit-file write are
         # mutually independent single-consumer jobs over the pinned
-        # batch + immutable committed files, so they run CONCURRENTLY
+        # frames + immutable committed files, so they run CONCURRENTLY
         # from driver threads (guide §2.6 — Spark's scheduler interleaves
         # them; publish still waits for ALL of them, so the crash
         # invariant "files before manifest" is unchanged).
@@ -2118,7 +2154,8 @@ class ManifestTable:
 
         from pyspark import inheritable_thread_target as _itt
 
-        with ThreadPoolExecutor(3) as pool:
+        changes: dict[str, list[str]] = {"upserts": [], "deletes": []}
+        with ThreadPoolExecutor(4) as pool:
             # Submitted callables are wrapped with
             # pyspark.inheritable_thread_target (ADVICE r16): under
             # pinned-thread mode plain pool threads inherit NO local
@@ -2126,48 +2163,25 @@ class ManifestTable:
             # would not apply and cancelJobGroup could not reach an
             # in-flight commit's write jobs — and the wrapper also
             # hands thread-lifecycle cleanup to py4j instead of GC.
-            if keep_batch:
-                # Update preimages (Delta CDF parity): the old versions
-                # being overwritten = existing rows whose key is in the
-                # batch. The replaced files are already being read for
-                # the merge itself; this is one more semi join over that
-                # same frame. Keys new to the table naturally have no
-                # preimage.
-                overwritten = existing.alias("e").join(
-                    F.broadcast(keys_df.alias("b")), pred, "left_semi"
+            pending = {}
+            if ups is not None:
+                overwritten = keyed(ups.select(*self.keys), "left_semi")
+                pending["upserts"] = pool.submit(
+                    _itt(self._write_change_files), ups, next_id, "u"
                 )
-                f_up = pool.submit(
-                    _itt(self._write_change_files), batch, next_id, "u"
-                )
-                f_pre = pool.submit(
+                pending["preimages"] = pool.submit(
                     _itt(self._write_change_files), overwritten, next_id, "p"
                 )
-                f_files = pool.submit(
-                    _itt(self._write_commit_files), merged, True
-                )
-                changes = {
-                    "upserts": f_up.result(),
-                    "preimages": f_pre.result(),
-                    "deletes": [],
-                }
-            else:
-                removed = existing.alias("e").join(
-                    F.broadcast(keys_df.alias("b")), pred, "left_semi"
-                )
-                f_del = pool.submit(
+            if dels is not None:
+                removed = keyed(dels.select(*self.keys), "left_semi")
+                pending["deletes"] = pool.submit(
                     _itt(self._write_change_files), removed, next_id, "d"
                 )
-                f_files = pool.submit(
-                    _itt(self._write_commit_files), merged, True
-                )
-                changes = {
-                    "upserts": [],
-                    "deletes": f_del.result(),
-                }
+            f_files = pool.submit(_itt(self._write_commit_files), merged, True)
+            changes.update({k: f.result() for k, f in pending.items()})
             new_files = f_files.result()
         self._publish(
-            prev_id, kept + new_files, merged.schema.json(), changes,
-            op="upsert" if keep_batch else "delete",
+            prev_id, kept + new_files, merged.schema.json(), changes, op=op
         )
 
     def _split_by_touch(
@@ -2237,16 +2251,18 @@ class ManifestTable:
         state at all (streaming/drift_maintenance.compact_count_store).
 
         Semantics: delete-then-upsert — a key present in BOTH frames
-        nets to its upsert row (the delete of that key is dropped up
-        front, so change capture and MOR tombstones never carry a
-        same-commit delete+upsert conflict). Delete rows need the key
+        at the same partition values nets to its upsert row (the delete
+        of that key is dropped up front, so change capture and MOR
+        tombstones never carry a same-commit delete+upsert conflict); a
+        delete of the key in ANOTHER partition still applies, so one txn
+        can move a key between partitions. Delete rows need the key
         columns (+ partition columns on a partitioned COW table, same
         as the delete op) and, like delete, absent keys are ignored
         (COW) / phantom tombstones (MOR — harmless to replay). Change
         capture is record-exact in the one commit: upsert rows,
         preimages of overwritten versions, and rows actually removed,
         so CDC/incremental consumers replay the txn atomically too.
-        Runs under the same optimistic rebase loop as write()."""
+        Concurrency: the _rebase contract, like write()."""
         if upserts is None and deletes is None:
             return
         if deletes is None:
@@ -2262,36 +2278,29 @@ class ManifestTable:
         # both frames pinned AFTER the precombine: one row per key, the
         # window evaluated once however many consumers read them
         ups = _pin(precombine_dedup(upserts, self.keys, self.precombine))
+        ident = list(dict.fromkeys(self.keys + self.partition_by))
         pred = F.lit(True)
-        for k in self.keys:
-            pred = pred & F.col(f"d.{k}").eqNullSafe(F.col(f"u.{k}"))
+        for c in ident:
+            pred = pred & F.col(f"d.{c}").eqNullSafe(F.col(f"u.{c}"))
         dels = (
             _pin(precombine_dedup(deletes, self.keys, self.precombine))
             .alias("d")
             .join(
-                F.broadcast(ups.select(*self.keys).alias("u")),
+                F.broadcast(ups.select(*ident).alias("u")),
                 pred,
                 "left_anti",
             )
         )
-        for attempt in range(self.commit_retries + 1):
-            prev = self._latest_manifest()
+
+        def attempt(prev) -> None:
             if prev is not None:
-                self._merged_schema_json(prev[1], ups)
-            try:
-                if self.table_type == "mor":
-                    self._mor_txn(ups, dels, prev)
-                else:
-                    self._cow_txn(ups, dels, prev)
-                return
-            except FileExistsError as exc:
-                conflict = exc
-                self.rebase_count += 1
-        raise ConcurrentCommitError(
-            f"txn on {self.path} lost the commit race "
-            f"{self.commit_retries + 1} time(s) ({conflict}); the table is "
-            "intact — re-issue the write or raise commit_retries"
-        )
+                self._merge_schema_json(prev[1], ups.schema)  # raises on conflict
+            if self.table_type == "mor":
+                self._mor_commit([(ups, "upsert"), (dels, "delete")], prev, "txn")
+            else:
+                self._cow_commit(ups, dels, prev, "txn")
+
+        self._rebase("txn", attempt)
 
     def delete_where(self, predicate: str | Column) -> int:
         """Predicate-based delete (Delta ``DELETE FROM ... WHERE``):
@@ -2303,19 +2312,18 @@ class ManifestTable:
         through read(), and the delete rewrite is already
         partition-bounded. The GDPR-delete shape.
 
-        Concurrency: the predicate is re-evaluated PER rebase attempt
-        against the manifest the attempt commits on top of (snapshot
-        pinned via as_of to the same id the publish races on) — a
-        lost race never re-applies a stale key set against the
-        winner's table, so rows a concurrent commit changed out of
-        the predicate are never deleted (Delta re-runs the predicate
-        under its conflict check for the same reason)."""
+        Concurrency: the _rebase contract, with the predicate
+        re-evaluated per attempt against the manifest the attempt
+        commits on (snapshot pinned via as_of to the same id the
+        publish races on) — rows a concurrent commit changed out of the
+        predicate are never deleted (Delta re-runs the predicate under
+        its conflict check for the same reason)."""
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
         ident = list(dict.fromkeys(
             self.keys + self.partition_by + [self.precombine]
         ))
-        for attempt in range(self.commit_retries + 1):
-            prev = self._latest_manifest()
+
+        def attempt(prev) -> int:
             if prev is None:
                 raise FileNotFoundError(
                     f"no committed manifest under {self.path}"
@@ -2331,17 +2339,10 @@ class ManifestTable:
                 if self.table_type == "mor"
                 else _pin(precombine_dedup(matching, self.keys, self.precombine))
             )
-            try:
-                self._write_attempt(batch, WriteOperation.DELETE, prev)
-                return n
-            except FileExistsError as exc:
-                conflict = exc
-                self.rebase_count += 1
-        raise ConcurrentCommitError(
-            f"delete_where on {self.path} lost the commit race "
-            f"{self.commit_retries + 1} time(s) ({conflict}); the table is "
-            "intact — re-issue the delete or raise commit_retries"
-        )
+            self._write_attempt(batch, WriteOperation.DELETE, prev)
+            return n
+
+        return self._rebase("delete_where", attempt)
 
     def update_where(
         self,
@@ -2356,11 +2357,9 @@ class ManifestTable:
         assigned (that is a delete+insert, not an update — loud).
         Returns the number of rows updated.
 
-        Concurrency: same contract as delete_where — the predicate and
-        assignments re-evaluate per rebase attempt against the
-        manifest the attempt commits on, so a lost race never
-        overwrites rows a concurrent commit moved out of the
-        predicate."""
+        Concurrency: as delete_where — the predicate and assignments
+        re-evaluate per attempt, so a lost race never overwrites rows a
+        concurrent commit moved out of the predicate."""
         forbidden = set(self.keys) | set(self.partition_by)
         bad = forbidden & set(assignments)
         if bad:
@@ -2370,8 +2369,8 @@ class ManifestTable:
                 "delete + upsert (or write_txn)"
             )
         cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        for attempt in range(self.commit_retries + 1):
-            prev = self._latest_manifest()
+
+        def attempt(prev) -> int:
             if prev is None:
                 raise FileNotFoundError(
                     f"no committed manifest under {self.path}"
@@ -2398,122 +2397,10 @@ class ManifestTable:
                 self._check_constraints(rows)
             if self.table_type != "mor":
                 rows = _pin(precombine_dedup(rows, self.keys, self.precombine))
-            try:
-                self._write_attempt(rows, WriteOperation.UPSERT, prev)
-                return n
-            except FileExistsError as exc:
-                conflict = exc
-                self.rebase_count += 1
-        raise ConcurrentCommitError(
-            f"update_where on {self.path} lost the commit race "
-            f"{self.commit_retries + 1} time(s) ({conflict}); the table is "
-            "intact — re-issue the update or raise commit_retries"
-        )
+            self._write_attempt(rows, WriteOperation.UPSERT, prev)
+            return n
 
-    def _mor_txn(self, ups: DataFrame, dels: DataFrame, prev) -> None:
-        """One MOR commit holding both delta files (upserts) and
-        tombstone files (deletes). _resolve_mor already resolves by
-        (commit, op) group, and write_txn guarantees the two groups'
-        key sets are disjoint, so resolution is exactly delete + upsert
-        applied at the same commit id."""
-        prev_id, prev_doc = (prev[0], prev[1]) if prev else (None, None)
-        prev_files = prev_doc["files"] if prev_doc else []
-        next_id = self._next_id(prev_id)
-        delta = self._write_commit_files(ups)
-        for e in delta:
-            e["kind"] = "delta"
-            e["op"] = "upsert"
-            e["commit"] = next_id
-        tomb = self._write_commit_files(dels)
-        for e in tomb:
-            e["kind"] = "tombstone"
-            e["op"] = "delete"
-            e["commit"] = next_id
-        self._publish(
-            prev_id,
-            prev_files + delta + tomb,
-            self._merged_schema_json(prev_doc, ups),
-            changes={
-                "upserts": [e["path"] for e in delta],
-                "deletes": [e["path"] for e in tomb],
-            },
-            op="txn",
-        )
-
-    def _cow_txn(self, ups: DataFrame, dels: DataFrame, prev) -> None:
-        """One COW commit: rewrite the touched partitions dropping both
-        frames' keys, then stack the upsert rows — the _merge plan with
-        a two-frame key set. Key matching is partition-scoped only via
-        which files get rewritten, same as _merge."""
-        if prev is None or not prev[1]["files"]:
-            prev_doc = prev[1] if prev else None
-            prev_id = prev[0] if prev else None
-            new_files = self._write_commit_files(ups)
-            if prev_id is None:
-                mdir = self._manifest_dir()  # first commit bootstraps
-                mdir.mkdir(parents=True, exist_ok=True)
-            self._publish(
-                prev_id if prev_id is not None else None,
-                new_files,
-                self._merged_schema_json(prev_doc, ups),
-                changes={
-                    "upserts": [f["path"] for f in new_files],
-                    "deletes": [],
-                },
-                op="txn",
-            )
-            return
-        prev_id, prev_doc = prev
-        replaced, kept, existing = self._split_by_touch([ups, dels], prev_doc)
-        pred = F.lit(True)
-        for k in self.keys:
-            pred = pred & F.col(f"e.{k}").eqNullSafe(F.col(f"b.{k}"))
-        # one row per key in each frame, and write_txn made their key
-        # sets disjoint: no distinct needed
-        ups_keys = ups.select(*self.keys)
-        all_keys = ups_keys.unionByName(dels.select(*self.keys))
-        survivors = existing.alias("e").join(
-            F.broadcast(all_keys.alias("b")), pred, "left_anti"
-        )
-        # No pin: deterministic (pinned ups + immutable files), single
-        # write below — same reasoning as _merge.
-        merged = survivors.unionByName(ups, allowMissingColumns=True)
-        next_id = self._next_id(prev_id)
-        overwritten = existing.alias("e").join(
-            F.broadcast(ups_keys.alias("b")), pred, "left_semi"
-        )
-        removed = existing.alias("e").join(
-            F.broadcast(dels.select(*self.keys).alias("b")),
-            pred,
-            "left_semi",
-        )
-        # Independent single-consumer writes — overlap them (see _merge;
-        # inheritable_thread_target for job-group propagation, ditto).
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target as _itt
-
-        with ThreadPoolExecutor(4) as pool:
-            f_up = pool.submit(
-                _itt(self._write_change_files), ups, next_id, "u"
-            )
-            f_pre = pool.submit(
-                _itt(self._write_change_files), overwritten, next_id, "p"
-            )
-            f_del = pool.submit(
-                _itt(self._write_change_files), removed, next_id, "d"
-            )
-            f_files = pool.submit(_itt(self._write_commit_files), merged, True)
-            changes = {
-                "upserts": f_up.result(),
-                "preimages": f_pre.result(),
-                "deletes": f_del.result(),
-            }
-            new_files = f_files.result()
-        self._publish(
-            prev_id, kept + new_files, merged.schema.json(), changes,
-            op="txn",
-        )
+        return self._rebase("update_where", attempt)
 
     def restore(self, version: int) -> int:
         """Roll the table BACK to ``version`` as a NEW commit (the Delta
@@ -2530,31 +2417,21 @@ class ManifestTable:
         are exceptional events, ordinary commits stay O(batch). Returns
         the new commit id (the current id if already at ``version``).
 
-        Concurrency: runs under the same optimistic rebase loop as
-        write()/compact() — a concurrent commit during the restore
-        re-runs the snapshot diff against the winner's manifest and
-        surfaces as ConcurrentCommitError only when retries exhaust,
-        never as a raw FileExistsError."""
-        for attempt in range(self.commit_retries + 1):
-            try:
-                return self._restore_once(version)
-            except FileExistsError as exc:
-                conflict = exc
-                self.rebase_count += 1
-        raise ConcurrentCommitError(
-            f"restore on {self.path} lost the commit race "
-            f"{self.commit_retries + 1} time(s) ({conflict}); the table "
-            "is intact — re-run restore() or raise commit_retries"
+        Concurrency: the _rebase contract — a concurrent commit during
+        the restore re-runs the snapshot diff against the winner's
+        manifest."""
+        return self._rebase(
+            "restore", lambda prev: self._restore_once(version, prev)
         )
 
-    def _restore_once(self, version: int) -> int:
+    def _restore_once(self, version: int, prev) -> int:
         ids = self._manifest_ids()
         if version not in ids:
             raise FileNotFoundError(
                 f"no manifest {version} under {self.path} "
                 f"(available: {ids}); vacuum may have pruned it"
             )
-        prev_id = ids[-1]
+        prev_id = prev[0]
         if version == prev_id:
             return prev_id
         target = self._load_manifest(version)
@@ -2698,36 +2575,30 @@ class ManifestTable:
         schedule at scale; None = whole table). Returns the number of
         files replaced.
 
-        Concurrency: compaction is content-neutral, so losing the commit
-        race to a writer just means the selected file set is stale —
-        the rebase loop re-selects against the winner's manifest and
-        rewrites again (standard background-compactor behavior; the
-        writer never waits on the compactor)."""
-        for attempt in range(self.commit_retries + 1):
-            try:
-                return self._compact_once(
-                    partition_filter, target_files_per_partition
-                )
-            except FileExistsError as exc:
-                conflict = exc
-                self.rebase_count += 1
-        raise ConcurrentCommitError(
-            f"compact on {self.path} lost the commit race "
-            f"{self.commit_retries + 1} time(s) ({conflict}); the table "
-            "is intact — re-run compact() or raise commit_retries"
+        Concurrency: the _rebase contract. Compaction is
+        content-neutral, so losing the commit race to a writer just
+        means the selected file set is stale — the next attempt
+        re-selects against the winner's manifest and rewrites again
+        (standard background-compactor behavior; the writer never waits
+        on the compactor)."""
+        return self._rebase(
+            "compact",
+            lambda prev: self._compact_once(
+                prev, partition_filter, target_files_per_partition
+            ),
         )
 
     def _compact_once(
         self,
+        prev,
         partition_filter: dict[str, object] | None,
         target_files_per_partition: int,
     ) -> int:
-        latest = self._latest_manifest()
-        if latest is None:
+        if prev is None:
             return 0
         if partition_filter:
             self._check_partition_filter(partition_filter)
-        prev_id, doc = latest
+        prev_id, doc = prev
 
         def selected(f: dict) -> bool:
             return not partition_filter or all(
@@ -2754,7 +2625,7 @@ class ManifestTable:
         if not replaced:
             return 0
         kept = [f for f in doc["files"] if not selected(f)]
-        current = self.read(partition_filter=partition_filter)
+        current = self.read(partition_filter=partition_filter, as_of=prev_id)
         if not self.cluster_by:
             # clustered tables re-range inside _write_commit_files — a
             # pre-repartition here would just add a dead shuffle
@@ -2762,7 +2633,7 @@ class ManifestTable:
                 target_files_per_partition, *(self.partition_by or self.keys)
             )
         # No pin: compaction input is immutable committed files and the
-        # frame is consumed by exactly one write (see _merge).
+        # frame is consumed by exactly one write (see _cow_commit).
         new_files = self._write_commit_files(current)
         self._publish(prev_id, kept + new_files, doc["schema"], op="compact")
         return len(replaced)

@@ -126,8 +126,13 @@ _DRIVER_WINDOW = [
     # (dedup_minhash_lsh, dedup_cluster_canonical, dedup_incremental_*)
     # and dedup_simhash, whose shingle chain the MinHash rewrite
     # changed, joined group (2), and the five remaining group-(4) fill
-    # entries left. The full catalog is still verified every round by
-    # scripts/driver_sim.py.
+    # entries left. Rotated again when ManifestTable's commit paths went
+    # through one rebase loop and one keyed-commit body per table type:
+    # the six entries that publish manifests from outside the window (a
+    # _publish census over the whole catalog at sf0.001) joined group
+    # (2) with text_lang_id_ngram, rewritten in r17 and without a driver
+    # row since, and the last seven group-(3) entries left. The full
+    # catalog is still verified every round by scripts/driver_sim.py.
     # -- (1) added in round 16 --
     "manifest_sql_insert",
     "manifest_sql_merge",
@@ -149,6 +154,15 @@ _DRIVER_WINDOW = [
     "dedup_incremental_batch",
     "dedup_incremental_indexed",
     "dedup_simhash",
+    # -- (2) changed by the one commit loop (publish a manifest) --
+    "manifest_cdc_aggregate",
+    "manifest_clone_divergence",
+    "manifest_incremental_pull",
+    "manifest_mor_resolve",
+    "manifest_point_lookup",
+    "streaming_drift_buckets",
+    # -- (2) rewritten in r17, no driver row yet --
+    "text_lang_id_ngram",
     # -- (3) freshest driver verdict r12 --
     "drift_top_divergent_tokens",
     "embedding_decontaminate",
@@ -176,13 +190,6 @@ _DRIVER_WINDOW = [
     "training_chunk_documents",
     "training_chunk_pack_pipeline",
     "training_mixture_sample",
-    "training_pack_sequences",
-    "udtf_top_tokens",
-    "unpivot_balances",
-    "vocabulary_oov",
-    "window_first_last",
-    "window_ntile_quartiles",
-    "window_percent_cume",
 ]
 
 

@@ -283,6 +283,21 @@ def test_apply_cdc_replicates_source_table(spark, table, tmp_path):
     assert {(r.transaction_id, r.price) for r in replica.read().collect()} == {
         ("T1", 5.0), ("T3", 7.0)
     }
+    # A source write_txn (T3 moves to ETHGBP, T1 goes) replays as ONE
+    # replica commit: no reader of the replica sees half of it.
+    v_synced = table.commits()[-1]
+    before = len(replica.commits())
+    table.write_txn(
+        make_df(spark, [("T3", TS1, "ETHGBP", 8.0)]),
+        make_df(spark, [("T3", TS1, "BTCGBP", 0.0), ("T1", TS1, "BTCGBP", 0.0)]),
+    )
+    replica.apply_cdc(table.read_cdc(v_synced))
+    assert len(replica.commits()) == before + 1
+    assert {
+        (r.transaction_id, r.pair, r.price) for r in replica.read().collect()
+    } == {
+        (r.transaction_id, r.pair, r.price) for r in table.read().collect()
+    } == {("T3", "ETHGBP", 8.0)}
 
 
 def test_apply_cdc_collapses_insert_duplicates_as_documented(spark, table, tmp_path):
@@ -801,25 +816,54 @@ def test_incremental_aggregate_maintenance_via_deltas(spark, table):
     assert maintained == agg_state(table.read())
 
 
-def test_history_describes_the_timeline(spark, table):
-    table.write(make_df(spark, [("T1", TS1, "BTCGBP", 1.0),
-                                ("T2", TS1, "ETHGBP", 4.0)]), "insert")
-    table.write(make_df(spark, [("T1", TS1, "BTCGBP", 2.0)]), "upsert")
-    table.write(make_df(spark, [("T1", TS1, "BTCGBP", 0.0)]), "delete")
-    table.compact()
-    base = table.commits()[0]
-    table.restore(base)
-    h = table.history().orderBy("commit_id").collect()
-    assert [r.op for r in h] == [
-        "append", "upsert", "delete", "compact", "restore",
-    ]
-    assert [r.commit_id for r in h] == table.commits()
-    # the overwrite commit captured preimage files; compact captured none
-    assert h[1].n_preimage_files > 0
-    assert h[3].n_upsert_files == h[3].n_delete_files == 0
-    # metadata-only: history of a vacuumed table shrinks with retention
-    table.vacuum(keep_last=2)
-    assert table.history().count() == 2
+def test_history_describes_the_timeline(spark, tmp_path):
+    """The timeline every write path leaves, pinned per table type: the
+    op label of each commit and which change-capture lists it fills."""
+    for table_type in ("cow", "mor"):
+        table = ManifestTable(
+            spark, str(tmp_path / table_type), partition_by=("pair",),
+            table_type=table_type,
+        )
+        table.write(make_df(spark, [("T1", TS1, "BTCGBP", 1.0),
+                                    ("T2", TS1, "ETHGBP", 4.0),
+                                    ("T5", TS1, "BTCGBP", 5.0)]), "insert")
+        table.write(make_df(spark, [("T3", TS1, "BTCGBP", 3.0)]), "bulk_insert")
+        table.write(make_df(spark, [("T1", TS1, "BTCGBP", 2.0)]), "upsert")
+        table.write(make_df(spark, [("T1", TS1, "BTCGBP", 0.0)]), "delete")
+        table.write_txn(make_df(spark, [("T2", TS1, "ETHGBP", 5.0)]),
+                        make_df(spark, [("T3", TS1, "BTCGBP", 0.0)]))
+        table.update_where("pair = 'ETHGBP'", {"price": "price + 1"})
+        table.delete_where("transaction_id = 'T2'")
+        table.compact()
+        base = table.commits()[0]
+        table.restore(base)
+        h = table.history().orderBy("commit_id").collect()
+        cow = table_type == "cow"
+        assert [r.op for r in h] == [
+            "append" if cow else "insert", "append", "upsert", "delete", "txn",
+            "upsert", "delete", "compact", "restore",
+        ]
+        assert [r.commit_id for r in h] == table.commits()
+        # (upserts, preimages, deletes) lists filled per commit: compact
+        # fills none, a keyed COW upsert always writes a preimage list
+        # (possibly of empty files), MOR only on restore
+        assert [
+            (r.n_upsert_files > 0, r.n_preimage_files > 0, r.n_delete_files > 0)
+            for r in h
+        ] == [
+            (True, False, False),
+            (True, False, False),
+            (True, cow, False),
+            (False, False, True),
+            (True, cow, True),
+            (True, cow, False),
+            (False, False, True),
+            (False, False, False),
+            (True, True, True),
+        ]
+        # metadata-only: history of a vacuumed table shrinks with retention
+        table.vacuum(keep_last=2)
+        assert table.history().count() == 2
 
 
 def test_range_filter_skips_files_on_manifest_stats(spark, tmp_path):

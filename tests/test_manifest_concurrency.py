@@ -11,6 +11,7 @@ max_concurrent_runs=1, terraform/glue.tf:88)."""
 from __future__ import annotations
 
 import datetime
+import shutil
 import threading
 
 import pytest
@@ -353,3 +354,110 @@ def test_vacuum_spares_young_empty_commit_dirs(spark, tmp_path):
     t.vacuum(keep_last=1, orphan_grace_seconds=0)  # quiesced: reclaimed
     assert not (path / "data" / "commit-racing").exists()
     assert {r.transaction_id for r in t.read().collect()} == {"T1"}
+
+
+def _sink_batch(path, rows, ddl="transaction_id string, pair string, price double",
+                **options):
+    """The streaming/batch sink's driver-side commit, in-process: the
+    executor half writes the files, then commit() publishes them."""
+    from pyspark.sql.types import StructType
+
+    from dca_manager_spark.io.datasource import ManifestBatchWriter
+
+    options = {"path": str(path), "partition_by": "pair", "retries": "0", **options}
+    writer = ManifestBatchWriter(options, StructType.fromDDL(ddl), False)
+    writer.commit([writer.write(iter(rows))])
+
+
+# Every commit entry point, as (name, loser call) against the seed table.
+EXHAUSTION_CASES = {
+    "write": lambda t, spark: t.write(
+        make_df(spark, [("T9", TS1, "BTCGBP", 9.0)]), "upsert"),
+    "write_txn": lambda t, spark: t.write_txn(
+        make_df(spark, [("T9", TS1, "BTCGBP", 9.0)]),
+        make_df(spark, [("T1", TS1, "BTCGBP", 0.0)])),
+    "delete_where": lambda t, spark: t.delete_where("price < 10"),
+    "update_where": lambda t, spark: t.update_where(
+        "price < 10", {"price": "price * 0"}),
+    "restore": lambda t, spark: t.restore(0),
+    "compact": lambda t, spark: t.compact(),
+    "sink": lambda t, spark: _sink_batch(t.path, [("S1", "BTCGBP", 7.0)]),
+}
+
+
+@pytest.fixture(scope="module")
+def seed_table(spark, tmp_path_factory):
+    """A two-commit table (T1 in v0, T3 added in v1); each case copies
+    it (manifest paths are relative to the table root)."""
+    path = tmp_path_factory.mktemp("seed") / "t"
+    t = make_table(spark, path)
+    t.write(make_df(spark, [("T1", TS1, "BTCGBP", 1.0)]), "insert")
+    t.write(make_df(spark, [("T3", TS1, "BTCGBP", 5.0)]), "insert")
+    return path
+
+
+@pytest.mark.parametrize("entry", list(EXHAUSTION_CASES))
+def test_every_commit_path_aborts_loudly_when_retries_run_out(
+    spark, tmp_path, monkeypatch, seed_table, entry
+):
+    """Each entry point shares one rebase contract: a rival that commits
+    inside EVERY attempt exhausts the budget (commit_retries=0 on the
+    handle, retries=0 on the sink) and the loser raises
+    ConcurrentCommitError — never a raw FileExistsError, never a publish
+    over the winner — with every loss counted in rebase_count."""
+    path = tmp_path / "t"
+    shutil.copytree(seed_table, path)
+    loser = make_table(spark, path, commit_retries=0)
+    rival = make_table(spark, path)
+    orig = ManifestTable._publish
+
+    def always_raced(self, prev_id, files, schema_json, changes=None, **kw):
+        # patched on the CLASS: the sink commits through a throwaway
+        # handle of its own; the rival's publishes pass straight through
+        if self is not rival:
+            rival.write(make_df(spark, [("T2", TS1, "BTCGBP", 2.0)]), "insert")
+        return orig(self, prev_id, files, schema_json, changes, **kw)
+
+    monkeypatch.setattr(ManifestTable, "_publish", always_raced)
+    with pytest.raises(ConcurrentCommitError, match="lost the commit race"):
+        EXHAUSTION_CASES[entry](loser, spark)
+    monkeypatch.undo()
+
+    # the loser published nothing: content is the winner's
+    rows = {r.transaction_id: r.price for r in loser.read().collect()}
+    assert rows == {"T1": 1.0, "T2": 2.0, "T3": 5.0}
+    if entry != "sink":  # the sink's throwaway handle is not observable
+        assert loser.rebase_count == loser.commit_retries + 1
+
+
+def test_sink_rebase_keeps_delete_markers(spark, tmp_path, monkeypatch):
+    """A keyed sink batch that loses a race re-tags its files from the
+    executor's originals on the rebased attempt, so a delete-marked row
+    stays a tombstone instead of landing as an upsert of the deleted
+    key."""
+    path = tmp_path / "t"
+    spec = dict(keys=("transaction_id",), precombine="price", table_type="mor")
+    table = make_table(spark, path, **spec)
+    rival = make_table(spark, path, **spec)
+    ddl = "transaction_id string, pair string, price double"
+    table.write(spark.createDataFrame(
+        [("K1", "BTCGBP", 1.0), ("K2", "BTCGBP", 2.0)], ddl), "upsert")
+    orig = ManifestTable._publish
+    fired = []
+
+    def raced_once(self, *args, **kw):
+        if self is not rival and not fired:
+            fired.append(True)
+            rival.write(spark.createDataFrame([("K3", "BTCGBP", 3.0)], ddl), "upsert")
+        return orig(self, *args, **kw)
+
+    monkeypatch.setattr(ManifestTable, "_publish", raced_once)
+    _sink_batch(
+        path, [("K1", "BTCGBP", 9.0, True)], ddl + ", gone boolean",
+        keys="transaction_id", precombine="price", delete_column="gone",
+        retries="1",
+    )
+    monkeypatch.undo()
+    assert fired
+    rows = {r.transaction_id: r.price for r in table.read().collect()}
+    assert rows == {"K2": 2.0, "K3": 3.0}

@@ -61,14 +61,20 @@ def test_txn_is_one_commit_delete_then_upsert(spark, table):
 def test_txn_overlapping_key_upsert_wins(spark, table):
     seed(spark, table)
     # T2 is deleted AND upserted in the same txn: nets to the upsert row.
+    # T3's delete in ETHGBP still applies next to its upsert in BTCGBP:
+    # the txn moves T3 between partitions.
     table.write_txn(
-        upserts=make_df(spark, [("T2", TS1, "BTCGBP", 20.0)]),
+        upserts=make_df(
+            spark, [("T2", TS1, "BTCGBP", 20.0), ("T3", TS1, "BTCGBP", 30.0)]
+        ),
         deletes=make_df(
             spark, [("T2", TS1, "BTCGBP", 0.0), ("T3", TS1, "ETHGBP", 0.0)]
         ),
     )
-    rows = {r.transaction_id: r.price for r in table.read().collect()}
-    assert rows == {"T1": 1.0, "T2": 20.0}
+    rows = {(r.transaction_id, r.pair, r.price) for r in table.read().collect()}
+    assert rows == {
+        ("T1", "BTCGBP", 1.0), ("T2", "BTCGBP", 20.0), ("T3", "BTCGBP", 30.0)
+    }
 
 
 def test_txn_change_capture_record_exact(spark, table):

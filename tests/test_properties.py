@@ -430,7 +430,7 @@ def test_records_incremental_matches_replay_model(spark, tmp_path_factory, seq):
         table.write(df, op)
         if op == "delete" and not changes:
             # Delete against a never-committed table is a no-op: no
-            # manifest is published (mirrors _merge's early return).
+            # manifest is published (mirrors _cow_commit's early return).
             continue
         ch: dict[tuple, list] = {}
         if op == "bulk_insert":
@@ -445,8 +445,9 @@ def test_records_incremental_matches_replay_model(spark, tmp_path_factory, seq):
             if r[0] not in winners or r[2] > winners[r[0]][2]:
                 winners[r[0]] = r
         touched = {r[1] for r in winners.values()}
-        # Partition-scoped key resolution, matching _merge: every live row
-        # whose key is in the batch AND whose partition is replaced goes.
+        # Partition-scoped key resolution, matching _cow_commit: every
+        # live row whose key is in the batch AND whose partition is
+        # replaced goes.
         hit = [s for s in state if s[0] in winners and s[1] in touched]
         state = [s for s in state if not (s[0] in winners and s[1] in touched)]
         if op == "upsert":
