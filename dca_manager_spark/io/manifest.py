@@ -1692,9 +1692,11 @@ class ManifestTable:
         replication over the change feed (the Hudi/Delta CDC-sync
         pattern). Upserts apply as upserts, deletes by the deleted rows'
         keys, both sides of a source commit in ONE write_txn commit (a
-        reader never sees a state between them); ``update_preimage``
-        rows are metadata for delta consumers and are ignored here (the
-        postimage upsert replays the change). The replica converges to
+        reader never sees a state between them; an upsert and a delete
+        of one (key, partition) in that commit resolve as the source's
+        read does); ``update_preimage`` rows are metadata for delta
+        consumers and are ignored here (the postimage upsert replays
+        the change). The replica converges to
         the source's latest state per key; legal same-key duplicates
         from source INSERT commits collapse under the replica's
         precombine (replicate with bulk_insert loads instead if
@@ -1712,14 +1714,30 @@ class ManifestTable:
             dels = batch.filter(F.col("_change_type") == "delete").drop(
                 "_change_type", "_commit"
             )
-            # ONE replica commit per source commit: a source commit's
-            # upsert and delete sides never share a (key, partition)
-            # (write_txn drops such deletes; restore derives the sides
-            # disjointly), so the txn applies exactly what the source did.
-            self.write_txn(
-                ups if not ups.isEmpty() else None,
-                dels if not dels.isEmpty() else None,
-            )
+            ups = ups if not ups.isEmpty() else None
+            dels = dels if not dels.isEmpty() else None
+            if ups is not None and dels is not None:
+                # A keyed sink commit may hold an upsert and a delete of
+                # one (key, partition); resolve them as the source's
+                # _resolve_mor does — largest precombine wins, a delete
+                # wins ties. Handle commits never share a (key,
+                # partition) between the sides, so for them this only
+                # collapses what write_txn's precombine collapses anyway.
+                ident = list(dict.fromkeys(self.keys + self.partition_by))
+                w = Window.partitionBy(*ident).orderBy(
+                    F.col(self.precombine).desc(), F.col("_del").desc()
+                )
+                won = (
+                    ups.withColumn("_del", F.lit(False))
+                    .unionByName(dels.withColumn("_del", F.lit(True)))
+                    .withColumn("_rn", F.row_number().over(w))
+                    .filter(F.col("_rn") == 1)
+                    .drop("_rn")
+                )
+                ups = won.filter(~F.col("_del")).drop("_del")
+                dels = won.filter(F.col("_del")).drop("_del")
+            # ONE replica commit per source commit
+            self.write_txn(ups, dels)
 
     # -- write side ---------------------------------------------------------
     def persisted_constraints(self) -> dict:
@@ -2108,14 +2126,14 @@ class ManifestTable:
         # (bounded metadata collect, O(partitions)).
         replaced, kept, existing = self._split_by_touch(frames, prev_doc)
 
-        pred = F.lit(True)
-        for k in self.keys:
-            pred = pred & F.col(f"e.{k}").eqNullSafe(F.col(f"b.{k}"))
-
-        def keyed(df: DataFrame, how: str) -> DataFrame:
-            return existing.alias("e").join(
-                F.broadcast(df.alias("b")), pred, how
-            )
+        def keyed(
+            df: DataFrame, how: str, base: DataFrame = existing,
+            cols: list[str] = self.keys, cond=F.lit(True),
+        ) -> DataFrame:
+            pred = cond
+            for c in cols:
+                pred = pred & F.col(f"e.{c}").eqNullSafe(F.col(f"b.{c}"))
+            return base.alias("e").join(F.broadcast(df.alias("b")), pred, how)
 
         # no distinct needed: anti and semi joins only test existence
         all_keys = frames[0].select(*self.keys)
@@ -2143,6 +2161,30 @@ class ManifestTable:
         # untouched partition under partition-scoped key semantics, is
         # NOT a change and must not be reported as one). Both semi joins
         # read the replaced files the merge already reads.
+        if ups is not None:
+            overwritten = keyed(ups.select(*self.keys), "left_semi")
+        if dels is not None:
+            removed = keyed(dels.select(*self.keys), "left_semi")
+        if ups is not None and dels is not None and self.partition_by:
+            # A txn may move a key: upsert K@P2, delete K@P1. Each
+            # removed row lands in exactly ONE change list: a row whose
+            # (key, partition) a delete names is a delete, any other row
+            # an upsert key matches is a preimage. dels holds one row
+            # per key, so the flagging left join adds no rows.
+            ident = list(dict.fromkeys(self.keys + self.partition_by))
+            flagged = keyed(
+                dels.select(*ident).withColumn("_named", F.lit(True)),
+                "left", cols=ident,
+            ).select("e.*", "b._named")
+            named = F.col("e._named").isNotNull()
+            overwritten = keyed(
+                ups.select(*self.keys), "left_semi", flagged, cond=~named
+            ).drop("_named")
+            removed = keyed(
+                ups.select(*self.keys), "left_anti",
+                keyed(dels.select(*self.keys), "left_semi", flagged),
+                cond=~named,
+            ).drop("_named")
         next_id = self._next_id(prev_id)
         # The change-capture writes and the commit-file write are
         # mutually independent single-consumer jobs over the pinned
@@ -2165,7 +2207,6 @@ class ManifestTable:
             # hands thread-lifecycle cleanup to py4j instead of GC.
             pending = {}
             if ups is not None:
-                overwritten = keyed(ups.select(*self.keys), "left_semi")
                 pending["upserts"] = pool.submit(
                     _itt(self._write_change_files), ups, next_id, "u"
                 )
@@ -2173,7 +2214,6 @@ class ManifestTable:
                     _itt(self._write_change_files), overwritten, next_id, "p"
                 )
             if dels is not None:
-                removed = keyed(dels.select(*self.keys), "left_semi")
                 pending["deletes"] = pool.submit(
                     _itt(self._write_change_files), removed, next_id, "d"
                 )

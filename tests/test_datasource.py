@@ -881,11 +881,22 @@ def test_manifest_sink_delete_markers(registered, tmp_path):
     assert got == {"T1": 7.0, "T3": 9.0}
     doc = t._load_manifest(t.commits()[-1])
     assert doc["changes"]["deletes"], "tombstone files must be change-captured"
+    # a replica fed from the change feed resolves the mixed-op key the
+    # same way, one replica commit per sink batch
+    replica = ManifestTable(spark, str(tmp_path / "replica"),
+                            keys=("transaction_id",), precombine="price",
+                            partition_by=("pair",))
+    replica.apply_cdc(t.read_cdc(-1))
+    assert len(replica.commits()) == len(t.commits())
+    assert {r.transaction_id: r.price for r in replica.read().collect()} == got
+    synced = t.commits()[-1]
 
     # batch 2: delete wins a precombine TIE (CDC-conservative)
     drain([("T3", TS, "BTCGBP", 9.0, True),
            ("T3", TS, "BTCGBP", 9.0, False)])
     assert {r.transaction_id for r in t.read().collect()} == {"T1"}
+    replica.apply_cdc(t.read_cdc(synced))
+    assert {r.transaction_id for r in replica.read().collect()} == {"T1"}
 
     # the registered view resolves identically
     t.register("cdc_sink_view")

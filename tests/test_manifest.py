@@ -818,7 +818,9 @@ def test_incremental_aggregate_maintenance_via_deltas(spark, table):
 
 def test_history_describes_the_timeline(spark, tmp_path):
     """The timeline every write path leaves, pinned per table type: the
-    op label of each commit and which change-capture lists it fills."""
+    op label of each commit and which change-capture lists it fills.
+    Every list expected to be filled holds real change rows, and a side a
+    commit does not have lists no file at all."""
     for table_type in ("cow", "mor"):
         table = ManifestTable(
             spark, str(tmp_path / table_type), partition_by=("pair",),
@@ -826,15 +828,17 @@ def test_history_describes_the_timeline(spark, tmp_path):
         )
         table.write(make_df(spark, [("T1", TS1, "BTCGBP", 1.0),
                                     ("T2", TS1, "ETHGBP", 4.0),
+                                    ("T4", TS1, "BTCGBP", 6.0),
                                     ("T5", TS1, "BTCGBP", 5.0)]), "insert")
         table.write(make_df(spark, [("T3", TS1, "BTCGBP", 3.0)]), "bulk_insert")
         table.write(make_df(spark, [("T1", TS1, "BTCGBP", 2.0)]), "upsert")
         table.write(make_df(spark, [("T1", TS1, "BTCGBP", 0.0)]), "delete")
         table.write_txn(make_df(spark, [("T2", TS1, "ETHGBP", 5.0)]),
-                        make_df(spark, [("T3", TS1, "BTCGBP", 0.0)]))
+                        make_df(spark, [("T5", TS1, "BTCGBP", 0.0)]))
         table.update_where("pair = 'ETHGBP'", {"price": "price + 1"})
-        table.delete_where("transaction_id = 'T2'")
+        table.delete_where("transaction_id = 'T4'")
         table.compact()
+        # back to {T1, T2, T4, T5} from {T2 (rewritten), T3 (removed)}
         base = table.commits()[0]
         table.restore(base)
         h = table.history().orderBy("commit_id").collect()
@@ -845,12 +849,9 @@ def test_history_describes_the_timeline(spark, tmp_path):
         ]
         assert [r.commit_id for r in h] == table.commits()
         # (upserts, preimages, deletes) lists filled per commit: compact
-        # fills none, a keyed COW upsert always writes a preimage list
-        # (possibly of empty files), MOR only on restore
-        assert [
-            (r.n_upsert_files > 0, r.n_preimage_files > 0, r.n_delete_files > 0)
-            for r in h
-        ] == [
+        # fills none, a COW upsert that overwrites rows lists their
+        # preimages, MOR lists preimages only on restore
+        expected = [
             (True, False, False),
             (True, False, False),
             (True, cow, False),
@@ -861,6 +862,15 @@ def test_history_describes_the_timeline(spark, tmp_path):
             (False, False, False),
             (True, True, True),
         ]
+        assert [
+            (r.n_upsert_files > 0, r.n_preimage_files > 0, r.n_delete_files > 0)
+            for r in h
+        ] == expected
+        # a commit with no preimage side carries no preimages key at all
+        assert [
+            "preimages" in table._load_manifest(c)["changes"]
+            for c in table.commits()
+        ] == [p for _, p, _ in expected]
         # metadata-only: history of a vacuumed table shrinks with retention
         table.vacuum(keep_last=2)
         assert table.history().count() == 2

@@ -98,6 +98,19 @@ def test_txn_change_capture_record_exact(spark, table):
     assert by_type["upsert"] == {"T2", "T9"}
     assert "T1" in by_type["delete"]
     assert cdc.select("_commit").distinct().count() == 1
+    # A txn that MOVES T3 from ETHGBP to BTCGBP records the old row once,
+    # as a delete — never also as the upsert's preimage.
+    since = table.commits()[-1]
+    table.write_txn(
+        upserts=make_df(spark, [("T3", TS1, "BTCGBP", 30.0)]),
+        deletes=make_df(spark, [("T3", TS1, "ETHGBP", 0.0)]),
+    )
+    got = sorted(
+        (r._change_type, r.pair, r.price)
+        for r in table.read_cdc(since).filter("transaction_id = 'T3'").collect()
+    )
+    deleted = 0.0 if table.table_type == "mor" else 3.0  # tombstone vs row
+    assert got == [("delete", "ETHGBP", deleted), ("upsert", "BTCGBP", 30.0)]
 
 
 def test_txn_degenerate_halves_delegate(spark, table):
