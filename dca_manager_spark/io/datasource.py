@@ -484,8 +484,9 @@ class _ManifestWriterBase:
         # (a plain Python worker, no SparkSession) just marks the
         # executor-written files kind=delta/op=upsert; latest-per-key
         # resolution — including WITHIN-batch duplicates, which commit()
-        # cannot precombine — happens at read via _resolve_mor's
-        # (commit, precombine) ordering, the Hudi deferred-merge shape.
+        # cannot precombine — happens at read via the MOR rule's
+        # (commit, precombine) ordering (ManifestTable._rule), the Hudi
+        # deferred-merge shape.
         names = {f.name for f in schema.fields}
         self.keys = [c for c in options.get("keys", "").split(",") if c]
         self.precombine = options.get("precombine")
@@ -662,10 +663,11 @@ class _ManifestWriterBase:
             # writes: additive rows that stack at their own commit.
             # Keyed mode: the batch is an UPSERT delta — latest commit
             # wins per key, within-commit duplicates resolve by
-            # precombine at read (_resolve_mor). The reading handle must
-            # be configured with the SAME keys/precombine (the usual
-            # multi-writer contract; the manifest stores files, not key
-            # config — exactly like Hudi writers agreeing on recordkey).
+            # precombine at read (ManifestTable._rule). The reading
+            # handle must be configured with the SAME keys/precombine
+            # (the usual multi-writer contract; the manifest stores
+            # files, not key config — exactly like Hudi writers agreeing
+            # on recordkey).
             if self.keys or any(f.get("kind") for f in prev_files):
                 next_id = 0 if prev_id is None else prev_id + 1
                 for e in tagged:

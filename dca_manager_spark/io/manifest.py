@@ -130,14 +130,28 @@ _CHANGES_DIR = "_changes"
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
-# The commit directory a data file was written into (its LAST
-# `/commit-<hex>/` segment), as a Python and a Java regex alike.
-_COMMIT_DIR_RE = ".*/(commit-[0-9a-f]+)/"
+def _eq_null_safe(cols: list[str], left: str, right: str) -> Column:
+    """Join predicate matching ``cols`` null-safely between two aliases."""
+    pred = F.lit(True)
+    for c in cols:
+        pred = pred & F.col(f"{left}.{c}").eqNullSafe(F.col(f"{right}.{c}"))
+    return pred
 
 
-def _commit_dir(path: str) -> str:
-    m = re.match(_COMMIT_DIR_RE, "/" + path)
-    return m.group(1) if m else ""
+def _drop_if_empty(out_dir: Path) -> bool:
+    """True, with ``out_dir`` removed, when the parquet files one write
+    left there hold no row. Counted from the footers on the driver, so
+    an empty result costs no Spark job."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    if any(
+        pq.ParquetFile(p).metadata.num_rows for p in out_dir.rglob("*.parquet")
+    ):
+        return False
+    shutil.rmtree(out_dir, ignore_errors=True)
+    return True
 
 
 def _hive_unescape(value: str) -> str:
@@ -729,17 +743,8 @@ class ManifestTable:
                 *[f"__part_{c}" for c in self.partition_by]
             )
         writer.save(str(out_dir))
-        if skip_if_empty:
-            import pyarrow.parquet as _pq
-
-            if not any(
-                _pq.ParquetFile(p).metadata.num_rows
-                for p in out_dir.rglob("*.parquet")
-            ):
-                import shutil
-
-                shutil.rmtree(out_dir, ignore_errors=True)
-                return []
+        if skip_if_empty and _drop_if_empty(out_dir):
+            return []
 
         stat_cols = [c for c in self.cluster_by if self._stats_eligible(c, df)]
         entries: list[dict] = []
@@ -934,7 +939,8 @@ class ManifestTable:
         parquet (written BEFORE the manifest publish — a crash
         pre-publish leaves only orphans, same invariant as data files).
         O(batch), not O(touched partitions): this is the cheap half of
-        the commit.
+        the commit. An empty change set lists no file, so no reader ever
+        opens one.
 
         The uuid leaf is load-bearing for multi-writer safety: commit_id
         is SPECULATIVE until _publish wins, so two racing writers compute
@@ -952,17 +958,19 @@ class ManifestTable:
         # AQE-sized change files (guide §6): a small change set lands as
         # one file, not one per input partition (no-op when AQE is off).
         df.hint("rebalance").write.parquet(str(out_dir))
+        if _drop_if_empty(out_dir):
+            return []  # no change rows: list no file
         return [
             p.relative_to(Path(self.path)).as_posix()
             for p in sorted(out_dir.rglob("*.parquet"))
         ]
 
     # -- read side ----------------------------------------------------------
-    def _data_path(self, entry: dict) -> str:
-        """Absolute path of a manifest entry's file: relative entries sit
+    def _data_path(self, path: str) -> str:
+        """Absolute path of a file a manifest names: relative paths sit
         under the table root; absolute ones (borrowed by a shallow clone)
         stand as they are."""
-        return str(Path(self.path).absolute() / entry["path"])
+        return str(Path(self.path).absolute() / path)
 
     def exists(self) -> bool:
         return self._latest_manifest() is not None
@@ -1060,7 +1068,7 @@ class ManifestTable:
             # MOR: delta/tombstone files may only be pruned on KEY
             # columns (mirrors range_filter's base-file-only guard).
             # Pruning a delta on a non-key column can remove a key's
-            # NEWEST version from _resolve_mor, resurrecting the
+            # NEWEST version from the resolution, resurrecting the
             # superseded base row — which then passes the residual
             # filter (upsert k→pair A then k→pair B; lookup pair=A).
             files = [
@@ -1089,22 +1097,9 @@ class ManifestTable:
             ]
         from pyspark.sql.types import StructType
 
-        schema = StructType.fromJson(json.loads(doc["schema"]))
-        if not files:
-            # Empty table / empty selection: typed empty frame from the
-            # manifest's schema.
-            return self.spark.createDataFrame([], schema)
-        # Read under the COMMITTED schema, not parquet footers (the
-        # Delta/Iceberg read path): columns added by later commits are
-        # null-filled in older files, dropped columns stay dropped, and no
-        # footer-merging pass is needed — at 200k files, mergeSchema would
-        # read every footer before the first row.
-        if any(f.get("kind") for f in files):
-            df = self._resolve_mor(files, schema)
-        else:
-            df = self.spark.read.schema(schema).parquet(
-                *[self._data_path(f) for f in files]
-            )
+        df = self._read_files(
+            files, StructType.fromJson(json.loads(doc["schema"]))
+        )
         if range_filter:
             for c, (lo, hi) in range_filter.items():
                 if lo is not None:
@@ -1155,11 +1150,177 @@ class ManifestTable:
                 "vacuum may have pruned it — fall back to a full read"
             )
 
-    # -- SQL catalog surface (hive-sync analogue) ---------------------------
+    # -- latest-per-key resolution ------------------------------------------
 
-    # `_metadata` too: a data column of that name hides the file-metadata
-    # column the MOR view reads.
-    _MOR_META = ("_commit", "_sup", "_del", "_sc", "_rn", "_metadata")
+    # Columns the resolution adds next to the data; `_metadata` too: a
+    # data column of that name hides the file-metadata column the tags
+    # are read from.
+    _MOR_META = ("_commit", "_sup", "_del", "_op", "_sc", "_rn", "_metadata")
+
+    # Which rows of a tagged set are live. Tags: `_commit` (base files:
+    # -1), `_sup` (the row's commit supersedes older versions of its
+    # identity: upsert, delete, restore; an insert stacks) and `_del`
+    # (a tombstone or removed row; NULL on a change-feed preimage, which
+    # supersedes but never wins). `_sc` is the identity's newest
+    # superseding commit, `_rn` its within-commit rank (see _rule).
+    _KEEP = (
+        "(NOT _sup AND _commit > _sc)"
+        " OR (_sup AND NOT _del AND _commit = _sc AND _rn = 1)"
+    )
+    # A manifest entry's tag columns, and a base file's tag (the one
+    # most files carry)
+    _TAGS = ("_commit", "_sup", "_del")
+    _BASE_TAG = ("-1", "FALSE", "FALSE")
+
+    def _identity(self) -> list[str]:
+        """A record's identity: its key plus its partition value
+        (partition-scoped records, as the merge path matches them)."""
+        return list(dict.fromkeys(self.keys + self.partition_by))
+
+    def _rule(self, needs_rn: bool) -> tuple[str, str]:
+        """SQL of the ``_sc`` and ``_rn`` windows of the MOR rule. Its
+        semantics mirror the COW write path:
+
+        - an identity's newest SUPERSEDING commit (``_sc``) wins and
+          hides everything older, including insert duplicates;
+        - additive rows (base files, insert deltas) newer than that
+          commit stack on top, so insert duplicates are preserved;
+        - a winning tombstone removes the identity.
+
+        Base files resolve as commit -1: any delta older than a base
+        file of its partition was replaced when that base was written,
+        so every live delta is newer than its partition's base.
+
+        ``_rn`` resolves several rows of one identity at the winning
+        commit, which only a streaming-sink commit holds (``commit()``
+        runs without a SparkSession, so its batch is not precombined;
+        its entries carry ``pc=False``): the largest precombine wins and
+        a delete wins ties, Hudi's ``_hoodie_is_deleted`` contract; a
+        change-feed preimage ranks after every row of its commit. Only
+        ``needs_rn`` callers pay that sort (measured +~2x on a
+        compact+drift read); handle commits are precombined, so ``_rn``
+        is 1 for them.
+
+        One deliberate divergence from the COW merge: records here are
+        strictly (key, partition)-scoped. COW's anti join matches on the
+        KEY alone within whatever partitions a batch touches, so a batch
+        that upserts key K into partition A while also touching
+        partition B drops B's copy of K; MOR never does. Move a key
+        between partitions with an explicit delete + upsert and the two
+        table types agree."""
+        ident = ", ".join(self._q(c) for c in self._identity())
+        sc = (
+            f"COALESCE(MAX(CASE WHEN _sup THEN _commit END)"
+            f" OVER (PARTITION BY {ident}), -2)"
+        )
+        rn = (
+            f"ROW_NUMBER() OVER (PARTITION BY {ident} ORDER BY _sup DESC,"
+            f" _commit DESC, _del IS NULL, {self._q(self.precombine)} DESC,"
+            f" _del DESC)"
+            if needs_rn else "1"
+        )
+        return sc, rn
+
+    def _resolved(
+        self, rows: DataFrame, needs_rn: bool, cols: list[str]
+    ) -> DataFrame:
+        """The live ``cols`` of tagged ``rows`` (``_KEEP``)."""
+        sc, rn = self._rule(needs_rn)
+        return (
+            rows.withColumn("_sc", F.expr(sc))
+            .withColumn("_rn", F.expr(rn))
+            .filter(self._KEEP)
+            .select(*[F.col(c) for c in cols])
+        )
+
+    def _tag_sql(
+        self, schema, tags: dict[str, tuple[str, ...]],
+        defaults: tuple[str, ...], names: tuple[str, ...],
+    ) -> list[str]:
+        """One SQL select item per tag column ``names`` giving each row
+        its file's tag: ``tags`` maps file paths to SQL literals, looked
+        up by the row's ``_metadata.file_name`` (a name belongs to one
+        write, so to one tag: Spark puts the write job's uuid in every
+        file name, the streaming sink a uuid per file). Only files whose
+        tag differs from ``defaults`` get map entries, and a hashed IN
+        test keeps the other rows off the maps: string work on every
+        row's path (a regex, even two substring searches) was measured
+        at 1.5-4x the cost of the whole scan. Raises if ``schema`` uses
+        a name the resolution adds."""
+        clash = set(self._MOR_META) & {f.name for f in schema.fields}
+        if clash:
+            raise ValueError(
+                f"MOR resolution reserves column names {self._MOR_META};"
+                f" table schema uses {sorted(clash)}"
+            )
+        keyed = {
+            p.rsplit("/", 1)[-1]: tag
+            for p, tag in sorted(tags.items()) if tag != defaults
+        }
+        listed = ", ".join(f"'{k}'" for k in keyed)
+        items = []
+        for i, (default, name) in enumerate(zip(defaults, names)):
+            pairs = [
+                f"'{k}', {v[i]}" for k, v in keyed.items() if v[i] != default
+            ]
+            items.append(
+                f"IF(_metadata.file_name IN ({listed}), COALESCE(map("
+                f"{', '.join(pairs)})[_metadata.file_name], {default}),"
+                f" {default}) AS {name}"
+                if pairs else f"{default} AS {name}"
+            )
+        return items
+
+    def _scan_tagged(
+        self, schema, tags: dict[str, tuple[str, ...]],
+        defaults: tuple[str, ...], names: tuple[str, ...],
+    ) -> DataFrame:
+        """ONE scan of the files ``tags`` names under ``schema``, each
+        row carrying its file's tags as columns ``names``."""
+        return self.spark.read.schema(schema).parquet(
+            *[self._data_path(p) for p in tags]
+        ).selectExpr("*", *self._tag_sql(schema, tags, defaults, names))
+
+    @staticmethod
+    def _file_tags(files: list[dict]) -> dict[str, tuple[str, str, str]]:
+        """(_commit, _sup, _del) SQL literals of each manifest entry."""
+        tags = {}
+        for f in files:
+            kind = f.get("kind")
+            op = f.get("op") if kind else None
+            tags[f["path"]] = (
+                str(f.get("commit", -1)) if kind else "-1",
+                "TRUE" if op in ("upsert", "delete") else "FALSE",
+                "TRUE" if op == "delete" else "FALSE",
+            )
+        return tags
+
+    @staticmethod
+    def _needs_rn(files: list[dict]) -> bool:
+        return any(f.get("kind") and f.get("pc") is False for f in files)
+
+    def _read_files(self, files: list[dict], schema) -> DataFrame:
+        """The live rows of manifest entries ``files``, read under the
+        COMMITTED ``schema``, not parquet footers (the Delta/Iceberg read
+        path): columns added by later commits are null-filled in older
+        files, dropped columns stay dropped, and no footer-merging pass
+        is needed — at 200k files, mergeSchema would read every footer
+        before the first row. Without a delta or tombstone among them
+        this is a plain scan; otherwise one scan, each row tagged from
+        its file, resolved latest-per-key by the MOR rule (``_rule``) —
+        the read amplification compaction exists to bound."""
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        if not any(f.get("kind") for f in files):
+            return self.spark.read.schema(schema).parquet(
+                *[self._data_path(f["path"]) for f in files]
+            )
+        rows = self._scan_tagged(
+            schema, self._file_tags(files), self._BASE_TAG, self._TAGS
+        )
+        return self._resolved(rows, self._needs_rn(files), schema.fieldNames())
+
+    # -- SQL catalog surface (hive-sync analogue) ---------------------------
 
     @staticmethod
     def _q(ident: str) -> str:
@@ -1204,7 +1365,7 @@ class ManifestTable:
     def _snapshot_location(self, files: list[dict]) -> str:
         """One brace glob naming exactly the snapshot's live files, under
         their longest common directory."""
-        paths = sorted(self._data_path(f) for f in files)
+        paths = sorted(self._data_path(f["path"]) for f in files)
         for p in paths:
             if not self._GLOB_SAFE.match(p):
                 raise ValueError(
@@ -1227,12 +1388,10 @@ class ManifestTable:
 
         COW: a plain projection of the snapshot table, whose declared
         schema null-fills columns older files predate, as ``read()`` does.
-        MOR: one scan of the snapshot table wrapped in the latest-per-key
-        window ``_resolve_mor`` uses; each row's commit id, superseding
-        flag and tombstone flag come from its file's ``commit-<hex>``
-        directory in ``_metadata.file_path`` through map literals (a
-        streaming-sink directory holding both upsert and tombstone files
-        is keyed per file name instead)."""
+        MOR: ``read()``'s resolution as SQL text — one scan of the
+        snapshot table, each row tagged from its file path
+        (``_tag_sql``), under the ``_rule`` windows and the ``_KEEP``
+        filter."""
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(json.loads(doc["schema"]))
@@ -1247,79 +1406,17 @@ class ManifestTable:
         files = doc["files"]
         if not any(f.get("kind") for f in files):
             return f"SELECT {cols} FROM {src}"
-        clash = set(self._MOR_META) & {f.name for f in schema.fields}
-        if clash:
-            raise ValueError(
-                f"MOR snapshot SQL reserves column names "
-                f"{self._MOR_META}; table schema uses {sorted(clash)}"
-            )
-        # (commit, superseding, tombstone) SQL literals per file; base
-        # files resolve as commit -1, the COALESCE defaults below.
-        tags: dict[str, tuple[str, str, str]] = {}
-        for f in files:
-            opk = f.get("op", "base") if f.get("kind") else "base"
-            tags[f["path"]] = (
-                str(f.get("commit", -1)) if f.get("kind") else "-1",
-                "TRUE" if opk in ("upsert", "delete") else "FALSE",
-                "TRUE" if opk == "delete" else "FALSE",
-            )
-        per_dir: dict[str, set] = {}
-        for p, tag in tags.items():
-            per_dir.setdefault(_commit_dir(p), set()).add(tag)
-        by_dir = {d: next(iter(s)) for d, s in per_dir.items() if len(s) == 1}
-        by_file = {
-            p.rsplit("/", 1)[-1]: tag
-            for p, tag in tags.items() if _commit_dir(p) not in by_dir
-        }
-        dir_key = f"regexp_extract(_metadata.file_path, '{_COMMIT_DIR_RE}', 1)"
-        file_key = "regexp_extract(_metadata.file_path, '[^/]+$', 0)"
-
-        def meta(i: int, default: str) -> str:
-            arms = []
-            for table, key in ((by_file, file_key), (by_dir, dir_key)):
-                pairs = [
-                    f"'{k}', {v[i]}"
-                    for k, v in sorted(table.items()) if v[i] != default
-                ]
-                if pairs:
-                    arms.append(f"map({', '.join(pairs)})[{key}]")
-            return f"COALESCE({', '.join(arms + [default])})"
-
-        raw = (
-            f"SELECT {cols}, {meta(0, '-1')} AS _commit,"
-            f" {meta(1, 'FALSE')} AS _sup, {meta(2, 'FALSE')} AS _del"
-            f" FROM {src}"
-        )
-        ident = ", ".join(
-            self._q(c) for c in dict.fromkeys(self.keys + self.partition_by)
-        )
-        # _rn mirrors _resolve_mor's within-commit precombine resolution
-        # (a streaming-sink upsert commit may carry several rows per key
-        # — commit() cannot precombine without a SparkSession). Gated
-        # exactly like _resolve_mor: only manifests holding pc=False
-        # sink-upsert entries pay the row_number sort; handle-written
-        # commits are precombined, so ordinary tables keep the r15 plan.
-        needs_rn = any(
-            f.get("kind") and f.get("pc") is False for f in files
-        )
-        if needs_rn:
-            pc = self._q(self.precombine)
-            rn_sql = (
-                f"  ROW_NUMBER() OVER (PARTITION BY {ident}"
-                f" ORDER BY _sup DESC, _commit DESC, {pc} DESC, _del DESC)"
-                f" AS _rn\n"
-            )
-        else:
-            rn_sql = "  1 AS _rn\n"
+        tags = ", ".join(self._tag_sql(
+            schema, self._file_tags(files), self._BASE_TAG, self._TAGS
+        ))
+        sc, rn = self._rule(self._needs_rn(files))
         return (
             f"SELECT {cols} FROM (\n"
-            f"  SELECT *, COALESCE(MAX(CASE WHEN _sup THEN _commit END)"
-            f" OVER (PARTITION BY {ident}), -2) AS _sc,\n"
-            f"{rn_sql}"
-            f"  FROM (\n{raw}\n) AS _raw\n"
+            f"  SELECT *, {sc} AS _sc, {rn} AS _rn FROM (\n"
+            f"    SELECT {cols}, {tags} FROM {src}\n"
+            f"  ) AS _raw\n"
             f") AS _resolved\n"
-            f"WHERE (NOT _sup AND _commit > _sc)"
-            f" OR (_sup AND NOT _del AND _commit = _sc AND _rn = 1)"
+            f"WHERE {self._KEEP}"
         )
 
     def register(
@@ -1349,7 +1446,7 @@ class ManifestTable:
 
         At 100 TB the snapshot location names ~200k files (a few MB of
         catalog metadata — the same order as the manifest itself, and the
-        view text stays O(uncompacted MOR commits)); the graduation point
+        view text stays O(uncompacted delta files)); the graduation point
         is the same as the manifest's: a real deployment syncs an
         Iceberg/Delta catalog entry instead of a file list.
 
@@ -1530,12 +1627,16 @@ class ManifestTable:
                     stacklevel=2,
                 )
 
-    def _changed_rows(self, since: int, schema) -> DataFrame | None:
-        """Union of the captured change sets of every commit after
-        ``since`` with ``_commit``/``_op`` metadata, or None if no commit
-        changed anything. Shared by read_incremental(records=True) and
-        read_cdc."""
-        frames: list[DataFrame] = []
+    def _changed_rows(
+        self, since: int, schema
+    ) -> tuple[DataFrame, bool] | None:
+        """The captured change rows of every commit after ``since`` in
+        ONE scan, tagged ``_commit``, ``_sup`` and ``_op`` ('u' | 'p' |
+        'd'), and whether the range needs ``_rn`` (it holds a
+        streaming-sink commit); None if no commit changed anything.
+        Shared by read_incremental(records=True) and read_cdc."""
+        tags: dict[str, tuple[str, str, str]] = {}
+        needs_rn = False
         for cid in (i for i in self._manifest_ids() if i > since):
             doc = self._load_manifest(cid)
             ch = doc.get("changes")
@@ -1548,28 +1649,25 @@ class ManifestTable:
             # supersedes older versions of the key. Commits written
             # before the op field read as "unknown" -> superseding (the
             # legacy behavior, safe for keyed tables).
-            additive = doc.get("op", "unknown") in ("append", "insert")
+            sup = "FALSE" if doc.get("op") in ("append", "insert") else "TRUE"
             # "preimages" is absent in pre-CDF-parity commits: .get()
             # skips it, old feeds just carry no update_preimage rows.
             for kind, op in (
                 ("upserts", "u"), ("preimages", "p"), ("deletes", "d"),
             ):
-                if ch.get(kind):
-                    frames.append(
-                        # The latest committed schema: older change files
-                        # null-fill columns added later, same as read().
-                        self.spark.read.schema(schema)
-                        .parquet(*[str(Path(self.path) / p) for p in ch[kind]])
-                        .withColumn("_commit", F.lit(cid))
-                        .withColumn("_op", F.lit(op))
-                        .withColumn("_sup", F.lit(not additive))
-                    )
-        if not frames:
+                for p in ch.get(kind) or []:
+                    tags[p] = (str(cid), sup, f"'{op}'")
+            needs_rn = needs_rn or any(
+                f.get("pc") is False and f.get("commit") == cid
+                for f in doc["files"]
+            )
+        if not tags:
             return None
-        changed = frames[0]
-        for f in frames[1:]:
-            changed = changed.unionByName(f, allowMissingColumns=True)
-        return changed
+        # The latest committed schema: older change files null-fill
+        # columns added later, same as read().
+        return self._scan_tagged(
+            schema, tags, ("-1", "TRUE", "'u'"), ("_commit", "_sup", "_op")
+        ), needs_rn
 
     def read_cdc(self, since: int) -> DataFrame:
         """Raw change feed (Delta CDF / Hudi CDC analogue): EVERY captured
@@ -1605,7 +1703,7 @@ class ManifestTable:
             return empty.withColumn("_op", F.lit("u")).withColumn(
                 "_commit", F.lit(0).cast("int")
             ).select(*cols)
-        return changed.select(*cols)
+        return changed[0].select(*cols)
 
     def read_incremental(self, since: int, records: bool = False) -> DataFrame:
         """Changes AFTER commit ``since`` — the Hudi incremental-query
@@ -1627,9 +1725,12 @@ class ManifestTable:
         does; delete = rows actually removed;
         append = the commit's own data files, referenced not rewritten;
         compaction = nothing), and the read resolves latest-per-key across
-        the requested range with one window over the CHANGED rows only.
-        Keys whose newest change is a delete are excluded. A 1-row upsert
-        into a 10k-row partition yields 1 row, not the partition.
+        the requested range by ``read()``'s MOR rule, over one scan of
+        the CHANGED rows only — so it agrees with ``read()`` on every
+        changed key, a streaming-sink batch's within-commit duplicates
+        included. Keys whose newest change is a delete are excluded. A
+        1-row upsert into a 10k-row partition yields 1 row, not the
+        partition.
         ``since=-1`` (records mode only) reads from the beginning of
         retained history."""
         if since == -1 and not records:
@@ -1653,38 +1754,23 @@ class ManifestTable:
             if not new_files:
                 return self.spark.createDataFrame([], schema)
             return self.spark.read.schema(schema).parquet(
-                *[self._data_path(f) for f in new_files]
+                *[self._data_path(f["path"]) for f in new_files]
             )
 
         changed = self._changed_rows(since, schema)
         if changed is None:
             return self.spark.createDataFrame([], schema)
-        # Latest version per record, with the SAME additive/superseding
-        # split the MOR resolver uses: a key's newest upsert/delete/
-        # restore commit hides older changes, while INSERT commits are
-        # additive — duplicates inserted in DIFFERENT commits all stay
-        # (a bare max-commit filter would keep only the newest insert's
-        # rows and diverge from read()). Identity = key + partition value
-        # (partition-scoped records, matching the merge path).
-        ident = list(dict.fromkeys(self.keys + self.partition_by))
-        w = Window.partitionBy(*[F.col(c) for c in ident])
-        sup_commit = F.coalesce(
-            F.max(F.when(F.col("_sup"), F.col("_commit"))).over(w), F.lit(-1)
+        # Latest version per record by the MOR rule read() uses: a key's
+        # newest upsert/delete/restore commit hides older changes, while
+        # INSERT commits are additive — duplicates inserted in DIFFERENT
+        # commits all stay. A removed row or tombstone is a delete; a
+        # preimage supersedes older versions but never wins (_del NULL).
+        rows, needs_rn = changed
+        rows = rows.withColumn(
+            "_del",
+            F.expr("CASE _op WHEN 'u' THEN FALSE WHEN 'd' THEN TRUE END"),
         )
-        return (
-            changed.withColumn("_sc", sup_commit)
-            .filter(
-                (
-                    ~F.col("_sup") & (F.col("_commit") > F.col("_sc"))
-                )
-                | (
-                    F.col("_sup")
-                    & (F.col("_commit") == F.col("_sc"))
-                    & (F.col("_op") == "u")
-                )
-            )
-            .select(*[F.col(f.name) for f in schema.fields])
-        )
+        return self._resolved(rows, needs_rn, schema.fieldNames())
 
     def apply_cdc(self, feed: DataFrame) -> None:
         """Apply another table's ``read_cdc`` feed to THIS table, one
@@ -1718,24 +1804,19 @@ class ManifestTable:
             dels = dels if not dels.isEmpty() else None
             if ups is not None and dels is not None:
                 # A keyed sink commit may hold an upsert and a delete of
-                # one (key, partition); resolve them as the source's
-                # _resolve_mor does — largest precombine wins, a delete
-                # wins ties. Handle commits never share a (key,
-                # partition) between the sides, so for them this only
-                # collapses what write_txn's precombine collapses anyway.
-                ident = list(dict.fromkeys(self.keys + self.partition_by))
-                w = Window.partitionBy(*ident).orderBy(
-                    F.col(self.precombine).desc(), F.col("_del").desc()
-                )
-                won = (
-                    ups.withColumn("_del", F.lit(False))
-                    .unionByName(dels.withColumn("_del", F.lit(True)))
-                    .withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
-                ups = won.filter(~F.col("_del")).drop("_del")
-                dels = won.filter(F.col("_del")).drop("_del")
+                # one (key, partition): keep the upserts the source's
+                # read keeps (the MOR rule over this commit's rows);
+                # write_txn then drops every delete an upsert shares a
+                # (key, partition) with. Handle commits never share one
+                # between the sides, so for them this only collapses
+                # what write_txn's precombine collapses anyway.
+                rows = batch.filter(
+                    F.col("_change_type") != "update_preimage"
+                ).withColumns({
+                    "_sup": F.lit(True),
+                    "_del": F.col("_change_type") == "delete",
+                })
+                ups = self._resolved(rows, True, ups.columns)
             # ONE replica commit per source commit
             self.write_txn(ups, dels)
 
@@ -1950,7 +2031,7 @@ class ManifestTable:
         regardless of partition size (the write-optimized half of the
         Hudi COW/MOR split). A "delete" part's files are tombstones,
         every other part's are deltas, all tagged with this commit's id;
-        resolution happens at read (_resolve_mor). Upsert and delete
+        resolution happens at read (``_rule``). Upsert and delete
         parts arrive precombined (one row per key); inserts keep
         duplicates. A write_txn commit passes an upsert and a delete part
         whose (key, partition) sets write_txn made disjoint, so
@@ -1976,98 +2057,6 @@ class ManifestTable:
             changes,
             op=op,
         )
-
-    def _resolve_mor(self, files: list[dict], schema) -> DataFrame:
-        """Latest-per-key resolution across base + delta + tombstone
-        files. Semantics mirror the COW write path exactly:
-
-        - a key's newest SUPERSEDING commit (upsert or tombstone) wins
-          and hides everything older, including insert duplicates;
-        - additive rows (base files and insert deltas) newer than that
-          commit stack on top (insert duplicates preserved);
-        - a winning tombstone removes the key.
-
-        Base files resolve as commit -1: any delta older than a base
-        file of its partition was replaced when that base was compacted,
-        so every live delta is newer than its partition's base.
-
-        Plan width grows with the number of uncompacted commits (one
-        scan branch per (commit, op) group) — bounding that, not just
-        row-level read amplification, is part of what the compaction
-        cadence buys.
-
-        One deliberate divergence from the COW merge: records here are
-        strictly (key, partition)-scoped. COW's anti join matches on the
-        KEY alone within whatever partitions a batch touches, so a batch
-        that upserts key K into partition A while also touching
-        partition B drops B's copy of K; MOR never does. Move a key
-        between partitions with an explicit delete + upsert and the two
-        table types agree. Cost:
-        one scan of the selected files + one window over their keys —
-        the MOR read amplification compaction exists to bound."""
-        groups: dict[tuple[int, str], list[str]] = {}
-        for f in files:
-            kind = f.get("kind")
-            commit = f.get("commit", -1) if kind else -1
-            opk = f.get("op", "base") if kind else "base"
-            groups.setdefault((commit, opk), []).append(self._data_path(f))
-        frames = []
-        for (commit, opk), paths in sorted(groups.items()):
-            sup = opk in ("upsert", "delete")
-            frames.append(
-                self.spark.read.schema(schema).parquet(*paths)
-                .withColumn("_commit", F.lit(commit))
-                .withColumn("_sup", F.lit(sup))
-                .withColumn("_del", F.lit(opk == "delete"))
-            )
-        rows = frames[0]
-        for fr in frames[1:]:
-            rows = rows.unionByName(fr)
-        ident = list(dict.fromkeys(self.keys + self.partition_by))
-        w = Window.partitionBy(*[F.col(c) for c in ident])
-        sup_commit = F.max(
-            F.when(F.col("_sup"), F.col("_commit"))
-        ).over(w)
-        # Within-commit precombine (r16): a keyed commit from the
-        # STREAMING SINK cannot precombine its batch (commit() runs in a
-        # plain Python worker, no SparkSession), so a key may carry
-        # several rows — possibly mixed upsert + delete-marker rows — at
-        # the winning commit. Resolve exactly as Hudi's
-        # _hoodie_is_deleted contract: largest precombine wins, a delete
-        # wins precombine ties (CDC-conservative). Handle commits never
-        # mix ops for one key in one commit (write_txn drops overlapped
-        # deletes up front) and are precombined, so this GATE — sink
-        # entries carry pc=False — means ordinary tables skip the
-        # row_number entirely (its sort would otherwise tax every MOR
-        # read; measured +~2x on compact+drift-read, r16).
-        needs_rn = any(
-            f.get("kind") and f.get("pc") is False for f in files
-        )
-        rows = rows.withColumn("_sc", F.coalesce(sup_commit, F.lit(-2)))
-        if needs_rn:
-            rows = rows.withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy(*[F.col(c) for c in ident])
-                    .orderBy(
-                        F.col("_sup").desc(),
-                        F.col("_commit").desc(),
-                        F.col(self.precombine).desc(),
-                        F.col("_del").desc(),
-                    )
-                ),
-            )
-        else:
-            rows = rows.withColumn("_rn", F.lit(1))
-        resolved = rows.filter(
-            (~F.col("_sup") & (F.col("_commit") > F.col("_sc")))
-            | (
-                F.col("_sup") & ~F.col("_del")
-                & (F.col("_commit") == F.col("_sc"))
-                & (F.col("_rn") == 1)
-            )
-        )
-        return resolved.select(*[F.col(f.name) for f in schema.fields])
 
     def _append(self, df: DataFrame, prev) -> None:
         prev_id, prev_files = (prev[0], prev[1]["files"]) if prev else (None, [])
@@ -2130,9 +2119,7 @@ class ManifestTable:
             df: DataFrame, how: str, base: DataFrame = existing,
             cols: list[str] = self.keys, cond=F.lit(True),
         ) -> DataFrame:
-            pred = cond
-            for c in cols:
-                pred = pred & F.col(f"e.{c}").eqNullSafe(F.col(f"b.{c}"))
+            pred = cond & _eq_null_safe(cols, "e", "b")
             return base.alias("e").join(F.broadcast(df.alias("b")), pred, how)
 
         # no distinct needed: anti and semi joins only test existence
@@ -2171,7 +2158,7 @@ class ManifestTable:
             # (key, partition) a delete names is a delete, any other row
             # an upsert key matches is a preimage. dels holds one row
             # per key, so the flagging left join adds no rows.
-            ident = list(dict.fromkeys(self.keys + self.partition_by))
+            ident = self._identity()
             flagged = keyed(
                 dels.select(*ident).withColumn("_named", F.lit(True)),
                 "left", cols=ident,
@@ -2230,35 +2217,40 @@ class ManifestTable:
         """(replaced, kept, existing) for a write touching the partition
         values present in ``batches``. Affected partitions are the
         batches' distinct partition tuples (bounded metadata collect,
-        O(partitions)); ``existing`` reads ONLY the replaced files — the
-        manifest already names the touched partitions' file set, so the
-        survivors scan never lists or opens untouched partitions (a
-        full-read + filter would touch every live file's footer)."""
+        O(partitions)); an unpartitioned table replaces every file.
+        ``existing`` is the live rows of ONLY the replaced files of
+        ``prev_doc``, resolved like ``read()`` (a streaming sink may
+        have left deltas and tombstones there) — the manifest already
+        names the touched partitions' file set, so the survivors scan
+        never lists or opens untouched partitions (a full-read + filter
+        would touch every live file's footer)."""
         prev_files = prev_doc["files"]
-        if not self.partition_by:
-            return prev_files, [], self.read()
-        touched = set()
-        for b in batches:
-            touched |= {
-                tuple(_partition_key(row[c]) for c in self.partition_by)
-                for row in b.select(*self.partition_by).distinct().collect()
-            }
+        if self.partition_by:
+            touched = set()
+            for b in batches:
+                touched |= {
+                    tuple(_partition_key(row[c]) for c in self.partition_by)
+                    for row in
+                    b.select(*self.partition_by).distinct().collect()
+                }
 
-        def _touched(f: dict) -> bool:
-            # Current-layout files match on their partition tuple; a
-            # file from an OLDER partition spec (missing columns)
-            # matches conservatively and gets rewritten under the
-            # CURRENT layout — partition evolution migrates data on
-            # the first merge that touches it.
-            return any(
-                all(
-                    c not in f["partition"] or f["partition"][c] == t[i]
-                    for i, c in enumerate(self.partition_by)
+            def _touched(f: dict) -> bool:
+                # Current-layout files match on their partition tuple; a
+                # file from an OLDER partition spec (missing columns)
+                # matches conservatively and gets rewritten under the
+                # CURRENT layout — partition evolution migrates data on
+                # the first merge that touches it.
+                return any(
+                    all(
+                        c not in f["partition"] or f["partition"][c] == t[i]
+                        for i, c in enumerate(self.partition_by)
+                    )
+                    for t in touched
                 )
-                for t in touched
-            )
 
-        replaced = [f for f in prev_files if _touched(f)]
+            replaced = [f for f in prev_files if _touched(f)]
+        else:
+            replaced = prev_files
         replaced_paths = {f["path"] for f in replaced}
         # set-membership, not list scans — manifests are O(live files)
         # and a 100 TB table has ~200k entries
@@ -2266,16 +2258,7 @@ class ManifestTable:
         from pyspark.sql.types import StructType
 
         committed = StructType.fromJson(json.loads(prev_doc["schema"]))
-        if replaced:
-            # COMMITTED schema, like read(): bare inference would pick
-            # one footer and silently drop columns that only some of
-            # the replaced files carry.
-            existing = self.spark.read.schema(committed).parquet(
-                *[self._data_path(f) for f in replaced]
-            )
-        else:
-            existing = self.spark.createDataFrame([], committed)
-        return replaced, kept, existing
+        return replaced, kept, self._read_files(replaced, committed)
 
     def write_txn(
         self,
@@ -2318,16 +2301,13 @@ class ManifestTable:
         # both frames pinned AFTER the precombine: one row per key, the
         # window evaluated once however many consumers read them
         ups = _pin(precombine_dedup(upserts, self.keys, self.precombine))
-        ident = list(dict.fromkeys(self.keys + self.partition_by))
-        pred = F.lit(True)
-        for c in ident:
-            pred = pred & F.col(f"d.{c}").eqNullSafe(F.col(f"u.{c}"))
+        ident = self._identity()
         dels = (
             _pin(precombine_dedup(deletes, self.keys, self.precombine))
             .alias("d")
             .join(
                 F.broadcast(ups.select(*ident).alias("u")),
-                pred,
+                _eq_null_safe(ident, "d", "u"),
                 "left_anti",
             )
         )
@@ -2501,10 +2481,8 @@ class ManifestTable:
         # a state other than the one this attempt replaces
         current = _align(self.read(as_of=prev_id))
         changed = restored.exceptAll(current)
-        ident = list(dict.fromkeys(self.keys + self.partition_by))
-        pred = F.lit(True)
-        for c in ident:
-            pred = pred & F.col(f"e.{c}").eqNullSafe(F.col(f"b.{c}"))
+        ident = self._identity()
+        pred = _eq_null_safe(ident, "e", "b")
         removed = current.alias("e").join(
             restored.select(*ident).distinct().alias("b"), pred, "left_anti"
         )
@@ -2587,7 +2565,7 @@ class ManifestTable:
             )
         # The clone's first manifest takes the SOURCE's commit id, not 0:
         # MOR delta/tombstone entries carry their source "commit" ids and
-        # _resolve_mor resolves latest-per-key purely by that field — a
+        # the MOR rule resolves latest-per-key purely by that field — a
         # clone restarting at id 1 would let a cloned tombstone (commit 2)
         # shadow the clone's OWN later upsert (commit 1), silently
         # swallowing writes. Starting at the source id makes every clone

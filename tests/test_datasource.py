@@ -870,15 +870,24 @@ def test_manifest_sink_delete_markers(registered, tmp_path):
                       precombine="price", partition_by=("pair",))
     assert "deleted" not in t.read().columns  # marker stripped
     assert t.read().count() == 3
+    c0 = t.commits()[-1]
 
-    # batch 1: a CDC slice — update T1, DELETE T2, mixed-op same key T3:
-    # upsert at price 9 AND delete at price 5 -> upsert wins (higher pc)
+    def incremental(since):
+        return sorted((r.transaction_id, r.price) for r in
+                      t.read_incremental(since, records=True).collect())
+
+    # batch 1: a CDC slice — update T1 twice (7.0 wins), DELETE T2,
+    # mixed-op same key T3: upsert at price 9 AND delete at price 5 ->
+    # upsert wins (higher pc)
     drain([("T1", TS, "BTCGBP", 7.0, False),
+           ("T1", TS, "BTCGBP", 6.0, False),
            ("T2", TS, "ETHGBP", 2.5, True),
            ("T3", TS, "BTCGBP", 9.0, False),
            ("T3", TS, "BTCGBP", 5.0, True)])
     got = {r.transaction_id: r.price for r in t.read().collect()}
     assert got == {"T1": 7.0, "T3": 9.0}
+    # the records-incremental read resolves the batch as read() does
+    assert incremental(c0) == sorted(got.items())
     doc = t._load_manifest(t.commits()[-1])
     assert doc["changes"]["deletes"], "tombstone files must be change-captured"
     # a replica fed from the change feed resolves the mixed-op key the
@@ -895,6 +904,7 @@ def test_manifest_sink_delete_markers(registered, tmp_path):
     drain([("T3", TS, "BTCGBP", 9.0, True),
            ("T3", TS, "BTCGBP", 9.0, False)])
     assert {r.transaction_id for r in t.read().collect()} == {"T1"}
+    assert incremental(synced) == []  # T3, the one changed key, is gone
     replica.apply_cdc(t.read_cdc(synced))
     assert {r.transaction_id for r in replica.read().collect()} == {"T1"}
 
@@ -905,6 +915,17 @@ def test_manifest_sink_delete_markers(registered, tmp_path):
             "SELECT transaction_id FROM cdc_sink_view").collect()} == {"T1"}
     finally:
         t.unregister("cdc_sink_view")
+    # a COW handle upsert into the partition the sink left superseded
+    # versions and tombstones in rewrites only its live rows; in a range
+    # holding a sink commit its preimage (T1 at 7.0, the larger
+    # precombine) never outranks the upsert
+    t.write(spark.createDataFrame(
+        [("T1", TS, "BTCGBP", 4.0)],
+        "transaction_id string, close_time timestamp, pair string, "
+        "price double"), "upsert")
+    assert {r.transaction_id: r.price for r in t.read().collect()} == {
+        "T1": 4.0}
+    assert incremental(synced) == [("T1", 4.0)]
     # compaction folds everything; answer unchanged
     t.compact()
     assert {r.transaction_id for r in t.read().collect()} == {"T1"}

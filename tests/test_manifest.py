@@ -1392,7 +1392,7 @@ def test_shallow_clone_mor_and_bloom_config_carry(spark, tmp_path):
 
 def test_shallow_clone_mor_writes_supersede_cloned_deltas(spark, tmp_path):
     """Review regression (r14): cloned MOR delta/tombstone entries keep
-    their SOURCE commit ids and _resolve_mor resolves purely by that
+    their SOURCE commit ids and the MOR rule resolves purely by that
     field — so the clone's first manifest must take the source's id,
     or a cloned tombstone (commit 2) shadows the clone's own later
     upsert (which would have restarted at commit 1), silently

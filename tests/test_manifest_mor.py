@@ -315,6 +315,13 @@ def test_mor_resolution_skips_row_number_without_sink_upserts(spark, tmp_path):
     t.write(spark.createDataFrame([("T1", TS, "BTCGBP", 2.0)], schema), "upsert")
     plan = t.read()._jdf.queryExecution().optimizedPlan().toString()
     assert "row_number" not in plan
+    # base + delta commits resolve over ONE scan, however many commits
+    for price in (3.0, 4.0):
+        t.write(spark.createDataFrame(
+            [("T1", TS, "BTCGBP", price)], schema), "upsert")
+    scans = t.read()._jdf.queryExecution().executedPlan().toString()
+    assert scans.count("FileScan") == 1
+    assert [r.price for r in t.read().collect()] == [4.0]
 
     def view_text():
         t.register("mt_rn_gate")

@@ -295,6 +295,15 @@ def test_mor_meta_column_clash_is_loud(spark, tmp_path):
     # refused before any catalog entry was made
     assert not spark.catalog.tableExists("mt_clash")
     assert snapshot_tables(spark, "mt_clash") == []
+    # read() resolves with the same columns: it refuses too, rather than
+    # overwriting the data column
+    with pytest.raises(ValueError, match="_sup"):
+        t.read()
+    t2 = ManifestTable(spark, str(tmp_path / "clash2"), keys=("k",),
+                       precombine="k", partition_by=(), table_type="mor")
+    t2.write(spark.createDataFrame([(1, 2)], "k int, _commit int"), "upsert")
+    with pytest.raises(ValueError, match="_commit"):
+        t2.read()
 
 
 def test_view_plan_pushdown_and_pruning(spark, cow):
