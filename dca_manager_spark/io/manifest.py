@@ -67,10 +67,12 @@ import threading as _threading
 import uuid
 from enum import Enum
 from pathlib import Path
+from typing import NamedTuple, Sequence
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 # Serializes catalog syncs in this process: the read-prior-view /
 # replace-view step of register() is check-then-act.
@@ -183,18 +185,77 @@ def _partition_key(value: object) -> str | None:
     return str(value)
 
 
-def _pin(df: DataFrame) -> DataFrame:
+class _Pinned(NamedTuple):
+    """What one pin job yields: the frozen frame, its row count and the
+    partition tuples its rows touch (``_partition_key`` form, one
+    element per ``partition_by`` column; empty when none were asked
+    for)."""
+
+    df: DataFrame
+    rows: int
+    parts: frozenset[tuple]
+
+
+def _pin(df: DataFrame, partition_by: Sequence[str] = ()) -> _Pinned:
     """Pin a batch exactly once: ``localCheckpoint(eager=True)`` freezes
     the rows so every downstream consumer (constraint validation, zorder
-    boundary agg, key-set/partition collects, the write itself) sees the
-    SAME materialization even for nondeterministic sources. The marker
-    attribute makes re-pinning a no-op so the write paths can each demand
-    a pinned input without double-checkpointing."""
-    if getattr(df, "_dca_pinned", False):
-        return df
-    pinned = df.localCheckpoint(eager=True)
+    boundary agg, the write itself) sees the SAME materialization even
+    for nondeterministic sources. One ``Observation`` on the
+    checkpoint's own job counts the rows and collects the distinct
+    ``partition_by`` tuples, so the affected-row count and a COW
+    commit's touched partitions cost no job of their own: no
+    ``count()`` and no ``distinct().collect()`` re-scan the pinned batch
+    (the metrics arrive for empty, zero-partition and local frames too).
+    The marker attribute lets ``_frozen`` skip a second checkpoint."""
+    obs = Observation()
+    metrics = [F.count(F.lit(1)).alias("rows")]
+    if partition_by:
+        metrics.append(F.collect_set(F.struct(*partition_by)).alias("parts"))
+    pinned = df.observe(obs, *metrics).localCheckpoint(eager=True)
     pinned._dca_pinned = True
-    return pinned
+    got = obs.get
+    return _Pinned(pinned, got["rows"], frozenset(
+        tuple(_partition_key(v) for v in row) for row in got.get("parts", ())
+    ))
+
+
+def _frozen(df: DataFrame) -> DataFrame:
+    """``df`` pinned — as it is when a caller already pinned it, so the
+    write paths can each demand a pinned input without checkpointing
+    twice."""
+    return df if getattr(df, "_dca_pinned", False) else _pin(df).df
+
+
+def _local_frame(
+    spark: SparkSession, schema: StructType, rows: Sequence[tuple] = ()
+) -> DataFrame:
+    """``rows`` under ``schema`` as an Arrow-built ``LocalRelation``:
+    collecting or joining it runs no Spark job, where
+    ``createDataFrame`` over Python rows parallelizes through Python
+    workers (one job of dp tasks per collect). The explicit schema keeps
+    types Arrow cannot tell apart (timestamp_ntz) and every nullability
+    flag as given. A schema holding a type Arrow cannot carry (a
+    year-month interval, which parquet stores) takes the Python-row
+    path."""
+    import pyarrow as pa
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    try:
+        arrow = to_arrow_schema(schema)
+    except PySparkTypeError:
+        return spark.createDataFrame(list(rows), schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=arrow
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
+def _count_frame(spark: SparkSession, name: str, n: int) -> DataFrame:
+    """A statement result: one ``<name> bigint`` (nullable) row holding
+    ``n``, built as a local relation (see ``_local_frame``)."""
+    schema = StructType([StructField(name, LongType())])
+    return _local_frame(spark, schema, [(n,)])
 
 
 def _nullable_normalized(dt):
@@ -204,7 +265,7 @@ def _nullable_normalized(dt):
     identical across these flags; treating them as conflicts would
     reject batches whose upstream plan merely proved/lost a non-null
     invariant."""
-    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+    from pyspark.sql.types import ArrayType, MapType
 
     if isinstance(dt, ArrayType):
         return ArrayType(_nullable_normalized(dt.elementType), True)
@@ -505,11 +566,10 @@ class ManifestTable:
                 len(ch.get("preimages") or []),
                 len(ch.get("deletes") or []),
             ))
-        return self.spark.createDataFrame(
-            rows,
+        return _local_frame(self.spark, StructType.fromDDL(
             "commit_id int, op string, n_files int, n_upsert_files int, "
-            "n_preimage_files int, n_delete_files int",
-        )
+            "n_preimage_files int, n_delete_files int"
+        ), rows)
 
     def _carry_stream_marks(
         self, prev_id: int | None, stream_mark: tuple[str, int] | None
@@ -1095,8 +1155,6 @@ class ManifestTable:
                     for c, v in partition_filter.items()
                 )
             ]
-        from pyspark.sql.types import StructType
-
         df = self._read_files(
             files, StructType.fromJson(json.loads(doc["schema"]))
         )
@@ -1310,7 +1368,7 @@ class ManifestTable:
         its file, resolved latest-per-key by the MOR rule (``_rule``) —
         the read amplification compaction exists to bound."""
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return _local_frame(self.spark, schema)
         if not any(f.get("kind") for f in files):
             return self.spark.read.schema(schema).parquet(
                 *[self._data_path(f["path"]) for f in files]
@@ -1392,8 +1450,6 @@ class ManifestTable:
         snapshot table, each row tagged from its file path
         (``_tag_sql``), under the ``_rule`` windows and the ``_KEEP``
         filter."""
-        from pyspark.sql.types import StructType
-
         schema = StructType.fromJson(json.loads(doc["schema"]))
         cols = ", ".join(self._q(f.name) for f in schema.fields)
         if snap is None:
@@ -1563,8 +1619,6 @@ class ManifestTable:
         )
         body = self._view_sql(doc, snap)
         if snap:
-            from pyspark.sql.types import StructType
-
             ddl = ", ".join(
                 f"{self._q(f.name)} {f.dataType.simpleString()}"
                 for f in StructType.fromJson(json.loads(doc["schema"])).fields
@@ -1687,8 +1741,6 @@ class ManifestTable:
         self._check_since(since)
         latest = self._latest_manifest()
         assert latest is not None
-        from pyspark.sql.types import StructType
-
         schema = StructType.fromJson(json.loads(latest[1]["schema"]))
         changed = self._changed_rows(since, schema)
         cols = [F.col(f.name) for f in schema.fields] + [
@@ -1699,7 +1751,7 @@ class ManifestTable:
             F.col("_commit"),
         ]
         if changed is None:
-            empty = self.spark.createDataFrame([], schema)
+            empty = _local_frame(self.spark, schema)
             return empty.withColumn("_op", F.lit("u")).withColumn(
                 "_commit", F.lit(0).cast("int")
             ).select(*cols)
@@ -1738,8 +1790,6 @@ class ManifestTable:
         self._check_since(since)
         latest = self._latest_manifest()
         assert latest is not None
-        from pyspark.sql.types import StructType
-
         schema = StructType.fromJson(json.loads(latest[1]["schema"]))
         if not records:
             old = {f["path"] for f in self._load_manifest(since)["files"]}
@@ -1752,14 +1802,14 @@ class ManifestTable:
                     "tombstone commits; use records=True (or compact first)"
                 )
             if not new_files:
-                return self.spark.createDataFrame([], schema)
+                return _local_frame(self.spark, schema)
             return self.spark.read.schema(schema).parquet(
                 *[self._data_path(f["path"]) for f in new_files]
             )
 
         changed = self._changed_rows(since, schema)
         if changed is None:
-            return self.spark.createDataFrame([], schema)
+            return _local_frame(self.spark, schema)
         # Latest version per record by the MOR rule read() uses: a key's
         # newest upsert/delete/restore commit hides older changes, while
         # INSERT commits are additive — duplicates inserted in DIFFERENT
@@ -1901,26 +1951,35 @@ class ManifestTable:
             # written rows are different materializations of a possibly
             # nondeterministic source, and the constraint gate proves
             # nothing about what lands on disk.
-            df = _pin(df)
+            df = _frozen(df)
             self._check_constraints(df)
+        parts: frozenset[tuple] = frozenset()
         if self.table_type not in ("mor",) and op not in (
             WriteOperation.INSERT, WriteOperation.BULK_INSERT
         ):
             # Pin the PRECOMBINED batch: the merge path consumes it
-            # several times (key set, partition values, change file,
-            # union) — pinning the survivors evaluates the precombine
-            # window once, and a nondeterministic input cannot be
-            # re-evaluated differently per consumer. Pinning BEFORE the
-            # rebase loop also makes every retry apply the SAME rows.
-            df = _pin(precombine_dedup(df, self.keys, self.precombine))
-        self._rebase(op.value, lambda prev: self._write_attempt(df, op, prev))
+            # several times (key set, change file, union) — pinning the
+            # survivors evaluates the precombine window once, and a
+            # nondeterministic input cannot be re-evaluated differently
+            # per consumer. Pinning BEFORE the rebase loop also makes
+            # every retry apply the SAME rows, and the touched partitions
+            # the pin observed serve every retry.
+            df, _, parts = _pin(
+                precombine_dedup(df, self.keys, self.precombine),
+                self.partition_by,
+            )
+        self._rebase(
+            op.value, lambda prev: self._write_attempt(df, op, prev, parts)
+        )
 
     def _write_attempt(
-        self, df: DataFrame, op: WriteOperation, prev
+        self, df: DataFrame, op: WriteOperation, prev, parts: frozenset[tuple]
     ) -> None:
         """ONE optimistic-commit attempt of a single-frame write against
         the ``prev`` manifest (write() and the predicate DML, whose
-        attempts re-evaluate their predicate first)."""
+        attempts re-evaluate their predicate first). ``parts`` is the
+        touched-partition set a COW upsert or delete observed when it
+        pinned ``df`` (see ``_pin``); MOR and append commits ignore it."""
         # Fail dtype conflicts UP FRONT, before any data file is
         # written (the merge path would otherwise union-cast and die
         # mid-write; MOR would commit files unreadable under the
@@ -1946,9 +2005,9 @@ class ManifestTable:
         elif op in (WriteOperation.INSERT, WriteOperation.BULK_INSERT):
             self._append(df, prev)
         elif op == WriteOperation.UPSERT:
-            self._cow_commit(df, None, prev, "upsert")
+            self._cow_commit(df, None, prev, "upsert", parts)
         else:
-            self._cow_commit(None, df, prev, "delete")
+            self._cow_commit(None, df, prev, "delete", parts)
 
     @staticmethod
     def _merge_schema_json(prev_doc: dict | None, batch_schema) -> str:
@@ -1959,8 +2018,6 @@ class ManifestTable:
         (io/datasource.py) can reuse it."""
         if prev_doc is None:
             return batch_schema.json()
-        from pyspark.sql.types import StructField, StructType
-
         prev = StructType.fromJson(json.loads(prev_doc["schema"]))
         by_name = {f.name: f for f in prev.fields}
         batch_by_name = {f.name: f for f in batch_schema.fields}
@@ -2065,7 +2122,7 @@ class ManifestTable:
             # job, zorder boundary agg, then the write) — pin it so a
             # nondeterministic source can't pass validation with one
             # materialization and write another (no-op if write() pinned)
-            df = _pin(df)
+            df = _frozen(df)
         new_files = self._write_commit_files(df)
         # Change capture for free: an append commit's new data files ARE
         # exactly its added rows — reference them, write nothing twice.
@@ -2080,14 +2137,16 @@ class ManifestTable:
         )
 
     def _cow_commit(
-        self, ups: DataFrame | None, dels: DataFrame | None, prev, op: str
+        self, ups: DataFrame | None, dels: DataFrame | None, prev, op: str,
+        parts: frozenset[tuple],
     ) -> None:
         """The copy-on-write keyed commit body, for an upsert (``dels``
         None), a delete (``ups`` None) or a write_txn (both). Each frame
         is PINNED and precombined (one row per key), and write_txn made
-        their (key, partition) sets disjoint. Rewrites the touched
-        partitions without either frame's keys, plus the upsert rows
-        themselves. Key matching is partition-scoped only via which
+        their (key, partition) sets disjoint. ``parts`` is the union of
+        the partition tuples the frames' pins observed. Rewrites the
+        touched partitions without either frame's keys, plus the upsert
+        rows themselves. Key matching is partition-scoped only via which
         files get rewritten."""
         frames = [f for f in (ups, dels) if f is not None]
         if prev is None or not prev[1]["files"]:
@@ -2111,9 +2170,7 @@ class ManifestTable:
             )
             return
         prev_id, prev_doc = prev
-        # Affected partitions: the frames' distinct partition values
-        # (bounded metadata collect, O(partitions)).
-        replaced, kept, existing = self._split_by_touch(frames, prev_doc)
+        replaced, kept, existing = self._split_by_touch(parts, prev_doc)
 
         def keyed(
             df: DataFrame, how: str, base: DataFrame = existing,
@@ -2184,27 +2241,32 @@ class ManifestTable:
         from pyspark import inheritable_thread_target as _itt
 
         changes: dict[str, list[str]] = {"upserts": [], "deletes": []}
+        # Submitted callables are wrapped with
+        # pyspark.inheritable_thread_target, given the session: under
+        # pinned-thread mode plain pool threads inherit NO local
+        # properties — the caller's job group / scheduler pool would not
+        # apply and cancelJobGroup could not reach an in-flight commit's
+        # write jobs — and without the session the caller's
+        # ``spark.addTag`` tags would not reach them either (and every
+        # wrap warns). The wrapper also hands thread-lifecycle cleanup to
+        # py4j instead of GC.
+        inherit = _itt(self.spark)
         with ThreadPoolExecutor(4) as pool:
-            # Submitted callables are wrapped with
-            # pyspark.inheritable_thread_target (ADVICE r16): under
-            # pinned-thread mode plain pool threads inherit NO local
-            # properties — the caller's job group / scheduler pool
-            # would not apply and cancelJobGroup could not reach an
-            # in-flight commit's write jobs — and the wrapper also
-            # hands thread-lifecycle cleanup to py4j instead of GC.
             pending = {}
             if ups is not None:
                 pending["upserts"] = pool.submit(
-                    _itt(self._write_change_files), ups, next_id, "u"
+                    inherit(self._write_change_files), ups, next_id, "u"
                 )
                 pending["preimages"] = pool.submit(
-                    _itt(self._write_change_files), overwritten, next_id, "p"
+                    inherit(self._write_change_files), overwritten, next_id, "p"
                 )
             if dels is not None:
                 pending["deletes"] = pool.submit(
-                    _itt(self._write_change_files), removed, next_id, "d"
+                    inherit(self._write_change_files), removed, next_id, "d"
                 )
-            f_files = pool.submit(_itt(self._write_commit_files), merged, True)
+            f_files = pool.submit(
+                inherit(self._write_commit_files), merged, True
+            )
             changes.update({k: f.result() for k, f in pending.items()})
             new_files = f_files.result()
         self._publish(
@@ -2212,12 +2274,13 @@ class ManifestTable:
         )
 
     def _split_by_touch(
-        self, batches: list[DataFrame], prev_doc: dict
+        self, touched: frozenset[tuple], prev_doc: dict
     ) -> tuple[list[dict], list[dict], DataFrame]:
         """(replaced, kept, existing) for a write touching the partition
-        values present in ``batches``. Affected partitions are the
-        batches' distinct partition tuples (bounded metadata collect,
-        O(partitions)); an unpartitioned table replaces every file.
+        tuples ``touched``: the sets the commit's batches observed in
+        their pin job (``_pin``), computed once before the rebase loop,
+        so neither a retry nor this split runs a job for them. An
+        unpartitioned table replaces every file.
         ``existing`` is the live rows of ONLY the replaced files of
         ``prev_doc``, resolved like ``read()`` (a streaming sink may
         have left deltas and tombstones there) — the manifest already
@@ -2226,14 +2289,6 @@ class ManifestTable:
         would touch every live file's footer)."""
         prev_files = prev_doc["files"]
         if self.partition_by:
-            touched = set()
-            for b in batches:
-                touched |= {
-                    tuple(_partition_key(row[c]) for c in self.partition_by)
-                    for row in
-                    b.select(*self.partition_by).distinct().collect()
-                }
-
             def _touched(f: dict) -> bool:
                 # Current-layout files match on their partition tuple; a
                 # file from an OLDER partition spec (missing columns)
@@ -2255,8 +2310,6 @@ class ManifestTable:
         # set-membership, not list scans — manifests are O(live files)
         # and a 100 TB table has ~200k entries
         kept = [f for f in prev_files if f["path"] not in replaced_paths]
-        from pyspark.sql.types import StructType
-
         committed = StructType.fromJson(json.loads(prev_doc["schema"]))
         return replaced, kept, self._read_files(replaced, committed)
 
@@ -2296,21 +2349,28 @@ class ManifestTable:
             self._check_partition_types(upserts)
             self._check_partition_types(deletes)
         if self._has_constraints():
-            upserts = _pin(upserts)
+            upserts = _frozen(upserts)
             self._check_constraints(upserts)
         # both frames pinned AFTER the precombine: one row per key, the
         # window evaluated once however many consumers read them
-        ups = _pin(precombine_dedup(upserts, self.keys, self.precombine))
-        ident = self._identity()
-        dels = (
-            _pin(precombine_dedup(deletes, self.keys, self.precombine))
-            .alias("d")
-            .join(
-                F.broadcast(ups.select(*ident).alias("u")),
-                _eq_null_safe(ident, "d", "u"),
-                "left_anti",
-            )
+        ups, _, ups_parts = _pin(
+            precombine_dedup(upserts, self.keys, self.precombine),
+            self.partition_by,
         )
+        dels, _, dels_parts = _pin(
+            precombine_dedup(deletes, self.keys, self.precombine),
+            self.partition_by,
+        )
+        ident = self._identity()
+        dels = dels.alias("d").join(
+            F.broadcast(ups.select(*ident).alias("u")),
+            _eq_null_safe(ident, "d", "u"),
+            "left_anti",
+        )
+        # The anti join drops only deletes that share (key, partition)
+        # with an upsert, so the pins' union is exactly the partitions
+        # the commit touches.
+        parts = ups_parts | dels_parts
 
         def attempt(prev) -> None:
             if prev is not None:
@@ -2318,7 +2378,7 @@ class ManifestTable:
             if self.table_type == "mor":
                 self._mor_commit([(ups, "upsert"), (dels, "delete")], prev, "txn")
             else:
-                self._cow_commit(ups, dels, prev, "txn")
+                self._cow_commit(ups, dels, prev, "txn", parts)
 
         self._rebase("txn", attempt)
 
@@ -2348,18 +2408,18 @@ class ManifestTable:
                 raise FileNotFoundError(
                     f"no committed manifest under {self.path}"
                 )
-            matching = _pin(
+            matching, n, _ = _pin(
                 self.read(as_of=prev[0]).filter(cond).select(*ident)
             )
-            n = matching.count()
             if not n:
                 return 0
-            batch = (
-                matching
-                if self.table_type == "mor"
-                else _pin(precombine_dedup(matching, self.keys, self.precombine))
-            )
-            self._write_attempt(batch, WriteOperation.DELETE, prev)
+            batch, parts = matching, frozenset()
+            if self.table_type != "mor":
+                batch, _, parts = _pin(
+                    precombine_dedup(matching, self.keys, self.precombine),
+                    self.partition_by,
+                )
+            self._write_attempt(batch, WriteOperation.DELETE, prev, parts)
             return n
 
         return self._rebase("delete_where", attempt)
@@ -2395,8 +2455,7 @@ class ManifestTable:
                 raise FileNotFoundError(
                     f"no committed manifest under {self.path}"
                 )
-            rows = _pin(self.read(as_of=prev[0]).filter(cond))
-            n = rows.count()
+            rows, n, _ = _pin(self.read(as_of=prev[0]).filter(cond))
             if not n:
                 return 0
             # assignments are deterministic projections over the pinned
@@ -2415,9 +2474,13 @@ class ManifestTable:
                 rows = rows.withColumn(c, val)
             if self._has_constraints():
                 self._check_constraints(rows)
+            parts: frozenset[tuple] = frozenset()
             if self.table_type != "mor":
-                rows = _pin(precombine_dedup(rows, self.keys, self.precombine))
-            self._write_attempt(rows, WriteOperation.UPSERT, prev)
+                rows, _, parts = _pin(
+                    precombine_dedup(rows, self.keys, self.precombine),
+                    self.partition_by,
+                )
+            self._write_attempt(rows, WriteOperation.UPSERT, prev, parts)
             return n
 
         return self._rebase("update_where", attempt)
@@ -2455,8 +2518,6 @@ class ManifestTable:
         if version == prev_id:
             return prev_id
         target = self._load_manifest(version)
-        from pyspark.sql.types import StructType
-
         tschema = StructType.fromJson(json.loads(target["schema"]))
 
         def _align(df: DataFrame) -> DataFrame:
@@ -3135,7 +3196,7 @@ def _merge_general(
                     f"MERGE INSERT must supply the record key column(s); "
                     f"missing {nokey}")
 
-    source_df = _pin(source_df)
+    source_df = _pin(source_df).df
     src = source_df.alias(salias)
     cond = F.expr(on_cond)
     _ACT = "__dca_merge_act"
@@ -3192,7 +3253,7 @@ def _merge_general(
         if has_target:
             cols.extend(F.col(f"{talias}.`{d}`").alias(f"__del_{d}")
                         for d in del_cols)
-        return _pin(frame.filter(F.col(_ACT) >= 0).select(*cols))
+        return _pin(frame.filter(F.col(_ACT) >= 0).select(*cols)).df
 
     def _split(flat: DataFrame, group: list[_MergeClause]):
         upd_idx = [i for i, c in enumerate(group) if c.action != "delete"]
@@ -3239,7 +3300,7 @@ def _merge_general(
                .withColumn(_ACT, _act_col(nmsc)))
         _split(_flatten(nms, nmsc, has_target=True), nmsc)
 
-    def _union(parts: list[DataFrame]) -> DataFrame | None:
+    def _union(parts: list[DataFrame]) -> _Pinned | None:
         if not parts:
             return None
         out = parts[0]
@@ -3247,12 +3308,10 @@ def _merge_general(
             out = out.unionByName(p)
         return _pin(out)
 
-    ups = _union(ups_parts)
-    dels = _union(del_parts)
-    n = (ups.count() if ups is not None else 0) + (
-        dels.count() if dels is not None else 0)
-    table.write_txn(upserts=ups, deletes=dels)
-    return n
+    ups, dels = _union(ups_parts), _union(del_parts)
+    table.write_txn(upserts=ups.df if ups else None,
+                    deletes=dels.df if dels else None)
+    return (ups.rows if ups else 0) + (dels.rows if dels else 0)
 
 
 def _align_to_table(table: "ManifestTable", df: DataFrame,
@@ -3394,9 +3453,13 @@ def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
     resolves against that pinned snapshot (see _rewrite_time_travel).
 
     DML returns a 1-row ``num_affected_rows`` frame (Delta's contract);
-    INSERT counts the appended batch. The DML registry is
-    process-scoped: a fresh process must re-``register()`` handles
-    before writing by name (reads need no handle — the VIEW is durable).
+    INSERT counts the appended batch. Every statement result (DML,
+    CTAS, ALTER, ``OPTIMIZE``'s ``num_files_replaced``, ``VACUUM``'s
+    ``num_files_removed``) is a nullable ``bigint`` column in a local
+    relation built from the count on the driver, so collecting it runs
+    no Spark job. The DML registry is process-scoped: a fresh process
+    must re-``register()`` handles before writing by name (reads need no
+    handle — the VIEW is durable).
     """
     m = _CREATE_TABLE_RE.match(text)
     if m:
@@ -3406,8 +3469,7 @@ def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
         if exists:
             if re.match(r"^\s*CREATE\s+TABLE\s+IF\s+NOT\s+EXISTS", text,
                         re.I):
-                return spark.createDataFrame(
-                    [(0,)], "num_affected_rows bigint")
+                return _count_frame(spark, "num_affected_rows", 0)
             raise ValueError(
                 f"table {name!r} is already registered — use CREATE TABLE "
                 "IF NOT EXISTS, or a different name")
@@ -3463,11 +3525,10 @@ def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
             cluster_method=opts.get("cluster_method", "linear"),
             table_type=opts.get("table_type", "cow"),
         )
-        df = _pin(spark.sql(m.group("query")))
-        n = df.count()
+        df, n, _ = _pin(spark.sql(m.group("query")))
         table.write(df, "bulk_insert")
         table.register(name)
-        return spark.createDataFrame([(n,)], "num_affected_rows bigint")
+        return _count_frame(spark, "num_affected_rows", n)
     m = _ALTER_CONSTRAINT_RE.match(text)
     if m:
         table = _dml_table(m.group("name"))
@@ -3476,7 +3537,7 @@ def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
         else:
             table.drop_constraint(
                 m.group("dname"), if_exists=bool(m.group("ifex")))
-        return spark.createDataFrame([(0,)], "num_affected_rows bigint")
+        return _count_frame(spark, "num_affected_rows", 0)
     m = _DESCRIBE_HISTORY_RE.match(text)
     if m:
         return _dml_table(m.group("name")).history()
@@ -3497,20 +3558,19 @@ def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
                 table.cluster_by, table.cluster_method = saved
         else:
             n = table.compact()
-        return spark.createDataFrame([(n,)], "num_files_replaced bigint")
+        return _count_frame(spark, "num_files_replaced", n)
     m = _VACUUM_RE.match(text)
     if m:
         table = _dml_table(m.group("name"))
         n = table.vacuum(
             keep_last=int(m.group("n")) if m.group("n") else 1)
-        return spark.createDataFrame([(n,)], "num_files_removed bigint")
+        return _count_frame(spark, "num_files_removed", n)
     m = _INSERT_RE.match(text)
     if m:
         table = _dml_table(m.group("name"))
         src = spark.sql(m.group("query"))
         cols = _split_top_level(m.group("cols")) if m.group("cols") else None
-        batch = _pin(_align_to_table(table, src, cols))
-        n = batch.count()
+        batch, n, _ = _pin(_align_to_table(table, src, cols))
         if m.group("mode").upper() == "OVERWRITE":
             # full-content replacement as ONE atomic commit with real
             # delete capture (write_txn: delete every current key, land
@@ -3519,12 +3579,12 @@ def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
             table.write_txn(upserts=batch, deletes=table.read())
         else:
             table.write(batch, "insert")
-        return spark.createDataFrame([(n,)], "num_affected_rows bigint")
+        return _count_frame(spark, "num_affected_rows", n)
     m = _DELETE_RE.match(text)
     if m:
         table = _dml_table(m.group("name"))
         n = table.delete_where(m.group("pred") or F.lit(True))
-        return spark.createDataFrame([(n,)], "num_affected_rows bigint")
+        return _count_frame(spark, "num_affected_rows", n)
     m = _UPDATE_RE.match(text)
     if m:
         table = _dml_table(m.group("name"))
@@ -3535,7 +3595,7 @@ def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
                 raise ValueError(f"cannot parse UPDATE assignment {part!r}")
             sets[col.strip().strip("`")] = expr.strip()
         n = table.update_where(m.group("pred") or F.lit(True), sets)
-        return spark.createDataFrame([(n,)], "num_affected_rows bigint")
+        return _count_frame(spark, "num_affected_rows", n)
     m = _MERGE_HEAD_RE.match(text)
     if m:
         table = _dml_table(m.group("name"))
@@ -3583,17 +3643,15 @@ def manifest_sql(spark: SparkSession, text: str) -> DataFrame:
                         f"MERGE source lacks table column(s) {missing} "
                         "(UPDATE SET * / INSERT * need every column)"
                     )
-                batch = _pin(source_df.select(*[
+                batch, n, _ = _pin(source_df.select(*[
                     F.col(f.name).cast(f.dataType).alias(f.name)
                     for f in fields
                 ]))
-                n = batch.count()
                 table.write(batch, "upsert")
-                return spark.createDataFrame(
-                    [(n,)], "num_affected_rows bigint")
+                return _count_frame(spark, "num_affected_rows", n)
         n = _merge_general(
             table, source_df, talias, salias, on_cond, clauses)
-        return spark.createDataFrame([(n,)], "num_affected_rows bigint")
+        return _count_frame(spark, "num_affected_rows", n)
     rewritten, drops = _rewrite_time_travel(spark, text)
     try:
         # spark.sql resolves the pinned temp views at ANALYSIS time;

@@ -1,13 +1,28 @@
-"""Phase-level timing of the manifest-family entries: wraps ManifestTable
-write/read phases with wall-clock marks to show where a multi-commit
-catalog entry spends its time (job launches vs fsync'd publishes).
+"""Phase-level timing of the manifest-family entries.
 
-Usage: python scripts/profile_manifest_phases.py
+Default mode wraps ManifestTable write/read phases with wall-clock marks
+to show where a multi-commit catalog entry spends its time (job launches
+vs fsync'd publishes).
+
+``--statements`` replays the ``dca_lakehouse`` benchmark's write traffic
+on one keyed table (keys ``(transaction_id, close_time)``, partitioned by
+``pair``, a one-file history back-fill) and prints, per operation, the
+Spark jobs it ran and its wall time: one pass is OPTIMIZE then three
+rounds of a one-transaction load and one DML statement (MERGE, UPDATE,
+DELETE in turn). Each operation's mean per statement is printed over
+``--passes`` passes after one warm-up pass. Jobs are counted from the
+DAG scheduler's job-id counter, so every job a statement started is
+seen, whichever thread started it.
+
+Usage:
+    python scripts/profile_manifest_phases.py
+    python scripts/profile_manifest_phases.py --statements [--passes N] [--seed S]
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -15,6 +30,78 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+
+
+def statements(passes: int, seed: int) -> None:
+    """Jobs and wall time per manifest statement, dca_lakehouse shape."""
+    from dca_manager_spark.io.manifest import manifest_sql
+    from dca_manager_spark.pipeline.load_transactions import load_transactions
+    from dca_manager_spark.session import get_session
+    from perfbench import checks, datagen
+
+    root = tempfile.mkdtemp(prefix="dca-statements-")
+    # the durable registration's catalog lives under the run's own dir
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.ui.showConsoleProgress=false "
+        f"--conf spark.sql.warehouse.dir={os.path.join(root, 'warehouse')} "
+        "pyspark-shell")
+    spark = get_session(app_name="profile-statements",
+                        shuffle_partitions=os.cpu_count() or 4)
+    spark.sparkContext.setLogLevel("ERROR")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    feed = datagen.TransactionFeed(seed, os.path.join(root, "feed"))
+    table_path = os.path.join(root, "table", "transactions")
+
+    def load(history: bool = False) -> None:
+        path, _ = feed.history() if history else feed.load()
+        load_transactions(spark, path, table_path, "upsert",
+                          table_name="transactions", database=None)
+
+    def sql(text: str) -> None:
+        manifest_sql(spark, text).collect()
+
+    def merge() -> None:
+        spark.createDataFrame(
+            checks.normalized(feed.merge_rows())
+        ).createOrReplaceTempView("merge_src")
+        sql("MERGE INTO transactions t USING merge_src s "
+            "ON t.transaction_id = s.transaction_id "
+            "AND t.close_time = s.close_time "
+            "WHEN MATCHED THEN UPDATE SET exchange_status = s.exchange_status, "
+            "fee = s.fee WHEN NOT MATCHED THEN INSERT *")
+
+    def update() -> None:
+        sql("UPDATE transactions SET exchange_status = 'reconciled' "
+            f"WHERE transaction_id = '{feed.pick_key()}'")
+
+    def delete() -> None:
+        key = feed.pick_key()
+        feed.forget(key)
+        sql(f"DELETE FROM transactions WHERE transaction_id = '{key}'")
+
+    one_pass = [("OPTIMIZE", lambda: sql("OPTIMIZE transactions"))]
+    for name, dml in (("MERGE", merge), ("UPDATE", update), ("DELETE", delete)):
+        one_pass += [("load", load), (name, dml)]
+    order = ["load", "MERGE", "UPDATE", "DELETE", "OPTIMIZE"]
+    totals = {op: [0, 0, 0.0] for op in order}  # runs, jobs, seconds
+    try:
+        load(history=True)
+        for i in range(passes + 1):  # pass 0 warms up and is not counted
+            for op, run in one_pass:
+                j0, t0 = dag.nextJobId(), time.perf_counter()
+                run()
+                if i:
+                    totals[op][0] += 1
+                    totals[op][1] += dag.nextJobId() - j0
+                    totals[op][2] += time.perf_counter() - t0
+    finally:
+        spark.stop()
+        shutil.rmtree(root, ignore_errors=True)
+    print(f"{'operation':>10} {'jobs':>6} {'ms':>8}   "
+          f"(per statement, mean over {passes} pass(es))")
+    for op in order:
+        runs, jobs, secs = totals[op]
+        print(f"{op:>10} {jobs / runs:6.1f} {1000 * secs / runs:8.0f}")
 
 
 def main() -> None:
@@ -105,4 +192,16 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    import argparse
+
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--statements", action="store_true",
+                    help="jobs and wall time per dca_lakehouse statement")
+    ap.add_argument("--passes", type=int, default=3,
+                    help="measured passes in --statements mode")
+    ap.add_argument("--seed", type=int, default=601)
+    args = ap.parse_args()
+    if args.statements:
+        statements(args.passes, args.seed)
+    else:
+        main()

@@ -1428,3 +1428,146 @@ def test_shallow_clone_mor_writes_supersede_cloned_deltas(spark, tmp_path):
     assert {r.transaction_id: r.price for r in src.read().collect()} == {
         "T1": 5.0
     }
+
+
+def _distinct_touched(df, cols):
+    """The touched-partition set as a separate distinct() collect
+    computes it — what the pin's observation must equal."""
+    from dca_manager_spark.io.manifest import _partition_key
+
+    return {
+        tuple(_partition_key(r[c]) for c in cols)
+        for r in df.select(*cols).distinct().collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "shape", ["null_partition", "empty", "zero_partitions", "local_relation",
+              "boolean_and_date"])
+def test_pin_observes_rows_and_touched_partitions(spark, shape, count_jobs):
+    """One pin job yields the row count and the touched-partition set,
+    equal to a count() and a distinct().collect() of the same rows, for
+    every frame shape a commit can pin."""
+    import pyarrow as pa
+
+    from dca_manager_spark.io.manifest import _pin
+
+    cols = ["pair"]
+    if shape == "null_partition":
+        frame = make_df(spark, [("T1", TS1, "BTCGBP", 1.0),
+                                ("T2", TS1, None, 2.0),
+                                ("T3", TS1, "BTCGBP", 3.0)])
+    elif shape == "empty":
+        frame = make_df(spark, [("T1", TS1, "BTCGBP", 1.0)]).filter("price > 9")
+    elif shape == "zero_partitions":
+        frame = spark.createDataFrame(
+            spark.sparkContext.emptyRDD(), make_df(spark, []).schema)
+    elif shape == "local_relation":
+        frame = spark.createDataFrame(pa.table({
+            "transaction_id": ["T1", "T2"], "pair": ["ETHGBP", None]}))
+    else:
+        cols = ["flag", "day"]
+        frame = spark.createDataFrame(
+            [(True, datetime.date(2024, 1, 1)), (False, None),
+             (True, datetime.date(2024, 1, 1))], "flag boolean, day date")
+    pinned, jobs = count_jobs(lambda: _pin(frame, cols))
+    assert jobs <= 1
+    assert pinned.rows == frame.count()
+    assert pinned.parts == _distinct_touched(frame, cols)
+    assert pinned.df.count() == pinned.rows
+    assert _pin(frame).parts == frozenset()
+
+
+def test_rebase_retry_reuses_the_pinned_partition_set(
+    spark, table, monkeypatch, count_jobs
+):
+    """A COW upsert pins its batch once, before the rebase loop: a retry
+    after a lost race splits the files by the SAME observed partition
+    set, and the split itself runs no Spark job."""
+    from dca_manager_spark.io import manifest as M
+
+    table.write(make_df(spark, [("T1", TS1, "BTCGBP", 1.0),
+                                ("T2", TS1, "ETHGBP", 2.0)]), "upsert")
+    rival = ManifestTable(spark, table.path, keys=table.keys,
+                          precombine=table.precombine,
+                          partition_by=table.partition_by)
+    pins, splits = [], []
+    orig_pin, orig_split = M._pin, ManifestTable._split_by_touch
+    orig_publish = ManifestTable._publish
+
+    def pin(df, *args):
+        pins.append(orig_pin(df, *args))
+        return pins[-1]
+
+    def split(self, touched, prev_doc):
+        out, jobs = count_jobs(lambda: orig_split(self, touched, prev_doc))
+        splits.append((touched, jobs))
+        return out
+
+    def raced_once(self, *args, **kw):
+        if self is table and table.rebase_count == 0 and len(splits) == 1:
+            # the rival's append pins nothing and splits nothing
+            rival.write(make_df(spark, [("T9", TS1, "ETHGBP", 9.0)]), "insert")
+        return orig_publish(self, *args, **kw)
+
+    monkeypatch.setattr(M, "_pin", pin)
+    monkeypatch.setattr(ManifestTable, "_split_by_touch", split)
+    monkeypatch.setattr(ManifestTable, "_publish", raced_once)
+    table.write(make_df(spark, [("T1", TS1, "BTCGBP", 5.0)]), "upsert")
+    monkeypatch.undo()
+    assert table.rebase_count == 1
+    assert len(pins) == 1 and pins[0].parts == {("BTCGBP",)}
+    assert [s[0] for s in splits] == [pins[0].parts] * 2
+    assert [s[1] for s in splits] == [0, 0]
+    rows = {r.transaction_id: r.price for r in table.read().collect()}
+    assert rows == {"T1": 5.0, "T2": 2.0, "T9": 9.0}
+
+
+def test_cow_upsert_emits_no_user_warning(spark, table):
+    """The COW commit's pool threads inherit the caller's properties
+    and tags through the session, so the commit warns nothing."""
+    import warnings
+
+    table.write(make_df(spark, [("T1", TS1, "BTCGBP", 1.0)]), "upsert")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        table.write(make_df(spark, [("T1", TS1, "BTCGBP", 2.0),
+                                    ("T2", TS1, "ETHGBP", 3.0)]), "upsert")
+    assert [str(w.message) for w in caught
+            if issubclass(w.category, UserWarning)] == []
+    assert {r.transaction_id: r.price for r in table.read().collect()} == {
+        "T1": 2.0, "T2": 3.0}
+
+
+def test_empty_reads_are_local_relations(spark, table, count_jobs):
+    """An empty change feed or an emptied table reads as a local
+    relation: collecting it runs no Spark job, under the committed
+    schema."""
+    table.write(make_df(spark, [("T1", TS1, "BTCGBP", 1.0)]), "upsert")
+    head = table.commits()[-1]
+    schema = table.read().schema
+    for frame in (table.read_incremental(head),
+                  table.read_incremental(head, records=True)):
+        assert frame.schema == schema
+        assert count_jobs(frame.collect) == ([], 0)
+    cdc = table.read_cdc(head)
+    assert cdc.columns[-2:] == ["_change_type", "_commit"]
+    assert count_jobs(cdc.collect) == ([], 0)
+    table.write(make_df(spark, [("T1", TS1, "BTCGBP", 0.0)]), "delete")
+    empty = table.read()
+    assert empty.schema == schema
+    assert count_jobs(empty.collect) == ([], 0)
+
+
+def test_empty_read_of_a_type_arrow_cannot_hold(spark, tmp_path):
+    """A committed column Arrow cannot carry (a year-month interval,
+    which parquet stores) still reads empty under its committed type."""
+    t = ManifestTable(spark, str(tmp_path / "ym"), keys=("id",),
+                      precombine="id", partition_by=())
+    t.write(spark.sql(
+        "SELECT 1 AS id, INTERVAL '1-2' YEAR TO MONTH AS span"), "upsert")
+    t.write(spark.sql("SELECT 1 AS id"), "delete")
+    empty = t.read()
+    assert empty.schema["span"].dataType.simpleString() == (
+        "interval year to month")
+    assert empty.collect() == []

@@ -1014,13 +1014,13 @@ def test_manifest_sql_merge_plan_broadcasts_small_source(spark, dml):
     captured = {}
     orig = M._pin
 
-    def spy(df):
+    def spy(df, *args):
         # the flat projection is the only multi-column _pin in the
         # general path whose plan contains the join
         captured.setdefault("plans", []).append(
             df._jdf.queryExecution().executedPlan().toString()
             if hasattr(df, "_jdf") else "")
-        return orig(df)
+        return orig(df, *args)
 
     M._pin = spy
     try:
@@ -1074,3 +1074,73 @@ def test_manifest_sql_alter_constraint(spark, dml, tmp_path):
     r = manifest_sql(
         spark, "ALTER TABLE dml_t DROP CONSTRAINT IF EXISTS nope")
     assert r.collect()[0].num_affected_rows == 0
+
+
+def test_manifest_sql_results_collect_without_a_job(spark, dml, count_jobs):
+    """Every statement result is a local relation: collecting it runs no
+    Spark job, and its column keeps the ``<name> bigint`` nullable
+    schema."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from dca_manager_spark.io.manifest import manifest_sql
+
+    spark.createDataFrame(
+        [(2, 20.0, "m"), (5, 5.0, "n")], "id int, v double, s string"
+    ).createOrReplaceTempView("jobs_src")
+    statements = [
+        ("INSERT INTO dml_t VALUES (3, 3.0, 'c')", "num_affected_rows", 1),
+        ("UPDATE dml_t SET s = 'u' WHERE id = 1", "num_affected_rows", 1),
+        ("DELETE FROM dml_t WHERE id = 3", "num_affected_rows", 1),
+        ("MERGE INTO dml_t t USING jobs_src s ON t.id = s.id "
+         "WHEN MATCHED THEN UPDATE SET v = s.v "
+         "WHEN NOT MATCHED THEN INSERT *", "num_affected_rows", 2),
+        ("MERGE INTO dml_t t USING jobs_src s ON t.id = s.id "
+         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+         "num_affected_rows", 2),
+        ("OPTIMIZE dml_t", "num_files_replaced", None),
+        ("VACUUM dml_t RETAIN 1 COMMITS", "num_files_removed", None),
+        ("ALTER TABLE dml_t ADD CONSTRAINT v_pos CHECK (v > 0)",
+         "num_affected_rows", 0),
+    ]
+    for text, name, want in statements:
+        result = manifest_sql(spark, text)
+        rows, jobs = count_jobs(result.collect)
+        assert jobs == 0, text
+        assert result.schema == StructType(
+            [StructField(name, LongType(), True)]), text
+        assert len(rows) == 1, text
+        if want is not None:
+            assert rows[0][name] == want, text
+        else:
+            assert rows[0][name] > 0, text
+
+
+def test_cow_statement_job_counts(spark, cow, count_jobs):
+    """On a partitioned COW table each statement's pin job also yields its
+    row count and touched partitions, and its result is a local
+    relation: an upsert, an UPDATE and a DELETE run exactly these many
+    jobs, result collect included. The rest are the commit's own pins,
+    adaptive map stages and writes (data files, change files)."""
+    from dca_manager_spark.io.manifest import manifest_sql
+
+    cow.write(make_df(spark, [
+        ("T1", TS1, "BTCGBP", 1.0), ("T2", TS1, "ETHGBP", 5.0),
+        ("T3", TS1, "BTCGBP", 2.0)]), "bulk_insert")
+    name = f"mt_jobs_{uuid.uuid4().hex[:8]}"
+    cow.register(name)
+    try:
+        up = make_df(spark, [("T1", TS1, "BTCGBP", 9.0), ("T4", TS1, "BTCGBP", 4.0)])
+        _, jobs = count_jobs(lambda: cow.write(up, "upsert"))
+        assert jobs == 10
+        rows, jobs = count_jobs(lambda: manifest_sql(
+            spark, f"UPDATE {name} SET price = 7.0 WHERE transaction_id = 'T2'"
+        ).collect())
+        assert (rows[0].num_affected_rows, jobs) == (1, 11)
+        rows, jobs = count_jobs(lambda: manifest_sql(
+            spark, f"DELETE FROM {name} WHERE transaction_id = 'T3'"
+        ).collect())
+        assert (rows[0].num_affected_rows, jobs) == (1, 9)
+        assert sql_rows(spark, name) == {
+            ("T1", "BTCGBP", 9.0), ("T2", "ETHGBP", 7.0), ("T4", "BTCGBP", 4.0)}
+    finally:
+        cow.unregister(name)
