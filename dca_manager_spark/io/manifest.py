@@ -2241,7 +2241,7 @@ class ManifestTable:
         from pyspark import inheritable_thread_target as _itt
 
         changes: dict[str, list[str]] = {"upserts": [], "deletes": []}
-        # Submitted callables are wrapped with
+        # Each submitted callable is wrapped with
         # pyspark.inheritable_thread_target, given the session: under
         # pinned-thread mode plain pool threads inherit NO local
         # properties — the caller's job group / scheduler pool would not
@@ -2249,8 +2249,12 @@ class ManifestTable:
         # write jobs — and without the session the caller's
         # ``spark.addTag`` tags would not reach them either (and every
         # wrap warns). The wrapper also hands thread-lifecycle cleanup to
-        # py4j instead of GC.
-        inherit = _itt(self.spark)
+        # py4j instead of GC. ``_itt(self.spark)`` clones the caller's
+        # local properties once per call, so each callable gets its own:
+        # threads sharing one copy restore each other's execution id, job
+        # tags and SQL confs mid-write.
+        def inherit(fn):
+            return _itt(self.spark)(fn)
         with ThreadPoolExecutor(4) as pool:
             pending = {}
             if ups is not None:

@@ -10,13 +10,13 @@ on one keyed table (keys ``(transaction_id, close_time)``, partitioned by
 Spark jobs it ran and its wall time: one pass is OPTIMIZE then three
 rounds of a one-transaction load and one DML statement (MERGE, UPDATE,
 DELETE in turn). Each operation's mean per statement is printed over
-``--passes`` passes after one warm-up pass. Jobs are counted from the
-DAG scheduler's job-id counter, so every job a statement started is
-seen, whichever thread started it.
+five passes after one warm-up pass, with the feed seeded 601. Jobs are
+counted from the DAG scheduler's job-id counter, so every job a
+statement started is seen, whichever thread started it.
 
 Usage:
     python scripts/profile_manifest_phases.py
-    python scripts/profile_manifest_phases.py --statements [--passes N] [--seed S]
+    python scripts/profile_manifest_phases.py --statements
 """
 
 from __future__ import annotations
@@ -32,7 +32,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 
-def statements(passes: int, seed: int) -> None:
+STATEMENT_SEED = 601
+STATEMENT_PASSES = 5
+
+
+def statements() -> None:
     """Jobs and wall time per manifest statement, dca_lakehouse shape."""
     from dca_manager_spark.io.manifest import manifest_sql
     from dca_manager_spark.pipeline.load_transactions import load_transactions
@@ -49,7 +53,7 @@ def statements(passes: int, seed: int) -> None:
                         shuffle_partitions=os.cpu_count() or 4)
     spark.sparkContext.setLogLevel("ERROR")
     dag = spark.sparkContext._jsc.sc().dagScheduler()
-    feed = datagen.TransactionFeed(seed, os.path.join(root, "feed"))
+    feed = datagen.TransactionFeed(STATEMENT_SEED, os.path.join(root, "feed"))
     table_path = os.path.join(root, "table", "transactions")
 
     def load(history: bool = False) -> None:
@@ -86,7 +90,7 @@ def statements(passes: int, seed: int) -> None:
     totals = {op: [0, 0, 0.0] for op in order}  # runs, jobs, seconds
     try:
         load(history=True)
-        for i in range(passes + 1):  # pass 0 warms up and is not counted
+        for i in range(STATEMENT_PASSES + 1):  # pass 0 warms up, uncounted
             for op, run in one_pass:
                 j0, t0 = dag.nextJobId(), time.perf_counter()
                 run()
@@ -98,7 +102,7 @@ def statements(passes: int, seed: int) -> None:
         spark.stop()
         shutil.rmtree(root, ignore_errors=True)
     print(f"{'operation':>10} {'jobs':>6} {'ms':>8}   "
-          f"(per statement, mean over {passes} pass(es))")
+          f"(per statement, mean over {STATEMENT_PASSES} passes)")
     for op in order:
         runs, jobs, secs = totals[op]
         print(f"{op:>10} {jobs / runs:6.1f} {1000 * secs / runs:8.0f}")
@@ -197,11 +201,8 @@ if __name__ == "__main__":
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--statements", action="store_true",
                     help="jobs and wall time per dca_lakehouse statement")
-    ap.add_argument("--passes", type=int, default=3,
-                    help="measured passes in --statements mode")
-    ap.add_argument("--seed", type=int, default=601)
     args = ap.parse_args()
     if args.statements:
-        statements(args.passes, args.seed)
+        statements()
     else:
         main()

@@ -1539,6 +1539,40 @@ def test_cow_upsert_emits_no_user_warning(spark, table):
         "T1": 2.0, "T2": 3.0}
 
 
+def test_cow_commit_jobs_carry_the_callers_tag(spark, table):
+    """Every job of a partitioned COW upsert, the commit's concurrent
+    write threads included, runs under the caller's job group and
+    carries its ``spark.addTag`` tag, so cancelJobGroup and interruptTag
+    reach all of them: each write thread applies its own copy of the
+    caller's local properties, which no sibling's execution restores."""
+    import uuid
+
+    table.write(make_df(spark, [("T1", TS1, "BTCGBP", 1.0),
+                                ("T2", TS1, "ETHGBP", 1.0)]), "upsert")
+    sc = spark.sparkContext
+    tag, group = f"tag_{uuid.uuid4().hex}", f"group_{uuid.uuid4().hex}"
+    spark.addTag(tag)
+    sc.setJobGroup(group, "tagged commit")
+    try:
+        table.write(make_df(spark, [("T1", TS1, "BTCGBP", 2.0),
+                                    ("T3", TS1, "XRPGBP", 3.0)]), "upsert")
+    finally:
+        sc.setJobGroup(None, None)
+        spark.removeTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    to_java = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    session_tag = spark._jsparkSession.sessionJobTag()
+    jobs = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    untagged = []
+    for j in jobs:
+        tags = list(to_java(jsc.statusStore().job(j).jobTags()))
+        if session_tag not in tags or not any(
+                t.endswith(f"-{tag}") for t in tags):
+            untagged.append(j)
+    assert jobs and untagged == []
+
+
 def test_empty_reads_are_local_relations(spark, table, count_jobs):
     """An empty change feed or an emptied table reads as a local
     relation: collecting it runs no Spark job, under the committed

@@ -488,7 +488,7 @@ def test_register_rejects_unsafe_data_path(spark, tmp_path):
 
 
 @pytest.mark.parametrize("kind", ["cow", "mor"])
-def test_registered_name_analysis_runs_no_job(spark, request, kind):
+def test_registered_name_analysis_runs_no_job(spark, request, kind, count_jobs):
     """The snapshot table declares its schema, so analysing a query on a
     registered name infers nothing from parquet footers: no Spark job
     runs until an action."""
@@ -500,14 +500,11 @@ def test_registered_name_analysis_runs_no_job(spark, request, kind):
     t.write(make_df(spark, [("T1", TS1, "BTCGBP", 9.0)]), "upsert")
     name = f"mt_nojob_{kind}"
     t.register(name)
-    sc = spark.sparkContext
-    group = f"{name}_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "analysis only")
     try:
-        df = spark.sql(f"SELECT price FROM {name} WHERE transaction_id = 'T1'")
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        df, jobs = count_jobs(lambda: spark.sql(
+            f"SELECT price FROM {name} WHERE transaction_id = 'T1'"))
+        assert jobs == 0
     finally:
-        sc.setJobGroup(None, None)
         t.unregister(name)
     assert [r.price for r in df.collect()] == [9.0]
 

@@ -134,25 +134,21 @@ WIDTH_CASES = {
 
 
 @pytest.mark.parametrize("name", list(WIDTH_CASES))
-def test_partition_width_from_plan_size(spark, tmp_path, name):
+def test_partition_width_from_plan_size(spark, tmp_path, name, count_jobs):
     """spread decides from the optimized plan's leaf sizes alone: leaves
     that scan as >= defaultParallelism splits make it a no-op; small or
     unknown leaves give one round-robin exchange to defaultParallelism.
     keyed_width is defaultParallelism. Neither runs a Spark job."""
     build, spreads = WIDTH_CASES[name]
     df = build(spark, tmp_path)
-    sc = spark.sparkContext
-    dp = sc.defaultParallelism
-    group = f"width-rule-{name}"
-    sc.setJobGroup(group, "partition-width rule")
-    try:
-        width = keyed_width(df)
-        rr = f"RoundRobinPartitioning({dp})"
+    dp = spark.sparkContext.defaultParallelism
+    rr = f"RoundRobinPartitioning({dp})"
+
+    def rule():
         added = physical_plan(spread(df)).count(rr) - physical_plan(df).count(rr)
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        return keyed_width(df), added
+
+    (width, added), jobs = count_jobs(rule)
+    assert jobs == 0
     assert width == dp
     assert added == int(spreads)
