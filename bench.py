@@ -143,6 +143,11 @@ def _perf_variants():
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from dca_manager_spark.plans.queries import get_queries
+    from dca_manager_spark.profiling import (
+        jvm_cpu_seconds,
+        persistent_ids,
+        release_storage,
+    )
     from dca_manager_spark.session import get_bench_session
 
     spark = get_bench_session()
@@ -186,54 +191,19 @@ def main() -> None:
     # JVM's process CPU time per entry do that directly: under external
     # contention, wall time inflates while the entry's own CPU stays
     # flat, so cpu/wall drops and loadavg exceeds the core count.
-    # (py4j cannot dispatch com.sun.management interface methods on the
-    # platform MX bean, so read the JVM's utime+stime from /proc — in
-    # local mode all executor work happens in that one JVM process.)
-    try:
-        _jvm_pid = int(
-            spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
-        )
-        _clk = os.sysconf("SC_CLK_TCK")
-    except Exception:
-        _jvm_pid = None
-
-    def jvm_cpu_sec() -> float | None:
-        if _jvm_pid is None:
-            return None
-        try:
-            with open(f"/proc/{_jvm_pid}/stat") as fh:
-                parts = fh.read().rsplit(")", 1)[1].split()
-            # fields after comm: utime is index 11, stime 12 (0-based)
-            return (int(parts[11]) + int(parts[12])) / _clk
-        except Exception:
-            return None
-
+    # (dca_manager_spark.profiling reads the JVM's utime+stime; in local
+    # mode all executor work happens in that one JVM process.)
     load_ctx: dict[str, dict] = {}
 
-    def persistent_ids() -> frozenset:
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        return frozenset(int(k) for k in m.keySet().toArray())
-
-    def release_storage(protected: frozenset = frozenset()) -> None:
-        # Release an entry's localCheckpoint blocks EXPLICITLY once its
-        # samples are done. gc.collect() alone leaves it to the async
-        # ContextCleaner (and to py4j reference lifetimes), and the leak
-        # is measurable: r15 measured dedup_semantic at 9.6s inside a
-        # dirty 180-entry sweep vs 3.4s solo — leaked checkpoint storage
-        # from earlier entries inflates later ones via executor GC
-        # pressure (same mechanism found in scripts/scale_curve.py;
-        # Dataset.unpersist does NOT free a localCheckpoint's RDD).
-        # Scope is PER ENTRY, never per sample: steady-state entries
-        # (dedup_incremental_steady_xxh64) build a pinned index on their
-        # first sample and reuse it across the block — a per-sample
-        # blanket unpersist kills those blocks mid-entry
-        # (checkpointRDDBlockIdNotFound, found the hard way).
-        # ``protected`` = blocks that existed before the entry started.
-        gc.collect()
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        for k in m.keySet().toArray():
-            if int(k) not in protected:
-                m.get(k).unpersist(True)
+    # Each entry's localCheckpoint blocks are released EXPLICITLY once
+    # its samples are done (release_storage). gc.collect() alone leaves
+    # it to the async ContextCleaner, and the leak is measurable: r15
+    # measured dedup_semantic at 9.6s inside a dirty 180-entry sweep vs
+    # 3.4s solo. Scope is PER ENTRY, never per sample: steady-state
+    # entries (dedup_incremental_steady_xxh64) build a pinned index on
+    # their first sample and reuse it across the block — a per-sample
+    # blanket unpersist kills those blocks mid-entry
+    # (checkpointRDDBlockIdNotFound, found the hard way).
 
     def time_one(name: str) -> None:
         start = time.perf_counter()
@@ -241,16 +211,16 @@ def main() -> None:
         samples[name].append(time.perf_counter() - start)
 
     for name in names:
-        pre_entry = persistent_ids()
+        pre_entry = persistent_ids(spark)
         load1 = os.getloadavg()[0]
-        cpu0 = jvm_cpu_sec()
+        cpu0 = jvm_cpu_seconds(spark)
         wall0 = time.perf_counter()
         for _ in range(RUNS):
             time_one(name)
         while min(samples[name]) > HEAVY_SEC and len(samples[name]) < RUNS + EXTRA_HEAVY:
             time_one(name)
         wall = time.perf_counter() - wall0
-        cpu1 = jvm_cpu_sec()
+        cpu1 = jvm_cpu_seconds(spark)
         load_ctx[name] = {
             "loadavg1_at_start": round(load1, 2),
             "jvm_cpu_sec": (
@@ -261,7 +231,7 @@ def main() -> None:
                 if cpu0 is not None and wall > 0 else None
             ),
         }
-        release_storage(pre_entry)
+        release_storage(spark, pre_entry)
 
     timings: dict[str, float] = {}
     stats: dict[str, dict] = {}

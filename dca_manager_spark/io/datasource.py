@@ -641,17 +641,16 @@ class _ManifestWriterBase:
             partition_by=tuple(self.partition_by),
         )
 
-    def _publish_append(self, entries: list[dict], extra: dict | None) -> None:
+    def _publish_append(
+        self, entries: list[dict], stream_mark: tuple[str, int] | None
+    ) -> None:
         table = self._table()
-        stream_mark = (
-            (extra["stream_sink"], int(extra["stream_batch"])) if extra else None
-        )
         deleted = {e["path"] for e in entries if e.pop("__delete", False)}
 
         def attempt(prev) -> None:
             prev_id, prev_doc = prev if prev else (None, None)
             prev_files = prev_doc["files"] if prev_doc else []
-            if stream_mark and self._already_published(table, prev_doc, stream_mark):
+            if stream_mark and self._already_published(prev_doc, stream_mark):
                 return  # replayed micro-batch: publish is already durable
             # Entries are re-tagged from the executor's originals on every
             # attempt: the MOR decision and next_id move with the head.
@@ -692,33 +691,24 @@ class _ManifestWriterBase:
                 table._merge_schema_json(prev_doc, self.table_schema),
                 changes={"upserts": ups, "deletes": dels},
                 op="upsert" if self.keys else "append",
-                extra=extra,
                 stream_mark=stream_mark,
             )
 
         table._rebase("sink batch", attempt, retries=self.retries)
 
     @staticmethod
-    def _already_published(table, prev_doc, stream_mark: tuple[str, int]) -> bool:
+    def _already_published(prev_doc, stream_mark: tuple[str, int]) -> bool:
         """A micro-batch is a replay iff its batch id is at or below the
         table's high-water mark for this sink. The mark rides in EVERY
         manifest (``stream_marks``, carried forward by all commit paths),
         so it survives vacuum() pruning the manifest that originally
         published the batch — a replay after vacuum used to double-append
         (ADVICE r15) — and the check is O(1), not a scan of all retained
-        manifests. Pre-map tables fall back to the legacy per-commit scan
-        once; their next commit writes the migrated map."""
+        manifests."""
         if prev_doc is None:
             return False
         sink, batch = stream_mark
-        marks = prev_doc.get("stream_marks")
-        if marks is None:  # table written before the high-water map existed
-            for mid in reversed(table._manifest_ids()):
-                doc = table._load_manifest(mid)
-                if doc.get("stream_batch") == batch and doc.get("stream_sink") == sink:
-                    return True
-            return False
-        return batch <= marks.get(sink, -1)
+        return batch <= prev_doc["stream_marks"].get(sink, -1)
 
     def _abort(self, messages) -> None:
         for e in self._entries(messages):
@@ -727,7 +717,7 @@ class _ManifestWriterBase:
 
 class ManifestBatchWriter(_ManifestWriterBase, DataSourceWriter):
     def commit(self, messages) -> None:
-        self._publish_append(self._entries(messages), extra=None)
+        self._publish_append(self._entries(messages), None)
 
     def abort(self, messages) -> None:
         self._abort(messages)
@@ -759,10 +749,7 @@ class ManifestStreamWriter(_ManifestWriterBase, DataSourceStreamWriter):
             ).hexdigest()[:16]
 
     def commit(self, messages, batchId: int) -> None:
-        self._publish_append(
-            self._entries(messages),
-            extra={"stream_batch": int(batchId), "stream_sink": self.sink_id},
-        )
+        self._publish_append(self._entries(messages), (self.sink_id, int(batchId)))
 
     def abort(self, messages, batchId: int) -> None:
         self._abort(messages)

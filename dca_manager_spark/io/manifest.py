@@ -576,30 +576,13 @@ class ManifestTable:
     ) -> dict[str, int]:
         """High-water map {sink_id: max committed stream batch id} for the
         next manifest: the previous manifest's map carried forward,
-        optionally advanced by this commit's (sink, batch). Tables written
-        before the map existed are migrated once — the retained manifests
-        are scanned for legacy per-commit stream_batch/stream_sink keys —
-        and every manifest after that carries the key (possibly empty), so
-        the scan never repeats."""
+        optionally advanced by this commit's (sink, batch)."""
         marks: dict[str, int] = {}
         if prev_id is not None:
             try:
-                prev_doc = self._load_manifest(prev_id)
+                marks = dict(self._load_manifest(prev_id)["stream_marks"])
             except FileNotFoundError:
-                prev_doc = None  # clone publishes a synthetic prev id
-            if prev_doc is not None:
-                if "stream_marks" in prev_doc:
-                    marks = dict(prev_doc["stream_marks"])
-                else:
-                    # one-time migration from the legacy per-commit keys
-                    for mid in self._manifest_ids():
-                        try:
-                            doc = self._load_manifest(mid)
-                        except FileNotFoundError:
-                            continue
-                        sink, batch = doc.get("stream_sink"), doc.get("stream_batch")
-                        if sink is not None and batch is not None:
-                            marks[sink] = max(marks.get(sink, -1), int(batch))
+                pass  # clone publishes a synthetic prev id
         if stream_mark is not None:
             sink, batch = stream_mark
             marks[sink] = max(marks.get(sink, -1), int(batch))
@@ -612,7 +595,6 @@ class ManifestTable:
         schema_json: str,
         changes: dict | None = None,
         op: str = "unknown",
-        extra: dict | None = None,
         stream_mark: tuple[str, int] | None = None,
     ) -> int:
         """Atomic put-if-absent of the next manifest. O_EXCL is the local
@@ -645,19 +627,6 @@ class ManifestTable:
             "op": op,
             "stream_marks": self._carry_stream_marks(prev_id, stream_mark),
         }
-        if extra:
-            # commit-scoped metadata (e.g. the stream writer's batch id
-            # for replay idempotence) — reserved keys stay reserved.
-            # Explicit raise, NOT assert: a colliding key silently
-            # overwriting core manifest fields under `python -O` would
-            # corrupt the table (ADVICE r15).
-            clash = set(extra) & set(doc)
-            if clash:
-                raise ValueError(
-                    f"commit-scoped extra metadata collides with reserved "
-                    f"manifest keys: {sorted(clash)}"
-                )
-            doc.update(extra)
         if self.bloom_by:
             # persist the bloom config so plain handles inherit it
             # (see __init__ / _sync_bloom_config)

@@ -1135,7 +1135,6 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    rounds = 0
     for _ in range(max_iter):
         # LAZY checkpoint: the certificate's take(1) below is the round's
         # materializing action — its groupBy shuffle computes every edge
@@ -1145,7 +1144,6 @@ def connected_components(
         # frame only; per-round frames scan the previous round's
         # already-checkpointed RDD — no union to rewrite.)
         edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        rounds += 1
         # Star-forest certificate over the cached round output: one
         # role-tagged union + groupBy (tiny next to a round — it scans
         # checkpointed 2-column rows, no joins).
@@ -1183,7 +1181,6 @@ def connected_components(
         "__id",
         F.coalesce("__root", F.col("__id")).cast("long").alias("component"),
     ).localCheckpoint(eager=False)
-    labels._cc_rounds = rounds  # observability for the chain stress test
     return labels
 
 

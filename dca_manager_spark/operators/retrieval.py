@@ -40,7 +40,6 @@ def tfidf_topk(
     k: int = 5,
     idf: str = "ratio",
     min_df: int = 1,
-    materialize_tf: bool = True,
 ) -> DataFrame:
     """Top-``k`` TF-IDF terms per document.
 
@@ -62,19 +61,15 @@ def tfidf_topk(
     ``idf="ratio"``: (N+1)/(df+1), exact IEEE division, hash-stable across
     engines. ``idf="log"``: ln((N+1)/(df+1)) + 1 (smooth idf, sklearn-style)
     for production scoring.
-
-    ``materialize_tf=False`` skips the barrier and recomputes the explode
-    under the df branch instead — the right trade when the (doc, token)
-    frame would overflow executor local storage (it is disk-backed, but a
-    100 TB corpus's pair frame can still dominate): 2x tokenize CPU for
-    zero pinned bytes.
     """
     if idf not in ("ratio", "log"):
         raise ValueError(f"idf must be 'ratio' or 'log', got {idf!r}")
     terms = _term_frame(df, id_col, text_col)
-    tf = terms.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
-    if materialize_tf:
-        tf = tf.localCheckpoint(eager=False)
+    tf = (
+        terms.groupBy(id_col, "token")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .localCheckpoint(eager=False)
+    )
     df_t = (
         tf.groupBy("token")
         .agg(F.count(F.lit(1)).alias("df"))

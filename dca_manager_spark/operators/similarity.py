@@ -26,7 +26,15 @@ Two bit-identical quantized-dot kernels, one per call site:
   ``cosine_pairs``, ``cosine_pairs_lsh``, ``cosine_cross_lsh`` (and so
   ``decontaminate_embeddings``), ``embedding_index`` admission, and both
   the routing and the within-cell verify of ``semantic_dedup``.
-Sign-LSH signatures always use ``sign_lsh_signature_arrow``. The Arrow
+Sign-LSH signatures always use ``sign_lsh_signature_arrow``.
+
+One row rule: every Arrow UDF here (``qdot_arrow``, the signature, the
+PQ encoders and LUT) computes only on rows ``_vector_rows`` accepts and
+gives the others a null result instead of failing the batch. A null
+signature never matches a bucket join, a null code or LUT scores null,
+``qnorm`` is null on a null or non-finite vector and the fold ``qdot``
+of two vectors of different lengths is null, so a null, ragged or
+non-finite vector never ranks with a non-null cosine. The Arrow
 kernel wins on wide pair streams; on the broadcast top-k and routing
 shapes the Python-worker round trip costs more than the fold. Measured
 on 4 cores (median of 7 and 5 alternating runs, results equal): moving
@@ -38,9 +46,14 @@ on 4 cores (median of 7 and 5 alternating runs, results equal): moving
 
 from __future__ import annotations
 
+from collections import Counter
+from typing import NamedTuple
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 SCALE = 1_000_000_000_000  # 1e12: float32 products keep full precision
 
@@ -50,9 +63,17 @@ def as_double_vec(col: Column) -> Column:
 
 
 def qnorm(col: Column) -> Column:
-    """Quantized squared norm: sum of floor(x*x*1e12) as long."""
+    """Quantized squared norm: sum of floor(x*x*1e12) as long. Null for a
+    null vector and for one with a null, NaN or Inf element (the rows
+    ``_vector_rows`` rejects), so every ``qcosine`` through it is null:
+    the fold alone would count a NaN element as 0."""
+
+    def term(x: Column) -> Column:
+        p = x * x * F.lit(SCALE)
+        return F.when(p < F.lit(float("inf")), F.floor(p)).cast("long")
+
     return F.aggregate(
-        F.transform(as_double_vec(col), lambda x: F.floor(x * x * F.lit(SCALE)).cast("long")),
+        F.transform(as_double_vec(col), term),
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
@@ -235,32 +256,26 @@ def qdot_arrow() -> "F.Column":
     faster on wide pair joins — the one place Python earns its seat in the
     row path.
 
-    Row contract (the fold's): null when either side is null, the lengths
-    differ, or an element is null; 0 for two empty vectors. Rows are
-    grouped by width and each group is one vectorized pass (a uniform
-    batch is one group). The one difference from the fold: a row with a
-    NaN/Inf element is null here, where the fold saturates to a number
-    (a null element arrives as NaN, so it is null in both)."""
-    import numpy as np
+    Row contract: ``_vector_rows`` on both sides, so null when either
+    side is null, the lengths differ, or an element is null, NaN or Inf;
+    0 for two empty vectors. Rows are grouped by width and each group is
+    one vectorized pass (a uniform batch is one group). The one
+    difference from the fold: a row with a NaN/Inf element is null here,
+    where the fold saturates to a number (its ``qnorm`` is null, so the
+    cosine is null in both)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
     def _qdot(a: pd.Series, b: pd.Series) -> pd.Series:
-        va, vb = a.to_numpy(), b.to_numpy()
-        la = np.array([-1 if v is None else len(v) for v in va], dtype=np.int64)
-        lb = np.array([-1 if v is None else len(v) for v in vb], dtype=np.int64)
-        pair = (la >= 0) & (la == lb)
-        out = np.zeros(len(va), dtype=np.int64)
-        valid = np.zeros(len(va), dtype=bool)
-        for d in np.unique(la[pair]):
-            rows = np.flatnonzero(pair & (la == d))
-            A = np.array([*va[rows]], dtype=np.float64).reshape(len(rows), d)
-            B = np.array([*vb[rows]], dtype=np.float64).reshape(len(rows), d)
-            P = np.floor(A * B * float(SCALE))
-            ok = np.isfinite(P).all(axis=1)
-            P[~ok] = 0
-            out[rows] = P.astype(np.int64).sum(axis=1)
-            valid[rows] = ok
+        out = np.zeros(len(a), dtype=np.int64)
+        valid = np.zeros(len(a), dtype=bool)
+        for d in {len(x) for x in a if x is not None}:
+            A, ok_a = _vector_rows(a, d)
+            B, ok_b = _vector_rows(b, d)
+            both = ok_a & ok_b
+            P = np.floor(A[both[ok_a]] * B[both[ok_b]] * float(SCALE))
+            out[both] = P.astype(np.int64).sum(axis=1)
+            valid |= both
         return pd.Series(pd.arrays.IntegerArray(out, ~valid))
 
     return _qdot
@@ -433,56 +448,48 @@ def sign_lsh_signature_arrow(num_planes: int = 16, plane_offset: int = 0):
     product — floor((x*w)*1e12) per element, int64 sum, sign —
     BIT-IDENTICAL to the DuckDB oracle's SQL recomputation.
 
-    Input contract: non-null, fixed-width, finite vectors. Invalid input
-    fails LOUDLY (a silent np.floor(NaN)->INT64_MIN cast would produce
-    garbage bits) — filter or impute upstream.
-    """
-    import numpy as np
+    Rows are grouped by width (a uniform batch is one vectorized pass).
+    A null vector, or one with a null, NaN or Inf element, gets a null
+    signature (``_vector_rows``), which matches no bucket."""
     from pyspark.sql.functions import pandas_udf
 
     cache: dict[int, "np.ndarray"] = {}
 
     @pandas_udf("long")
     def _sig(v: pd.Series) -> pd.Series:
-        arrs = v.to_numpy()
-        if any(a is None for a in arrs):
-            raise ValueError(
-                "sign_lsh_signature_arrow: null embedding vectors are not "
-                "supported — filter them out before hashing"
-            )
-        try:
-            A = np.vstack(arrs).astype(np.float64)  # (N, D)
-        except ValueError as exc:
-            raise ValueError(
-                "sign_lsh_signature_arrow: ragged embedding vectors (mixed "
-                "dimensions) are not supported"
-            ) from exc
-        if not np.isfinite(A).all():
-            raise ValueError(
-                "sign_lsh_signature_arrow: non-finite elements (NaN/Inf) in "
-                "embedding vectors — the signature would be undefined; clean "
-                "the column first"
-            )
-        dim = A.shape[1]
-        W = cache.get(dim)
-        if W is None:
-            W = np.array(
-                [
-                    [_plane_weight_py(plane_offset + p, i) for i in range(dim)]
-                    for p in range(num_planes)
-                ],
-                dtype=np.float64,
-            )
-            cache[dim] = W
-        q = (
-            np.floor((A[:, None, :] * W[None, :, :]) * float(SCALE))
-            .astype(np.int64)
-            .sum(axis=2)
-        )  # (N, P)
-        sig = ((q > 0).astype(np.int64) << np.arange(num_planes, dtype=np.int64)).sum(axis=1)
-        return pd.Series(sig)
+        out = np.zeros(len(v), dtype=np.int64)
+        valid = np.zeros(len(v), dtype=bool)
+        for dim in {len(x) for x in v if x is not None}:
+            A, ok = _vector_rows(v, dim)  # (ok.sum(), dim)
+            W = cache.get(dim)
+            if W is None:
+                W = np.array(
+                    [
+                        [_plane_weight_py(plane_offset + p, i) for i in range(dim)]
+                        for p in range(num_planes)
+                    ],
+                    dtype=np.float64,
+                )
+                cache[dim] = W
+            q = (
+                np.floor((A[:, None, :] * W[None, :, :]) * float(SCALE))
+                .astype(np.int64)
+                .sum(axis=2)
+            )  # (N, P)
+            out[ok] = ((q > 0).astype(np.int64) << np.arange(num_planes, dtype=np.int64)).sum(axis=1)
+            valid |= ok
+        return pd.Series(pd.arrays.IntegerArray(out, ~valid))
 
     return _sig
+
+
+class IvfSeeds(NamedTuple):
+    """A trained IVF coarse quantizer: row i of ``centroids`` (an
+    n_cells x dim ndarray) is cell i's centroid. ``train_ivf_seeds``
+    returns one; centroids trained elsewhere go in as
+    ``IvfSeeds(np.vstack(kmeans_model.clusterCenters()))``."""
+
+    centroids: np.ndarray
 
 
 def _ivf_seeds(
@@ -490,17 +497,17 @@ def _ivf_seeds(
     corpus_id: str,
     vec_col: str,
     n_cells: int,
-    seeds: DataFrame | None,
+    seeds: IvfSeeds | None,
 ) -> DataFrame:
     """(__cell, __seed_v, __seed_n): the coarse quantizer of every IVF
-    path. ``seeds`` is a (cell_id, vector) frame read by column position;
-    the default is the ``n_cells`` lowest-id corpus vectors, numbered
-    from 0 in id order."""
+    path. Trained ``seeds`` become an Arrow-built local relation, so
+    broadcasting them runs no job; the default is the ``n_cells``
+    lowest-id corpus vectors, numbered from 0 in id order."""
     if seeds is None:
         # TakeOrderedAndProject for the n_cells lowest ids (distributed
         # top-n, no global window over the corpus); the row_number window
         # then runs on an n_cells-row frame only.
-        seeds = (
+        frame = (
             corpus.select(F.col(corpus_id), F.col(vec_col))
             .orderBy(F.col(corpus_id))
             .limit(n_cells)
@@ -510,11 +517,14 @@ def _ivf_seeds(
             .select("__cell", F.col(vec_col).alias("__seed_v"))
         )
     else:
-        cid, cvec = seeds.columns[0], seeds.columns[1]
-        seeds = seeds.select(
-            F.col(cid).alias("__cell"), F.col(cvec).alias("__seed_v")
+        from dca_manager_spark.io.manifest import _local_frame
+
+        frame = _local_frame(
+            corpus.sparkSession,
+            StructType.fromDDL("__cell int, __seed_v array<double>"),
+            list(enumerate(np.asarray(seeds.centroids, dtype=np.float64).tolist())),
         )
-    return seeds.withColumn("__seed_n", qnorm(F.col("__seed_v")))
+    return frame.withColumn("__seed_n", qnorm(F.col("__seed_v")))
 
 
 def _route(
@@ -552,7 +562,7 @@ def ivf_ann_topk(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    seeds: DataFrame | None = None,
+    seeds: IvfSeeds | None = None,
 ) -> DataFrame:
     """IVF-style ANN (the second scale path besides sign-LSH): corpus
     vectors are COARSE-QUANTIZED to their nearest of ``n_cells`` centroid
@@ -564,13 +574,15 @@ def ivf_ann_topk(
     cell id; per-query work is |probed cells| x avg cell size instead of
     |corpus|. n_probe = n_cells degrades gracefully to exact brute force.
 
-    ``seeds``: optional (cell_id, vector) frame — e.g. k-means centroids
-    from pyspark.ml trained offline. Default = the ``n_cells``
+    ``seeds``: optional trained ``IvfSeeds`` (``train_ivf_seeds``, or
+    k-means centroids trained offline). Default = the ``n_cells``
     lowest-id corpus vectors: a data-deterministic quantizer (no training
     step, identical in every engine) so the whole operator is
     oracle-checkable; swap in learned centroids for better cell balance
     at identical plan shape. Assignment ties break on cell id (total
-    order), so results are exact-reproducible either way.
+    order), so results are exact-reproducible either way. A query or
+    corpus row whose cosine is null (a null, ragged or non-finite
+    vector) takes no part in the result.
     """
     seeds = _ivf_seeds(corpus, corpus_id, vec_col, n_cells, seeds)
     c = corpus.select(
@@ -602,7 +614,7 @@ def ivf_ann_topk(
     w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter((F.col("rank") <= k) & F.col("cosine").isNotNull())
         .select(
             F.col("__qid").alias(query_id),
             F.col("__cid").alias(corpus_id),
@@ -628,8 +640,6 @@ def _lloyd_kmeans(S, k: int, seed: int, max_iter: int, init: str = "random"):
     reseeded point joins the reference set so two empty clusters can
     never both land in the same far region). Pure argmax/argmin over a
     fixed sample — deterministic."""
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     if init == "maxmin":
         first = int(rng.integers(S.shape[0]))
@@ -670,6 +680,36 @@ def _lloyd_kmeans(S, k: int, seed: int, max_iter: int, init: str = "random"):
     return cents
 
 
+def _train_sample(
+    corpus: DataFrame,
+    vec_col: str,
+    sample_rows: int,
+    sample_id_col: str | None,
+    salt: str,
+):
+    """The trainers' bounded driver-side sample as a float64 (n x dim)
+    matrix: the first ``sample_rows`` vectors, md5(``salt`` + id)-ranked
+    when ``sample_id_col`` is given (layout-independent), in plan order
+    otherwise. ``dim`` is the most common length among the sample's
+    non-null vectors and only the rows ``_vector_rows`` accepts are kept,
+    so a null, ragged or non-finite vector neither fails nor skews the
+    fit."""
+    proj = corpus.select(
+        as_double_vec(F.col(vec_col)).alias("v"),
+        *([F.col(sample_id_col).cast("string").alias("__sid")]
+          if sample_id_col else []),
+    )
+    if sample_id_col:
+        rank = F.md5(F.concat(F.lit(salt), F.col("__sid")))
+        sample = proj.orderBy(rank, F.col("__sid")).limit(sample_rows)
+    else:
+        sample = proj.limit(sample_rows)
+    vals = [r["v"] for r in sample.select("v").collect()]
+    widths = Counter(len(x) for x in vals if x is not None).most_common(1)
+    X, _ = _vector_rows(vals, widths[0][0] if widths else 0)
+    return X
+
+
 def train_ivf_seeds(
     corpus: DataFrame,
     vec_col: str = "embedding",
@@ -678,57 +718,26 @@ def train_ivf_seeds(
     max_iter: int = 10,
     sample_rows: int = 4096,
     sample_id_col: str | None = None,
-) -> DataFrame:
-    """Train IVF centroids and return them as the (cell, centroid) frame
-    ``ivf_ann_topk(seeds=...)`` accepts. Learned centroids balance cell
-    sizes far better than the deterministic lowest-id default (which
-    exists for oracle reproducibility) — use this for production
-    recall/latency.
+) -> IvfSeeds:
+    """Train IVF centroids and return them as the ``IvfSeeds`` every IVF
+    path accepts (``seeds=``). Learned centroids balance cell sizes far
+    better than the deterministic lowest-id default (which exists for
+    oracle reproducibility) — use this for production recall/latency.
 
-    Training (r16) is the SAME bounded recipe as train_pq_codebooks:
-    collect the first ``sample_rows`` vectors (md5-ranked when
-    ``sample_id_col`` is given — layout-independent; plan-order limit
-    otherwise) and run seeded numpy Lloyd iterations driver-side. The
-    previous pyspark.ml KMeans fit launched ~2 Spark jobs per iteration
-    REGARDLESS of data size (~2-3s of pure job-launch latency on a tiny
-    corpus, and the same at 100 TB where one would train on a sample
-    anyway); centroids only need a distribution sketch, so sample ->
-    tiny driver model -> broadcast is the standard recipe at any scale.
-    Measured recall of the composed IVF paths is unchanged within noise
-    (floors pinned in tests/test_similarity.py hold with margin)."""
-    import numpy as np
-
-    proj = corpus.select(
-        as_double_vec(F.col(vec_col)).alias("v"),
-        *([F.col(sample_id_col).cast("string").alias("__sid")]
-          if sample_id_col else []),
-    )
-    if sample_id_col:
-        rank = F.md5(F.concat(F.lit("ivf-train"), F.col("__sid")))
-        sample = proj.orderBy(rank, F.col("__sid")).limit(sample_rows)
-    else:
-        sample = proj.limit(sample_rows)
-    rows = sample.select("v").collect()
-    X = np.asarray([r["v"] for r in rows], dtype=np.float64)
+    Training is the SAME bounded recipe as train_pq_codebooks: a
+    ``_train_sample`` of at most ``sample_rows`` vectors and seeded
+    numpy Lloyd iterations driver-side. A pyspark.ml KMeans fit launched
+    ~2 Spark jobs per iteration REGARDLESS of data size (~2-3s of pure
+    job-launch latency on a tiny corpus, and the same at 100 TB where
+    one would train on a sample anyway); centroids only need a
+    distribution sketch, so sample -> tiny driver model -> broadcast is
+    the standard recipe at any scale."""
+    X = _train_sample(corpus, vec_col, sample_rows, sample_id_col, "ivf-train")
     if X.shape[0] < n_cells:
         raise ValueError(
             f"need at least n_cells ({n_cells}) sample vectors, got {X.shape[0]}"
         )
-    cents = _lloyd_kmeans(X, n_cells, seed, max_iter, init="maxmin")
-    spark = corpus.sparkSession
-    out = [(i, [float(x) for x in c]) for i, c in enumerate(cents)]
-    # ONE partition: createDataFrame parallelizes even 16 rows across
-    # defaultParallelism, so every downstream driver fetch of the model
-    # (sort + collect / broadcast build) ran as 32-task multi-stage jobs
-    # — measured 3 jobs x ~0.3s per consumer just to re-read 16 rows
-    # (r17). The matrix is also attached to the frame so in-process
-    # consumers (_seed_matrix) skip the round-trip entirely.
-    df = spark.createDataFrame(out, "cell int, centroid array<double>")
-    df._ivf_seed_model = (
-        list(range(len(cents))),
-        np.asarray(cents, dtype=np.float64),
-    )
-    return df
+    return IvfSeeds(_lloyd_kmeans(X, n_cells, seed, max_iter, init="maxmin"))
 
 
 def lsh_ann_topk(
@@ -745,7 +754,8 @@ def lsh_ann_topk(
     ``num_tables`` independent hash tables (OR-amplification: recall rises
     geometrically with tables at linear cost — each table uses its own
     hash-derived plane set); exact quantized cosine ranks the deduplicated
-    candidates."""
+    candidates. A null, ragged or non-finite vector takes no part: its
+    signature is null or its cosine is null."""
     q = _sign_sig_frame(
         queries, query_id, vec_col, num_planes, num_tables
     ).withColumnsRenamed({"__id": "__qid", "__v": "__qv", "__n": "__qn"})
@@ -765,7 +775,7 @@ def lsh_ann_topk(
     w = Window.partitionBy("__qid").orderBy(F.col("cosine").desc(), F.col("__cid"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter((F.col("rank") <= k) & F.col("cosine").isNotNull())
         .select(
             F.col("__qid").alias(query_id), F.col("__cid").alias(corpus_id), "cosine", "rank"
         )
@@ -776,41 +786,21 @@ def lsh_ann_topk(
 # Product quantization (PQ) + asymmetric distance computation (ADC)
 # ---------------------------------------------------------------------------
 
-class PQCodebooks(list):
-    """train_pq_codebooks' return type: a plain nested list (fully
-    list-compatible — every existing consumer keeps working) carrying
-    one bit of model provenance: ``residual_trained``. The serving path
-    uses it to catch the silent-quality trap of residual ADC over
-    raw-trained codebooks (and vice versa); codebooks deserialized from
-    elsewhere (plain lists) carry no tag and skip the check."""
+class PQCodebooks(NamedTuple):
+    """Trained product-quantization codebooks: ``books`` holds m
+    codebooks, codebook j a (k x dim/m) array of subspace-j centroids
+    (nested lists work too). ``residual`` says what they were trained
+    on: True for vector-minus-centroid residuals (``train_pq_codebooks``
+    with ``residual_seeds``), which is how ``ivf_pq_rerank_topk`` then
+    encodes the corpus; False for raw vectors."""
 
-    residual_trained: bool | None = None
-
-
-def _seed_matrix(seeds: DataFrame):
-    """Collect an IVF (cell, centroid) frame into (cell_ids, ndarray) —
-    a bounded driver-side model fetch, sorted by cell id. Frames built
-    by train_ivf_seeds carry the model as an attribute (the trainer
-    already held it driver-side); using it skips a collect job per
-    consumer — values are identical by construction."""
-    import numpy as np
-
-    model = getattr(seeds, "_ivf_seed_model", None)
-    if model is not None:
-        return model
-    cid, cvec = seeds.columns[0], seeds.columns[1]
-    rows = seeds.select(
-        F.col(cid).cast("int").alias("c"),
-        as_double_vec(F.col(cvec)).alias("v"),
-    ).orderBy("c").collect()
-    return (
-        [r["c"] for r in rows],
-        np.asarray([r["v"] for r in rows], dtype=np.float64),
-    )
+    books: list
+    residual: bool
 
 
-def _nearest_seed_matrix(seeds: DataFrame, X):
-    """Per-row nearest (max-cosine, lowest-cell tie-break) centroid of X
+def _nearest_seed_matrix(centroids, X):
+    """Per-row nearest (max-cosine, lowest-cell tie-break) row of
+    ``centroids`` (an ``IvfSeeds.centroids`` matrix) for each row of X
     — BIT-IDENTICAL to the ivf cell routing's rule: the similarity is
     the same quantized cosine ``_route`` ranks by (per-element
     floor(x*y*SCALE) integer sums, then dot/(sqrt(na)*sqrt(nb)) in
@@ -820,9 +810,7 @@ def _nearest_seed_matrix(seeds: DataFrame, X):
     term is <= |x*y|*1e12 and dims*1e12 is far below 2^53. argmax takes
     the first maximum = lowest cell id, matching the routing's
     (sim desc, cell asc) tie-break."""
-    import numpy as np
-
-    _, C = _seed_matrix(seeds)
+    C = np.asarray(centroids, dtype=np.float64)
     s = float(SCALE)
     qd = np.floor(X[:, None, :] * C[None, :, :] * s).sum(axis=2)
     xn = np.floor(X * X * s).sum(axis=1)
@@ -841,25 +829,26 @@ def train_pq_codebooks(
     max_iter: int = 10,
     sample_rows: int = 4096,
     sample_id_col: str | None = None,
-    residual_seeds: DataFrame | None = None,
-) -> list[list[list[float]]]:
+    residual_seeds: IvfSeeds | None = None,
+) -> PQCodebooks:
     """Train product-quantization codebooks: the vector is split into
     ``m`` contiguous subvectors and each subspace gets its own ``k``-way
-    k-means codebook. Returns plain nested lists (m x k x dim/m) — a
-    tiny driver-side model, like ``train_ivf_seeds``'s centroid frame.
+    k-means codebook. Returns ``PQCodebooks`` (m arrays of k x dim/m) — a
+    tiny driver-side model, like ``train_ivf_seeds``'s ``IvfSeeds``.
 
-    ``residual_seeds`` (the standard FAISS IVF-PQ recipe): pass the IVF
-    (cell, centroid) frame and the codebooks are trained on RESIDUALS —
+    ``residual_seeds`` (the standard FAISS IVF-PQ recipe): pass the
+    ``IvfSeeds`` and the codebooks are trained on RESIDUALS —
     each sample vector minus its nearest (max-cosine) centroid. Residual
     vectors cluster far tighter than raw vectors (the coarse quantizer
     has already explained the cell-level structure), so the same m x k
     budget spends its resolution on what ADC actually scores; measured
     recall@10 of the composed IVF->PQ->rerank path rises from ~0.52 to
     >=0.7 on the synthetic embeddings. Train + encode must agree on the
-    seed frame.
+    seeds; the result has ``residual=True``.
 
-    Training is a BOUNDED driver-side collect (first ``sample_rows``
-    vectors) + numpy Lloyd iterations per subspace — deliberately NOT m
+    Training is a BOUNDED driver-side ``_train_sample`` (at most
+    ``sample_rows`` vectors; ``dim`` is its most common vector length)
+    + numpy Lloyd iterations per subspace — deliberately NOT m
     Spark-ML fits: each MLlib fit costs ~1s of job overhead regardless
     of size (m=16 measured 12-23s), while codebooks only need a
     distribution sketch — the standard PQ training recipe at any corpus
@@ -874,52 +863,37 @@ def train_pq_codebooks(
     rows in plan order are taken (``limit``) — deterministic only for a
     deterministic input order, and biased toward the leading partitions
     on a sorted/partitioned corpus; prefer passing an id column."""
-    import numpy as np
-
-    dim = corpus.select(F.size(F.col(vec_col)).alias("d")).first()["d"]
+    X = _train_sample(corpus, vec_col, sample_rows, sample_id_col, "pq-train")
+    dim = X.shape[1]
     if m < 1 or dim % m:
         raise ValueError(f"m ({m}) must divide the embedding dim ({dim})")
-    sub = dim // m
-    proj = corpus.select(
-        as_double_vec(F.col(vec_col)).alias("v"),
-        *([F.col(sample_id_col).cast("string").alias("__sid")]
-          if sample_id_col else []),
-    )
-    if sample_id_col:
-        rank = F.md5(F.concat(F.lit("pq-train"), F.col("__sid")))
-        sample = proj.orderBy(rank, F.col("__sid")).limit(sample_rows)
-    else:
-        sample = proj.limit(sample_rows)
-    rows = sample.select("v").collect()
-    X = np.asarray([r["v"] for r in rows], dtype=np.float64)
     if X.shape[0] < k:
         raise ValueError(
             f"need at least k ({k}) sample vectors, got {X.shape[0]}"
         )
     if residual_seeds is not None:
-        X = X - _nearest_seed_matrix(residual_seeds, X)
-    books = PQCodebooks()
-    books.residual_trained = residual_seeds is not None
-    for j in range(m):
-        # Seeded Lloyd per subspace — shared with train_ivf_seeds; the
-        # empty-cluster reseeding rationale lives on _lloyd_kmeans.
-        cents = _lloyd_kmeans(X[:, j * sub : (j + 1) * sub], k, seed + j, max_iter)
-        books.append([[float(x) for x in c] for c in cents])
-    return books
+        X = X - _nearest_seed_matrix(residual_seeds.centroids, X)
+    sub = dim // m
+    # Seeded Lloyd per subspace — shared with train_ivf_seeds; the
+    # empty-cluster reseeding rationale lives on _lloyd_kmeans.
+    books = [
+        _lloyd_kmeans(X[:, j * sub : (j + 1) * sub], k, seed + j, max_iter)
+        for j in range(m)
+    ]
+    return PQCodebooks(books, residual_seeds is not None)
 
 
-def _pq_rows(v: pd.Series, dim: int):
-    """(X, ok) for a PQ UDF batch: ``ok`` marks the rows holding a
-    ``dim``-long vector of finite elements (a null element arrives as
-    NaN) and X stacks them as float64 (ok.sum() x dim). The PQ UDFs
-    compute on X only, so a null, ragged or non-finite row gets a null
-    result and leaves the rest of its batch alone — ``qdot_arrow``'s
-    row contract."""
-    import numpy as np
-
-    vals = v.to_numpy()
-    ok = np.array([x is not None and len(x) == dim for x in vals], dtype=bool)
-    X = np.array([*vals[ok]], dtype=np.float64).reshape(int(ok.sum()), dim)
+def _vector_rows(v, dim: int):
+    """(X, ok): the row rule every Arrow UDF here shares. ``ok`` marks
+    the rows of ``v`` (a batch Series or a list of collected vectors)
+    holding a ``dim``-long vector of finite elements (a null element
+    arrives as NaN or None) and X stacks them as float64 (ok.sum() x
+    dim). A UDF computes on X only and gives the other rows a null
+    result, leaving the rest of its batch alone."""
+    ok = np.array([x is not None and len(x) == dim for x in v], dtype=bool)
+    X = np.array(
+        [x for x, good in zip(v, ok) if good], dtype=np.float64
+    ).reshape(int(ok.sum()), dim)
     finite = np.isfinite(X).all(axis=1)
     ok[ok] = finite
     return X[finite], ok
@@ -934,7 +908,7 @@ def _scatter(ok, values: list) -> list:
     return out
 
 
-def _pq_encode_udf(codebooks: list[list[list[float]]]):
+def _pq_encode_udf(codebooks: PQCodebooks):
     """Arrow-vectorized PQ encoder: numpy nearest-centroid per subspace.
 
     NOT expressed as JVM column expressions on purpose: the m x k
@@ -943,17 +917,16 @@ def _pq_encode_udf(codebooks: list[list[list[float]]]):
     evaluation, and measured ~20x slower than this Arrow batch path
     (9s to encode 500 rows). Same lesson as sign_lsh_signature_arrow:
     per-row trees that scale with model size belong in numpy."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    B = [np.asarray(b, dtype=np.float64) for b in codebooks]
+    B = [np.asarray(b, dtype=np.float64) for b in codebooks.books]
     half = [0.5 * (b * b).sum(axis=1) for b in B]
     m = len(B)
     sub = B[0].shape[1]
 
     @pandas_udf("code array<int>, norm2 double")
     def enc(v: pd.Series) -> pd.DataFrame:
-        X, ok = _pq_rows(v, m * sub)
+        X, ok = _vector_rows(v, m * sub)
         codes = np.empty((len(X), m), dtype=np.int32)
         n2 = np.zeros(len(X))
         for j in range(m):
@@ -973,23 +946,22 @@ def _pq_encode_udf(codebooks: list[list[list[float]]]):
     return enc
 
 
-def _pq_encode_residual_udf(codebooks: list[list[list[float]]]):
+def _pq_encode_residual_udf(codebooks: PQCodebooks):
     """Residual PQ encoder (FAISS IVF-PQ shape): takes (vector, assigned
     cell centroid) and codes v - c; ``norm2`` is |c + r_hat|^2 — the
     FULL reconstruction's squared norm, so downstream cosine denominators
     stay consistent with ADC's q.(c + r_hat) numerator."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    B = [np.asarray(b, dtype=np.float64) for b in codebooks]
+    B = [np.asarray(b, dtype=np.float64) for b in codebooks.books]
     half = [0.5 * (b * b).sum(axis=1) for b in B]
     m = len(B)
     sub = B[0].shape[1]
 
     @pandas_udf("code array<int>, norm2 double")
     def enc(v: pd.Series, cent: pd.Series) -> pd.DataFrame:
-        X, ok = _pq_rows(v, m * sub)
-        C, ok_c = _pq_rows(cent, m * sub)
+        X, ok = _vector_rows(v, m * sub)
+        C, ok_c = _vector_rows(cent, m * sub)
         both = ok & ok_c
         X, C, ok = X[both[ok]], C[both[ok_c]], both
         R = X - C
@@ -1012,7 +984,7 @@ def _pq_encode_residual_udf(codebooks: list[list[list[float]]]):
 
 def pq_encode(
     df: DataFrame,
-    codebooks: list[list[list[float]]],
+    codebooks: PQCodebooks,
     vec_col: str = "embedding",
     code_col: str = "pq_code",
     norm_col: str = "pq_norm2",
@@ -1038,22 +1010,21 @@ def _pq_queries(
     queries: DataFrame,
     query_id: str,
     vec_col: str,
-    codebooks: list[list[list[float]]],
+    codebooks: PQCodebooks,
 ) -> DataFrame:
     """(__qid, __lut, __qn2): the exact query side of ADC — each query's
     (m x k) LUT of subvector-centroid dots and its plain squared norm.
     The LUT is Arrow-batched: the m x k expression tree hits the same
     codegen wall as the encoder."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    B = [np.asarray(b, dtype=np.float64) for b in codebooks]
+    B = [np.asarray(b, dtype=np.float64) for b in codebooks.books]
     m = len(B)
     sub = B[0].shape[1]
 
     @pandas_udf("array<array<double>>")
     def lut_udf(v: pd.Series) -> pd.Series:
-        X, ok = _pq_rows(v, m * sub)
+        X, ok = _vector_rows(v, m * sub)
         tables = [X[:, j * sub : (j + 1) * sub] @ B[j].T for j in range(m)]
         luts = [[list(tables[j][i]) for j in range(m)] for i in range(len(X))]
         return pd.Series(_scatter(ok, luts), dtype=object)
@@ -1094,7 +1065,7 @@ def pq_ann_topk(
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
-    codebooks: list[list[list[float]]],
+    codebooks: PQCodebooks,
     vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
@@ -1248,14 +1219,13 @@ def ivf_pq_rerank_topk(
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
-    codebooks: list[list[list[float]]],
+    codebooks: PQCodebooks,
     vec_col: str = "embedding",
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
     shortlist: int = 64,
-    seeds: DataFrame | None = None,
-    residual: bool | None = None,
+    seeds: IvfSeeds | None = None,
 ) -> DataFrame:
     """The composed PRODUCTION ANN serving plan — IVF routing -> PQ/ADC
     shortlist -> exact re-rank — in one DataFrame pipeline:
@@ -1286,16 +1256,7 @@ def ivf_pq_rerank_topk(
     ivf_ann_topk); pass train_ivf_seeds output in production.
     ``codebooks`` come from train_pq_codebooks.
 
-    ``residual`` defaults to the CODEBOOKS' OWN training provenance:
-    ``PQCodebooks.residual_trained`` when present (train_pq_codebooks
-    output), else ``False`` for untagged plain-list codebooks — an
-    untagged codebook was, before provenance existed, necessarily
-    raw-trained, and defaulting it into residual ADC is exactly the
-    silent recall collapse the provenance warning cannot catch (ADVICE
-    r11). Pass ``residual=`` explicitly to override; a mismatch against
-    tagged provenance still warns.
-
-    ``residual=True`` (the standard FAISS IVF-PQ recipe): the
+    ``codebooks.residual`` (the standard FAISS IVF-PQ recipe): the
     PQ stage codes each corpus vector's RESIDUAL against its routed
     cell centroid — ``ADC = q.c + sum_j LUT[j][code_j]`` with the exact
     per-(query, probed-cell) ``q.c`` term computed once in the routing
@@ -1303,49 +1264,12 @@ def ivf_pq_rerank_topk(
     ``|c + r_hat|^2``. Residuals are far tighter-distributed than raw
     vectors, so the same m x k code budget roughly doubles shortlist
     fidelity (measured recall@10 0.52 -> >=0.7 on the synthetic
-    embeddings). Train the codebooks with the SAME seeds
-    (``train_pq_codebooks(..., residual_seeds=seeds)``); pass
-    ``residual=False`` to score raw-vector codes (the pq_ann_topk
-    convention).
+    embeddings). Such codebooks come from
+    ``train_pq_codebooks(..., residual_seeds=seeds)`` with the SAME
+    seeds; raw-trained codebooks score raw-vector codes (the
+    pq_ann_topk convention).
     """
-    # Catch the silent-quality trap: residual ADC over raw-trained
-    # codebooks (or raw ADC over residual-trained ones) produces
-    # near-random codes and quietly collapses shortlist recall. Only
-    # checkable when the codebooks carry provenance (PQCodebooks);
-    # plain lists from external serialization skip the check.
-    trained_residual = getattr(codebooks, "residual_trained", None)
-    if residual is None:
-        if trained_residual is None:
-            import warnings
-
-            # The one mode nobody can check: untagged codebooks carry no
-            # provenance, so if they WERE residual-trained (tag lost in
-            # plain-list serialization) this default silently serves raw
-            # ADC against residual centroids. Say so once per call site.
-            warnings.warn(
-                "ivf_pq_rerank_topk: codebooks carry no residual_trained "
-                "provenance — defaulting to residual=False (raw ADC). If "
-                "they were trained with residual_seeds, pass "
-                "residual=True explicitly or keep the PQCodebooks object "
-                "train_pq_codebooks returns.",
-                stacklevel=2,
-            )
-            residual = False
-        else:
-            residual = bool(trained_residual)
-    elif trained_residual is not None and trained_residual != residual:
-        import warnings
-
-        warnings.warn(
-            f"ivf_pq_rerank_topk(residual={residual}) with codebooks "
-            f"trained residual_trained={trained_residual} — codes will "
-            "quantize a distribution they were not fit on and shortlist "
-            "recall will silently degrade. Train with "
-            "train_pq_codebooks(residual_seeds=seeds) for residual "
-            "serving, or pass residual=False.",
-            stacklevel=2,
-        )
-
+    residual = codebooks.residual
     seeds = _ivf_seeds(corpus, corpus_id, vec_col, n_cells, seeds)
 
     # --- corpus side: one scan -> (cid, cell, code, cn2); no vectors ---
@@ -1480,14 +1404,13 @@ def probe_recall_curve(
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
-    codebooks: list[list[list[float]]],
+    codebooks: PQCodebooks,
     vec_col: str = "embedding",
     k: int = 10,
     n_cells: int = 16,
     probes: tuple[int, ...] = (1, 2, 4, 8),
     shortlist: int = 64,
-    seeds: DataFrame | None = None,
-    residual: bool | None = None,
+    seeds: IvfSeeds | None = None,
 ) -> list[dict]:
     """The IVF-PQ recall/cost DIAL, measured (VERDICT r11 #8): run the
     SAME serving plan (:func:`ivf_pq_rerank_topk` — identical shape at
@@ -1525,7 +1448,7 @@ def probe_recall_curve(
             for r in ivf_pq_rerank_topk(
                 queries, corpus, query_id, corpus_id, codebooks,
                 vec_col=vec_col, k=k, n_cells=n_cells, n_probe=p,
-                shortlist=shortlist, seeds=seeds, residual=residual,
+                shortlist=shortlist, seeds=seeds,
             )
             .select(query_id, corpus_id)
             .collect()
@@ -1541,7 +1464,7 @@ def semantic_dedup(
     vec_col: str = "embedding",
     threshold: float = 0.4,
     n_cells: int = 16,
-    seeds: DataFrame | None = None,
+    seeds: IvfSeeds | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication" — public): cluster the

@@ -2674,8 +2674,8 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def similarity_ivf_learned(spark, sf_dir: str) -> DataFrame:
-    """IVF ANN driven by the PRODUCTION quantizer: k-means centroids from
-    pyspark.ml (train_ivf_seeds, pinned seed) instead of the lowest-id
+    """IVF ANN driven by the PRODUCTION quantizer: k-means centroids
+    (train_ivf_seeds' IvfSeeds, pinned seed) instead of the lowest-id
     fallback — learned cells balance far better, which is what makes the
     probe bound real at scale. The cell assignment depends on the trained
     model, so the oracle is the in-bounds pattern (like

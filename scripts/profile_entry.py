@@ -15,7 +15,6 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import os
 import sys
@@ -38,6 +37,11 @@ def main() -> None:
     args = ap.parse_args()
 
     from dca_manager_spark.plans.queries import get_queries
+    from dca_manager_spark.profiling import (
+        jvm_cpu_seconds,
+        persistent_ids,
+        release_storage,
+    )
     from dca_manager_spark.session import get_bench_session
 
     qs = dict(get_queries())
@@ -58,46 +62,22 @@ def main() -> None:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
-    try:
-        _jvm_pid = int(sc._jvm.java.lang.ProcessHandle.current().pid())
-        _clk = os.sysconf("SC_CLK_TCK")
-    except Exception:
-        _jvm_pid = None
-
-    def jvm_cpu() -> float | None:
-        if _jvm_pid is None:
-            return None
-        with open(f"/proc/{_jvm_pid}/stat") as fh:
-            parts = fh.read().rsplit(")", 1)[1].split()
-        return (int(parts[11]) + int(parts[12])) / _clk
-
     def run_full(df) -> None:
         df.write.format("noop").mode("overwrite").save()
-
-    def persistent_ids() -> frozenset:
-        m = sc._jsc.getPersistentRDDs()
-        return frozenset(int(k) for k in m.keySet().toArray())
-
-    def release_storage(protected: frozenset) -> None:
-        gc.collect()
-        m = sc._jsc.getPersistentRDDs()
-        for k in m.keySet().toArray():
-            if int(k) not in protected:
-                m.get(k).unpersist(True)
 
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     results = {}
     for name in names:
-        pre = persistent_ids()
+        pre = persistent_ids(spark)
         try:
             run_full(qs[name](spark, warm_dir))
         except Exception as exc:
             print(f"warmup {name} failed: {exc}", file=sys.stderr)
-        release_storage(pre)
+        release_storage(spark, pre)
 
-        pre = persistent_ids()
+        pre = persistent_ids(spark)
         samples, jobs = [], []
-        cpu0 = jvm_cpu()
+        cpu0 = jvm_cpu_seconds(spark)
         wall0 = time.perf_counter()
         for i in range(args.runs):
             group = f"prof-{name}-{i}"
@@ -108,7 +88,7 @@ def main() -> None:
             jobs.append(len(tracker.getJobIdsForGroup(group)))
             sc.setJobGroup(None, None)
         wall = time.perf_counter() - wall0
-        cpu1 = jvm_cpu()
+        cpu1 = jvm_cpu_seconds(spark)
         if args.plans_dir:
             os.makedirs(args.plans_dir, exist_ok=True)
             df = qs[name](spark, args.sf)
@@ -117,13 +97,13 @@ def main() -> None:
             with open(os.path.join(
                     args.plans_dir, f"{name}{args.plans_suffix}.txt"), "w") as fh:
                 fh.write(txt)
-        release_storage(pre)
+        release_storage(spark, pre)
         results[name] = {
             "min": round(min(samples), 3),
             "runs": [round(s, 3) for s in samples],
             "jobs_per_run": jobs,
             "cpu_per_wall": (round((cpu1 - cpu0) / wall, 2)
-                             if cpu0 is not None else None),
+                             if None not in (cpu0, cpu1) else None),
         }
         print(f"{name}: min={results[name]['min']}s runs={results[name]['runs']} "
               f"jobs={jobs} cpu/wall={results[name]['cpu_per_wall']}", flush=True)

@@ -60,10 +60,15 @@ from dca_manager_spark.operators.dedup import (  # noqa: E402
 )
 from dca_manager_spark.operators.sampling import canonicalize_url  # noqa: E402
 from dca_manager_spark.operators.similarity import (  # noqa: E402
+    IvfSeeds,
     ivf_pq_rerank_topk,
     train_pq_codebooks,
 )
 from dca_manager_spark.operators.text import html_extract_text  # noqa: E402
+from dca_manager_spark.profiling import (  # noqa: E402
+    persistent_ids,
+    release_storage,
+)
 from dca_manager_spark.session import get_bench_session  # noqa: E402
 
 MAX_EXP = 1.35  # n log n on a 10x span reads ~1.1-1.2; 1.35 is the alarm
@@ -108,26 +113,12 @@ def run_curve(name, sizes, build, evaluate) -> dict:
 
     Every workload's localCheckpoint blocks are RELEASED after its
     timing (except RDDs persisted BEFORE the curve started — pinned
-    corpus indexes stay). Leaked checkpoint storage from earlier
-    points otherwise inflates later ones via executor GC pressure:
-    measured here as canonicalize_url@3M reading 19.5s inside a dirty
-    session vs 2.2s clean — a 9x phantom 'regression', the same
-    mechanism behind the r14 bench-session ivf drift (ROUND_NOTES
-    r15). Dataset.unpersist() does NOT free a localCheckpoint's RDD,
-    so this goes through getPersistentRDDs."""
-    def persistent_ids():
-        m = _SPARK.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in m.keySet().toArray()}
-
-    def release(protected):
-        m = _SPARK.sparkContext._jsc.getPersistentRDDs()
-        for k in m.keySet().toArray():
-            if int(k) not in protected:
-                m.get(k).unpersist(True)
-
-    protected = persistent_ids()
+    corpus indexes stay): leaked checkpoint storage from earlier
+    points otherwise inflates later ones (see
+    dca_manager_spark.profiling)."""
+    protected = persistent_ids(_SPARK)
     evaluate(build(sizes[0]))  # warm: codegen + JIT
-    release(protected)
+    release_storage(_SPARK, protected)
     secs = []
     for n in sizes:
         best = float("inf")
@@ -136,7 +127,7 @@ def run_curve(name, sizes, build, evaluate) -> dict:
             t0 = time.perf_counter()
             evaluate(h)
             best = min(best, time.perf_counter() - t0)
-            release(protected)
+            release_storage(_SPARK, protected)
         secs.append(round(best, 2))
     b = round(fit_exponent(list(sizes), secs), 3)
     row = {"op": name, "sizes": list(sizes), "secs": secs, "exponent": b}
@@ -197,10 +188,7 @@ def main() -> int:
         center_lit = F.array(*[
             F.array(*[F.lit(float(x)) for x in c]) for c in centers
         ])
-        seeds = spark.createDataFrame(
-            [(i, [float(x) for x in centers[i]]) for i in range(n_cells)],
-            "cell int, centroid array<double>",
-        )
+        seeds = IvfSeeds(centers)
 
         def vectors(n):
             noise = lambda j: (

@@ -92,6 +92,7 @@ def main() -> None:
     import numpy as np
 
     from dca_manager_spark.operators.similarity import (
+        IvfSeeds,
         cosine_topk,
         ivf_pq_rerank_topk,
         train_pq_codebooks,
@@ -134,10 +135,7 @@ def main() -> None:
     q1m = corpus1m.filter(F.col("nid") < n_queries).select(
         F.col("nid").alias("qid"), "embedding"
     )
-    seeds = spark.createDataFrame(
-        [(i, [float(x) for x in centers[i]]) for i in range(n_cells)],
-        "cell int, centroid array<double>",
-    )
+    seeds = IvfSeeds(centers)
     t0 = time.perf_counter()
     books = train_pq_codebooks(
         corpus1m, "embedding", m=8, k=16, sample_id_col="nid",

@@ -487,7 +487,7 @@ def test_manifest_sink_streaming_exactly_once(registered, tmp_path):
     t = _mtable(spark, tmp_path / "t")
     assert t.read().count() == 1
     doc = t._load_manifest(t.commits()[-1])
-    assert doc["stream_batch"] == 0 and doc["op"] == "append"
+    assert list(doc["stream_marks"].values()) == [0] and doc["op"] == "append"
 
     # simulate the crash-after-publish replay: re-commit batch 0 under the
     # SAME query identity (same checkpointLocation -> same derived sink_id)
@@ -507,7 +507,7 @@ def test_manifest_sink_streaming_exactly_once(registered, tmp_path):
         .write.mode("append").json(src)
     drain()
     assert t.read().count() == 2
-    assert t._load_manifest(t.commits()[-1])["stream_batch"] == 1
+    assert t._load_manifest(t.commits()[-1])["stream_marks"] == {w.sink_id: 1}
 
 
 def test_manifest_sink_append_to_mor_table_stacks_not_hides(registered, tmp_path):
@@ -597,7 +597,7 @@ def test_manifest_sink_two_queries_same_table_no_collision(registered, tmp_path)
     before = t.read().count()
     wb.commit([], batchId=0)  # same batch id, DIFFERENT query: must land
     doc = t._load_manifest(t.commits()[-1])
-    assert doc["stream_sink"] == wb.sink_id and doc["stream_batch"] == 0
+    assert doc["stream_marks"] == {wa.sink_id: 0, wb.sink_id: 0}
     assert len(t.commits()) == 3  # insert + wa batch 0 + wb batch 0
     # and each query's own replay is still suppressed
     wa.commit([], batchId=0)
@@ -639,36 +639,6 @@ def test_manifest_sink_replay_survives_vacuum(registered, tmp_path):
     # a genuinely new batch still lands and advances the mark
     w.commit([], batchId=1)
     assert t._load_manifest(t.commits()[-1])["stream_marks"] == {w.sink_id: 1}
-
-
-def test_manifest_sink_legacy_table_migrates_marks(registered, tmp_path):
-    """A table whose manifests predate stream_marks (legacy per-commit
-    stream_batch/stream_sink keys only) still suppresses replays, and its
-    first post-upgrade commit writes the migrated high-water map."""
-    import json as _json
-
-    from dca_manager_spark.io.datasource import ManifestStreamWriter
-
-    spark = registered
-    schema = "transaction_id string, pair string, price double"
-    t = _mtable(spark, tmp_path / "t")
-    t.write(spark.createDataFrame([("T1", "BTCGBP", 1.0)], schema), "insert")
-    # strip the new key + plant legacy stream keys, as an old writer wrote
-    mdir = t._manifest_dir()
-    f = mdir / f"{t.commits()[-1]:012d}.json"
-    doc = _json.loads(f.read_text())
-    doc.pop("stream_marks", None)
-    doc["stream_batch"], doc["stream_sink"] = 4, "legacy-q"
-    f.write_text(_json.dumps(doc))
-    w = ManifestStreamWriter(
-        {"path": str(tmp_path / "t"), "partition_by": "pair",
-         "sink_id": "legacy-q"}, t.read().schema, False)
-    n = len(t.commits())
-    w.commit([], batchId=4)  # replay of the legacy-format batch
-    assert len(t.commits()) == n  # suppressed via the legacy scan
-    t.write(spark.createDataFrame([("T2", "ETHGBP", 2.0)], schema), "upsert")
-    head = t._load_manifest(t.commits()[-1])
-    assert head["stream_marks"] == {"legacy-q": 4}  # migrated once
 
 
 def test_manifest_sink_keyed_upsert_mode(registered, tmp_path):

@@ -186,9 +186,13 @@ def test_ivf_ann_probe_all_equals_brute_force(spark):
 
 def test_ivf_ann_recall_and_learned_seeds(spark):
     """Partial probing keeps recall well above random, and externally
-    learned centroids (k-means or any (cell, vector) frame) slot into the
-    same plan."""
-    from dca_manager_spark.operators.similarity import cosine_topk, ivf_ann_topk
+    learned centroids (k-means or any centroid matrix, as IvfSeeds) slot
+    into the same plan."""
+    from dca_manager_spark.operators.similarity import (
+        IvfSeeds,
+        cosine_topk,
+        ivf_ann_topk,
+    )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.filter("vec_id < 20").selectExpr("vec_id AS query_id", "embedding")
@@ -206,11 +210,12 @@ def test_ivf_ann_recall_and_learned_seeds(spark):
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, recall  # 4/8 cells probed
 
-    # injected seeds: any (cell_id, vector) frame — here 8 spread-out
-    # corpus vectors standing in for trained centroids
-    seeds = emb.filter("vec_id % 60 = 0").limit(8).selectExpr(
-        "vec_id AS cell", "embedding AS centroid"
-    )
+    # injected seeds: any centroid matrix — here 8 spread-out corpus
+    # vectors standing in for trained centroids
+    seeds = IvfSeeds(np.vstack([
+        r.embedding
+        for r in emb.filter("vec_id % 60 = 0").orderBy("vec_id").limit(8).collect()
+    ]))
     with_seeds = ivf_ann_topk(
         q, c, "query_id", "neighbor_id", k=5, n_probe=4, seeds=seeds
     )
@@ -218,8 +223,8 @@ def test_ivf_ann_recall_and_learned_seeds(spark):
 
 
 def test_ivf_trained_seeds_end_to_end(spark):
-    """k-means-trained centroids (pyspark.ml) drive the same IVF plan and
-    reach at least the recall of the deterministic lowest-id seeds."""
+    """k-means-trained centroids (train_ivf_seeds) drive the same IVF plan
+    and reach at least the recall of the deterministic lowest-id seeds."""
     from dca_manager_spark.operators.similarity import (
         cosine_topk,
         ivf_ann_topk,
@@ -230,7 +235,7 @@ def test_ivf_trained_seeds_end_to_end(spark):
     q = emb.filter("vec_id < 20").selectExpr("vec_id AS query_id", "embedding")
     c = emb.selectExpr("vec_id AS neighbor_id", "embedding")
     seeds = train_ivf_seeds(c, n_cells=8)
-    assert seeds.count() == 8
+    assert seeds.centroids.shape == (8, 64)
 
     exact = {
         (r.query_id, r.neighbor_id)
@@ -413,14 +418,14 @@ def test_pq_adc_recall_and_rerank(spark, sf_dir):
 def test_pq_encode_is_layout_independent(spark):
     """With FIXED codebooks the code assignment is a pure row function:
     repartitioning must not change a single code."""
-    from dca_manager_spark.operators.similarity import pq_encode
+    from dca_manager_spark.operators.similarity import PQCodebooks, pq_encode
 
     rows = [(i, [float((i * 7 + j * 3) % 11) / 11 for j in range(8)]) for i in range(40)]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    books = [
-        [[0.1 * c + 0.01 * d for d in range(4)] for c in range(5)]
-        for _ in range(2)
-    ]
+    books = PQCodebooks(
+        [[[0.1 * c + 0.01 * d for d in range(4)] for c in range(5)]] * 2,
+        residual=False,
+    )
     a = {
         r.vec_id: tuple(r.pq_code)
         for r in pq_encode(df, books).collect()
@@ -662,10 +667,10 @@ def test_residual_pq_beats_raw_on_clustered(spark):
         for r in cosine_topk(q, c, "qid", "nid", k=10).collect()
     }
 
-    def recall(books, residual):
+    def recall(books):
         got = ivf_pq_rerank_topk(
             q, c, "qid", "nid", books, k=10, n_probe=1, shortlist=12,
-            seeds=seeds, residual=residual,
+            seeds=seeds,
         ).collect()
         return sum((r.qid, r.nid) in exact for r in got) / len(exact)
 
@@ -675,100 +680,10 @@ def test_residual_pq_beats_raw_on_clustered(spark):
     res_books = train_pq_codebooks(
         c, m=8, k=16, max_iter=10, sample_id_col="nid", residual_seeds=seeds
     )
-    r_raw = recall(raw_books, residual=False)
-    r_res = recall(res_books, residual=True)
+    r_raw = recall(raw_books)
+    r_res = recall(res_books)
     assert r_res > r_raw, (r_res, r_raw)
     assert r_res >= 0.6, r_res
-
-
-def test_residual_raw_codebook_mismatch_warns(spark):
-    """Review finding (r11): residual ADC over raw-trained codebooks (or
-    vice versa) is a silent-quality trap — the provenance-tagged
-    codebooks must trigger a warning; matched pairings stay quiet."""
-    import warnings
-
-    from dca_manager_spark.operators.similarity import (
-        ivf_pq_rerank_topk,
-        train_ivf_seeds,
-        train_pq_codebooks,
-    )
-
-    rows = [(i, [float((i * 13 + j * 5) % 17) / 17 for j in range(16)])
-            for i in range(80)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    c = emb.select(F.col("vec_id").alias("nid"), "embedding")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-    seeds = train_ivf_seeds(c, n_cells=4, seed=13)
-    raw_books = train_pq_codebooks(c, m=4, k=8, max_iter=3, sample_id_col="nid")
-    res_books = train_pq_codebooks(
-        c, m=4, k=8, max_iter=3, sample_id_col="nid", residual_seeds=seeds
-    )
-    with pytest.warns(UserWarning, match="residual"):
-        ivf_pq_rerank_topk(q, c, "qid", "nid", raw_books, residual=True,
-                           k=3, n_probe=2, shortlist=8, seeds=seeds)
-    with pytest.warns(UserWarning, match="residual"):
-        ivf_pq_rerank_topk(q, c, "qid", "nid", res_books, residual=False,
-                           k=3, n_probe=2, shortlist=8, seeds=seeds)
-    with warnings.catch_warnings():
-        # only OUR mismatch warning is an error (pyspark emits an
-        # unrelated pandas-UDF deprecation warning on these calls)
-        warnings.filterwarnings("error", message=".*residual.*")
-        ivf_pq_rerank_topk(q, c, "qid", "nid", res_books,
-                           k=3, n_probe=2, shortlist=8, seeds=seeds)
-        # ADVICE r11: residual DEFAULTS to the codebooks' provenance —
-        # a bare call with raw-trained tagged codebooks takes the raw
-        # path (no mismatch, no warning)...
-        ivf_pq_rerank_topk(q, c, "qid", "nid", raw_books,
-                           k=3, n_probe=2, shortlist=8, seeds=seeds)
-        # ...and untagged plain lists with an EXPLICIT residual skip the
-        # mismatch check entirely (no provenance to compare against).
-        ivf_pq_rerank_topk(q, c, "qid", "nid", [list(b) for b in raw_books],
-                           residual=False,
-                           k=3, n_probe=2, shortlist=8, seeds=seeds)
-
-
-def test_residual_default_follows_provenance(spark):
-    """ADVICE r11: a bare ivf_pq_rerank_topk call must score untagged
-    plain-list codebooks (all historically raw-trained) through the RAW
-    path, and tagged codebooks through their own training mode — the
-    default and an explicit matching residual= give identical results."""
-    from dca_manager_spark.operators.similarity import (
-        ivf_pq_rerank_topk,
-        train_ivf_seeds,
-        train_pq_codebooks,
-    )
-
-    rows = [(i, [float((i * 7 + j * 3) % 13) / 13 for j in range(16)])
-            for i in range(60)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    c = emb.select(F.col("vec_id").alias("nid"), "embedding")
-    q = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-    seeds = train_ivf_seeds(c, n_cells=4, seed=13)
-    res_books = train_pq_codebooks(
-        c, m=4, k=8, max_iter=3, sample_id_col="nid", residual_seeds=seeds
-    )
-    plain = [list(b) for b in res_books]  # strips the provenance tag
-
-    def run(books, **kw):
-        return sorted(
-            tuple(r) for r in ivf_pq_rerank_topk(
-                q, c, "qid", "nid", books,
-                k=3, n_probe=2, shortlist=8, seeds=seeds, **kw
-            ).collect()
-        )
-
-    # tagged residual books: default == explicit residual=True
-    assert run(res_books) == run(res_books, residual=True)
-    # untagged plain lists: default == explicit residual=False, and the
-    # unverifiable default WARNS (the tag may have been lost in plain
-    # serialization — review finding r12)
-    with pytest.warns(UserWarning, match="provenance"):
-        bare = run(plain)
-    assert bare == run(plain, residual=False)
 
 
 @pytest.mark.slow
@@ -833,7 +748,7 @@ def test_semantic_dedup_planted_duplicates(spark):
     thresholds accidentally (deterministic routing + quantized cosine)."""
     import numpy as np
 
-    from dca_manager_spark.operators.similarity import semantic_dedup
+    from dca_manager_spark.operators.similarity import IvfSeeds, semantic_dedup
 
     rng = np.random.default_rng(23)
     bases = rng.normal(size=(10, 16)) * 3.0
@@ -854,10 +769,7 @@ def test_semantic_dedup_planted_duplicates(spark):
     # near-ties in the routing can split a duplicate group across cells
     # — SemDeDup's documented boundary failure mode, which real
     # deployments avoid with trained (k-means) centroids.
-    seeds = spark.createDataFrame(
-        [(i, [float(x) for x in bases[i]]) for i in range(4)],
-        "cell int, centroid array<double>",
-    )
+    seeds = IvfSeeds(bases[:4])
     out = {
         r["vec_id"]: r["cluster_size"]
         for r in semantic_dedup(
@@ -874,3 +786,123 @@ def test_semantic_dedup_planted_duplicates(spark):
         ).collect()
     }
     assert out2 == out
+
+
+def _clean_and_bad(spark):
+    """(clean, dirty) (nid, embedding) corpora: 48 clustered 8-dim
+    vectors with planted near-copies, and the same plus a null vector, a
+    ragged (5-wide) one and one with a NaN element, each a near-copy of a
+    clean row so that, scored as numbers, it would rank first."""
+    rng = np.random.default_rng(41)
+    centers = rng.normal(size=(4, 8)) * 3.0
+    vecs = centers[np.arange(48) % 4] + rng.normal(size=(48, 8)) * 0.3
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    near = [float(x) for x in vecs[0] * 1.0001]
+    bad = [(1000, None), (1001, near[:5]), (1002, [float("nan")] + near[1:])]
+    schema = "nid long, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    return clean, spark.createDataFrame(rows + bad, schema)
+
+
+BAD_IDS = {1000, 1001, 1002}
+
+
+def test_trainers_skip_bad_sample_vectors(spark, count_jobs):
+    """A null, a ragged and a NaN-bearing vector in the training sample
+    neither fail nor change the trained model: both trainers keep only
+    the rows ``_vector_rows`` accepts, and take ``dim`` as the sample's
+    most common vector length. Each trainer runs ONE job, its sample
+    collect."""
+    from dca_manager_spark.operators.similarity import (
+        train_ivf_seeds,
+        train_pq_codebooks,
+    )
+
+    clean, dirty = _clean_and_bad(spark)
+    (seeds, books), jobs = count_jobs(lambda: (
+        train_ivf_seeds(clean, n_cells=4, sample_id_col="nid"),
+        train_pq_codebooks(clean, m=2, k=4, max_iter=3, sample_id_col="nid"),
+    ))
+    assert jobs == 2
+    seeds_d = train_ivf_seeds(dirty, n_cells=4, sample_id_col="nid")
+    np.testing.assert_array_equal(seeds.centroids, seeds_d.centroids)
+    for residual_seeds in (None, seeds):
+        want = train_pq_codebooks(
+            clean, m=2, k=4, max_iter=3, sample_id_col="nid",
+            residual_seeds=residual_seeds,
+        )
+        got = train_pq_codebooks(
+            dirty, m=2, k=4, max_iter=3, sample_id_col="nid",
+            residual_seeds=residual_seeds,
+        )
+        assert got.residual == want.residual == (residual_seeds is not None)
+        for b_got, b_want in zip(got.books, want.books, strict=True):
+            np.testing.assert_array_equal(b_got, b_want)
+
+
+def test_bad_vectors_take_no_part(spark):
+    """One row rule across the scale paths: with a null, a ragged and a
+    NaN-bearing vector in both the corpus and the queries, every job
+    completes, no bad row is ranked or paired (its signature, code or
+    cosine is null), and the valid rows' results equal those on the
+    clean input."""
+    from dca_manager_spark.operators.similarity import (
+        cosine_pairs_lsh,
+        ivf_ann_topk,
+        ivf_pq_rerank_topk,
+        semantic_dedup,
+        train_ivf_seeds,
+        train_pq_codebooks,
+    )
+
+    clean, dirty = _clean_and_bad(spark)
+    seeds = train_ivf_seeds(clean, n_cells=4, sample_id_col="nid")
+    books = train_pq_codebooks(
+        clean, m=2, k=8, max_iter=3, sample_id_col="nid", residual_seeds=seeds
+    )
+
+    def queries(df):
+        return df.filter((F.col("nid") < 6) | (F.col("nid") >= 1000)).select(
+            F.col("nid").alias("qid"), "embedding"
+        )
+
+    def topk(fn):
+        return {
+            frame: sorted(tuple(r) for r in fn(queries(df), df).collect())
+            for frame, df in (("clean", clean), ("dirty", dirty))
+        }
+
+    for name, fn in [
+        ("lsh", lambda q, c: lsh_ann_topk(
+            q, c, "qid", "nid", k=5, num_planes=4, num_tables=2)),
+        ("ivf", lambda q, c: ivf_ann_topk(
+            q, c, "qid", "nid", k=5, n_cells=4, n_probe=2, seeds=seeds)),
+        ("ivf_pq", lambda q, c: ivf_pq_rerank_topk(
+            q, c, "qid", "nid", books, k=5, n_cells=4, n_probe=2,
+            shortlist=16, seeds=seeds)),
+    ]:
+        got = topk(fn)
+        assert got["clean"], name
+        assert got["dirty"] == got["clean"], name
+
+    pairs = {
+        frame: sorted(
+            tuple(r) for r in cosine_pairs_lsh(
+                df, "nid", threshold=0.9, num_planes=4, num_tables=2
+            ).collect()
+        )
+        for frame, df in (("clean", clean), ("dirty", dirty))
+    }
+    assert pairs["clean"] and pairs["dirty"] == pairs["clean"]
+
+    def survivors(df):
+        return {
+            r["nid"]: r["cluster_size"]
+            for r in semantic_dedup(
+                df, "nid", threshold=0.9, n_cells=4, seeds=seeds
+            ).collect()
+        }
+
+    kept = survivors(clean)
+    assert len(kept) < 48  # the planted near-copies collapse
+    assert survivors(dirty) == {**kept, **dict.fromkeys(BAD_IDS, 1)}
